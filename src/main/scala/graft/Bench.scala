@@ -21,16 +21,8 @@ import java.nio.file.{Files, Paths}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Engine.positiveEnvInt("SPARK_GRAFT_CPUS", 4)
+    val spark = Engine.session(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
     // optional comma-separated name filter for isolating hotspots
@@ -52,9 +44,8 @@ object Bench {
     // sweep count WITHOUT changing the default methodology (warmup + 2
     // timed passes, min per query — unchanged since r17, so numbers stay
     // comparable when the knobs are not set).
-    val passes = sys.env.get("SPARK_GRAFT_BENCH_PASSES").map(_.toInt).getOrElse(2)
+    val passes = Engine.positiveEnvInt("SPARK_GRAFT_BENCH_PASSES", 2)
     val doWarmup = !sys.env.get("SPARK_GRAFT_BENCH_WARMUP").contains("0")
-    require(passes >= 1, s"SPARK_GRAFT_BENCH_PASSES must be >= 1, got $passes")
 
     // warmup (untimed): JIT, codegen caches, parquet footer caches
     if (doWarmup) queries.foreach { case (name, fn) => runOne(name, fn) }

@@ -8,19 +8,27 @@ import org.apache.spark.sql.functions._
   * `contracts` table.
   */
 object Tool {
+  private val Subcommands = Seq("smoke", "sql", "sqlwrite", "timesql",
+    "explain", "verify1", "genscale", "genempty", "genskew", "genspan",
+    "ewmabench", "rollbench", "dedupbench", "annnoisebench", "envprobe",
+    "qbench", "statebench")
+
   def main(args: Array[String]): Unit = {
+    require(args.headOption.exists(Subcommands.contains),
+      s"unknown subcommand '${args.headOption.getOrElse("")}'; valid: " +
+        Subcommands.mkString(", "))
     val spark = Engine.session(8, "graft-tool")
-    args.headOption match {
-      case Some("smoke") =>
+    args.head match {
+      case "smoke" =>
         // Driver-shaped smoke: flagship query on sf0.001 must return rows.
         val n = SparkEntry.entry(spark).count()
         println(s"SMOKE rows=$n queries=${SparkEntry.queries.size} " +
           s"oracles=${SparkEntry.oracleSql.size}")
         require(n > 0, "flagship query returned no rows")
-      case Some("sql") =>
+      case "sql" =>
         // Ad-hoc SQL against the session (extensions loaded): Tool sql "<q>"
         spark.sql(args(1)).show(20, truncate = false)
-      case Some("sqlwrite") =>
+      case "sqlwrite" =>
         // Corpus surgery: `Tool sqlwrite "<sql>" <outParquet> [nParts]` —
         // write a query result as parquet (e.g. a single-table variant of
         // a scale corpus, with the other tables symlinked).
@@ -29,7 +37,7 @@ object Tool {
           .write.mode("overwrite").parquet(args(2))
         println(s"SQLWRITE out=${args(2)} rows=" +
           spark.read.parquet(args(2)).count())
-      case Some("timesql") =>
+      case "timesql" =>
         // Hot-loop timing: `Tool timesql "<sql>"` — noop-writes the query
         // 3× and prints each wall time (first run includes codegen warmup).
         for (i <- 1 to 3) {
@@ -37,12 +45,12 @@ object Tool {
           spark.sql(args(1)).write.format("noop").mode("overwrite").save()
           println(f"RUN$i=${(System.nanoTime() - t0) / 1e9}%.2f s")
         }
-      case Some("explain") =>
+      case "explain" =>
         // Plan audit: `runMain graft.Tool explain <query> [sfDir]`
         val name = args(1)
         val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
         SparkEntry.queries(name)(spark, dir).explain("formatted")
-      case Some("verify1") =>
+      case "verify1" =>
         // Targeted correctness dump, comma-separated names:
         // `runMain graft.Tool verify1 <q1[,q2,...]> [sfDir] [outDir]`
         // then `python3 tools/check.py <sfDir> <outDir>`.
@@ -65,7 +73,7 @@ object Tool {
         java.nio.file.Files.writeString(
           java.nio.file.Paths.get(s"$out/oracle_sql.json"),
           oracles.mkString("{", ", ", "}"))
-      case Some("genscale") =>
+      case "genscale" =>
         // Deterministic ~N× stress corpus for the SCALE_r11 measurements:
         // `runMain graft.Tool genscale [srcDir] [outDir] [factor]`.
         // Follows the driver generator's own observed scaling law
@@ -216,14 +224,14 @@ object Tool {
         // r20 ADVICE: count every generated table (the TPC-H side was
         // omitted even when generated), so the line names what exists.
         val counts = Seq("documents", "events", "embeddings", "orders",
-            "lineitem", "customer", "part", "supplier")
+            "lineitem", "customer", "part", "supplier", "nation", "region")
           .filter(want)
           .map(t => s"$t=" +
             spark.read.parquet(s"$out/$t.parquet").count())
           .mkString(" ")
         println(s"GENSCALE out=$out factor=$factor $counts " +
           s"tables=${wantTables.toSeq.sorted.mkString(",")}")
-      case Some("genempty") =>
+      case "genempty" =>
         // EMPTY corpus with the real schemas (r17 — the r16 verdict's
         // Next #5): every table present, zero rows — the fixture for
         // the empty-corpus contract audit (DuckDB's ungrouped
@@ -238,7 +246,7 @@ object Tool {
           spark.read.parquet(s"$srcE/$t.parquet").limit(0).coalesce(1)
             .write.mode("overwrite").parquet(s"$outE/$t.parquet")
         println(s"GENEMPTY out=$outE")
-      case Some("genskew") =>
+      case "genskew" =>
         // Deterministic SKEW axis (r17 — the r16 verdict's Next #4):
         // genscale multiplies uniformly, but real corpora are Zipfian —
         // one event type holding ~90% of rows and one source holding
@@ -293,7 +301,7 @@ object Tool {
           println(s"GENSKEW out=$outK timeburst=$burstK " +
             s"view_share=${hot.toDouble / tot} rows=$tot")
         }
-      case Some("genspan") =>
+      case "genspan" =>
         // Deterministic CALENDAR-SPAN stretch for the q193/q203 crossover
         // measurement (`Tool ewmabench`): unlike genscale (density ×N,
         // same 30-day span), this tiles N copies of the events table
@@ -332,7 +340,7 @@ object Tool {
           .write.mode("overwrite").parquet(s"$outS/events.parquet")
         println(s"GENSPAN out=$outS factor=$factorS spanHours=" +
           s"${spanUs / 3600000000L * factorS}")
-      case Some("ewmabench") =>
+      case "ewmabench" =>
         // Full (span²/2) vs W-truncated (span·W) measurement for the
         // q193/q203 family — the numbers in ewmaChartPlan/brownTrendPlan's
         // scaladocs; keep runnable so future rewrites re-measure:
@@ -354,7 +362,7 @@ object Tool {
               println(f"$label run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
             }
         }
-      case Some("rollbench") =>
+      case "rollbench" =>
         // q119/q124 frame-width crossover measurement (the numbers in
         // Analytic.scala's q124 comment; keep runnable so future rewrites
         // re-measure): `runMain graft.Tool rollbench [sfDir]`
@@ -374,7 +382,7 @@ object Tool {
             println(f"$label run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
           }
         }
-      case Some("dedupbench") =>
+      case "dedupbench" =>
         // dev-loop micro-bench for the q32 collapse pipeline (the tool
         // behind the measured pin/unpin numbers in Dedup.scala's comments;
         // keep it runnable so future rewrites re-measure the same shapes)
@@ -403,7 +411,7 @@ object Tool {
         time("collapsed full") {
           Dedup.nearDups(docs).write.format("noop").mode("overwrite").save()
         }
-      case Some("annnoisebench") =>
+      case "annnoisebench" =>
         // q270 exact vs Similarity.labelNoiseAnn (the coded ANN scale
         // path) — wall times at ×1 and ×10, plus measured 1-NN recall
         // and per-label noise-rate deviation at ×1 (recall's exact
@@ -468,7 +476,7 @@ object Tool {
             math.abs(rates.getOrElse(l, Double.NaN) - r) }.max
           println(f"RATEDEV x1 nprobe=$np max_abs=${dev}%.6f")
         }
-      case Some("envprobe") =>
+      case "envprobe" =>
         import graft.vera._
         val df = spark.range(0, 5000).selectExpr(
           "cast(id as string) AS id",
@@ -488,7 +496,7 @@ object Tool {
         println("ROWS=" + back.count() + " SCHEMA=" +
           back.schema.map(f => s"${f.name}:${f.dataType.simpleString}").mkString(","))
         println("MIN_ID=" + back.agg(min(col("id").cast("long"))).head.getLong(0))
-      case Some("qbench") =>
+      case "qbench" =>
         // Per-run task-metric receipts for a single registered query
         // (r18, the r17 verdict's Next #4 — q191's 1.38–2.37× solo
         // spread with a byte-identical plan needs a NAMED cause):
@@ -545,68 +553,7 @@ object Tool {
             f"gc=${gc.get / 1000.0}%.1f spillMem=${spillM.get} " +
             f"spillDisk=${spillD.get}")
         }
-      case Some("q133diag") =>
-        // stage-isolated timings for the q133 burst investigation (r18)
-        val dirD = if (args.length > 1) args(1) else "/tmp/graft_skewt100"
-        val iv = Tables.events(spark, dirD)
-          .filter(col("ts").isNotNull && col("value").isNotNull)
-          .select(col("event_type"),
-            expr("unix_micros(ts)").as("s_us"),
-            expr("""unix_micros(ts)
-              + (60 + ((CAST(floor(value) AS BIGINT) % 3540) + 3540) % 3540)
-                * CAST(1000000 AS BIGINT)""").as("e_us"))
-        val deltas = iv.select(col("event_type"), explode(expr(
-            "array(struct(s_us AS t, 1 AS delta), struct(e_us AS t, -1 AS delta))"))
-            .as("x"))
-          .select(col("event_type"), col("x.t").as("t"),
-            col("x.delta").as("delta"))
-        def time(label: String)(f: => Unit): Unit = {
-          val t0 = System.nanoTime()
-          f
-          println(f"Q133DIAG $label ${(System.nanoTime() - t0) / 1e9}%.2f s")
-        }
-        time("deltas_count") { deltas.write.format("noop").mode("overwrite").save() }
-        val runs = deltas
-          .groupBy(col("event_type"), col("t"), col("delta"))
-          .agg(count(lit(1)).cast("long").as("cnt"))
-          .withColumn("dd", col("delta") * col("cnt"))
-        time("runs_collapse") { runs.write.format("noop").mode("overwrite").save() }
-        time("probe_pctl") {
-          runs.agg(count(lit(1)), count(col("t")),
-            percentile_approx(col("t").cast("long"),
-              typedLit((1 to 4095).map(_.toDouble / 4096)),
-              lit(10000))).head
-        }
-        val ps = graft.queries.Stats.prefixSumPar(runs, "t",
-          desc = false, Seq("delta"), Seq("dd"), Seq("event_type"))
-        time("prefix_sum") { ps.write.format("noop").mode("overwrite").save() }
-        // inner stages: quantile edges by hand, then each two-level leg
-        val mmD = runs.agg(count(lit(1)), count(col("t")),
-          percentile_approx(col("t").cast("long"),
-            typedLit((1 to 4095).map(_.toDouble / 4096)), lit(10000))).head
-        val edgesD = mmD.getSeq[Long](2).distinct.sorted
-        println(s"Q133DIAG edges=${edgesD.length}")
-        val binnedD = runs.withColumn("bin",
-          call_function("graft_bucket", col("t").cast("long"),
-            typedLit(edgesD), lit(false)))
-        time("binned_only") {
-          binnedD.write.format("noop").mode("overwrite").save() }
-        time("bin_hist") {
-          val h = binnedD.groupBy(col("event_type"), col("bin"))
-            .agg(count(lit(1)).as("c")).agg(max(col("c"))).head
-          println(s"Q133DIAG worst_bin=${h.getLong(0)}")
-        }
-        val inbW = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("event_type"), col("bin"))
-          .orderBy(col("t").asc, col("delta"))
-          .rowsBetween(org.apache.spark.sql.expressions.Window
-            .unboundedPreceding, 0)
-        time("inbin_window") {
-          binnedD.withColumn("inb_dd", sum(col("dd")).over(inbW)
-              .cast("long"))
-            .write.format("noop").mode("overwrite").save()
-        }
-      case Some("statebench") =>
+      case "statebench" =>
         // RocksDB state-growth curve for streamChunkNovelty (r18, the
         // r17 verdict's Next #5): stage the corpus as N files, stream
         // them one per micro-batch through the novelty operator on the
@@ -710,22 +657,6 @@ object Tool {
             Thread.sleep(200)
           }
         } finally { qSB.stop(); spark.streams.removeListener(lSB) }
-      case _ =>
-        val d = "/root/testdata/sf0.01"
-        val prod = col("l_extendedprice") * (lit(1.0) - col("l_discount"))
-        Tables
-          .lineitem(spark, d)
-          .select(
-            col("l_orderkey"),
-            col("l_linenumber"),
-            format_string("%.17e", prod).as("p17"),
-            prod.cast("decimal(18,4)").cast("string").as("dec"),
-          )
-          .orderBy(col("l_orderkey"), col("l_linenumber"))
-          .coalesce(1)
-          .write
-          .mode("overwrite")
-          .parquet("/tmp/dbg_prod")
     }
     spark.stop()
   }

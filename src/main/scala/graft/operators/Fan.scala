@@ -20,14 +20,16 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * [[fan]] inserts that exchange ONLY when the frame's source provably
   * yields fewer scan splits than the session wants (zero-job dispatch off
-  * parquet footers, the PlanStats discipline):
+  * the file listing and, for files above maxPartitionBytes, parquet
+  * footers — the PlanStats discipline):
   *
   *  - every leaf must be a parquet HadoopFsRelation with ≤ 64 files; the
   *    walk crosses only row-preserving one-input operators (no joins — a
   *    join input is post-exchange and already parallel);
-  *  - split estimate per file: min(ceil(bytes / maxPartitionBytes),
-  *    row-group count) — a single-row-group file can never scan as more
-  *    than one non-empty task no matter how it is sliced;
+  *  - split estimate per file ([[PlanStats.parquetSplits]]):
+  *    min(ceil(bytes / maxPartitionBytes), row-group count) — a
+  *    single-row-group file can never scan as more than one non-empty
+  *    task no matter how it is sliced;
   *  - fan only when the estimate is below HALF the session's default
   *    parallelism — at 100 TB scans carry thousands of row groups, the
   *    estimate clears the bar (or the file count exceeds the cap) and the
@@ -38,16 +40,12 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * repartition stays on, SPARK-23207), and every query in the registry is
   * already partition-order-invariant by the exactness discipline (int64 /
   * ratio6 / DECIMAL accumulation), which the per-round DuckDB sweep
-  * re-proves. `SPARK_GRAFT_FAN=off` disables for A/B re-measurement.
+  * re-proves.
   */
 object Fan {
 
-  private val MaxFooterFiles = 64
-
   def fan(df: DataFrame): DataFrame = {
-    if (sys.env.get("SPARK_GRAFT_FAN").contains("off")) return df
-    val spark = df.sparkSession
-    val par = spark.sparkContext.defaultParallelism
+    val par = df.sparkSession.sparkContext.defaultParallelism
     splitsUpperBound(df) match {
       case Some(s) if s * 2 <= par => df.repartition(par)
       case _ => df
@@ -60,33 +58,10 @@ object Fan {
     * parallel or unknowable without a job).
     */
   private[graft] def splitsUpperBound(df: DataFrame): Option[Long] = {
-    val spark = df.sparkSession
-    val conf = spark.sessionState.newHadoopConf()
-    val maxPB = spark.sessionState.conf.filesMaxPartitionBytes
-
-    def parquetSplits(rel: HadoopFsRelation): Option[Long] = {
-      if (!rel.fileFormat.getClass.getSimpleName.contains("Parquet")) return None
-      val paths = rel.location.inputFiles
-      if (paths.isEmpty) return Some(0L)
-      if (paths.length > MaxFooterFiles) return None
-      var total = 0L
-      for (p <- paths) {
-        val hp = new org.apache.hadoop.fs.Path(p)
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(hp, conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try {
-          val bytes = in.getLength
-          val groups = r.getRowGroups.size.toLong
-          total += math.min((bytes + maxPB - 1) / maxPB, math.max(groups, 1L))
-        } finally r.close()
-      }
-      Some(total)
-    }
-
     def walk(p: LogicalPlan): Option[Long] = p match {
       case l: LogicalRelation =>
         l.relation match {
-          case fs: HadoopFsRelation => parquetSplits(fs)
+          case fs: HadoopFsRelation => PlanStats.parquetSplits(fs)
           case _ => None
         }
       case f: Filter => walk(f.child)

@@ -3,8 +3,7 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 
 /** Plan pinning for reused/iterated frames (PageRank, BFS, k-core, label
-  * propagation, pointer jumping, the two-level rank devices, the dedup
-  * index builds).
+  * propagation, pointer jumping, the dedup index builds).
   *
   * Every pinned frame is a `localCheckpoint` so the Catalyst plan stays
   * O(1) in the iteration count (the q74 lesson) and so a frame consumed by
@@ -35,12 +34,7 @@ import org.apache.spark.sql.DataFrame
   * do NOT pin a sampled/rand()-bearing frame — give it an explicit eager
   * `localCheckpoint(true)` and a comment instead (the hazard the removed
   * rangeGapPath pin guarded).
-  *
-  * `SPARK_GRAFT_ITER=eager` re-forces the old per-pin materialization for
-  * A/B re-measurement (the SPARK_GRAFT_GAPS convention); results are
-  * identical either way.
   */
 object Iter {
-  def pin(df: DataFrame): DataFrame =
-    df.localCheckpoint(eager = sys.env.get("SPARK_GRAFT_ITER").contains("eager"))
+  def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)
 }

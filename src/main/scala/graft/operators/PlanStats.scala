@@ -1,5 +1,9 @@
 package graft.operators
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.FileStatus
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -34,29 +38,55 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * Compressed `sizeInBytes` is deliberately NOT used: bytes per row has no
   * sound lower bound under RLE (a 10M-row column can compress below 2 MB),
   * and this walk exists precisely because the dispatch must not gamble.
+  *
+  * This object is the engine's one parquet footer reader: [[parquetSplits]]
+  * (Fan's scan-split bound) reads its file sizes off the same listing and
+  * opens a footer only where the row-group count can change the answer.
   */
 object PlanStats {
 
   private val MaxFooterFiles = 64
 
-  def rowUpperBound(df: DataFrame): Option[Long] = {
-    val conf = df.sparkSession.sessionState.newHadoopConf()
-
-    def parquetRows(rel: HadoopFsRelation): Option[Long] = {
-      val fmt = rel.fileFormat.getClass.getSimpleName
-      if (!fmt.contains("Parquet")) return None
-      val paths = rel.location.inputFiles
-      if (paths.isEmpty) return Some(0L)
-      if (paths.length > MaxFooterFiles) return None
-      var total = 0L
-      for (p <- paths) {
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          new org.apache.hadoop.fs.Path(p), conf)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try total += r.getRecordCount finally r.close()
-      }
-      Some(total)
+  /** The relation's parquet files off its already-listed FileIndex (no
+    * I/O), or None when it is not parquet or lists more than
+    * [[MaxFooterFiles]] files. */
+  private def parquetFiles(rel: HadoopFsRelation): Option[Seq[FileStatus]] =
+    if (!rel.fileFormat.getClass.getSimpleName.contains("Parquet")) None
+    else {
+      val files = rel.location.listFiles(Nil, Nil).flatMap(_.files)
+        .map(_.fileStatus)
+      if (files.length > MaxFooterFiles) None else Some(files)
     }
+
+  private def readFooter(f: FileStatus, conf: Configuration)(
+      read: ParquetFileReader => Long): Long = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
+    try read(r) finally r.close()
+  }
+
+  /** Upper bound on the non-empty scan splits of a parquet relation, per
+    * file min(ceil(bytes / maxPartitionBytes), max(row groups, 1)): a
+    * single-row-group file can never scan as more than one non-empty task
+    * no matter how it is sliced. Only a file larger than
+    * maxPartitionBytes has a size term above 1, so only such a file's
+    * footer is opened. */
+  private[graft] def parquetSplits(rel: HadoopFsRelation): Option[Long] = {
+    val maxPB = rel.sparkSession.sessionState.conf.filesMaxPartitionBytes
+    lazy val conf = rel.sparkSession.sessionState.newHadoopConf()
+    parquetFiles(rel).map(_.map { f =>
+      val bySize = (f.getLen + maxPB - 1) / maxPB
+      if (f.getLen <= maxPB) bySize
+      else math.min(bySize,
+        math.max(readFooter(f, conf)(_.getRowGroups.size.toLong), 1L))
+    }.sum)
+  }
+
+  def rowUpperBound(df: DataFrame): Option[Long] = {
+    lazy val conf = df.sparkSession.sessionState.newHadoopConf()
+
+    def parquetRows(rel: HadoopFsRelation): Option[Long] =
+      parquetFiles(rel).map(
+        _.map(f => readFooter(f, conf)(_.getRecordCount)).sum)
 
     def walk(p: LogicalPlan): Option[Long] = p match {
       case l: LocalRelation => Some(l.data.size.toLong)

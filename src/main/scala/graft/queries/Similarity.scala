@@ -676,11 +676,7 @@ object Similarity {
     def plain = e.select(aCols: _*).join(e.select(bCols: _*),
       col("a_label") === col("b_label") && idCond)
     val b: Long = bOverride.getOrElse {
-      // SPARK_GRAFT_SIMJOIN=plain re-forces the r19 single-key join for
-      // A/B re-measurement (the SPARK_GRAFT_GAPS convention; results are
-      // bit-identical either way — BlockedPairsSpec)
-      if (sys.env.get("SPARK_GRAFT_SIMJOIN").contains("plain")) 1L
-      else if (graft.operators.PlanStats.rowUpperBound(e)
+      if (graft.operators.PlanStats.rowUpperBound(e)
           .exists(_ < BlockedPairThreshold)) 1L
       else {
         // one bounded probe (label-count maximum) sizes the grid; it runs

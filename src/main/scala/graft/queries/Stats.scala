@@ -25,62 +25,45 @@ import org.apache.spark.sql.functions._
   */
 object Stats {
 
+  /** Below this row count the plain per-type lag window wins: the large
+    * path's fixed costs (a sketch probe plus a block shuffle) outweigh
+    * the window's serialization ceiling, which is still invisible at
+    * sf0.1's 10⁵ rows (the crossover, measured for the two-level device
+    * bin-lag replaced, lies between ×10's 10⁶ — a wash — and ×100's 10⁷
+    * — 3–4× for the parallel path). Both paths produce BIT-IDENTICAL
+    * gaps, so the dispatch is a pure physical-plan choice,
+    * oracle-invisible. */
+  private val TypeGapsParThreshold = 2000000L
+
   /** SCALE-PARALLEL PER-TYPE CONSECUTIVE GAPS — the shared gap stage of
-    * the seven gap-family operators (q234/q246/q257/q266/q278/q296/q317),
-    * rewritten round 16 after the ×100 genscale axis measured the
-    * per-type `lag` window going EXPONENT ~1.0 with 5-way parallelism:
-    * `Window.partitionBy(event_type)` puts each type's entire history in
-    * ONE task (2M rows/task at ×100, unbounded at 100 TB) — the classic
+    * the seven gap-family operators (q234/q246/q257/q266/q278/q296/q317).
+    * A per-type `lag` window (`Window.partitionBy(event_type)`) puts each
+    * type's entire history in ONE task — 2M rows/task at ×100, unbounded
+    * at 100 TB; the round-16 ×100 genscale axis measured it going
+    * exponent ~1.0 with 5-way parallelism — the classic
     * low-cardinality-partition serialization, invisible at ×1/×10 where
     * constants dominate.
     *
-    * The rewrite is the house two-level 4096-bin rank (q142's device,
-    * tenth application) pointed at the TIME axis: bin every event by us
-    * range, per-(type, bin) counts roll into a per-type cross-bin prefix
-    * (a window over ≤ 4096 BIN rows per type, not event rows), in-bin
-    * row_number partitions by (type, bin) — thousands of tasks — and
-    * gap = us − us′ comes from an equi-self-join on (type, i) = (type,
-    * i′ + 1). Same (us, event_id) total order, bit-identical gaps; every
-    * stage is shuffle-parallel and AQE-splittable. Measured at ×100:
-    * q296 16.3 → 4.3 s (exponent 1.03 → 0.41), q317 16.2 → 5.6 s
-    * (1.01 → 0.29), q257 19.9 → 13.3 s (SCALE_r16 §2). Below the
-    * measured [[TypeGapsParThreshold]] the plain lag window runs
-    * instead — its fixed costs beat the parallel path's until the
-    * serial span dominates (the dial is code, both ends measured).
+    * Above [[TypeGapsParThreshold]] the stage runs [[binLagGapPath]]: one
+    * shuffle on deterministic quantile time bins, the same (us, event_id)
+    * total order, bit-identical gaps (A/B receipts against the two-level
+    * rank + self-join device it replaced: OPTIMIZATION_r20.md §2). Below
+    * it the plain lag window runs.
     *
     * Input must be (event_type, event_id, us) with non-null type/us
     * (callers already filter). Output: (event_type, gp) — one row per
     * consecutive pair, gp = us-difference ≥ 0, types with one event
     * contribute nothing (exactly the lag-NOT-NULL semantics).
-    *
-    * r20: above the threshold the DEFAULT large path is now
-    * [[binLagGapPath]] — ONE hash shuffle on the deterministic
-    * (type, bin, sbin) blocks + a lead window + a map-side-aggregated
-    * boundary frame — A/B-measured against the two-level device at
-    * ×100/×1000 (receipts: OPTIMIZATION_r20.md §2); the two-level
-    * rank+self-join path stays fully wired (suite bit-identity nets
-    * force all three paths) and re-forceable via
-    * SPARK_GRAFT_GAPS=twolevel.
     */
-  /** Below this row count the plain per-type lag window wins: the
-    * parallel path's fixed costs (bin probe, rank shuffle, pinned
-    * self-join) measured ~+1 s per query at sf0.1's 10⁵ rows while the
-    * window's serialization ceiling is still invisible (crossover
-    * measured between ×10's 10⁶ — a wash — and ×100's 10⁷ — 3–4× for
-    * the parallel path). Both paths produce BIT-IDENTICAL gaps, so the
-    * dispatch is a pure physical-plan choice, oracle-invisible. */
-  private val TypeGapsParThreshold = 2000000L
-
   private[graft] def typeGapsPar(
       e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
     typeGapsCarry(e, Nil)
 
-  /** r20 — the ONE-SHUFFLE gap stage (the r19 verdict's Next #1,
-    * strategy name "range" kept for the env/suite knob): the two-level
-    * device computes gaps via probe(+sketches) → 4096-bin rank →
-    * (type, i)=(type, i′+1) equi-self-join — ~three shuffles of the full
-    * event frame for what is semantically one sort + lag. This path is
-    * the lag formulation over the SAME deterministic bins:
+  /** r20 — the ONE-SHUFFLE gap stage (the r19 verdict's Next #1): the
+    * two-level rank device computed gaps via probe(+sketches) → 4096-bin
+    * rank → (type, i)=(type, i′+1) equi-self-join — ~three shuffles of
+    * the full event frame for what is semantically one sort + lag. This
+    * path is the lag formulation over deterministic bins:
     *
     *   bin = quantile bucket of us (+ tie sub-bin for hot values)
     *   → ONE hash exchange on (type, bin, sbin)
@@ -90,12 +73,14 @@ object Stats {
     *                                               — the cross gaps
     *
     * Block order (bin asc, sbin asc) refines the global (us, event_id)
-    * order (bucketCol/subbinCol are monotone — the rank device's own
-    * soundness argument), so every consecutive pair is either inside a
-    * block (the window) or spans two adjacent non-empty blocks (the
-    * boundary lead), never both. Identical-timestamp clumps — the gap
-    * family's hot-key shape — split across tie sub-bins exactly as in
-    * the rank device, so no block serializes a hot value's mass.
+    * order (bucketCol/subbinCol are monotone — rankPar's soundness
+    * argument), so every consecutive pair is either inside a block (the
+    * window) or spans two adjacent non-empty blocks (the boundary lead),
+    * never both. That holds for ANY sorted edge array — which is why the
+    * suite's edge overrides may force arbitrary bins here; only task
+    * balance changes. Identical-timestamp clumps — the gap family's
+    * hot-key shape — split across tie sub-bins exactly as in rankPar, so
+    * no block serializes a hot value's mass.
     *
     * Why not the r20-draft mapPartitions range-shuffle version: measured
     * at ×1000 it spent >12 min in per-row Seq-concat + external-Row
@@ -106,8 +91,7 @@ object Stats {
     * frames are deterministic plans, so the union's two subtrees can
     * re-derive them consistently; the boundary subtree rides its own
     * map-side-combined aggregate instead of the window's output), and
-    * keeps the one full exchange. A/B receipts: OPTIMIZATION_r20.md §2;
-    * `SPARK_GRAFT_GAPS=twolevel` re-forces the old device.
+    * keeps the one full exchange. A/B receipts: OPTIMIZATION_r20.md §2.
     */
   private def binLagGapPath(
       e: org.apache.spark.sql.DataFrame,
@@ -151,40 +135,26 @@ object Stats {
     * named columns of the gap's EARLIER endpoint — q152 needs the gap's
     * start timestamp for its argmax, q151 the start sample's value for
     * the time-weighted area vc·Δ. Carry names must exist in `e` and not
-    * collide with (event_type, gp). Small path attributes via lead()
-    * (start-row frame); large path reads them off the self-join's
-    * previous-row side — same rows, same device, both ends measured.
+    * collide with (event_type, gp). Both paths attribute them via lead()
+    * (start-row frame); the bin-lag path's cross-block gaps read them off
+    * the earlier block's last row.
     */
   private[graft] def typeGapsCarry(
       e: org.apache.spark.sql.DataFrame,
       carry: Seq[String],
-      // overridable ONLY so the suite can force each path on fixture-
-      // sized data and assert bit-equality; production callers use the
-      // measured default
+      // overridable ONLY so the suite can force each path (and arbitrary
+      // bins on the large one) on fixture-sized data and assert
+      // bit-equality; production callers use the measured default
       threshold: Long = TypeGapsParThreshold,
-      edgesOverride: Option[Array[Long]] = None,
-      // large-path strategy: "auto" resolves to the one-shuffle bin-lag path
-      // (the r20 A/B winner — [[binLagGapPath]]), overridable to
-      // "twolevel"/"range" by the suite's bit-identity nets and by
-      // SPARK_GRAFT_GAPS for A/B re-measurement; an edgesOverride is the
-      // two-level path's own knob and implies it
-      strategy: String = "auto"): org.apache.spark.sql.DataFrame = {
-    val large =
-      if (edgesOverride.isDefined) "twolevel"
-      else if (strategy == "auto")
-        sys.env.getOrElse("SPARK_GRAFT_GAPS", "range")
-      else strategy
-    require(large == "range" || large == "twolevel",
-      s"typeGapsCarry: unknown strategy '$large'")
+      edgesOverride: Option[Array[Long]] = None)
+      : org.apache.spark.sql.DataFrame = {
     def windowPath(guarded: Boolean) = {
       // small-corpus path: one lead window (identical gaps, no fixed
       // costs; the type-sized-partition ceiling needs ≳10⁷ rows to bite).
       // The guarded variant (zero-job dispatch, no probe ran) refuses
       // NULL `us` loudly via the assert sort key — same contract as
-      // rankPar/prefixSumPar: the window path keeps NULL-us rows
-      // nulls-first (perturbing neighbors' gaps) while the two-level
-      // path drops them at the bin equi-join, so NULL `us` must never
-      // silently pick a meaning by path (r18 ADVICE).
+      // rankPar/prefixSumPar: NULL `us` must never silently pick a
+      // meaning by path (r18 ADVICE).
       val ord = (if (guarded) Seq(nullGuardKey("typeGapsCarry", "us").asc)
         else Nil) ++ Seq(col("us").asc, col("event_id").asc)
       e.select(col("event_type") +: carry.map(col) :+
@@ -197,16 +167,15 @@ object Stats {
     // probe at all when the frame is provably sub-threshold)
     if (PlanStats.rowUpperBound(e).exists(_ < threshold))
       return windowPath(guarded = true)
-    // one sketch-bearing probe pass, shared by both large paths (the
-    // bin-lag path reuses the two-level device's quantile bins and hot
-    // tie sub-bins verbatim — same edges, same hot plan)
+    // one sketch-bearing probe pass: row count, quantile time edges and
+    // the hot-timestamp tie sketch
     val mm = e.agg(min(col("us")), count(lit(1)), edgeProbe("us"),
       count(col("us")), tieProbe("event_id")).head
     val nonNullIdx = 3
     require(mm.getLong(1) == mm.getLong(nonNullIdx),
       s"typeGapsCarry: key 'us' has ${mm.getLong(1) - mm.getLong(nonNullIdx)}" +
-        " NULL rows — callers must pre-filter (window and two-level paths " +
-        "disagree on NULL keys)")
+        " NULL rows — callers must pre-filter (a NULL timestamp has no " +
+        "place in the gap order)")
     if (mm.isNullAt(0)) {
       e.sparkSession.emptyDataFrame
         .selectExpr(Seq("CAST(NULL AS STRING) AS event_type")
@@ -215,65 +184,18 @@ object Stats {
         .limit(0)
     } else if (mm.getLong(1) < threshold) {
       windowPath(guarded = false)
-    } else if (large == "range") {
-      val edges = edgesAt(mm, 2)
-      val (hot, tieEdges) = hotPlanOf(mm, 2, 4, Some("event_id"), edges,
-        edgesOverridden = false, None)
-      binLagGapPath(e, carry, edges, hot, tieEdges)
     } else {
-      // r18: SAMPLED-QUANTILE time bins (the r17 verdict's perf-weak #1:
-      // the one remaining LINEAR bin — a bursty corpus with 90% of events
-      // inside one hour of a year span put ~90% of rows in one (type,
-      // bin) task and resurrected the serialized window inside the device
-      // built to kill it; Tool genskew's `timeburst` axis measures it).
-      // Quantile edges of `us` spread any burst — at either end of the
-      // span — across ~4096 mass-balanced bins; same monotone-binning
-      // bit-identity proof as rankPar's.
+      // r18: SAMPLED-QUANTILE time bins — a bursty corpus with 90% of
+      // events inside one hour of a year span would put ~90% of rows in
+      // one linear (type, bin) block (Tool genskew's `timeburst` axis);
+      // quantile edges spread any burst across ~4096 mass-balanced bins
       val edges = edgesOverride.getOrElse(edgesAt(mm, 2))
       // r19: identical-timestamp clumps (second-granularity corpora,
       // replicated fixtures) are the gap family's hot-key shape — the
       // same tie sub-binning as rankPar's, tie = event_id
       val (hot, tieEdges) = hotPlanOf(mm, 2, 4, Some("event_id"), edges,
         edgesOverride.isDefined, None)
-      val binned = e
-        .withColumn("bin", bucketCol("us", edges, desc = false))
-        .withColumn("sbin", subbinCol("us", Some("event_id"), hot, tieEdges))
-      val binBefore = binned
-        .groupBy(col("event_type"), col("bin"), col("sbin"))
-        .agg(count(lit(1)).cast("long").as("bc"))
-        .select(col("event_type").as("b_type"), col("bin").as("b_bin"),
-          col("sbin").as("b_sbin"),
-          coalesce(
-            sum(col("bc")).over(Window.partitionBy(col("event_type"))
-              .orderBy(col("bin"), col("sbin"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as("before"))
-      val ranked = binned
-        .withColumn("inb", row_number().over(
-          Window.partitionBy(col("event_type"), col("bin"), col("sbin"))
-            .orderBy(col("us"), col("event_id"))).cast("long"))
-        .join(broadcast(binBefore),
-          col("event_type") === col("b_type")
-            && col("bin") === col("b_bin")
-            && col("sbin") === col("b_sbin"))
-        .select(col("event_type") +: col("us") +: carry.map(col) :+
-          (col("before") + col("inb")).as("i"): _*)
-        // pinned: BOTH self-join sides consume the ranked frame — unpinned,
-        // the rank shuffle runs twice (measured +3 s on q257 at ×100);
-        // the upstream binned frame stays UNpinned (two cheap scans beat
-        // a 10M-row serialization, the §5.7 q32 lesson)
-        .transform(graft.operators.Iter.pin)
-      ranked
-        // carry columns rename through a c_ prefix (p_ is taken by the
-        // join-side us/i — carrying "us" itself must not collide)
-        .join(ranked.select(col("event_type").as("p_type") +:
-            col("us").as("p_us") +:
-            carry.map(c => col(c).as(s"c_$c")) :+
-            (col("i") + 1L).as("p_i"): _*),
-          col("event_type") === col("p_type") && col("i") === col("p_i"))
-        .select(col("event_type") +:
-          carry.map(c => col(s"c_$c").as(c)) :+
-          (col("us") - col("p_us")).as("gp"): _*)
+      binLagGapPath(e, carry, edges, hot, tieEdges)
     }
   }
 
@@ -432,7 +354,7 @@ object Stats {
   private def nullGuardKey(device: String, key: String): Column =
     assert_true(col(key).isNotNull,
       lit(s"$device: NULL key '$key' — callers must pre-filter (window " +
-        "and two-level paths disagree on NULL keys)")).cast("long")
+        "and large paths disagree on NULL keys)")).cast("long")
 
   /** SCALE-PARALLEL RANK over an int64 sort key — the general form of
     * the two-level 4096-bin device (r17, generalizing typeGapsPar's rank

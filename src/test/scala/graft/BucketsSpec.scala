@@ -1,16 +1,16 @@
 package graft
 
-import graft.operators.PlanStats
+import graft.operators.{Fan, PlanStats}
 import graft.queries.Stats
 import org.apache.spark.sql.functions._
 
 /** Nets for the r18 sampled-quantile binning stack: the `graft_bucket`
   * expression (codegen/interpreted parity, monotonicity), the
-  * edges-are-pure-plan invariance of the two-level devices (ANY sorted
+  * edges-are-pure-plan invariance of the binned devices (ANY sorted
   * edge array must yield bit-identical output), the shape-agnostic
   * worst-bin-mass bound the round-17 verdict asked for (exponential,
-  * reverse-exponential, lognormal fixtures), and the zero-job
-  * footer-stats dispatch.
+  * reverse-exponential, lognormal fixtures), the zero-job
+  * footer-stats dispatch, and Fan's scan-split bound.
   */
 class BucketsSpec extends SparkSpec {
 
@@ -54,10 +54,11 @@ class BucketsSpec extends SparkSpec {
     assert(gen.map(_._3) === gen.map(_._3).sorted.reverse)
   }
 
-  test("edges are pure plan: rankPar/prefixSumPar/typeGapsCarry forced " +
-      "onto the two-level path return bit-identical rows under EMPTY, " +
-      "single, all-equal, and skewed-sorted edge overrides (any sorted " +
-      "array is a valid binning — only task balance may change)") {
+  test("edges are pure plan: rankPar/prefixSumPar forced onto the " +
+      "two-level path and typeGapsCarry forced onto the bin-lag path " +
+      "return bit-identical rows under EMPTY, single, all-equal, and " +
+      "skewed-sorted edge overrides (any sorted array is a valid binning " +
+      "— only task balance may change)") {
     val e = Tables.events(spark, sf)
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .select(col("event_type"), col("event_id"), col("user_id"),
@@ -77,22 +78,22 @@ class BucketsSpec extends SparkSpec {
       Stats.prefixSumPar(h, "s1", desc = false, Seq("user_id"),
           Seq("s1"), Nil, 0L, ov)
         .collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
-    def tg(ov: Option[Array[Long]]) =
-      Stats.typeGapsCarry(e, Nil, 0L, ov, strategy = "twolevel")
+    def tg(threshold: Long, ov: Option[Array[Long]]) =
+      Stats.typeGapsCarry(e, Nil, threshold, ov)
         .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    val (rk0, ps0, tg0) = (rk(overrides.head), ps(overrides.head),
-      tg(overrides.head))
-    assert(rk0.nonEmpty && ps0.nonEmpty && tg0.nonEmpty)
+    val (rk0, ps0) = (rk(overrides.head), ps(overrides.head))
+    // typeGapsCarry's reference is the lead window (threshold MaxValue);
+    // threshold 0 forces the bin-lag path under every binning, the
+    // sampled-quantile default included
+    val tgWin = tg(Long.MaxValue, None)
+    assert(rk0.nonEmpty && ps0.nonEmpty && tgWin.nonEmpty)
     for (ov <- overrides.tail) {
       assert(rk(ov) === rk0, s"rankPar diverged on ${ov.map(_.toSeq)}")
       assert(ps(ov) === ps0, s"prefixSumPar diverged on ${ov.map(_.toSeq)}")
-      assert(tg(ov) === tg0, s"typeGapsCarry diverged on ${ov.map(_.toSeq)}")
     }
-    // r20: the range-shuffle large path must return the SAME rows as the
-    // two-level family above (the third strategy in the dispatch)
-    val tgRange = Stats.typeGapsCarry(e, Nil, 0L, None, strategy = "range")
-      .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
-    assert(tgRange === tg0, "range-shuffle path diverged from two-level")
+    for (ov <- overrides)
+      assert(tg(0L, ov) === tgWin,
+        s"typeGapsCarry bin-lag diverged from the window on ${ov.map(_.toSeq)}")
   }
 
   test("shape-agnostic worst-bin mass: sampled-quantile edges keep the " +
@@ -231,7 +232,7 @@ class BucketsSpec extends SparkSpec {
   }
 
   test("hot-key tie sub-binning: typeGapsCarry on identical-timestamp " +
-      "clumps (90% of events share one us) — forced two-level equals " +
+      "clumps (90% of events share one us) — forced bin-lag equals " +
       "window, carry columns included") {
     val e = spark.range(0, 150000, 1, 8).selectExpr(
       "id AS event_id",
@@ -239,16 +240,14 @@ class BucketsSpec extends SparkSpec {
         "ELSE 1700000000000000L + id * 1000L END AS us",
       "CASE WHEN id % 2 = 0 THEN 'click' ELSE 'view' END AS event_type",
       "pmod(id, 11L) AS vc")
-    def tg(threshold: Long, strategy: String = "twolevel"): Seq[String] =
-      Stats.typeGapsCarry(e, Seq("vc"), threshold, strategy = strategy)
+    def tg(threshold: Long): Seq[String] =
+      Stats.typeGapsCarry(e, Seq("vc"), threshold)
         .collect().map(_.toString).sorted.toSeq
     val window = tg(Long.MaxValue)
     assert(window.nonEmpty)
-    assert(tg(0L) === window, "hot-us two-level path diverged")
-    // r20: the range path keys its ONE shuffle on the (us, event_id)
-    // tuple, so the 90%-identical-us clump splits by event_id with no
-    // hot detection — same rows required
-    assert(tg(0L, "range") === window, "hot-us range path diverged")
+    // the probe detects the hot us and splits its clump into event_id tie
+    // sub-bins; block boundaries move, the rows must not
+    assert(tg(0L) === window, "hot-us bin-lag path diverged")
   }
 
   test("rowUpperBound soundness corners (r18 ADVICE): Poisson sample " +
@@ -275,6 +274,37 @@ class BucketsSpec extends SparkSpec {
     // (0 groups from 0 rows) and only the GLOBAL agg needs the floor of 1
     val grouped = empty.groupBy(col("a")).agg(count(lit(1)))
     assert(PlanStats.rowUpperBound(grouped).exists(_ >= grouped.count()))
+  }
+
+  test("Fan's split bound: one split per single-file table, the file " +
+      "count for a multi-file directory, None through a join, and one " +
+      "split for a one-row-group file larger than maxPartitionBytes") {
+    val tables = new java.io.File(sf).listFiles
+      .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
+    assert(tables.length === 10)
+    for (t <- tables)
+      assert(Fan.splitsUpperBound(spark.read.parquet(t.getPath))
+        .contains(1L), t.getName)
+    val dir = "/tmp/graft_bucketspec_fan_multi"
+    spark.range(0, 3000, 1, 3).write.mode("overwrite").parquet(dir)
+    assert(new java.io.File(dir).listFiles
+      .count(_.getName.endsWith(".parquet")) === 3)
+    val multi = spark.read.parquet(dir)
+    assert(Fan.splitsUpperBound(multi.filter(col("id") > 5L)
+      .select(col("id"))).contains(3L))
+    assert(Fan.splitsUpperBound(multi.join(multi, "id")).isEmpty)
+    // the footer case: embeddings is one row group of ~190 kB; at a
+    // quarter of its size per split the byte estimate alone says 5
+    val emb = new java.io.File(s"$sf/embeddings.parquet")
+    val key = "spark.sql.files.maxPartitionBytes"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, (emb.length / 4).toString)
+    try assert(Fan.splitsUpperBound(spark.read.parquet(emb.getPath))
+      .contains(1L))
+    finally saved match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
   }
 
   test("typeGapsCarry refuses NULL `us` on BOTH dispatch routes (r18 " +
@@ -309,15 +339,13 @@ class BucketsSpec extends SparkSpec {
     }
     assert(exProbe.getMessage.contains("NULL"),
       s"probe path: ${exProbe.getMessage}")
-    // r20: the range path's own per-row guard (forced strategy, forced
-    // threshold — the probe's require is bypassed only if the execution
-    // route itself refuses; it must, loudly)
-    val exRange = intercept[Exception] {
-      Stats.typeGapsCarry(unprovable, Nil, 0L, None, strategy = "range")
-        .collect()
+    // forced bin-lag threshold: the refusal must come before any large
+    // plan is built or run, loudly
+    val exBinLag = intercept[Exception] {
+      Stats.typeGapsCarry(unprovable, Nil, 0L).collect()
     }
-    assert(messages(exRange).exists(_.contains("NULL")),
-      s"range path: ${messages(exRange).mkString(" | ")}")
+    assert(messages(exBinLag).exists(_.contains("NULL")),
+      s"bin-lag path: ${messages(exBinLag).mkString(" | ")}")
   }
 
   test("the zero-job window path still refuses NULL keys — loudly, at " +

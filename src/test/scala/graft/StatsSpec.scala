@@ -4530,7 +4530,7 @@ class StatsSpec extends SparkSpec {
     }
   }
 
-  test("typeGapsCarry: the forced two-level path equals the forced " +
+  test("typeGapsCarry: the forced bin-lag path equals the forced " +
       "window path row for row, carry columns included (the r17 " +
       "dispatch-equality net — production only ever switches plans, " +
       "never answers)") {
@@ -4539,34 +4539,27 @@ class StatsSpec extends SparkSpec {
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us"),
         expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
-    def dump(threshold: Long, strategy: String = "twolevel") =
-      Stats.typeGapsCarry(e, Seq("vc"), threshold, strategy = strategy)
+    def dump(threshold: Long) =
+      Stats.typeGapsCarry(e, Seq("vc"), threshold)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
     val win = dump(Long.MaxValue) // always the lead window
-    val par = dump(0L)            // always the two-level self-join
+    val par = dump(0L)            // always the bin-lag path
     assert(win.nonEmpty && win === par,
-      s"paths diverge: window ${win.length} rows vs parallel ${par.length}")
-    // r20: the range-shuffle path, carry columns included — the third
-    // strategy must match row for row too
-    val rng = dump(0L, "range")
-    assert(rng === win,
-      s"range path diverges: ${rng.length} rows vs window ${win.length}")
+      s"paths diverge: window ${win.length} rows vs bin-lag ${par.length}")
     // and the no-carry wrapper agrees with itself across paths too
-    def gaps(threshold: Long, strategy: String = "twolevel") =
-      Stats.typeGapsCarry(e, Nil, threshold, strategy = strategy).collect()
+    def gaps(threshold: Long) =
+      Stats.typeGapsCarry(e, Nil, threshold).collect()
         .map(r => (r.getString(0), r.getLong(1))).sorted
     assert(gaps(Long.MaxValue) === gaps(0L))
-    assert(gaps(Long.MaxValue) === gaps(0L, "range"))
     // carrying the sort key ITSELF ("us", the q152 shape) — the c_
-    // rename must not collide with the join/sort columns on any path
-    def dumpUs(threshold: Long, strategy: String = "twolevel") =
-      Stats.typeGapsCarry(e, Seq("us"), threshold, strategy = strategy)
+    // rename must not collide with the struct/sort columns on any path
+    def dumpUs(threshold: Long) =
+      Stats.typeGapsCarry(e, Seq("us"), threshold)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
     val winUs = dumpUs(Long.MaxValue)
     assert(winUs.nonEmpty && winUs === dumpUs(0L))
-    assert(winUs === dumpUs(0L, "range"))
   }
 
   test("partitionedNtile: the closed-form rank bucket equals ntile() " +

@@ -1,23 +1,16 @@
 #!/usr/bin/env bash
-# Plain-java launcher for graft mains (Bench/Verify/Tool): same JVM flags
-# as build.sbt's forked run, no sbt startup/lock — lets measurement runs
-# proceed while sbt test is busy and removes ~20 s of sbt overhead from
-# every timed invocation. Usage:
+# Plain-java launcher for graft mains (Bench/Verify/Tool): the same JVM
+# flags as build.sbt's forked run (both read tools/jvm.flags), no sbt
+# startup/lock — lets measurement runs proceed while sbt test is busy and
+# removes ~20 s of sbt overhead from every timed invocation. Usage:
 #   tools/run.sh graft.Bench
 #   SPARK_GRAFT_CPUS=32 tools/run.sh graft.Tool genscale /root/testdata/sf0.1 /tmp/graft_scale100 100
 set -euo pipefail
 cd "$(dirname "$0")/.."
-ADDOPENS=""
-for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
-         java.nio java.util java.util.concurrent java.util.concurrent.atomic \
-         sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
-  ADDOPENS="$ADDOPENS --add-opens java.base/$p=ALL-UNNAMED"
-done
-exec java $ADDOPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -Duser.timezone=UTC \
+# one flag per line, #-comments and blank lines skipped; left unquoted
+# below so each line splits into its whitespace-separated words
+FLAGS=$(grep -v -e '^[[:space:]]*#' -e '^[[:space:]]*$' tools/jvm.flags)
+exec java $FLAGS \
   -Xmx"${SPARK_DRIVER_MEM:-24g}" \
-  -XX:+UseG1GC \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" \
   "$@"
