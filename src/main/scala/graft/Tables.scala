@@ -11,6 +11,11 @@ import org.apache.spark.sql.functions._
   * TimestampType whatever its physical layout (ns-as-long, NTZ micros, or
   * already-zoned) — see [[normalizeTs]] — so downstream operators and the
   * DuckDB oracle see identical values across testdata generations.
+  *
+  * Loaders never repartition: a builder whose first stage is CPU-dense
+  * per-row work (shingling, per-gram digests, tokenization) wraps its scan
+  * in [[graft.operators.Fan.fan]], which adds a round-robin exchange only
+  * when the file listing shows too few splits to occupy the cores.
   */
 object Tables {
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -26,19 +31,6 @@ object Tables {
   def lineitem(s: SparkSession, d: String) = table(s, d, "lineitem")
   def documents(s: SparkSession, d: String)  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String) = table(s, d, "embeddings")
-
-  /** `documents` fanned out across the cluster for CPU-dense per-row work
-    * (shingling, per-gram digests, tokenization). The text table is tiny on
-    * disk — often a single parquet row group, i.e. a single input split —
-    * but explodes 100–1000× in compute, so without an explicit round-robin
-    * repartition the whole corpus would be processed by one task while the
-    * other N−1 cores idle. The shuffled bytes are just the raw text
-    * (negligible next to the per-gram hashing it unlocks); at 100 TB the
-    * same holds per-file, and the repartition additionally heals small-file
-    * / skewed-file-size imbalance.
-    */
-  def documentsWide(s: SparkSession, d: String): DataFrame =
-    documents(s, d).repartition(s.sparkContext.defaultParallelism)
 
   /** Normalize an events-shaped frame so `ts` is always session-zoned
     * TimestampType (µs), whatever the physical parquet layout was:

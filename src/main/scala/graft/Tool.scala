@@ -9,9 +9,8 @@ import org.apache.spark.sql.functions._
   */
 object Tool {
   private val Subcommands = Seq("smoke", "sql", "sqlwrite", "timesql",
-    "explain", "verify1", "genscale", "genempty", "genskew", "genspan",
-    "ewmabench", "rollbench", "dedupbench", "annnoisebench", "envprobe",
-    "qbench", "statebench")
+    "explain", "genscale", "genempty", "genskew", "genspan", "envprobe",
+    "qbench")
 
   def main(args: Array[String]): Unit = {
     require(args.headOption.exists(Subcommands.contains),
@@ -50,29 +49,6 @@ object Tool {
         val name = args(1)
         val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.001"
         SparkEntry.queries(name)(spark, dir).explain("formatted")
-      case "verify1" =>
-        // Targeted correctness dump, comma-separated names:
-        // `runMain graft.Tool verify1 <q1[,q2,...]> [sfDir] [outDir]`
-        // then `python3 tools/check.py <sfDir> <outDir>`.
-        val names = args(1).split(",").toSeq
-        val dir = if (args.length > 2) args(2) else "/root/testdata/sf0.01"
-        val out = if (args.length > 3) args(3) else "/tmp/verify_one"
-        new java.io.File(out).mkdirs()
-        val oracles = names.flatMap { name =>
-          SparkEntry.queries(name)(spark, dir).coalesce(1).write
-            .mode("overwrite").parquet(s"$out/$name")
-          val o = SparkEntry.oracleSql.get(name)
-          if (o.isEmpty)
-            println(s"[verify1] $name has no oracle (rows-only check); dump written")
-          o.map { sql =>
-            val esc = sql.replace("\\", "\\\\").replace("\"", "\\\"")
-              .replace("\n", "\\n").replace("\t", "\\t")
-            s""""$name": "$esc""""
-          }
-        }
-        java.nio.file.Files.writeString(
-          java.nio.file.Paths.get(s"$out/oracle_sql.json"),
-          oracles.mkString("{", ", ", "}"))
       case "genscale" =>
         // Deterministic ~N× stress corpus for the SCALE_r11 measurements:
         // `runMain graft.Tool genscale [srcDir] [outDir] [factor]`.
@@ -303,7 +279,7 @@ object Tool {
         }
       case "genspan" =>
         // Deterministic CALENDAR-SPAN stretch for the q193/q203 crossover
-        // measurement (`Tool ewmabench`): unlike genscale (density ×N,
+        // measurement (SCALE_r13.md): unlike genscale (density ×N,
         // same 30-day span), this tiles N copies of the events table
         // end-to-end in TIME — generation g shifts every timestamp by
         // g·(span+1 hours), ids stay disjoint — so the hour span grows
@@ -340,142 +316,6 @@ object Tool {
           .write.mode("overwrite").parquet(s"$outS/events.parquet")
         println(s"GENSPAN out=$outS factor=$factorS spanHours=" +
           s"${spanUs / 3600000000L * factorS}")
-      case "ewmabench" =>
-        // Full (span²/2) vs W-truncated (span·W) measurement for the
-        // q193/q203 family — the numbers in ewmaChartPlan/brownTrendPlan's
-        // scaladocs; keep runnable so future rewrites re-measure:
-        //   runMain graft.Tool genspan /root/testdata/sf0.1 /tmp/graft_span 6
-        //   runMain graft.Tool ewmabench [sfDir] [spanDir]
-        val dir1 = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-        val dir6 = if (args.length > 2) args(2) else "/tmp/graft_span"
-        import graft.queries.Analytic
-        for ((corpus, d) <- Seq("720h" -> dir1, "stretched" -> dir6)) {
-          val ev = Tables.events(spark, d).localCheckpoint()
-          for ((label, f) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-            s"q193 full $corpus" -> (() => Analytic.ewmaChartPlan(ev, truncate = false)),
-            s"q193 truncated $corpus" -> (() => Analytic.ewmaChartPlan(ev, truncate = true)),
-            s"q203 full $corpus" -> (() => Analytic.brownTrendPlan(ev, truncate = false)),
-            s"q203 truncated $corpus" -> (() => Analytic.brownTrendPlan(ev, truncate = true))))
-            for (i <- 1 to 2) {
-              val t0 = System.nanoTime()
-              f().write.format("noop").mode("overwrite").save()
-              println(f"$label run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-            }
-        }
-      case "rollbench" =>
-        // q119/q124 frame-width crossover measurement (the numbers in
-        // Analytic.scala's q124 comment; keep runnable so future rewrites
-        // re-measure): `runMain graft.Tool rollbench [sfDir]`
-        val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-        val ev = Tables.events(spark, dir).localCheckpoint()
-        import graft.queries.Analytic
-        for ((label, f) <- Seq[(String, () => org.apache.spark.sql.DataFrame)](
-          "q119 exact 1h" -> (() => Analytic.rollingP95Exact(ev, 1)),
-          "q124 sketch 1h (12 buckets)" ->
-            (() => Analytic.rollingP95Sketch(ev, 12)),
-          "q119 exact 6h" -> (() => Analytic.rollingP95Exact(ev, 6)),
-          "q124 sketch 6h (72 buckets)" ->
-            (() => Analytic.rollingP95Sketch(ev, 72)))) {
-          for (i <- 1 to 2) {
-            val t0 = System.nanoTime()
-            f().write.format("noop").mode("overwrite").save()
-            println(f"$label run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-        }
-      case "dedupbench" =>
-        // dev-loop micro-bench for the q32 collapse pipeline (the tool
-        // behind the measured pin/unpin numbers in Dedup.scala's comments;
-        // keep it runnable so future rewrites re-measure the same shapes)
-        val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-        val docs = Tables.documentsWide(spark, dir)
-          .select(col("doc_id"), col("text"))
-        def time(label: String)(f: => Unit): Unit = {
-          for (i <- 1 to 2) {
-            val t0 = System.nanoTime()
-            f
-            println(f"$label run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-        }
-        import graft.queries.Dedup
-        time("raw (pre-collapse shape)") {
-          val dsh = Dedup.shingleRows(docs)
-          Dedup.verifyJaccard(
-            Dedup.candidatePairs(Dedup.minhashBands(dsh)), dsh)
-            .write.format("noop").mode("overwrite").save()
-        }
-        time("collapse only") {
-          val (r, m) = Dedup.collapseByText(docs)
-          r.write.format("noop").mode("overwrite").save()
-          m.write.format("noop").mode("overwrite").save()
-        }
-        time("collapsed full") {
-          Dedup.nearDups(docs).write.format("noop").mode("overwrite").save()
-        }
-      case "annnoisebench" =>
-        // q270 exact vs Similarity.labelNoiseAnn (the coded ANN scale
-        // path) — wall times at ×1 and ×10, plus measured 1-NN recall
-        // and per-label noise-rate deviation at ×1 (recall's exact
-        // truth is the nprobe=K end of the same dial, which KmeansSpec
-        // proves bit-identical to q270):
-        //   runMain graft.Tool genscale /root/testdata/sf0.1 /tmp/graft_scale_x10 10
-        //   runMain graft.Tool annnoisebench [sfDir] [x10Dir]
-        val dirA = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-        val dirB = if (args.length > 2) args(2) else "/tmp/graft_scale_x10"
-        val nprobes = sys.env.getOrElse("SPARK_GRAFT_NPROBES", "1,2")
-          .split(",").map(_.trim.toInt).toSeq
-        import graft.queries.Similarity
-        def time2(label: String)(f: () => org.apache.spark.sql.DataFrame)
-          : Unit =
-          for (i <- 1 to 2) {
-            val t0 = System.nanoTime()
-            f().write.format("noop").mode("overwrite").save()
-            println(f"$label run$i ${(System.nanoTime() - t0) / 1e9}%.2f s")
-          }
-        // SPARK_GRAFT_ANN_EXACT=0 skips the exact-audit timing — needed at
-        // ×100 (200k vectors → 4·10¹⁰ exact pairs ≈ hours; the ANN route
-        // is the only side of the crossover measurable there, r16)
-        val runExact = sys.env.getOrElse("SPARK_GRAFT_ANN_EXACT", "1") != "0"
-        for ((tag, d) <- Seq("a" -> dirA, "b" -> dirB)) {
-          val emb = Tables.embeddings(spark, d).localCheckpoint()
-          val n = emb.count()
-          val k = math.ceil(math.sqrt(n.toDouble)).toInt
-          println(s"CORPUS $tag dir=$d n=$n k=$k")
-          if (runExact)
-            time2(s"q270 exact $tag")(
-              () => SparkEntry.queries("q270_label_noise")(spark, d))
-          for (np <- nprobes)
-            time2(s"ann k=$k nprobe=$np $tag")(
-              () => Similarity.labelNoiseAnn(emb, k, np))
-        }
-        // recall + rate fidelity at ×1: exact winners from the dial's
-        // nprobe=K end (distributed; KmeansSpec pins ≡ q270)
-        val embA = Tables.embeddings(spark, dirA).localCheckpoint()
-        val nA = embA.count()
-        val kA = math.ceil(math.sqrt(nA.toDouble)).toInt
-        val exactNn = Similarity.labelNoiseAnnNn(embA, kA, nprobe = kA)
-          .select(col("src"), col("nbr").as("e_nbr"), col("lb").as("e_lb"))
-          .localCheckpoint()
-        val exactRates = Similarity.labelNoiseAnn(embA, kA, kA)
-          .select(col("label"), col("noise_rate")).collect()
-          .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-        for (np <- nprobes) {
-          val ann = Similarity.labelNoiseAnnNn(embA, kA, nprobe = np)
-          val agg = ann.join(exactNn, "src")
-            .agg(count(lit(1)).as("n"),
-              sum(when(col("nbr") === col("e_nbr"), 1).otherwise(0))
-                .as("hit"),
-              sum(when(col("lb") === col("e_lb"), 1).otherwise(0))
-                .as("verdict_hit")).head
-          println(f"RECALL x1 nprobe=$np covered=${agg.getLong(0)}/$nA " +
-            f"nn_recall=${agg.getLong(1).toDouble / agg.getLong(0)}%.4f " +
-            f"verdict_agree=${agg.getLong(2).toDouble / agg.getLong(0)}%.4f")
-          val rates = Similarity.labelNoiseAnn(embA, kA, np)
-            .select(col("label"), col("noise_rate")).collect()
-            .map(r => r.getInt(0) -> r.getDouble(1)).toMap
-          val dev = exactRates.map { case (l, r) =>
-            math.abs(rates.getOrElse(l, Double.NaN) - r) }.max
-          println(f"RATEDEV x1 nprobe=$np max_abs=${dev}%.6f")
-        }
       case "envprobe" =>
         import graft.vera._
         val df = spark.range(0, 5000).selectExpr(
@@ -553,110 +393,6 @@ object Tool {
             f"gc=${gc.get / 1000.0}%.1f spillMem=${spillM.get} " +
             f"spillDisk=${spillD.get}")
         }
-      case "statebench" =>
-        // RocksDB state-growth curve for streamChunkNovelty (r18, the
-        // r17 verdict's Next #5): stage the corpus as N files, stream
-        // them one per micro-batch through the novelty operator on the
-        // DISK-backed provider, and print per-batch state size — rows
-        // (one per distinct chunk), RocksDB SST bytes, and memtable
-        // bytes — so the unbounded-by-design state's growth is a
-        // MEASURED curve, not a hope.
-        // r19: an optional [ttlMs] runs the HORIZON-BOUNDED variant
-        // (streamChunkNoveltyTtl) instead — docs staged in doc_id order
-        // (contiguous ranges, ascending file mtimes = in-order intake)
-        // with ts = timestamp_millis(doc_id) as the ingest clock, so the
-        // printed curve shows the state PLATEAU the eviction buys.
-        //   runMain graft.Tool statebench [srcDir] [nFiles] [ttlMs]
-        val srcSB = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-        val nfSB = if (args.length > 2) args(2).toInt else 10
-        val ttlMs = if (args.length > 3) Some(args(3).toLong) else None
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-          "org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")
-        val staged = "/tmp/graft_statebench_src"
-        val docsSB = spark.read.parquet(s"$srcSB/documents.parquet")
-          .select(col("source"), col("doc_id"), col("text"))
-        if (ttlMs.isEmpty) {
-          docsSB.repartition(nfSB).write.mode("overwrite").parquet(staged)
-        } else {
-          // contiguous doc_id slices written sequentially: the file
-          // source replays them oldest-mtime-first = event-time order
-          val bSB = docsSB.agg(min(col("doc_id")), max(col("doc_id"))).head
-          val (loSB, hiSB) = (bSB.getLong(0), bSB.getLong(1))
-          val strideSB = math.max(1L, (hiSB - loSB + 1) / nfSB)
-          val fsSB = org.apache.hadoop.fs.FileSystem.get(
-            spark.sparkContext.hadoopConfiguration)
-          fsSB.delete(new org.apache.hadoop.fs.Path(staged), true)
-          // r20 (r19 ADVICE): the in-order-intake contract rides the file
-          // source's oldest-mtime-first replay, and sequential writes can
-          // land within one filesystem timestamp tick — stamp every part
-          // file of slice i with an EXPLICIT, strictly increasing mtime so
-          // replay order is deterministic, not granularity-dependent
-          val stampedSB = scala.collection.mutable.Set[String]()
-          for (i <- 0 until nfSB) {
-            val lo = loSB + i * strideSB
-            val hi = if (i == nfSB - 1) hiSB + 1 else loSB + (i + 1) * strideSB
-            docsSB.filter(col("doc_id") >= lo && col("doc_id") < hi)
-              .withColumn("ts", expr("timestamp_millis(doc_id)"))
-              .coalesce(1).write.mode("append").parquet(staged)
-            fsSB.listStatus(new org.apache.hadoop.fs.Path(staged))
-              .filter(f => f.getPath.getName.startsWith("part-")
-                && !stampedSB.contains(f.getPath.getName))
-              .foreach { f =>
-                fsSB.setTimes(f.getPath, 1700000000000L + i * 60000L, -1)
-                stampedSB += f.getPath.getName
-              }
-          }
-        }
-        val sch = spark.read.parquet(staged).schema
-        // r18 ADVICE: recentProgress is capped at
-        // spark.sql.streaming.numRecentProgressUpdates (default 100) — with
-        // nFiles above the cap the earliest batches silently vanish and the
-        // printed curve starts mid-series. A StreamingQueryListener prints
-        // every progress AS IT ARRIVES, uncapped.
-        val doneSB = new java.util.concurrent.atomic.AtomicLong(0)
-        val lSB = new org.apache.spark.sql.streaming.StreamingQueryListener {
-          override def onQueryStarted(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener
-                .QueryStartedEvent): Unit = ()
-          override def onQueryProgress(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener
-                .QueryProgressEvent): Unit = {
-            val p = e.progress
-            for (so <- p.stateOperators.headOption) {
-              val cm = so.customMetrics
-              println(s"STATEBENCH batch=${p.batchId} in=${p.numInputRows} " +
-                s"stateRows=${so.numRowsTotal} " +
-                s"sst=${cm.get("rocksdbSstFileSize")} " +
-                s"mem=${cm.get("rocksdbTotalMemoryUsage")} " +
-                s"commitMs=${so.commitTimeMs}")
-            }
-            doneSB.incrementAndGet()
-          }
-          override def onQueryTerminated(
-              e: org.apache.spark.sql.streaming.StreamingQueryListener
-                .QueryTerminatedEvent): Unit = ()
-        }
-        spark.streams.addListener(lSB)
-        val srcStream = spark.readStream.schema(sch)
-          .option("maxFilesPerTrigger", "1").parquet(staged)
-        val qSB = ttlMs match {
-          case Some(h) => graft.streaming.Windows.streamChunkNoveltyTtl(
-            srcStream, "statebench", h, sink = "noop")
-          case None => graft.streaming.Windows.streamChunkNovelty(
-            srcStream, "statebench", sink = "noop")
-        }
-        try {
-          qSB.processAllAvailable()
-          // progress events are async too — give the stream-listener bus a
-          // bounded stability window before tearing down
-          val deadline = System.nanoTime() + 5000000000L
-          var prev = -1L
-          while (prev != doneSB.get && System.nanoTime() < deadline) {
-            prev = doneSB.get
-            Thread.sleep(200)
-          }
-        } finally { qSB.stop(); spark.streams.removeListener(lSB) }
     }
     spark.stop()
   }

@@ -36,6 +36,13 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *    frame passes through UNTOUCHED: no corpus-wide reshuffle sneaks into
   *    production-scale plans.
   *
+  * This is the engine's ONLY scan fan-out device: loaders never repartition,
+  * so a builder that wants parallel per-row work wraps its scan in [[fan]]
+  * (e.g. `fan(Tables.documents(s, d))`). On the single-row-group corpora
+  * that is exactly `repartition(defaultParallelism)` whenever the session
+  * has ≥ 2 cores. The walk stops at any exchange, so fanning an already
+  * fanned (or otherwise repartitioned) frame is a pass-through.
+  *
   * Round-robin repartition keeps determinism (Spark's sort-before-
   * repartition stays on, SPARK-23207), and every query in the registry is
   * already partition-order-invariant by the exactness discipline (int64 /

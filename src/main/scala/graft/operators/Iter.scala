@@ -31,9 +31,9 @@ import org.apache.spark.sql.DataFrame
   * being DETERMINISTIC given its inputs. Every currently pinned plan is
   * (hash/integer keys, order-insensitive min/max/struct-argmin picks, or
   * float aggregates whose consumers tolerate one materialization per run);
-  * do NOT pin a sampled/rand()-bearing frame — give it an explicit eager
-  * `localCheckpoint(true)` and a comment instead (the hazard the removed
-  * rangeGapPath pin guarded).
+  * do NOT pin a sampled, rand()- or monotonically_increasing_id-bearing
+  * frame — give it an explicit eager `localCheckpoint(true)` and a comment
+  * instead (the dedup token dictionaries' interned ids are such frames).
   */
 object Iter {
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)

@@ -768,7 +768,7 @@ object Analytic {
     * incremental accumulator, so each row re-evaluates its frame —
     * O(rows × frame) inside each type partition. The frame width IS the
     * cost dial, and the crossover against the mergeable twin is MEASURED
-    * (`Tool rollbench`, sf0.1, warm runs): 1-hour frame 1.96 s here vs
+    * (r11, sf0.1, warm runs): 1-hour frame 1.96 s here vs
     * 2.13 s for [[q124RollingP95Sketch]] — exact wins at dashboard
     * widths on this density; 6-hour frame 11.4 s here vs 3.2 s there —
     * the sketch wins 3.6× once the frame widens, because its cost is
@@ -791,18 +791,14 @@ object Analytic {
       |    AS p95
       |FROM events
       |ORDER BY event_id NULLS FIRST""".stripMargin,
-  ) { (s, d) => rollingP95Exact(Tables.events(s, d), hours = 1) }
-
-  /** q119's body with the frame width as the dial it is (the crossover
-    * measurement in q124's comment runs this at 6 hours). */
-  private[graft] def rollingP95Exact(
-      ev: org.apache.spark.sql.DataFrame, hours: Int): org.apache.spark.sql.DataFrame =
-    ev.select(col("event_id"),
-        expr(s"""round(percentile(value, 0.95) OVER (
+  ) { (s, d) =>
+    Tables.events(s, d).select(col("event_id"),
+        expr("""round(percentile(value, 0.95) OVER (
           PARTITION BY event_type ORDER BY ts
-          RANGE BETWEEN INTERVAL $hours HOURS PRECEDING AND CURRENT ROW), 6)""")
+          RANGE BETWEEN INTERVAL 1 HOURS PRECEDING AND CURRENT ROW), 6)""")
           .as("p95"))
       .orderBy(col("event_id"))
+  }
 
   /** q119's SCALE-SAFE twin: rolling trailing-1-hour p95 per event type
     * from per-bucket MERGEABLE state instead of per-row exact frames.
@@ -825,7 +821,7 @@ object Analytic {
     * aggregation of the events scan — near-independent of row count per
     * bucket and frame width (q119 is O(rows × frame); this plan's only
     * frame-width term is the trailing-bucket explode). The CROSSOVER is
-    * MEASURED, not asserted (`Tool rollbench`, sf0.1, warm runs): at the
+    * MEASURED, not asserted (r11, sf0.1, warm runs): at the
     * 1-hour frame the corpus' 2.6 events/bucket density keeps q119's
     * exact frames ~30 rows and CHEAPER (1.96 s vs 2.13 s here); at the
     * 6-hour frame q119 grows to 11.4 s while this form holds 3.2 s —
@@ -886,13 +882,11 @@ object Analytic {
       |WHERE cum >= (19 * tot + 19) // 20
       |  AND cum - rc < (19 * tot + 19) // 20
       |ORDER BY event_type NULLS FIRST, b_idx NULLS FIRST""".stripMargin,
-  ) { (s, d) => rollingP95Sketch(Tables.events(s, d), trailing = 12) }
+  ) { (s, d) => rollingP95Sketch(Tables.events(s, d)) }
 
-  /** q124's body with the trailing-bucket count as a dial (12 five-minute
-    * buckets = the registered 1-hour frame; 72 = the 6-hour crossover
-    * measurement in the comment above). */
-  private[graft] def rollingP95Sketch(
-      ev: org.apache.spark.sql.DataFrame, trailing: Int): org.apache.spark.sql.DataFrame = {
+  /** q124's body: 12 trailing five-minute buckets = the 1-hour frame. */
+  private def rollingP95Sketch(
+      ev: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     // bounded driver probe: two scalars fix the bin geometry for the whole
     // corpus (like DuckDB's `sel` CTE; floor(double*1e6) is the identical
     // IEEE op on both engines, so the derived edges match bit-for-bit)
@@ -929,7 +923,7 @@ object Analytic {
     // bins change nothing downstream: the rank walk's pick needs rc > 0.
     val rolled = c
       .select(col("event_type"), col("bin"), col("cnt"),
-        explode(expr(s"sequence(src_b, src_b + ${trailing - 1})")).as("b_idx"))
+        explode(expr("sequence(src_b, src_b + 11)")).as("b_idx"))
       .groupBy(col("event_type"), col("b_idx"), col("bin"))
       .agg(sum(col("cnt")).as("rc"))
     // report only ACTIVE buckets (≥1 own event) — trailing echoes of a
@@ -2189,11 +2183,11 @@ object Analytic {
   ) { (s, d) => ewmaChartPlan(Tables.events(s, d), truncate = true) }
 
   /** Spark-side builder for q193, parameterized on the W-truncation so
-    * `Tool ewmabench` can measure the full span²/2 twin on the same
-    * corpus. `truncate = true` (the production default and what q193
-    * registers) bounds each source hour's forward explode at the
-    * per-type lag `wlag` = the LARGEST d for which the worst-case term
-    * `0.2·powf(0.8,d)·xmax` still casts to a nonzero DECIMAL(18,9)
+    * the full span²/2 twin runs on the same corpus (EdgeEventsSpec's
+    * truncated ≡ full net). `truncate = true` (the production default
+    * and what q193 registers) bounds each source hour's forward explode
+    * at the per-type lag `wlag` = the LARGEST d for which the worst-case
+    * term `0.2·powf(0.8,d)·xmax` still casts to a nonzero DECIMAL(18,9)
     * (xmax = the type's max hourly count). Every dropped term is
     * ≤ that worst case (the term is linear in x ≤ xmax at fixed d, and
     * wlag is the max nonzero lag by definition), i.e. strictly below
@@ -2207,14 +2201,14 @@ object Analytic {
     * guarantees wlag is always defined (every type has ≥ 1 event).
     * Cost: contribution rows drop from span²/2 to span·(wlag+1) per
     * type — LINEAR in calendar span (wlag = 105–106 across types on
-    * the sf0.1 fixture, growing only with log xmax). Measured via
-    * `Tool ewmabench` (genspan ×6 tiles the same corpus to a 4320-hour
+    * the sf0.1 fixture, growing only with log xmax). Measured in r13
+    * (SCALE_r13.md; genspan ×6 tiles the same corpus to a 4320-hour
     * span at constant density; noop-write, min of 2 timed passes):
     * 720 h full 3.87 s vs truncated 1.61 s (explode 259k → 77k
     * rows/type, 2.4×); 4320 h full 35.33 s vs truncated 4.15 s (9.33M
     * → 0.46M rows/type, **8.5×**) — and the gap is the span²/span
     * ratio thereafter (a 2-year hourly span: 153M vs 1.9M rows/type,
-    * ~80×). The full form survives only as the measurement twin here
+    * ~80×). The full form survives only as the suite's reference twin
     * and as the oracle's definition.
     */
   private[graft] def ewmaChartPlan(
@@ -2877,7 +2871,7 @@ object Analytic {
     * s2's (d+1) factor makes its weight the binding one (decreasing
     * from d = 3 on; the max over the probe grid needs no monotonicity
     * anyway), so wlag here runs ~15 lags past q193's (120 vs 105–106
-    * on the sf0.1 fixture). Measured via `Tool ewmabench` (same
+    * on the sf0.1 fixture). Measured in r13 (SCALE_r13.md, same
     * protocol as q193's numbers): 720 h full 4.86 s vs truncated
     * 1.83 s (2.7×); genspan ×6 = 4320 h full 56.57 s vs truncated
     * 8.37 s (**6.8×**) — span²/span thereafter.

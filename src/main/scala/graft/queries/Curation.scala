@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Fan
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -172,7 +173,7 @@ object Curation {
          |FROM red
          |ORDER BY doc_id NULLS FIRST""".stripMargin,
     ) { (s, d) =>
-      val aug = Tables.documentsWide(s, d).select(col("doc_id"),
+      val aug = Fan.fan(Tables.documents(s, d)).select(col("doc_id"),
         concat(col("text"),
           lit(" contact user"), col("doc_id"),
           lit("@example.com or 555-867-"),
@@ -221,7 +222,7 @@ object Curation {
       |FROM c
       |ORDER BY doc_id NULLS FIRST, chunk_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       // empty docs chunk to NOTHING on both engines: DuckDB's
       // generate_series(0, -1, 150) is empty, but Spark's sequence()
       // throws on start > stop with a positive step — guard it out
@@ -247,7 +248,7 @@ object Curation {
   private def sourceStats(
       s: org.apache.spark.sql.SparkSession, d: String) = {
     val all = Window.partitionBy()
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .groupBy(col("source"))
       .agg(count(lit(1)).as("n_docs"),
         sum(size(split(col("text"), " "))).cast("long").as("n_tokens"))
@@ -296,7 +297,7 @@ object Curation {
       |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
     val n = 5
-    val base = Tables.documentsWide(s, d)
+    val base = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), col("lang"),
         (col("doc_id") % 7 === 0).as("is_eval"),
         split(col("text"), " ").as("toks"))
@@ -394,7 +395,7 @@ object Curation {
   ) { (s, d) =>
     val toks = col("toks")
     val nToks = size(toks)
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(nToks >= 3)
       .select(col("doc_id"),
@@ -494,7 +495,7 @@ object Curation {
       .select(col("source"), col("n_docs"), sampleWeight.as("w"))
     val u = ((col("doc_id") * 2654435761L) % 4294967296L).cast("double") /
       4294967296.0
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), col("source"))
       .join(broadcast(wts), "source")
       .select(col("source"), col("n_docs"), col("w"), u.as("u"),
@@ -613,7 +614,7 @@ object Curation {
       |FROM kept GROUP BY doc_id
       |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val segs = Tables.documentsWide(s, d)
+    val segs = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .select(col("doc_id"), posexplode(expr(
         """transform(sequence(0, CAST((size(toks) + 9) div 10 AS INT) - 1),
@@ -712,7 +713,7 @@ object Curation {
       |FROM sc
       |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    dsirLlr(Tables.documentsWide(s, d),
+    dsirLlr(Fan.fan(Tables.documents(s, d)),
       when(col("lang") === "en", 1).otherwise(0))
   }
 
@@ -892,7 +893,7 @@ object Curation {
       .stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val t = Tables.documentsWide(s, d)
+    val t = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"),
         size(split(col("text"), " ")).cast("long").as("nt"),
         size(array_distinct(split(col("text"), " "))).cast("long").as("nd"))

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Fan
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -187,7 +188,7 @@ object Dedup {
     val n = 8
     // r21: 8-gram assembly + md5 per gram fuse into the scan stage — fan
     // the doc rows first (Fan.scala)
-    val base = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val base = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= n)
     val grams = base
@@ -226,7 +227,7 @@ object Dedup {
       |GROUP BY 1
       |ORDER BY keep_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .groupBy(sha2(lower(substring(col("text"), 1, 50)), 256).as("h"))
       .agg(min(col("doc_id")).as("keep_id"), count(lit(1)).as("n_dups"))
       .orderBy(col("keep_id"))
@@ -288,7 +289,7 @@ object Dedup {
           "len(list_distinct(list_concat(x.shingles, y.shingles)))")} >= 0.5
       |ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    nearDups(Tables.documentsWide(s, d).select(col("doc_id"), col("text")))
+    nearDups(Fan.fan(Tables.documents(s, d)).select(col("doc_id"), col("text")))
       .orderBy(col("doc_a"), col("doc_b"))
   }
 
@@ -311,7 +312,7 @@ object Dedup {
     // explode + the 4-md5 budget fuse into the single-split scan stage —
     // one core. Fan the doc rows first (zero-job dispatch; a join-rooted
     // input — q319's reps — passes through untouched, already parallel).
-    graft.operators.Fan.fan(docs)
+    Fan.fan(docs)
       // the filter both excludes sub-window docs (DuckDB's range() yields
       // no shingles for them) and keeps sequence() ascending — Spark's
       // sequence(1, n) DESCENDS for n < 1 and would fabricate indices
@@ -701,7 +702,8 @@ object Dedup {
       |WHERE jaccard >= 0.5
       |ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val docs = Tables.documentsWide(s, d).select(col("doc_id"), col("text"))
+    val docs = Fan.fan(Tables.documents(s, d))
+      .select(col("doc_id"), col("text"))
     // RELATIONAL form with all EXPENSIVE work out of lambdas (interpreted
     // HOF md5 folds benched 3.7s→55s across rounds from megamorphic call
     // sites; per-PAIR array Jaccard benched 48s on this corpus's 246-doc
@@ -752,7 +754,7 @@ object Dedup {
     def hashed(prefix: String): Column =
       conv(substring(md5(concat(lit(prefix), col("g"))), 1, 15), 16, 10)
         .cast("long")
-    val dg = graft.operators.Fan.fan(docs) // r21: 10M-gram explode fuses
+    val dg = Fan.fan(docs) // r21: 10M-gram explode fuses
       // into the single-split scan stage otherwise (Fan.scala)
       .filter(length(col("text")) >= 5)
       .select(col("doc_id"),
@@ -812,7 +814,7 @@ object Dedup {
     // whole-stage-codegen'd sum(CASE WHEN ...) all the way down, immune to
     // profile pollution, and map-side-combines to one row per doc before
     // the shuffle.
-    val toks = Tables.documentsWide(s, d)
+    val toks = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
       .select(col("doc_id"), md5(col("w")).as("h"))
     val bitSums = (0 to 15).map { j =>
@@ -948,7 +950,8 @@ object Dedup {
       |FROM comp c JOIN sz s ON c.component = s.component
       |ORDER BY c.component NULLS FIRST, c.doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val labels = connectedComponents(affixEdges(Tables.documentsWide(s, d)))
+    val labels =
+      connectedComponents(affixEdges(Fan.fan(Tables.documents(s, d))))
     val sizes = labels.groupBy(col("component"))
       .agg(count(lit(1)).as("cluster_size"))
     labels
@@ -1024,7 +1027,7 @@ object Dedup {
       |FROM d2 GROUP BY doc_id
       |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val anchors = Tables.documentsWide(s, d)
+    val anchors = Fan.fan(Tables.documents(s, d))
       .filter(length(col("text")) >= 50)
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(1), length(col("text")) - 49)).as("i"))
@@ -1095,7 +1098,7 @@ object Dedup {
       |FROM q GROUP BY component
       |ORDER BY component NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val docs = Tables.documentsWide(s, d)
+    val docs = Fan.fan(Tables.documents(s, d))
     val labels = connectedComponents(affixEdges(docs))
     val rkW = Window.partitionBy(col("component"))
       .orderBy(col("n_chars").desc, col("doc_id"))
@@ -1167,14 +1170,14 @@ object Dedup {
       |  ${graft.functions.Exact.Sql.ratio6("inter", "uni")} AS jaccard
       |FROM p WHERE 10 * inter >= 9 * uni
       |ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""".stripMargin,
-  ) { (s, d) => prefixJaccardPairs(Tables.documentsWide(s, d)) }
+  ) { (s, d) => prefixJaccardPairs(Fan.fan(Tables.documents(s, d))) }
 
   /** q132's operator body over any (doc_id, text) frame (suite entry). */
   def prefixJaccardPairs(docs: DataFrame): DataFrame =
     // r21: fan before the token explode — the explode plus the df-count
     // partial aggregate above it otherwise run inside the single-split
     // scan stage (Fan.scala)
-    prefixPairsOver(graft.operators.Fan.fan(docs)
+    prefixPairsOver(Fan.fan(docs)
       .select(col("doc_id"),
         explode(array_distinct(split(col("text"), " "))).as("tok")))
 
@@ -1198,7 +1201,7 @@ object Dedup {
   private[graft] def internedSorted(tokRows: DataFrame): DataFrame = {
     val freq = tokRows.groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .withColumn("tid", monotonically_increasing_id())
-      .transform(graft.operators.Iter.pin)
+      .localCheckpoint(eager = true) // nondeterministic ids: see Iter
     tokRows.join(freq, "tok")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("tok"),
@@ -1360,7 +1363,7 @@ object Dedup {
       |  JOIN ms ON g.component = ms.component
       |ORDER BY g.component NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val docs = Tables.documentsWide(s, d)
+    val docs = Fan.fan(Tables.documents(s, d))
     val e0 = affixPairs(docs)
     val edges = e0.union(e0.select(col("b").as("a"), col("a").as("b")))
     val lab = docs.join(
@@ -1483,7 +1486,7 @@ object Dedup {
     tokRows
       .groupBy(col("tok")).agg(count(lit(1)).as("df"))
       .withColumn("tid", monotonically_increasing_id())
-      .transform(graft.operators.Iter.pin)
+      .localCheckpoint(eager = true) // nondeterministic ids: see Iter
 
   /** The per-doc half of the index: canonical-order and numeric-order
     * token-id arrays under a FROZEN dictionary (what q132 derives inline;
@@ -1504,7 +1507,7 @@ object Dedup {
       .join(dict.select(col("tok")), Seq("tok"), "left_anti")
       .withColumn("df", lit(0L))
       .withColumn("tid", lit(-1L) - monotonically_increasing_id())
-      .transform(graft.operators.Iter.pin)
+      .localCheckpoint(eager = true) // nondeterministic ids: see Iter
     toks.join(dict.unionByName(newToks), "tok")
       .groupBy(col("doc_id"))
       .agg(sort_array(collect_list(struct(col("df"), col("tok"),
@@ -1711,13 +1714,13 @@ object Dedup {
       |SELECT * FROM cross_pairs
       |UNION ALL SELECT * FROM same_class
       |ORDER BY f_a NULLS FIRST, f_b NULLS FIRST""".stripMargin,
-  ) { (s, d) => hammingPairs(Tables.documentsWide(s, d)) }
+  ) { (s, d) => hammingPairs(Fan.fan(Tables.documents(s, d))) }
 
   /** The 48-bit multiset SimHash per doc (suite entry). */
   private[graft] def simhash48(docs: DataFrame): DataFrame = {
     // r21: token explode + 48 nibble extractions fuse into the scan stage
     // — fan first (Fan.scala; no-op on multi-split sources)
-    val toks = graft.operators.Fan.fan(docs)
+    val toks = Fan.fan(docs)
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val nib = toks.select(
       col("doc_id") +: hammingNibbles.map(expr): _*)
@@ -1844,7 +1847,7 @@ object Dedup {
       |FROM j""".stripMargin,
   ) { (s, d) =>
     val (reps, _) = collapseByText(
-      Tables.documentsWide(s, d).select(col("doc_id"), col("text")))
+      Fan.fan(Tables.documents(s, d)).select(col("doc_id"), col("text")))
     val dsh = shingleRows(reps)
     val cand = candidatePairs(minhashBands(dsh))
       .select(col("doc_a"), col("doc_b")).withColumn("c", lit(1L))
@@ -1902,7 +1905,7 @@ object Dedup {
       |ORDER BY g.doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
     val n = 8
-    val grams = Tables.documentsWide(s, d)
+    val grams = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= n)
       .select(col("doc_id"),
@@ -1981,7 +1984,7 @@ object Dedup {
       |FROM p WHERE 10 * inter >= 9 * sz_a
       |ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    containmentPairs(Tables.documentsWide(s, d)
+    containmentPairs(Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), col("text")))
   }
 
@@ -2163,7 +2166,7 @@ object Dedup {
       |FROM g a JOIN g b ON a.h = b.h AND a.doc_id < b.doc_id
       |GROUP BY 1, 2
       |ORDER BY doc_a NULLS FIRST, doc_b NULLS FIRST""".stripMargin,
-  ) { (s, d) => substringDupPairs(Tables.documentsWide(s, d)) }
+  ) { (s, d) => substringDupPairs(Fan.fan(Tables.documents(s, d))) }
 
   // q187 geometry: W-token rule, G-token anchors, stride K = W − G + 1.
   private val SubW = 50
@@ -2312,7 +2315,7 @@ object Dedup {
       |GROUP BY 1, 2
       |ORDER BY doc_id NULLS FIRST, eval_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    substringContamination(Tables.documentsWide(s, d))
+    substringContamination(Fan.fan(Tables.documents(s, d)))
   }
 
   /** q191's operator body over any (doc_id, text) frame (suite entry). */
@@ -2424,7 +2427,7 @@ object Dedup {
       |FROM t
       |ORDER BY cluster_size""".stripMargin,
   ) { (s, d) =>
-    val c = Tables.documentsWide(s, d)
+    val c = Fan.fan(Tables.documents(s, d))
       .groupBy(sha2(lower(substring(col("text"), 1, 50)), 256).as("h"))
       .agg(count(lit(1)).cast("long").as("sz"))
     val sp = c.groupBy(col("sz"))
@@ -2497,7 +2500,7 @@ object Dedup {
       |FROM t
       |ORDER BY source NULLS FIRST, cluster_size""".stripMargin,
   ) { (s, d) =>
-    val ch = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val ch = Fan.fan(Tables.documents(s, d))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("text"),
         explode(sequence(lit(0L), (length(col("text")) - 1).cast("long"),
@@ -2619,7 +2622,7 @@ object Dedup {
       |ORDER BY doc_a NULLS FIRST, chunk_id_a NULLS FIRST,
       |  doc_b NULLS FIRST, chunk_id_b NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val chunks = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val chunks = Fan.fan(Tables.documents(s, d))
       .filter(length(col("text")) > 0)
       .select(col("doc_id"), col("text"),
         explode(sequence(lit(0L), (length(col("text")) - 1).cast("long"),
@@ -2722,7 +2725,7 @@ object Dedup {
       |JOIN sz nb ON ov.source_b = nb.source
       |ORDER BY source_a NULLS FIRST, source_b NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val ch = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val ch = Fan.fan(Tables.documents(s, d))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("text"),
         explode(sequence(lit(0L), (length(col("text")) - 1).cast("long"),
@@ -2795,7 +2798,7 @@ object Dedup {
       |FROM rk WHERE rnk <= 10
       |ORDER BY source NULLS FIRST, rnk""".stripMargin,
   ) { (s, d) =>
-    val ch = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val ch = Fan.fan(Tables.documents(s, d))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("doc_id"), col("text"),
         explode(sequence(lit(0L), (length(col("text")) - 1).cast("long"),
@@ -2896,7 +2899,7 @@ object Dedup {
       |FROM cum
       |ORDER BY source NULLS FIRST, decile""".stripMargin,
   ) { (s, d) =>
-    val ch = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val ch = Fan.fan(Tables.documents(s, d))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("doc_id"), col("text"),
         explode(sequence(lit(0L), (length(col("text")) - 1).cast("long"),
@@ -3007,7 +3010,7 @@ object Dedup {
       |FROM per
       |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val ch = graft.operators.Fan.fan(Tables.documentsWide(s, d))
+    val ch = Fan.fan(Tables.documents(s, d))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("doc_id"), col("text"),
         explode(sequence(lit(0L), (length(col("text")) - 1).cast("long"),

@@ -2,6 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Exact
+import graft.operators.Fan
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -36,7 +37,7 @@ object Gaps {
     * valid top-k under ties and every estimate equals the exact count.
     */
   val q99HeavyHitters = Q.noOracle("q99_heavy_hitters") { (s, d) =>
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .select(explode(split(col("text"), " ")).as("term"))
       .agg(expr("approx_top_k(term, 10)").as("top"))
       .select(explode(col("top")).as("hh"))
@@ -1509,7 +1510,7 @@ object Gaps {
       |  value_cents NULLS FIRST""".stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val rows = graft.operators.Fan.fan(Tables.lineitem(s, d)) // r21: see q166
+    val rows = Fan.fan(Tables.lineitem(s, d)) // r21: see q166
       .filter(col("l_extendedprice").isNotNull)
       .select(col("l_orderkey"), col("l_linenumber"),
         expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").as("c"))
@@ -1750,7 +1751,7 @@ object Gaps {
     // r21: fan the scan (Fan.scala) — the (flag, c) partial aggregate over
     // ~590k near-unique cent runs otherwise runs inside the single-split
     // scan stage on one core
-    val v = graft.operators.Fan.fan(Tables.lineitem(s, d))
+    val v = Fan.fan(Tables.lineitem(s, d))
       .filter(col("l_extendedprice").isNotNull)
       .select(col("l_returnflag").as("flag"),
         expr("CAST(round(100 * l_extendedprice) AS BIGINT)").as("c"))
@@ -1889,7 +1890,7 @@ object Gaps {
       |GROUP BY d.flag
       |ORDER BY l_returnflag NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val v = graft.operators.Fan.fan(Tables.lineitem(s, d)) // r21: see q166
+    val v = Fan.fan(Tables.lineitem(s, d)) // r21: see q166
       .filter(col("l_extendedprice").isNotNull)
       .select(col("l_returnflag").as("flag"),
         expr("CAST(round(100 * l_extendedprice) AS BIGINT)").as("c"))

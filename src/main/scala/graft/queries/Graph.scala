@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Fan
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -195,7 +196,7 @@ object GraphOps {
        |FROM deg d LEFT JOIN tc ON d.v = tc.v
        |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    triangleClustering(Dedup.affixPairs(Tables.documentsWide(s, d)))
+    triangleClustering(Dedup.affixPairs(Fan.fan(Tables.documents(s, d))))
   }
 
   /** q134's core over any undirected pair list `(a, b)` with a < b
@@ -468,7 +469,7 @@ object GraphOps {
          |ORDER BY doc_id NULLS FIRST""".stripMargin
     },
   ) { (s, d) =>
-    val n = Tables.documentsWide(s, d)
+    val n = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"),
         sha2(substring(col("text"), 1, 50), 256).as("hp"),
         sha2(expr("substr(text, greatest(length(text) - 49, 1), 50)"), 256)
@@ -559,7 +560,7 @@ object GraphOps {
          |ORDER BY community NULLS FIRST, doc_id NULLS FIRST""".stripMargin
     },
   ) { (s, d) =>
-    val n = Tables.documentsWide(s, d)
+    val n = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"),
         sha2(substring(col("text"), 1, 50), 256).as("hp"),
         sha2(expr("substr(text, greatest(length(text) - 49, 1), 50)"), 256)

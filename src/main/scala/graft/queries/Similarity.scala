@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Fan
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -97,7 +98,7 @@ object Similarity {
     // r21: fan BEFORE the pin — the pinned corpus frame otherwise keeps
     // the single-split scan layout and every round's assignment crossJoin
     // + argmin aggregate runs on one core (Fan.scala)
-    val vecs = graft.operators.Fan.fan(emb)
+    val vecs = Fan.fan(emb)
       .select(col("vec_id"), vec(col("embedding")).as("v"))
       .withColumn("n2", dot(col("v"), col("v")))
       .transform(graft.operators.Iter.pin) // scanned every round: pin it once
@@ -1516,7 +1517,8 @@ object Similarity {
        |ORDER BY rrf_score DESC, doc_id NULLS FIRST
        |LIMIT 10""".stripMargin,
   ) { (s, d) =>
-    val docs = Tables.documentsWide(s, d).select(col("doc_id"), col("text"))
+    val docs = Fan.fan(Tables.documents(s, d))
+      .select(col("doc_id"), col("text"))
     val dtok = docs.select(col("doc_id"),
       explode(array_distinct(split(col("text"), " "))).as("tok"))
     val qt = dtok.filter(col("doc_id") === 0).select(col("tok"))
@@ -1841,7 +1843,7 @@ object Similarity {
   ) { (s, d) =>
     // r21: fan before the explode+pin — the ×k distance fan downstream
     // otherwise inherits the single-split scan layout (Fan.scala)
-    val x = graft.operators.Fan.fan(Tables.embeddings(s, d))
+    val x = Fan.fan(Tables.embeddings(s, d))
       .filter(col("label").isNotNull)
       .select(col("vec_id"), col("label"),
         posexplode(col("embedding")).as(Seq("pos0", "v")))
@@ -2102,7 +2104,7 @@ object Similarity {
     * documented waiver group. At 10⁹ vectors [[labelNoiseAnn]] is the
     * scale path — trained-IVF candidates into this exact scorer, with
     * nprobe = K provably collapsing back to THIS operator (KmeansSpec)
-    * and `Tool annnoisebench` measuring the recall/exponent trade;
+    * and the recall/exponent trade measured in SCALE_r15/r16;
     * this operator is the exact audit-scale evaluator, the same stance
     * q269 takes for blocked ID estimation.
     */
@@ -2193,7 +2195,7 @@ object Similarity {
     *  - at nprobe = K every cluster is probed, the candidate set is the
     *    whole corpus minus self, and the output is BIT-IDENTICAL to the
     *    exact q270 (asserted) — the dial's two ends are "fast" and
-    *    "exact", with measured recall in between (`Tool annnoisebench`).
+    *    "exact", with measured recall in between (SCALE_r15.md).
     *
     * The quantized int64 scorer space, the (d2, nbr) deterministic
     * total order, and the ratio6 finish are q270's verbatim. A vector

@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Exact
-import graft.operators.PlanStats
+import graft.operators.{Fan, PlanStats}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -927,7 +927,7 @@ object Stats {
       |ORDER BY chi2 DESC NULLS LAST, term NULLS FIRST, lang NULLS FIRST
       |LIMIT 50""".stripMargin,
   ) { (s, d) =>
-    val docs = Tables.documentsWide(s, d)
+    val docs = Fan.fan(Tables.documents(s, d))
     val dt = docs.select(col("doc_id"), col("lang"),
       explode(array_distinct(split(col("text"), " "))).as("term"))
     val tc = dt.groupBy(col("term"), col("lang")).agg(count(lit(1)).as("a_tc"))
@@ -1428,7 +1428,7 @@ object Stats {
     // the SCAN stage (single-split input → ONE core; q164 measured the
     // same 4.4 s at 8 and 32 cores). Fan the 600k narrow base rows once —
     // cheap exchange, 32-way resampling (guide §2.6/§6; Fan.scala).
-    val rep = graft.operators.Fan.fan(e)
+    val rep = Fan.fan(e)
       .select(col("event_type"), col("x"),
         array((0 until nDigs).map(g => md5(concat(lit(s"bs|$g|"),
           col("event_id").cast("string")))): _*).as("digs"))
@@ -4110,7 +4110,7 @@ object Stats {
       |FROM agg
       |ORDER BY source""".stripMargin,
   ) { (s, d) =>
-    val tc = Tables.documentsWide(s, d)
+    val tc = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
+import graft.operators.Fan
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -59,7 +60,7 @@ object TextAnalysis {
       |ORDER BY doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.types.DecimalType
-    val tf = Tables.documentsWide(s, d)
+    val tf = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("term"))
       .groupBy(col("doc_id"), col("term"))
       .agg(count(lit(1)).as("c"))
@@ -133,7 +134,7 @@ object TextAnalysis {
           md5(concat_ws(" ",
             element_at(tokens, i), element_at(tokens, i + 1), element_at(tokens, i + 2))))),
         1, 16))
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), col("text"), split(col("text"), " ").as("toks"))
       .select(
         col("doc_id"),
@@ -212,7 +213,7 @@ object TextAnalysis {
       |ORDER BY doc_id NULLS FIRST, rk""".stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documentsWide(s, d)
+    val docs = Fan.fan(Tables.documents(s, d))
     val tf = docs
       .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"),
         explode(split(col("text"), " ")).as("term"))
@@ -305,7 +306,7 @@ object TextAnalysis {
       |ORDER BY rk""".stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val docs = Tables.documentsWide(s, d)
+    val docs = Fan.fan(Tables.documents(s, d))
     val tf = docs
       .select(col("doc_id"), size(split(col("text"), " ")).as("n_tokens"),
         explode(split(col("text"), " ")).as("term"))
@@ -377,7 +378,7 @@ object TextAnalysis {
     import org.apache.spark.sql.expressions.Window
     val tokens = col("toks")
     val nTokens = size(tokens)
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .withColumn("rn", row_number().over(
         Window.partitionBy(sha2(lower(substring(col("text"), 1, 50)), 256))
           .orderBy(col("doc_id"))))
@@ -430,7 +431,7 @@ object TextAnalysis {
       col("s_en") >= col("s_fr") && col("s_en") >= col("s_de"), "en")
       .when(col("s_fr") >= col("s_de"), "fr")
       .otherwise("de")
-    Tables.documentsWide(s, d)
+    Fan.fan(Tables.documents(s, d))
       .select(
         col("doc_id"), col("lang"),
         score(Seq("the", "a", "is", "of", "and")).as("s_en"),
@@ -599,7 +600,7 @@ object TextAnalysis {
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.types.DecimalType
-    val pd = Tables.documentsWide(s, d)
+    val pd = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("toks"))
       .filter(size(col("toks")) >= 2)
       .select(col("doc_id"), explode(expr(
@@ -680,7 +681,7 @@ object TextAnalysis {
       |ORDER BY pmi DESC NULLS LAST, w1 NULLS FIRST, w2 NULLS FIRST
       |LIMIT 50""".stripMargin,
   ) { (s, d) =>
-    val toks = Tables.documentsWide(s, d)
+    val toks = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), split(col("text"), " ").as("t"))
     val uni = toks.select(explode(col("t")).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("c"))
@@ -747,7 +748,7 @@ object TextAnalysis {
     "q159_bpe_merges",
     bpeOracle,
   ) { (s, d) =>
-    bpeMergeTable(Tables.documentsWide(s, d), BpeRounds)
+    bpeMergeTable(Fan.fan(Tables.documents(s, d)), BpeRounds)
   }
 
   /** q159's operator body: mine `rounds` BPE merges from any frame with a
@@ -890,7 +891,7 @@ object TextAnalysis {
          |ORDER BY wc.doc_id NULLS FIRST""".stripMargin
     },
   ) { (s, d) =>
-    val docs = Tables.documentsWide(s, d)
+    val docs = Fan.fan(Tables.documents(s, d))
     val merges = bpeMergeTable(docs, BpeRounds)
     val words = docs
       .select(col("doc_id"), explode(split(col("text"), " ")).as("w"))
@@ -1011,7 +1012,7 @@ object TextAnalysis {
       |FROM fit""".stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val tok = Tables.documentsWide(s, d)
+    val tok = Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), explode(split(col("text"), " ")).as("tok"))
     val nt = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
     val fo = tok.groupBy(col("tok")).agg(min(col("doc_id")).as("first_doc"))
@@ -1152,7 +1153,7 @@ object TextAnalysis {
       |WHERE p.rk = 1
       |ORDER BY t.doc_id NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    nbClassify(Tables.documentsWide(s, d)
+    nbClassify(Fan.fan(Tables.documents(s, d))
       .select(col("doc_id"), col("lang"), col("text")))
   }
 
@@ -1164,7 +1165,7 @@ object TextAnalysis {
     // r21: fan BEFORE the pin — a pinned scan-rooted frame inherits the
     // single-split scan layout, so every consumer (the token explode, the
     // per-doc count aggregate) would run one-core otherwise (Fan.scala)
-    val t = graft.operators.Fan.fan(docs).select(col("doc_id"), col("lang"),
+    val t = Fan.fan(docs).select(col("doc_id"), col("lang"),
       (substring(md5(concat(lit("split|"), col("doc_id").cast("string"))),
         1, 2) >= "14").as("is_train"),
       split(col("text"), " ").as("toks"))
@@ -1285,7 +1286,7 @@ object TextAnalysis {
       |FROM agg a JOIN stot s USING (source)
       |ORDER BY a.source""".stripMargin,
   ) { (s, d) =>
-    val tok = Tables.documentsWide(s, d)
+    val tok = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("source"), explode(split(col("text"), " ")).as("t"))
     val st = tok.groupBy(col("source"), col("t"))
@@ -1400,7 +1401,7 @@ object TextAnalysis {
       |LIMIT 30""".stripMargin,
   ) { (s, d) =>
     import org.apache.spark.sql.expressions.Window
-    val tok = Tables.documentsWide(s, d)
+    val tok = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).as("pos"), col("col").as("t"),
@@ -1455,7 +1456,7 @@ object TextAnalysis {
     * posting lists are term-selective (two terms of the vocabulary, not
     * the corpus), the join key (doc, pos) is near-unique so skew-free;
     * for a phrase workload the posting-list table is what an index
-    * MATERIALIZES — this plan is its on-the-fly form over documentsWide.
+    * MATERIALIZES — this plan is its on-the-fly form over the fanned scan.
     */
   val q213PhraseSearch = Q(
     "q213_phrase_search",
@@ -1481,7 +1482,7 @@ object TextAnalysis {
       |GROUP BY doc_id
       |ORDER BY doc_id""".stripMargin,
   ) { (s, d) =>
-    val pos = Tables.documentsWide(s, d)
+    val pos = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull)
       .select(col("doc_id"), posexplode(split(col("text"), " ")))
       .select(col("doc_id"), (col("pos") + 1).cast("long").as("pos"),
@@ -1566,7 +1567,7 @@ object TextAnalysis {
       |    / CAST(count(*) AS DOUBLE), 6) AS ln_k
       |FROM pt""".stripMargin,
   ) { (s, d) =>
-    val tf = Tables.documentsWide(s, d)
+    val tf = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -1658,7 +1659,7 @@ object TextAnalysis {
       |JOIN nrm nb ON nb.source = d.src_b
       |ORDER BY d.src_a, d.src_b""".stripMargin,
   ) { (s, d) =>
-    val tc = Tables.documentsWide(s, d)
+    val tc = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .filter(col("w") =!= "")
@@ -1742,7 +1743,7 @@ object TextAnalysis {
       |FROM st
       |ORDER BY source""".stripMargin,
   ) { (s, d) =>
-    val t = Tables.documentsWide(s, d)
+    val t = Fan.fan(Tables.documents(s, d))
       .filter(col("text").isNotNull && col("source").isNotNull)
       .select(col("source"), explode(split(col("text"), " ")).as("term"))
       .filter(col("term") =!= "")
@@ -2597,7 +2598,7 @@ object TextAnalysis {
       |FROM agg
       |ORDER BY source NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    val tok = Tables.documentsWide(s, d)
+    val tok = Fan.fan(Tables.documents(s, d))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), explode(split(col("text"), " ")).as("w"))
       .groupBy(col("source"), col("w"))

@@ -879,11 +879,7 @@ object Windows {
     * is a streaming documents frame (source, doc_id, text).
     */
   def streamChunkNovelty(
-      docs: DataFrame, tableName: String,
-      // "memory" for the suite's equality nets; "noop" for Tool
-      // statebench's state-growth measurement (a memory sink would
-      // accumulate every credit row on the driver at ×100)
-      sink: String = "memory"): StreamingQuery = {
+      docs: DataFrame, tableName: String): StreamingQuery = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
@@ -909,7 +905,7 @@ object Windows {
       }
       .toDF("source", "doc_id", "chunk_md5")
       .writeStream
-      .format(sink)
+      .format("memory")
       .queryName(tableName)
       .outputMode("append")
       .start()
@@ -922,7 +918,7 @@ object Windows {
     * after every silence gap longer than `horizonMs` of EVENT time, and
     * state older than the horizon is EVICTED via event-time timeouts, so
     * resident state is "chunks seen within the last horizon", a plateau
-    * instead of a line (`Tool statebench … ttl` measures the curve).
+    * instead of a line (the measured curve is in SCALE_r19.md §9).
     *
     * Correctness does NOT lean on timeout timing: the credit decision
     * compares each occurrence's event time against the stored last-seen
@@ -940,8 +936,7 @@ object Windows {
     * watermark delay 0 = the in-order contract made explicit.
     */
   def streamChunkNoveltyTtl(
-      docs: DataFrame, tableName: String, horizonMs: Long,
-      sink: String = "memory"): StreamingQuery = {
+      docs: DataFrame, tableName: String, horizonMs: Long): StreamingQuery = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs
@@ -989,7 +984,7 @@ object Windows {
       }
       .toDF("source", "doc_id", "chunk_md5")
       .writeStream
-      .format(sink)
+      .format("memory")
       .queryName(tableName)
       .outputMode("append")
       .start()

@@ -16,21 +16,25 @@ import java.time.Instant
   * main.py:94-98,222). Reproducing those DETERMINISTIC range names on Spark
   * needs a stable global row index, which we compute scale-safely:
   *
-  *  1. `repartitionByRange` + `sortWithinPartitions` on the caller's stable
-  *     key — one range shuffle, fully parallel;
-  *  2. per-partition row counts (one lightweight job whose result is one row
-  *     PER PARTITION on the driver — bounded like AQE stats, never per-row);
-  *  3. global index = per-partition `row_number()` (window partitioned by
-  *     `spark_partition_id`, so every partition ranks independently in
-  *     parallel — no single-partition window) + broadcast cumulative offset;
-  *  4. bucket = gidx / rowsPerFile; hash-repartition on bucket co-locates
-  *     each file's rows in one task → `partitionBy("__bucket")` emits exactly
-  *     one parquet file per bucket; a driver rename pass applies the
-  *     reference's names. The last short file keeps the nominal full-range
-  *     name, exactly like the reference (main.py:222,252-254).
+  *  1. range-bound sampling: `repartitionByRange` on the caller's stable
+  *     key samples the source for its partition bounds (one job, the first
+  *     read of the source);
+  *  2. the range shuffle (its map stage is the second read of the source)
+  *     plus `sortWithinPartitions`, then RDD `zipWithIndex` over that one
+  *     sorted lineage ([[withGlobalIndex]]): its count job returns one row
+  *     count PER PARTITION to the driver (bounded like AQE stats, never
+  *     per-row), and the global index is the partition's start offset plus
+  *     the row's position in it — no single-partition window;
+  *  3. the bucket shuffle plus the write: bucket = gidx / rowsPerFile;
+  *     hash-repartition on bucket co-locates each file's rows in one task →
+  *     `partitionBy("__bucket")` emits exactly one parquet file per bucket;
+  *     a driver rename pass applies the reference's names. The last short
+  *     file keeps the nominal full-range name, exactly like the reference
+  *     (main.py:222,252-254).
   *
-  * At 100 TB this is two shuffles of the exported table (range + bucket) and
-  * O(#partitions + #files) driver state — no collect of data rows anywhere.
+  * At 100 TB this is two reads of the source (sampling, range-shuffle map),
+  * two shuffles of the exported table (range + bucket) and O(#partitions +
+  * #files) driver state — no collect of data rows anywhere.
   *
   * Manifest (`write_manifest`, main.py:103-113): same shape
   * (`timestamp` epoch-ms, `dateStr`, `files: {table: [objectKey]}`), with one
@@ -91,7 +95,8 @@ object Export {
     * nondeterministic — the range exchange re-samples with a seed derived
     * from the fresh `rdd.id` on every action, so two actions can see
     * different partition boundaries). The sort's shuffle files are reused
-    * across the two jobs, so the input is scanned once.
+    * by the count job and the write, so past the range-bound sampling job
+    * the input is scanned once, by the range shuffle's map stage.
     */
   private[vera] def withGlobalIndex(
       df: DataFrame, orderBy: Seq[String], numPartitions: Int): DataFrame = {
@@ -758,15 +763,9 @@ object Export {
 
   /** S7 manifest sink (`write_manifest`, main.py:103-113). */
   def writeManifest(m: Manifest, outDir: String, spark: SparkSession): Unit = {
-    def esc(s: String): String = s.flatMap {
-      case '"'           => "\\\""
-      case '\\'          => "\\\\"
-      case c if c < ' '  => f"\\u${c.toInt}%04x"
-      case c             => c.toString
-    }
     val files = m.files
       .map { case (t, keys) =>
-        s""""${esc(t)}": [${keys.map(k => s""""${esc(k)}"""").mkString(", ")}]"""
+        s"""${jsonString(t)}: [${keys.map(jsonString).mkString(", ")}]"""
       }
       .mkString("{", ", ", "}")
     val wm = m.watermarkMicros
@@ -774,15 +773,26 @@ object Export {
     val tomb =
       if (m.tombstones.isEmpty) ""
       else m.tombstones
-        .map { case (t, k) => s""""${esc(t)}": "${esc(k)}"""" }
+        .map { case (t, k) => s"${jsonString(t)}: ${jsonString(k)}" }
         .mkString(""", "tombstones": {""", ", ", "}")
     val json =
-      s"""{"timestamp": ${m.timestamp}, "dateStr": "${esc(m.dateStr)}"$wm$tomb, "files": $files}"""
+      s"""{"timestamp": ${m.timestamp}, "dateStr": ${jsonString(m.dateStr)}$wm$tomb, "files": $files}"""
     val fs = FileSystem.get(new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
     val out = fs.create(new Path(s"$outDir/manifest.json"), true)
     try out.write(json.getBytes("UTF-8"))
     finally out.close()
   }
+
+  /** `s` as a quoted JSON string: quote and backslash escaped, and every
+    * control char below 0x20 written as a 4-hex-digit unicode escape. One
+    * escaper for `manifest.json` and Verify's `oracle_sql.json` — a raw
+    * tab or CR in either would make a JSON reader reject the whole file. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'          => "\\\""
+    case '\\'         => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c            => c.toString
+  } + "\""
 
   /** Env-driven export job (O2/O3, main.py:266-282): `DEBUG_TABLE` exports a
     * single table (main.py:270-276), `DEBUG` shrinks rotation 100× and stops

@@ -305,6 +305,21 @@ class BucketsSpec extends SparkSpec {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
+    // the walk stops at an exchange: a repartitioned frame has no bound,
+    // so fanning it again passes it through untouched
+    val docs = Tables.documents(spark, sf)
+    assert(Fan.splitsUpperBound(docs.repartition(3)).isEmpty)
+    val fanned = Fan.fan(docs)
+    assert(Fan.splitsUpperBound(fanned).isEmpty)
+    assert(Fan.fan(fanned) eq fanned)
+    // one split under local[4]: fan is a round-robin exchange to
+    // defaultParallelism, the same plan and partition count as a plain
+    // repartition(defaultParallelism)
+    val par = spark.sparkContext.defaultParallelism
+    assert(par >= 2)
+    assert(fanned.queryExecution.logical ===
+      docs.repartition(par).queryExecution.logical)
+    assert(fanned.rdd.getNumPartitions === par)
   }
 
   test("typeGapsCarry refuses NULL `us` on BOTH dispatch routes (r18 " +

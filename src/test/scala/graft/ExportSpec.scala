@@ -108,6 +108,17 @@ class ExportSpec extends SparkSpec {
     for ((_, keys) <- manifest.files; k <- keys)
       assert(Files.exists(java.nio.file.Paths.get(
         s"$out/${k.stripPrefix("m/")}")), s"manifest lists missing file $k")
+    // a name with a quote, backslash, CR, TAB and U+0001 survives the
+    // escaper: a JSON reader gets the same string back
+    val odd = "a\"b\\c\rd\te" + '\u0001'
+    val oddOut = tmpDir()
+    Export.writeManifest(manifest.copy(files = Seq(odd -> Seq(odd))),
+      oddOut, spark)
+    val files = new com.fasterxml.jackson.databind.ObjectMapper().readTree(
+      Files.readAllBytes(java.nio.file.Paths.get(s"$oddOut/manifest.json")))
+      .get("files")
+    assert(files.size === 1)
+    assert(Option(files.get(odd)).map(_.get(0).asText) === Some(odd))
   }
 
   test("S6: outDir as a file:// URI behaves identically to a bare path") {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Fan
 import java.nio.file.Files
 
 import graft.queries.Dedup
@@ -18,7 +19,7 @@ class IncrementalDedupSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("incremental batch dedup equals the full recompute, disjointly") {
-    val corpus = Tables.documentsWide(spark, sf)
+    val corpus = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("text"))
     val old = corpus.filter(col("doc_id") % 3 =!= 0)
     val fresh = corpus.filter(col("doc_id") % 3 === 0)
@@ -101,7 +102,7 @@ class IncrementalDedupSpec extends SparkSpec {
     val viaQ = SparkEntry.queries("q32_minhash_neardup")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val viaHelper = Dedup.nearDups(
-      Tables.documentsWide(spark, sf).select(col("doc_id"), col("text")))
+      Fan.fan(Tables.documents(spark, sf)).select(col("doc_id"), col("text")))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(viaQ === viaHelper)
   }
@@ -111,7 +112,7 @@ class IncrementalDedupSpec extends SparkSpec {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
-    val corpus = Tables.documentsWide(spark, sf)
+    val corpus = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("text"))
     val rows = corpus.collect().map(r => (r.getLong(0), r.getString(1)))
     val batches = rows.groupBy(_._1 % 3).toSeq.sortBy(_._1).map(_._2.toSeq)
@@ -137,7 +138,7 @@ class IncrementalDedupSpec extends SparkSpec {
     // attempt's docs as corpus (that would double rows on the verify side
     // and inflate jaccard into phantom pairs) — ingestBatch excludes
     // batch_<id> from the state listing, so the re-run is byte-identical.
-    val corpus = Tables.documentsWide(spark, sf)
+    val corpus = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("text"))
     val b0 = corpus.filter(col("doc_id") % 3 =!= 0)
     val b1 = corpus.filter(col("doc_id") % 3 === 0)
@@ -162,7 +163,7 @@ class IncrementalDedupSpec extends SparkSpec {
   }
 
   test("incremental verify re-shingles only candidate-touched documents") {
-    val corpus = Tables.documentsWide(spark, sf)
+    val corpus = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("text"))
     val old = corpus.filter(col("doc_id") % 3 =!= 0)
     val fresh = corpus.filter(col("doc_id") % 3 === 0)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Fan
 import org.apache.spark.sql.functions._
 
 /** Nets for q188's multinomial Naive Bayes classifier. Two independent
@@ -92,7 +93,7 @@ class NbClassifierSpec extends SparkSpec {
   }
 
   test("engine ≡ driver-side NB: predictions and scores, incl. real fixture") {
-    val fixture = Tables.documentsWide(spark, sf)
+    val fixture = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("lang"), col("text")).collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
     for (docs <- Seq(separable(12).toSeq, fixture)) {

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Fan
 import org.apache.spark.sql.functions._
 
 /** Nets for q132's exact prefix-filtered similarity join: equality with an
@@ -456,7 +457,7 @@ class PrefixJoinSpec extends SparkSpec {
     assert(runContam(Seq(1L -> s"$quoted ${pad("h", 5)}",
       2L -> s"$quoted ${pad("i", 5)}")).isEmpty)
     // real-fixture net
-    val fixture = Tables.documentsWide(spark, sf)
+    val fixture = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
     assert(runContam(fixture) === bruteContam(fixture))
@@ -464,7 +465,7 @@ class PrefixJoinSpec extends SparkSpec {
 
   test("q187: plan ≡ naive on the sf0.001 fixture and on randomized blocks") {
     // real-corpus net: the driver-side naive scan replays the full fixture
-    val fixture = Tables.documentsWide(spark, sf)
+    val fixture = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"), col("text")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toSeq
     assert(runSubstring(fixture) === bruteSubstring(fixture))

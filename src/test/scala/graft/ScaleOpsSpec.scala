@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Fan
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import org.apache.spark.sql.functions._
@@ -89,7 +90,7 @@ class ScaleOpsSpec extends SparkSpec {
     import spark.implicits._
     // adversarial fixture: zipf-ish corpus with a vocabulary far wider
     // than q109's 5 event types, split into two "days" built independently
-    val terms = Tables.documentsWide(spark, sf)
+    val terms = Fan.fan(Tables.documents(spark, sf))
       .select(explode(split(col("text"), " ")).as("term"),
         pmod(crc32(col("text")), lit(2)).as("day"))
       .cache()

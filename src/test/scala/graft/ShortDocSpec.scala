@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Fan
 import org.apache.spark.sql.functions._
 
 /** Degenerate-input regression: every text operator must survive documents
@@ -493,7 +494,7 @@ class ShortDocSpec extends SparkSpec {
     assert(sp(1L) === ((3L, 3L, 0L)) && sp(2L) === ((1L, 2L, 1L)))
     // structurally different replay: group by the RAW lowercase prefix
     // (no sha256) — same clustering unless the hash collides
-    val docs = Tables.documentsWide(spark, dir)
+    val docs = Fan.fan(Tables.documents(spark, dir))
       .select(col("text")).collect().map(_.getString(0))
     val replay = docs.groupBy(t =>
         Option(t).map(_.toLowerCase.take(50)).orNull)

@@ -1,5 +1,6 @@
 package graft
 
+import graft.operators.Fan
 import org.apache.spark.sql.functions._
 import graft.queries.{Analytic, Curation, GraphOps, Similarity, Stats,
   TextAnalysis}
@@ -132,7 +133,7 @@ class StatsSpec extends SparkSpec {
       "banana bandana anna anna anna cab dab").toDF("text")
     for ((docs, label) <- Seq(
         (synth, "synthetic"),
-        (Tables.documentsWide(spark, sf), "sf0.001"))) {
+        (Fan.fan(Tables.documents(spark, sf)), "sf0.001"))) {
       val got = TextAnalysis.bpeMergeTable(docs, 3).collect()
         .map(r => (r.getLong(0), r.getString(1), r.getString(2),
           r.getLong(4)))
@@ -4377,7 +4378,7 @@ class StatsSpec extends SparkSpec {
 
   test("q324 token Gini replays from a Scala sorted rank walk; a " +
       "single-term source reads exactly 0") {
-    val toks = Tables.documentsWide(spark, sf)
+    val toks = Fan.fan(Tables.documents(spark, sf))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("text")).collect()
       .flatMap(r => r.getString(1).split(" ", -1).map(r.getString(0) -> _))
@@ -4565,7 +4566,7 @@ class StatsSpec extends SparkSpec {
   test("partitionedNtile: the closed-form rank bucket equals ntile() " +
       "exactly on every (source, doc_id), including a short source " +
       "(n < k, each row its own tile)") {
-    val docs = Tables.documentsWide(spark, sf)
+    val docs = Fan.fan(Tables.documents(spark, sf))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("doc_id")).distinct()
     def dump(threshold: Long) =
@@ -4629,7 +4630,7 @@ class StatsSpec extends SparkSpec {
       .toMap
     assert(pr(Long.MaxValue) === pr(0L))
     // global two-value prefix sums over a unique asc key (q194's shape)
-    val docs = Tables.documentsWide(spark, sf)
+    val docs = Fan.fan(Tables.documents(spark, sf))
       .select(col("doc_id"),
         length(col("text")).cast("long").as("a"),
         size(split(col("text"), " ")).cast("long").as("b"))
