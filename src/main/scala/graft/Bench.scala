@@ -22,14 +22,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = Engine.positiveEnvInt("SPARK_GRAFT_CPUS", 4)
+    // optional comma-separated name filter for isolating hotspots
+    val queries = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES"))
+      .toSeq.sortBy(_._1)
     val spark = Engine.session(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
-
-    // optional comma-separated name filter for isolating hotspots
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(',').map(_.trim).toSet)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_.contains(n)) }
 
     def runOne(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Boolean =
       try { fn(spark, sfDir).write.format("noop").mode("overwrite").save(); true }

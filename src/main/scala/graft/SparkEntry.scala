@@ -21,6 +21,23 @@ object SparkEntry {
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     registry.map(q => q.name -> q.fn).toMap
 
+  /** The queries a `SPARK_GRAFT_QUERIES` value selects for Bench and
+    * Verify: comma-separated names, empty tokens ignored; unset selects
+    * every query. An unregistered name throws, naming every unknown one —
+    * a typo must fail, not silently select nothing. */
+  def selected(env: Option[String])
+      : Map[String, (SparkSession, String) => DataFrame] = env match {
+    case None => queries
+    case Some(v) =>
+      val all = queries
+      val names = v.split(',').map(_.trim).filter(_.nonEmpty).toSet
+      val unknown = names.filterNot(all.contains).toSeq.sorted
+      if (unknown.nonEmpty)
+        throw new IllegalArgumentException("SPARK_GRAFT_QUERIES: unknown " +
+          s"queries ${unknown.mkString(", ")}")
+      all.view.filterKeys(names).toMap
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =

@@ -227,7 +227,7 @@ object Tool {
         // genscale multiplies uniformly, but real corpora are Zipfian —
         // one event type holding ~90% of rows and one source holding
         // ~90% of docs is exactly the regime where partition-parallel
-        // plans (typeGapsPar's per-(type, bin) stage, the chunk
+        // plans (typeGapsCarry's per-(type, bin) stage, the chunk
         // family's per-source frames, salted aggregates) grow straggler
         // tasks that uniform ×N cannot show. Same corpus SIZE as the
         // source dir, keys reweighted by pure event_id/doc_id

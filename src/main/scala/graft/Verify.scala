@@ -6,17 +6,12 @@ import graft.vera.Export.jsonString
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // dev loop: SPARK_GRAFT_QUERIES=q114_...,q115_... dumps just those
+    // (the Bench filter contract); unset = every registered query
+    val selected = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES"))
     val spark = Engine.session(
       Engine.positiveEnvInt("SPARK_GRAFT_CPUS", 4), "graft-verify")
     new java.io.File(outDir).mkdirs()
-    // dev loop: SPARK_GRAFT_QUERIES=q114_...,q115_... dumps just those
-    // (the Bench filter contract); unset = the driver's full surface
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
-      case None => SparkEntry.queries
-    }
     selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

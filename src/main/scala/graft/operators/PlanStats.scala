@@ -12,7 +12,7 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   * (r18, the round-17 verdict's Next #3: "kill the dispatch-probe extra
   * pass — an upper bound suffices").
   *
-  * The two-level devices ([[graft.queries.Stats.rankPar]] family) dispatch
+  * The ordered-bin devices ([[graft.operators.OrderedBins]]) dispatch
   * SMALL vs LARGE on row count, and the dispatch is pure plan — either
   * path returns bit-identical rows — so a PROVABLE upper bound below the
   * threshold lets the window path run with NO probe job at all. The bound

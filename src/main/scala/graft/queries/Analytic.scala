@@ -3,6 +3,7 @@ package graft.queries
 import graft.{Q, Tables}
 import graft.functions.Exact
 import graft.functions.Exact.Sql
+import graft.operators.OrderedBins
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.{DecimalType, DoubleType}
@@ -1080,7 +1081,7 @@ object Analytic {
         // small-corpus path: the plain sweep window (RANGE frame — peers
         // aggregate together) + per-type max window; fixed costs beat the
         // parallel path's until the serial span dominates (the
-        // typeGapsPar dispatch economics, both ends measured there)
+        // typeGapsCarry dispatch economics, both ends measured there)
         val sweep = Window.partitionBy(col("event_type"))
           .orderBy(col("t"), col("delta"))
         deltas
@@ -1103,7 +1104,7 @@ object Analytic {
           .groupBy(col("event_type"), col("t"), col("delta"))
           .agg(count(lit(1)).cast("long").as("cnt"))
           .withColumn("dd", col("delta") * col("cnt"))
-        val inb = graft.queries.Stats.prefixSumPar(runs, "t",
+        val inb = OrderedBins.prefixSumPar(runs, "t",
             desc = false, Seq("delta"), Seq("dd"), Seq("event_type"))
           .withColumn("cum", col("cum_dd"))
           // pinned: TWO consumers (the per-type max and the join) would
@@ -1138,10 +1139,11 @@ object Analytic {
     * Plan: the q75 shape — every stage table is user-count-sized and
     * keyed on user_id (one partitioning reused), the event scan is
     * type-filter-pushed per stage. The final ranks ride
-    * [[graft.queries.Stats.rankPar]] partitioned by stage (r17: funnel
-    * yield is conversion-PROPORTIONAL, so the old 3-partition window
-    * was the low-cardinality serialization class — above the measured
-    * dispatch the rank is two-level and no stage sorts in one task).
+    * [[graft.operators.OrderedBins.rankPar]] partitioned by stage (r17:
+    * funnel yield is conversion-PROPORTIONAL, so the old 3-partition
+    * window was the low-cardinality serialization class — above the
+    * measured dispatch the rank is binned and no stage sorts in one
+    * task).
     */
   val q137FunnelLatency = Q(
     "q137_funnel_latency",
@@ -1217,8 +1219,8 @@ object Analytic {
     // with conversion-proportional frames — the low-cardinality window
     // class; ties inside one lat value are rank-permutations of equal
     // values, so the picked order statistic is unchanged)
-    val r = Stats.rankPar(lat.transform(graft.operators.Iter.pin), "lat_us", desc = false,
-      Nil, Seq("stage"))
+    val r = OrderedBins.rankPar(lat.transform(graft.operators.Iter.pin),
+        "lat_us", desc = false, Nil, Seq("stage"))
       .select(col("stage"), col("lat_us"), col("i").as("rn"),
         col("nd").as("n"))
     r.crossJoin(broadcast(
@@ -1463,10 +1465,10 @@ object Analytic {
     * the end.
     *
     * Plan (r17 — the round-16 verdict's serialized-window finding): the
-    * gap stage is [[graft.queries.Stats.typeGapsCarry]] with the start
-    * sample's vc carried (the TWA holds each sample until the next, so
-    * the area term is start-vc·Δ) — above the measured 2M-row dispatch
-    * the per-type frame never sorts in one task; the old `lead OVER
+    * gap stage is [[graft.operators.OrderedBins.typeGapsCarry]] with the
+    * start sample's vc carried (the TWA holds each sample until the
+    * next, so the area term is start-vc·Δ) — above the measured 2M-row
+    * dispatch the per-type frame never sorts in one task; the old `lead OVER
     * (PARTITION BY event_type)` was the exponent-1.0 wall the ×100 axis
     * measured on the gap family. n_samples comes from a separate
     * type-keyed count left-joined to the gap aggregate so a single-
@@ -1511,7 +1513,7 @@ object Analytic {
         expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
     // scale-parallel gaps with the start sample's vc carried (r17):
     // every gap row IS a non-null delta term of the old window plan
-    val g = Stats.typeGapsCarry(e, Seq("vc"))
+    val g = OrderedBins.typeGapsCarry(e, Seq("vc"))
     val n = e.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n_samples"))
     val a = g.groupBy(col("event_type").as("a_type"))
@@ -1533,10 +1535,10 @@ object Analytic {
     * watermark; batch-side it is the query an on-call runs first.
     *
     * Plan (r17 — the round-16 verdict's serialized-window finding): the
-    * gap stage is [[graft.queries.Stats.typeGapsCarry]] with the start
-    * timestamp carried — above the measured 2M-row dispatch the per-type
-    * frame never sorts in one task (the two-level 4096-bin device,
-    * gaps bit-identical); the old `lead OVER (PARTITION BY event_type)`
+    * gap stage is [[graft.operators.OrderedBins.typeGapsCarry]] with the
+    * start timestamp carried — above the measured 2M-row dispatch the
+    * per-type frame never sorts in one task (the bin-lag device, gaps
+    * bit-identical); the old `lead OVER (PARTITION BY event_type)`
     * put each type's ENTIRE history in one task, the exponent-1.0 wall
     * the ×100 axis measured on the gap family. The max/argmax finish is
     * ONE per-type aggregate — lexicographic max of (gp, −start) breaks
@@ -1579,7 +1581,7 @@ object Analytic {
         expr("unix_micros(ts)").as("us"))
     // scale-parallel gaps with the start timestamp carried (r17; the
     // start rides the self-join's previous-row side above the dispatch)
-    val g = Stats.typeGapsCarry(e, Seq("us"))
+    val g = OrderedBins.typeGapsCarry(e, Seq("us"))
       .select(col("event_type"), col("us").as("st"), col("gp"))
     // argmax in ONE aggregate pass: lexicographic max of (gp, −st) picks
     // the largest gap and, on ties, the EARLIEST start (−st largest) —
@@ -1840,7 +1842,7 @@ object Analytic {
         sdf.select(col("user_id"), col("r_days"), col("f"), col("m"))
           .transform(graft.operators.Iter.pin)) {
       case (acc, (key, desc, as)) =>
-        Stats.ntilePar(acc, 5, key, desc, Seq("user_id"))
+        OrderedBins.ntilePar(acc, 5, key, desc, Seq("user_id"))
           .withColumnRenamed("tile", as)
     }
     ddf.groupBy(col("rq"), col("fq"), col("mq"))

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.Fan
+import graft.operators.{Fan, OrderedBins}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -825,7 +825,7 @@ object Curation {
     // (sources are low-cardinality with doc-proportional frames — the
     // serialized-window class) and the global doc count as a broadcast
     // 1-row aggregate instead of an all-to-one count window
-    val rk = graft.queries.Stats.rankPar(docs, "score", desc = false,
+    val rk = OrderedBins.rankPar(docs, "score", desc = false,
         Seq("doc_id"), Seq("source"))
       .crossJoin(broadcast(docs.agg(count(lit(1)).as("n"))))
       .select(col("doc_id"), col("source"), col("score"),
@@ -901,7 +901,7 @@ object Curation {
     val b = t.agg(expr("sum(nt) div 10").as("budget"))
     // r17: the greedy prefix rides the scale-parallel two-level running
     // sum (the global Window.orderBy summed every doc in one task)
-    graft.queries.Stats.prefixSumPar(
+    OrderedBins.prefixSumPar(
         t.localCheckpoint(), // probe + main action (§5.7 pin rule)
         "quality_micro", desc = true,
         Seq("doc_id"), Seq("nt"))

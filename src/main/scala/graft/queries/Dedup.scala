@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.Fan
+import graft.operators.{Fan, OrderedBins}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -2849,7 +2849,7 @@ object Dedup {
     * constant, so `ntile OVER (PARTITION BY source)` sorts a billion
     * docs of one source in one task): over the DISTINCT doc_id order,
     * ntile is a closed-form rank bucket, and the rank rides the house
-    * two-level 4096-bin device ([[graft.queries.Stats.partitionedNtile]],
+    * 4096-bin device ([[graft.operators.OrderedBins.ntilePar]],
     * bit-identical tiles, plain window below the measured 2M-row
     * dispatch) → one (source, decile) count + a 10-row-per-source
     * cumulative window. Nothing chunk- or doc-proportional in any
@@ -2909,13 +2909,13 @@ object Dedup {
       .transform(graft.operators.Iter.pin) // 2 consumers: first-occurrence and doc deciles
     val fo = ch.groupBy(col("source").as("f_source"), col("h"))
       .agg(min(col("doc_id")).cast("long").as("fdoc"))
-    val docs = Stats.partitionedNtile(
+    val docs = OrderedBins.ntilePar(
         // pinned: the ntilePar dispatch probe is a separate ACTION —
         // unpinned it re-runs the chunk-grain distinct (§5.7 pin rule;
         // the frame is doc-count-sized, measured +0.5 s at sf0.1)
         ch.select(col("source"), col("doc_id")).distinct()
           .transform(graft.operators.Iter.pin),
-        "source", "doc_id", 10)
+        10, "doc_id", desc = false, Nil, Seq("source"))
       .withColumnRenamed("tile", "decile")
     val per = docs.join(fo,
         col("f_source") === col("source") && col("fdoc") === col("doc_id"),

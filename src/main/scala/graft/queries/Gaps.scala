@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Exact
-import graft.operators.Fan
+import graft.operators.{Fan, OrderedBins}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1972,7 +1972,9 @@ object Gaps {
     * 9 inter-bin steps, stated). The group×10-bin grid is a designed
     * bounded broadcast.
     *
-    * Plan: one global ntile window (q161's shard note), one (group,
+    * Plan: the global decile rides [[OrderedBins.ntilePar]] on the
+    * materialized cents key (heavy ties, so the hot-value tie sub-bins
+    * carry it above the dispatch; the plain window below), one (group,
     * bin) aggregate against a 10-row bin seed, window min/max finish.
     */
   val q273LdivTcloseness = Q(
@@ -2035,14 +2037,15 @@ object Gaps {
       |FROM f
       |ORDER BY event_type, hod""".stripMargin,
   ) { (s, d) =>
-    val v = Tables.events(s, d)
+    val keyed = Tables.events(s, d)
       .filter(col("ts").isNotNull && col("value").isNotNull
         && col("event_type").isNotNull)
-      .select(col("event_type"),
+      .select(col("event_type"), col("event_id"),
         expr("(unix_micros(ts) div 3600000000) % 24").as("hod"),
-        ntile(10).over(Window.orderBy(
-          expr("CAST(round(100 * value) AS BIGINT)"), col("event_id")))
-          .as("dec"))
+        expr("CAST(round(100 * value) AS BIGINT)").as("cents"))
+    val v = OrderedBins.ntilePar(keyed, 10, "cents", desc = false,
+        Seq("event_id"))
+      .select(col("event_type"), col("hod"), col("tile").as("dec"))
       .transform(graft.operators.Iter.pin) // 3 consumers: group cells, group sizes, bins
     val gc = v.groupBy(col("event_type").as("c_type"),
         col("hod").as("c_hod"), col("dec"))

@@ -2,7 +2,9 @@ package graft.queries
 
 import graft.{Q, Tables}
 import graft.functions.Exact
-import graft.operators.{Fan, PlanStats}
+import graft.operators.Fan
+import graft.operators.OrderedBins.{ntilePar, prefixSumPar, rankPar,
+  typeGapsCarry}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -24,590 +26,6 @@ import org.apache.spark.sql.functions._
   * to the last ulp and identical cross-engine).
   */
 object Stats {
-
-  /** Below this row count the plain per-type lag window wins: the large
-    * path's fixed costs (a sketch probe plus a block shuffle) outweigh
-    * the window's serialization ceiling, which is still invisible at
-    * sf0.1's 10⁵ rows (the crossover, measured for the two-level device
-    * bin-lag replaced, lies between ×10's 10⁶ — a wash — and ×100's 10⁷
-    * — 3–4× for the parallel path). Both paths produce BIT-IDENTICAL
-    * gaps, so the dispatch is a pure physical-plan choice,
-    * oracle-invisible. */
-  private val TypeGapsParThreshold = 2000000L
-
-  /** SCALE-PARALLEL PER-TYPE CONSECUTIVE GAPS — the shared gap stage of
-    * the seven gap-family operators (q234/q246/q257/q266/q278/q296/q317).
-    * A per-type `lag` window (`Window.partitionBy(event_type)`) puts each
-    * type's entire history in ONE task — 2M rows/task at ×100, unbounded
-    * at 100 TB; the round-16 ×100 genscale axis measured it going
-    * exponent ~1.0 with 5-way parallelism — the classic
-    * low-cardinality-partition serialization, invisible at ×1/×10 where
-    * constants dominate.
-    *
-    * Above [[TypeGapsParThreshold]] the stage runs [[binLagGapPath]]: one
-    * shuffle on deterministic quantile time bins, the same (us, event_id)
-    * total order, bit-identical gaps (A/B receipts against the two-level
-    * rank + self-join device it replaced: OPTIMIZATION_r20.md §2). Below
-    * it the plain lag window runs.
-    *
-    * Input must be (event_type, event_id, us) with non-null type/us
-    * (callers already filter). Output: (event_type, gp) — one row per
-    * consecutive pair, gp = us-difference ≥ 0, types with one event
-    * contribute nothing (exactly the lag-NOT-NULL semantics).
-    */
-  private[graft] def typeGapsPar(
-      e: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    typeGapsCarry(e, Nil)
-
-  /** r20 — the ONE-SHUFFLE gap stage (the r19 verdict's Next #1): the
-    * two-level rank device computed gaps via probe(+sketches) → 4096-bin
-    * rank → (type, i)=(type, i′+1) equi-self-join — ~three shuffles of
-    * the full event frame for what is semantically one sort + lag. This
-    * path is the lag formulation over deterministic bins:
-    *
-    *   bin = quantile bucket of us (+ tie sub-bin for hot values)
-    *   → ONE hash exchange on (type, bin, sbin)
-    *   → lead(us) window inside each block         — the within gaps
-    *   ∪ per-block (min us, max (us, event_id, carry)) aggregate
-    *     (map-side combined, KB-sized) → lead over blocks per type
-    *                                               — the cross gaps
-    *
-    * Block order (bin asc, sbin asc) refines the global (us, event_id)
-    * order (bucketCol/subbinCol are monotone — rankPar's soundness
-    * argument), so every consecutive pair is either inside a block (the
-    * window) or spans two adjacent non-empty blocks (the boundary lead),
-    * never both. That holds for ANY sorted edge array — which is why the
-    * suite's edge overrides may force arbitrary bins here; only task
-    * balance changes. Identical-timestamp clumps — the gap family's
-    * hot-key shape — split across tie sub-bins exactly as in rankPar, so
-    * no block serializes a hot value's mass.
-    *
-    * Why not the r20-draft mapPartitions range-shuffle version: measured
-    * at ×1000 it spent >12 min in per-row Seq-concat + external-Row
-    * encoding + an event-scale localCheckpoint that unrolled 100M rows
-    * into the heap (old gen 84%, BlockManager PartiallyUnrolledIterator
-    * in every hot stack — guide §4/§5). This formulation is whole-stage
-    * codegen end to end, pins NOTHING event-sized (the only reused
-    * frames are deterministic plans, so the union's two subtrees can
-    * re-derive them consistently; the boundary subtree rides its own
-    * map-side-combined aggregate instead of the window's output), and
-    * keeps the one full exchange. A/B receipts: OPTIMIZATION_r20.md §2.
-    */
-  private def binLagGapPath(
-      e: org.apache.spark.sql.DataFrame,
-      carry: Seq[String],
-      edges: Array[Long],
-      hot: Array[Long],
-      tieEdges: Array[Long]): org.apache.spark.sql.DataFrame = {
-    val binned = e
-      .withColumn("bin", bucketCol("us", edges, desc = false))
-      .withColumn("sbin", subbinCol("us", Some("event_id"), hot, tieEdges))
-    val w = Window
-      .partitionBy(col("event_type"), col("bin"), col("sbin"))
-      .orderBy(col("us"), col("event_id"))
-    val within = binned
-      .select(col("event_type") +: carry.map(col) :+
-        (lead(col("us"), 1).over(w) - col("us")).as("gp"): _*)
-      .filter(col("gp").isNotNull)
-    // carry fields ride the struct under c_ aliases so carrying the sort
-    // key itself ("us", the q152 shape) cannot collide; (us, event_id) is
-    // a unique prefix, so the struct max IS the block's last row and its
-    // carry values are never part of the comparison
-    val lastStruct = struct(
-      col("us").as("s_us") +: col("event_id").as("s_eid") +:
-        carry.zipWithIndex.map { case (c, j) => col(c).as(s"c_$j") }: _*)
-    val b = binned
-      .groupBy(col("event_type"), col("bin"), col("sbin"))
-      .agg(min(col("us")).as("f_us"), max(lastStruct).as("l"))
-    val bw = Window.partitionBy(col("event_type"))
-      .orderBy(col("bin"), col("sbin"))
-    val cross = b
-      .withColumn("nf", lead(col("f_us"), 1).over(bw))
-      .filter(col("nf").isNotNull)
-      .select(col("event_type") +:
-        carry.zipWithIndex.map { case (c, j) => col(s"l.c_$j").as(c) } :+
-        (col("nf") - col("l.s_us")).as("gp"): _*)
-    within.union(cross)
-  }
-
-  /** [[typeGapsPar]] generalized with START-ROW carry columns (r17, the
-    * q151/q152 rewrites): each output gap row additionally carries the
-    * named columns of the gap's EARLIER endpoint — q152 needs the gap's
-    * start timestamp for its argmax, q151 the start sample's value for
-    * the time-weighted area vc·Δ. Carry names must exist in `e` and not
-    * collide with (event_type, gp). Both paths attribute them via lead()
-    * (start-row frame); the bin-lag path's cross-block gaps read them off
-    * the earlier block's last row.
-    */
-  private[graft] def typeGapsCarry(
-      e: org.apache.spark.sql.DataFrame,
-      carry: Seq[String],
-      // overridable ONLY so the suite can force each path (and arbitrary
-      // bins on the large one) on fixture-sized data and assert
-      // bit-equality; production callers use the measured default
-      threshold: Long = TypeGapsParThreshold,
-      edgesOverride: Option[Array[Long]] = None)
-      : org.apache.spark.sql.DataFrame = {
-    def windowPath(guarded: Boolean) = {
-      // small-corpus path: one lead window (identical gaps, no fixed
-      // costs; the type-sized-partition ceiling needs ≳10⁷ rows to bite).
-      // The guarded variant (zero-job dispatch, no probe ran) refuses
-      // NULL `us` loudly via the assert sort key — same contract as
-      // rankPar/prefixSumPar: NULL `us` must never silently pick a
-      // meaning by path (r18 ADVICE).
-      val ord = (if (guarded) Seq(nullGuardKey("typeGapsCarry", "us").asc)
-        else Nil) ++ Seq(col("us").asc, col("event_id").asc)
-      e.select(col("event_type") +: carry.map(col) :+
-          (lead(col("us"), 1).over(
-            Window.partitionBy(col("event_type"))
-              .orderBy(ord: _*)) - col("us")).as("gp"): _*)
-        .filter(col("gp").isNotNull)
-    }
-    // r18: zero-job dispatch off the logical plan + parquet footers (no
-    // probe at all when the frame is provably sub-threshold)
-    if (PlanStats.rowUpperBound(e).exists(_ < threshold))
-      return windowPath(guarded = true)
-    // one sketch-bearing probe pass: row count, quantile time edges and
-    // the hot-timestamp tie sketch
-    val mm = e.agg(min(col("us")), count(lit(1)), edgeProbe("us"),
-      count(col("us")), tieProbe("event_id")).head
-    val nonNullIdx = 3
-    require(mm.getLong(1) == mm.getLong(nonNullIdx),
-      s"typeGapsCarry: key 'us' has ${mm.getLong(1) - mm.getLong(nonNullIdx)}" +
-        " NULL rows — callers must pre-filter (a NULL timestamp has no " +
-        "place in the gap order)")
-    if (mm.isNullAt(0)) {
-      e.sparkSession.emptyDataFrame
-        .selectExpr(Seq("CAST(NULL AS STRING) AS event_type")
-          ++ carry.map(c => s"CAST(NULL AS BIGINT) AS $c")
-          ++ Seq("CAST(NULL AS BIGINT) AS gp"): _*)
-        .limit(0)
-    } else if (mm.getLong(1) < threshold) {
-      windowPath(guarded = false)
-    } else {
-      // r18: SAMPLED-QUANTILE time bins — a bursty corpus with 90% of
-      // events inside one hour of a year span would put ~90% of rows in
-      // one linear (type, bin) block (Tool genskew's `timeburst` axis);
-      // quantile edges spread any burst across ~4096 mass-balanced bins
-      val edges = edgesOverride.getOrElse(edgesAt(mm, 2))
-      // r19: identical-timestamp clumps (second-granularity corpora,
-      // replicated fixtures) are the gap family's hot-key shape — the
-      // same tie sub-binning as rankPar's, tie = event_id
-      val (hot, tieEdges) = hotPlanOf(mm, 2, 4, Some("event_id"), edges,
-        edgesOverride.isDefined, None)
-      binLagGapPath(e, carry, edges, hot, tieEdges)
-    }
-  }
-
-  /** Interior quantile fractions for the 4096-bin edge sample (r18):
-    * 4095 cuts at i/4096. */
-  private val EdgeFractions: Seq[Double] =
-    (1 to 4095).map(_.toDouble / 4096)
-
-  /** Edge-sample accuracy: percentile_approx's relative-rank error is
-    * ~1/accuracy, so 10⁴ puts each edge within ~0.4 bin-widths of its
-    * nominal mass cut — worst bins stay O(1/4096) of the mass. */
-  private val EdgeAccuracy = 10000
-
-  /** The probe's edge column: a one-pass mergeable quantile sketch over
-    * CAST(key AS LONG) (lossless on the integral-key contract). */
-  private def edgeProbe(key: String): Column =
-    percentile_approx(col(key).cast("long"),
-      typedLit(EdgeFractions), lit(EdgeAccuracy))
-
-  // ---- hot-key tie sub-binning (r19, the r18 verdict's Next #1) -------
-  //
-  // Quantile edges are deduplicated, so ALL rows sharing one key value
-  // land in one bin by construction — no monotone binning of the key can
-  // split equal keys, and a rank key with a 30%-mass value (an integer
-  // score, a default/sentinel, replicated n_chars) serialized 30% of the
-  // corpus into ONE in-bin row_number task. The fix is the device's own
-  // trick applied once more, to the TIE: inside a bin whose smallest
-  // (asc; largest desc) value is a HOT key value, sub-bin that value's
-  // rows by a monotone function of the first tie column. Soundness:
-  //   - a hot value v (≥ HotMinRepeats raw sketch repeats ⇒ ≳0.2% mass)
-  //     is by construction a member of the deduplicated edge array, and
-  //     an edge value is always the asc-MINIMUM (desc-MAXIMUM) of its own
-  //     bin — so v's rows sort FIRST within the bin on either direction,
-  //     and every other (non-hot) value in that bin sorts after them;
-  //   - within v's rows the total order is tie order alone (key equal),
-  //     and bucket(tie) is monotone in tie — so (bin, sbin) lexicographic
-  //     blocks remain CONTIGUOUS runs of the total order, the cross-bin
-  //     exclusive prefix extends over (bin, sbin), and rank/prefix-sum
-  //     answers are bit-identical (the same argument that made key
-  //     binning pure plan applies verbatim to the tie);
-  //   - non-hot rows take a sentinel sub-bin AFTER every tie bucket, and
-  //     NULL ties (nulls-first under the ascending tie order) take -1,
-  //     BEFORE every bucket.
-  // Worst-task mass drops from max(hot-key mass, 1/4096 + ε) to
-  // ≈ max(HotMinRepeats/4096, hot-mass/256, 1/4096 + ε): a 90%-hot key
-  // now spreads over ~256 tie sub-bins instead of one task. Tie edges
-  // ride the SAME single probe pass (one more percentile_approx in the
-  // same HashAggregate). Sub-binning applies when the first tie column
-  // is integral (event_id/user_id/doc_id — every production consumer);
-  // a non-integral or absent tie keeps the r18 behavior, documented.
-  // A hot value whose TIE is also constant (fully duplicate rows) cannot
-  // be spread by any order-preserving device — that residue is the
-  // genuinely serialized content.
-
-  /** Tie-edge fractions: 255 interior cuts — 256 sub-bins per hot value
-    * bound the bin frame at 4096 + 512·257 ≈ 136k rows (still a
-    * broadcast-sized frame). */
-  private val TieFractions: Seq[Double] = (1 to 255).map(_.toDouble / 256)
-
-  /** Raw-sketch repeat threshold: a value occupying ≥ 8 of the 4095
-    * sampled cuts carries ≳ 8/4096 ≈ 0.2% of the mass — above that, one
-    * bin = one task is already 8× nominal. At most 4095/8 ≈ 511 values
-    * can qualify. */
-  private val HotMinRepeats = 8
-
-  /** Sentinel sub-bin for non-hot rows sharing a hot value's bin: they
-    * are > v (asc) / < v (desc), so they sort AFTER every tie bucket. */
-  private val SubbinOther = 1000000L
-
-  private def tieProbe(tie: String): Column =
-    percentile_approx(col(tie).cast("long"),
-      typedLit(TieFractions), lit(EdgeAccuracy))
-
-  /** The first tie column iff its type is integral (sub-binnable: the
-    * bucket lookup needs a lossless long cast). */
-  private def integralTie(df: org.apache.spark.sql.DataFrame,
-      tie: Seq[String]): Option[String] =
-    tie.headOption.filter { t =>
-      df.schema(t).dataType match {
-        case org.apache.spark.sql.types.ByteType
-           | org.apache.spark.sql.types.ShortType
-           | org.apache.spark.sql.types.IntegerType
-           | org.apache.spark.sql.types.LongType => true
-        case _ => false
-      }
-    }
-
-  /** Hot key values off the RAW (duplicate-preserving) probe sketch —
-    * every returned value is necessarily a member of the deduplicated
-    * edge array. */
-  private def hotValuesOf(raw: Seq[Long]): Array[Long] =
-    raw.groupBy(identity)
-      .collect { case (v, occ) if occ.size >= HotMinRepeats => v }
-      .toArray.sorted
-
-  /** The sub-bin column: tie buckets for hot-key rows (NULL tie → -1,
-    * nulls-first), the AFTER-sentinel for everything else; constant 0
-    * when sub-binning is off (absent/non-integral tie, or no hot keys). */
-  private def subbinCol(key: String, tieLong: Option[String],
-      hot: Array[Long], tieEdges: Array[Long]): Column =
-    tieLong match {
-      case Some(t) if hot.nonEmpty =>
-        when(col(key).cast("long").isin(hot.map(Long.box): _*),
-          coalesce(
-            call_function("graft_bucket", col(t).cast("long"),
-              typedLit(tieEdges.toSeq), lit(false)),
-            lit(-1L)))
-          .otherwise(lit(SubbinOther))
-      case _ => lit(0L)
-    }
-
-  /** Resolve (hot values, tie edges) for the large path: test overrides
-    * win (hot must be ⊆ edges — enforced), otherwise hot detection reads
-    * the raw key sketch and tie edges the tie sketch, both off the SAME
-    * probe row. Explicit key-edge overrides disable sampling-derived hot
-    * detection (the raw sketch no longer matches the edges in force). */
-  private def hotPlanOf(mm: org.apache.spark.sql.Row, rawIdx: Int,
-      tieIdx: Int, tieL: Option[String], edges: Array[Long],
-      edgesOverridden: Boolean,
-      subbinOverride: Option[(Array[Long], Array[Long])])
-      : (Array[Long], Array[Long]) = {
-    val plan = subbinOverride match {
-      case Some(p) => p
-      case None if tieL.isDefined && !edgesOverridden =>
-        val h = hotValuesOf(mm.getSeq[Long](rawIdx))
-        if (h.isEmpty) (Array.empty[Long], Array.empty[Long])
-        else {
-          val te = Option(mm.getSeq[Long](tieIdx))
-            .map(_.distinct.sorted.toArray).getOrElse(Array.empty[Long])
-          (h, te)
-        }
-      case _ => (Array.empty[Long], Array.empty[Long])
-    }
-    val edgeSet = edges.toSet
-    require(plan._1.forall(edgeSet.contains),
-      "hot sub-bin values must be members of the edge array (a hot value " +
-        "is only its bin's boundary row when it IS an edge)")
-    plan
-  }
-
-  /** Sorted, deduplicated edges off a probe row (null-safe only for the
-    * caller-guaranteed non-empty case). */
-  private def edgesAt(row: org.apache.spark.sql.Row, idx: Int): Array[Long] =
-    row.getSeq[Long](idx).distinct.sorted.toArray
-
-  /** Per-row bucket: |{edges ≤ k}| asc, |{edges ≥ k}| desc — both
-    * monotone along the sort order (see [[graft.functions.BucketI64]]). */
-  private def bucketCol(key: String, edges: Array[Long], desc: Boolean): Column =
-    call_function("graft_bucket", col(key).cast("long"),
-      typedLit(edges.toSeq), lit(desc))
-
-  /** Loud NULL-key refusal for the ZERO-JOB window path (no probe ran, so
-    * no require could): a leading all-null assert sort key — evaluates
-    * per row, never reorders non-null rows (constant NULL prefix), and
-    * raises on the first NULL key. */
-  private def nullGuardKey(device: String, key: String): Column =
-    assert_true(col(key).isNotNull,
-      lit(s"$device: NULL key '$key' — callers must pre-filter (window " +
-        "and large paths disagree on NULL keys)")).cast("long")
-
-  /** SCALE-PARALLEL RANK over an int64 sort key — the general form of
-    * the two-level 4096-bin device (r17, generalizing typeGapsPar's rank
-    * stage): `row_number() OVER ([PARTITION BY part] ORDER BY key
-    * [DESC], tie...)` sorts the whole frame (or a low-cardinality
-    * partition's whole frame) in ONE task when the frame is
-    * corpus-proportional — the round-16 ×100 lesson, and the shape of
-    * every global ntile/rank the r16 sweep's `Window.partitionBy` grep
-    * could not see (partitionless `Window.orderBy` sites: deciles over
-    * USERS, ranks over DOCS). The rewrite: bin by a monotone function of
-    * the key, per-(part, bin) counts roll into a cross-bin exclusive
-    * prefix over the ≤4096-row bin frame, in-bin row_number partitions
-    * by (part, bin) — thousands of tasks — and rank = prefix + in-bin
-    * position. Same total order (ties inside one key value land in one
-    * bin and follow `tie`), so ranks are bit-identical to the window's.
-    * Below the measured [[TypeGapsParThreshold]] the plain window runs
-    * (both ends of that dispatch measured at the gap-family rewrite).
-    *
-    * r18 (the r17 verdict's Next #2 + #3): bin boundaries are SAMPLED
-    * QUANTILES of the key, not a closed-form transform — r17's ln-space
-    * bins fixed the exponential right tail the skew axis caught, but any
-    * fixed transform has a blind spot (ln anchored at lo collapses on
-    * mass near hi; linear collapses on tails; symlog on offsets). The
-    * probe aggregate now carries `percentile_approx(key, 4095 fractions)`
-    * — one pass, a mergeable GK sketch riding the SAME job as the
-    * dispatch counts — and the edges are mass-balanced by construction
-    * on ANY shape (BucketsSpec pins exponential, reverse-exponential and
-    * lognormal fixtures). r19 closes the one mass the key edges cannot
-    * split — a HOT key value (equal keys land in one bin under any
-    * monotone key binning) — by sub-binning hot values' rows on TIE
-    * quantiles from the same probe pass, so worst-task mass is
-    * ≈ max(HotMinRepeats/4096, hot-mass/256, 1/4096 + sketch error)
-    * with no hot-key term (see the hot-key notes above hotValuesOf).
-    * Edges are pure plan: any edge set yields
-    * bit-identical output (the adversarial-edges net), so sketch
-    * nondeterminism can never reach an answer. The per-row lookup is the
-    * codegen'd binary search [[graft.functions.BucketI64]]. And when
-    * [[graft.operators.PlanStats.rowUpperBound]] PROVES the frame is
-    * sub-threshold from the logical plan + parquet footers, the window
-    * path runs with ZERO probe jobs (the footer route; a NULL key then
-    * fails loudly via an assert sort key instead of the probe's require).
-    *
-    * Output: the input columns plus `i` (1-based rank, long) and `nd`
-    * (partition row count, long — the ntile/percentile denominator).
-    */
-  private[graft] def rankPar(
-      df: org.apache.spark.sql.DataFrame,
-      key: String, desc: Boolean, tie: Seq[String],
-      part: Seq[String] = Nil,
-      // overridable ONLY for the suite's forced-path equality net
-      threshold: Long = TypeGapsParThreshold,
-      // overridable ONLY for the suite's adversarial-edges net (edges are
-      // pure plan: ANY array here must yield bit-identical output)
-      edgesOverride: Option[Array[Long]] = None,
-      // overridable ONLY for the suite's forced sub-bin nets: (hot key
-      // values — must be ⊆ the edges in force — , tie edges); sub-bins
-      // are pure plan too, any consistent pair must yield identical rows
-      subbinOverride: Option[(Array[Long], Array[Long])] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val ordCols = (if (desc) col(key).desc else col(key).asc) +:
-      tie.map(col)
-    def windowPath(guarded: Boolean) = {
-      val w = Window.partitionBy(part.map(col): _*)
-      val ord = if (guarded) nullGuardKey("rankPar", key).asc +: ordCols
-        else ordCols
-      df.withColumn("i",
-          row_number().over(w.orderBy(ord: _*)).cast("long"))
-        .withColumn("nd", count(lit(1)).over(w).cast("long"))
-    }
-    // r18: ZERO-JOB dispatch — when the logical plan + parquet footers
-    // PROVE the frame is sub-threshold, skip the probe entirely (the
-    // NULL-key refusal then rides the assert sort key instead)
-    if (PlanStats.rowUpperBound(df).exists(_ < threshold))
-      return windowPath(guarded = true)
-    // r18 (ADVICE): the probe reads counts only (no getLong on the key's
-    // own type — q176's INT32 n_chars threw ClassCastException on the old
-    // min/max read exactly at the 2M-row dispatch this device targets)
-    // and carries the quantile edge sketch in the SAME single pass. It
-    // also counts non-null keys: NULL keys are a stated precondition (the
-    // large path's bin equi-join would silently drop them while the
-    // window path keeps them nulls-first — the two "bit-identical" paths
-    // would disagree), so the device refuses loudly instead.
-    // r19: the same pass also carries the TIE quantile sketch for hot-key
-    // sub-binning (see the hot-key notes above hotValuesOf).
-    val tieL = integralTie(df, tie)
-    val probeAggs = Seq(count(lit(1)), count(col(key)), edgeProbe(key)) ++
-      tieL.map(tieProbe)
-    val mm = df.agg(probeAggs.head, probeAggs.tail: _*).head
-    require(mm.getLong(0) == mm.getLong(1),
-      s"rankPar: key '$key' has ${mm.getLong(0) - mm.getLong(1)} NULL " +
-        "rows — callers must pre-filter (window and two-level paths " +
-        "disagree on NULL keys)")
-    if (mm.getLong(0) == 0L || mm.getLong(0) < threshold) {
-      windowPath(guarded = false)
-    } else {
-      // SAMPLED-QUANTILE bins (r18; supersedes r17's ln-space bins): any
-      // MONOTONE function of the key is a valid binning (the cross-bin
-      // prefix + in-bin order reconstruct the same total order — bin
-      // boundaries are pure plan, never answer), and quantile edges are
-      // the shape-agnostic monotone function: mass-balanced on tails,
-      // reverse tails, lognormal bodies and bursty clumps alike, where
-      // every closed-form transform has a collapsing counterexample.
-      // r19: hot key values additionally sub-bin by tie quantiles.
-      val edges = edgesOverride.getOrElse(edgesAt(mm, 2))
-      val (hot, tieEdges) = hotPlanOf(mm, 2, 3, tieL, edges,
-        edgesOverride.isDefined, subbinOverride)
-      val binned = df.withColumn("bin", bucketCol(key, edges, desc))
-        .withColumn("sbin", subbinCol(key, tieL, hot, tieEdges))
-      val binCounts = binned.groupBy((part :+ "bin" :+ "sbin").map(col): _*)
-        .agg(count(lit(1)).cast("long").as("bc"))
-      val binBefore = binCounts
-        .select(part.map(c => col(c).as(s"b_$c"))
-          :+ col("bin").as("b_bin")
-          :+ col("sbin").as("b_sbin")
-          :+ coalesce(
-            sum(col("bc")).over(Window.partitionBy(part.map(col): _*)
-              .orderBy(col("bin"), col("sbin"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as("before"): _*)
-      val totals =
-        if (part.isEmpty)
-          binCounts.agg(sum(col("bc")).cast("long").as("nd"))
-        else binCounts.groupBy(part.map(col): _*)
-          .agg(sum(col("bc")).cast("long").as("nd"))
-          .select(part.map(c => col(c).as(s"t_$c")) :+ col("nd"): _*)
-      val ranked = binned
-        .withColumn("inb", row_number().over(
-          Window.partitionBy((part :+ "bin" :+ "sbin").map(col): _*)
-            .orderBy(ordCols: _*)).cast("long"))
-        .join(broadcast(binBefore),
-          part.map(c => col(c) === col(s"b_$c"))
-            .foldLeft(col("bin") === col("b_bin")
-              && col("sbin") === col("b_sbin"))(_ && _))
-      val withN =
-        if (part.isEmpty) ranked.crossJoin(broadcast(totals))
-        else ranked.join(broadcast(totals),
-          part.map(c => col(c) === col(s"t_$c")).reduce(_ && _))
-      // stable output schema (input columns, i, nd) on BOTH paths —
-      // callers and the forced-path nets read positionally
-      withN
-        .withColumn("i", col("before") + col("inb"))
-        .select(df.columns.map(col) :+ col("i") :+ col("nd"): _*)
-    }
-  }
-
-  /** SCALE-PARALLEL NTILE built on [[rankPar]]: over a deterministic
-    * total order, `ntile(k)` is a closed-form function of (rank, n) —
-    * with q = n div k, r = n mod k the first r tiles take q + 1 rows —
-    * so two integer divides replace the single-task sort, bit-identical
-    * to the window's assignment (n < k degenerates to tile = rank, the
-    * window's semantics). Output: the input columns plus `tile`
-    * (1-based, long).
-    */
-  private[graft] def ntilePar(
-      df: org.apache.spark.sql.DataFrame, k: Int,
-      key: String, desc: Boolean, tie: Seq[String],
-      part: Seq[String] = Nil,
-      threshold: Long = TypeGapsParThreshold): org.apache.spark.sql.DataFrame =
-    rankPar(df, key, desc, tie, part, threshold)
-      .withColumn("tile", expr(
-        s"""CASE WHEN nd % $k = 0 THEN (i - 1) div (nd div $k) + 1
-           |  WHEN i <= (nd % $k) * (nd div $k + 1)
-           |    THEN (i - 1) div (nd div $k + 1) + 1
-           |  ELSE nd % $k
-           |    + (i - (nd % $k) * (nd div $k + 1) - 1) div (nd div $k)
-           |    + 1 END""".stripMargin).cast("long"))
-      .drop("i", "nd")
-
-  /** [[rankPar]]'s wrapper for the q329 shape (single string partition
-    * column, unique ascending ord, no tiebreak) — kept as the named
-    * entry the scaladoc trail references. */
-  private[graft] def partitionedNtile(
-      df: org.apache.spark.sql.DataFrame,
-      part: String, ord: String, k: Int,
-      threshold: Long = TypeGapsParThreshold): org.apache.spark.sql.DataFrame =
-    ntilePar(df, k, ord, desc = false, Nil, Seq(part), threshold)
-
-  /** SCALE-PARALLEL RUNNING SUM over an int64 sort key — the prefix-sum
-    * member of the two-level family (r17; q133's inline collapsed-run
-    * form is the RANGE-frame variant): inclusive rows-frame cumulative
-    * sums of `values` under the deterministic ([key asc|desc] , tie...)
-    * total order, partitioned by `part` (empty = global — the q194/q195
-    * doc-proportional prefix shape the r16 sweep could not see). Bin
-    * partials → cross-bin exclusive prefix over the ≤4096-row bin frame
-    * → in-bin running sums; cum = prefix + in-bin. Bit-identical to the
-    * window (integer sums are associative). Adds `cum_<v>` per value
-    * column; plain window below the dispatch.
-    */
-  private[graft] def prefixSumPar(
-      df: org.apache.spark.sql.DataFrame,
-      key: String, desc: Boolean, tie: Seq[String],
-      values: Seq[String],
-      part: Seq[String] = Nil,
-      threshold: Long = TypeGapsParThreshold,
-      edgesOverride: Option[Array[Long]] = None,
-      subbinOverride: Option[(Array[Long], Array[Long])] = None)
-      : org.apache.spark.sql.DataFrame = {
-    val ordCols = (if (desc) col(key).desc else col(key).asc) +:
-      tie.map(col)
-    def windowPath(guarded: Boolean) = {
-      val ord = if (guarded)
-        nullGuardKey("prefixSumPar", key).asc +: ordCols else ordCols
-      val w = Window.partitionBy(part.map(col): _*).orderBy(ord: _*)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      values.foldLeft(df)((acc, v) =>
-        acc.withColumn(s"cum_$v", sum(col(v)).over(w).cast("long")))
-    }
-    // zero-job dispatch + single-pass probe + NULL refusal + quantile
-    // edges: see the rankPar notes (r18); hot-key tie sub-bins (r19)
-    if (PlanStats.rowUpperBound(df).exists(_ < threshold))
-      return windowPath(guarded = true)
-    val tieL = integralTie(df, tie)
-    val probeAggs = Seq(count(lit(1)), count(col(key)), edgeProbe(key)) ++
-      tieL.map(tieProbe)
-    val mm = df.agg(probeAggs.head, probeAggs.tail: _*).head
-    require(mm.getLong(0) == mm.getLong(1),
-      s"prefixSumPar: key '$key' has ${mm.getLong(0) - mm.getLong(1)} " +
-        "NULL rows — callers must pre-filter (window and two-level " +
-        "paths disagree on NULL keys)")
-    if (mm.getLong(0) == 0L || mm.getLong(0) < threshold) {
-      windowPath(guarded = false)
-    } else {
-      val edges = edgesOverride.getOrElse(edgesAt(mm, 2))
-      val (hot, tieEdges) = hotPlanOf(mm, 2, 3, tieL, edges,
-        edgesOverride.isDefined, subbinOverride)
-      val binned = df.withColumn("bin", bucketCol(key, edges, desc))
-        .withColumn("sbin", subbinCol(key, tieL, hot, tieEdges))
-      val binSums = binned.groupBy((part :+ "bin" :+ "sbin").map(col): _*)
-        .agg(values.map(v => sum(col(v)).cast("long").as(s"bs_$v")).head,
-          values.map(v => sum(col(v)).cast("long").as(s"bs_$v")).tail: _*)
-      val binBefore = binSums
-        .select(part.map(c => col(c).as(s"b_$c"))
-          :+ col("bin").as("b_bin")
-          :+ col("sbin").as("b_sbin")
-          :++ values.map(v => coalesce(
-            sum(col(s"bs_$v")).over(Window.partitionBy(part.map(col): _*)
-              .orderBy(col("bin"), col("sbin"))
-              .rowsBetween(Window.unboundedPreceding, -1)),
-            lit(0L)).as(s"before_$v")): _*)
-      val inb = Window.partitionBy((part :+ "bin" :+ "sbin").map(col): _*)
-        .orderBy(ordCols: _*)
-        .rowsBetween(Window.unboundedPreceding, 0)
-      values.foldLeft(binned)((acc, v) =>
-          acc.withColumn(s"inb_$v", sum(col(v)).over(inb).cast("long")))
-        .join(broadcast(binBefore),
-          part.map(c => col(c) === col(s"b_$c"))
-            .foldLeft(col("bin") === col("b_bin")
-              && col("sbin") === col("b_sbin"))(_ && _))
-        .select(df.columns.map(col)
-          ++ values.map(v =>
-            (col(s"before_$v") + col(s"inb_$v")).as(s"cum_$v")): _*)
-    }
-  }
 
   def all: Seq[Q] = Seq(q154AbTest, q155OlsNormalEq, q156Chi2Terms,
     q160Auc, q161LiftTable, q162WelchT, q163SpearmanCorr, q164BootstrapCi,
@@ -4550,9 +3968,10 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us"))
-    // r16: scale-parallel gap stage (see typeGapsPar — the per-type lag
-    // window serialized on 5 type-sized partitions at the ×100 axis)
-    val gaps = typeGapsPar(e)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry — the
+    // per-type lag window serialized on 5 type-sized partitions at the
+    // ×100 axis)
+    val gaps = typeGapsCarry(e)
       .transform(graft.operators.Iter.pin) // 2 consumers: moments and the rank scan
     val mom = gaps.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
@@ -5639,8 +5058,8 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), expr("unix_micros(ts)").as("us"),
         col("event_id"))
-    // r16: scale-parallel gap stage (see typeGapsPar)
-    val g = typeGapsPar(e)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry)
+    val g = typeGapsCarry(e)
       .select(col("event_type"), expr("gp div 1000").as("gap"))
     val agg = g.groupBy(col("event_type"))
       .agg(count(col("gap")).cast("long").as("n"),
@@ -6729,9 +6148,10 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us"))
-    // r16: scale-parallel gap stage (see typeGapsPar — the per-type lag
-    // window serialized on 5 type-sized partitions at the ×100 axis)
-    val gaps = typeGapsPar(e)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry — the
+    // per-type lag window serialized on 5 type-sized partitions at the
+    // ×100 axis)
+    val gaps = typeGapsCarry(e)
       .transform(graft.operators.Iter.pin) // 2 consumers: moments and the rank scan
     val mom = gaps.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
@@ -8063,8 +7483,8 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us"))
-    // r16: scale-parallel gap stage (see typeGapsPar)
-    val gaps = typeGapsPar(e)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry)
+    val gaps = typeGapsCarry(e)
       .select(col("event_type"), expr("gp div 1000000").as("ds"))
     val mom = gaps.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("m"),
@@ -8293,8 +7713,8 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us"))
-    // r16: scale-parallel gap stage (see typeGapsPar)
-    val gg = typeGapsPar(e).filter(col("gp") > 0)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry)
+    val gg = typeGapsCarry(e).filter(col("gp") > 0)
     val mom = gg.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(col("gp")).cast("long").as("s"),
@@ -9364,8 +8784,8 @@ object Stats {
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us"))
-    // r16: scale-parallel gap stage (see typeGapsPar)
-    val gaps = typeGapsPar(e)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry)
+    val gaps = typeGapsCarry(e)
       .select(col("event_type"), expr("gp div 1000000").as("g"))
     val m = gaps.groupBy(col("event_type"))
       .agg(count(lit(1)).cast("long").as("m"),
@@ -10854,8 +10274,8 @@ object Stats {
       |FROM f
       |ORDER BY event_type""".stripMargin,
   ) { (s, d) =>
-    // r16: scale-parallel gap stage (see typeGapsPar)
-    val gaps = typeGapsPar(Tables.events(s, d)
+    // r16: scale-parallel gap stage (see OrderedBins.typeGapsCarry)
+    val gaps = typeGapsCarry(Tables.events(s, d)
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .select(col("event_type"), col("event_id"),
         expr("unix_micros(ts)").as("us")))
@@ -10997,7 +10417,7 @@ object Stats {
     * The per-customer lag window partitions by o_custkey — CUSTOMER
     * cardinality (millions of small partitions at 100 TB), the GOOD
     * kind of window partitioning, unlike the 5-type gap family
-    * typeGapsPar exists for (stated contrast).
+    * typeGapsCarry exists for (stated contrast).
     *
     * Exactness: epoch-day gaps exact int64 over the (day, o_orderkey)
     * per-customer total order; percentiles ride the q315 run device per

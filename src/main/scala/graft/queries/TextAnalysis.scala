@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.{Q, Tables}
-import graft.operators.Fan
+import graft.operators.{Fan, OrderedBins}
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1019,7 +1019,7 @@ object TextAnalysis {
       .groupBy(col("first_doc")).agg(count(lit(1)).as("n_new"))
     // r17: both running sums ride the scale-parallel two-level prefix
     // (the global Window.orderBy summed every doc in one task)
-    val pre = graft.queries.Stats.prefixSumPar(
+    val pre = OrderedBins.prefixSumPar(
         nt.join(fo, nt("doc_id") === fo("first_doc"), "left")
           .select(nt("doc_id"), col("n_tok"),
             coalesce(col("n_new"), lit(0L)).as("n_new"))

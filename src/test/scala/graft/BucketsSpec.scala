@@ -1,7 +1,6 @@
 package graft
 
-import graft.operators.{Fan, PlanStats}
-import graft.queries.Stats
+import graft.operators.{Fan, OrderedBins, PlanStats}
 import org.apache.spark.sql.functions._
 
 /** Nets for the r18 sampled-quantile binning stack: the `graft_bucket`
@@ -71,15 +70,15 @@ class BucketsSpec extends SparkSpec {
       Some(Array(5L, 5L, 5L)), // duplicate edges
       Some(Array(Long.MinValue, -7L, 0L, 2L, Long.MaxValue)))
     def rk(ov: Option[Array[Long]]) =
-      Stats.rankPar(h, "s1", desc = true, Seq("user_id"), Nil, 0L, ov)
+      OrderedBins.rankPar(h, "s1", desc = true, Seq("user_id"), Nil, 0L, ov)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
         .sorted.toSeq
     def ps(ov: Option[Array[Long]]) =
-      Stats.prefixSumPar(h, "s1", desc = false, Seq("user_id"),
+      OrderedBins.prefixSumPar(h, "s1", desc = false, Seq("user_id"),
           Seq("s1"), Nil, 0L, ov)
         .collect().map(r => (r.getLong(0), r.getLong(2))).sorted.toSeq
     def tg(threshold: Long, ov: Option[Array[Long]]) =
-      Stats.typeGapsCarry(e, Nil, threshold, ov)
+      OrderedBins.typeGapsCarry(e, Nil, threshold, ov)
         .collect().map(r => (r.getString(0), r.getLong(1))).sorted.toSeq
     val (rk0, ps0) = (rk(overrides.head), ps(overrides.head))
     // typeGapsCarry's reference is the lead window (threshold MaxValue);
@@ -163,7 +162,7 @@ class BucketsSpec extends SparkSpec {
     }
     spark.sparkContext.addSparkListener(listener)
     try {
-      val planned = Stats.rankPar(docs, "n_chars", desc = false,
+      val planned = OrderedBins.rankPar(docs, "n_chars", desc = false,
         Seq("doc_id"), Seq("source"))
       Thread.sleep(500) // listener delivery is async; zero expected
       assert(jobs === 0,
@@ -187,7 +186,7 @@ class BucketsSpec extends SparkSpec {
     def rk(desc: Boolean, threshold: Long,
         eov: Option[Array[Long]] = None,
         sov: Option[(Array[Long], Array[Long])] = None): Seq[String] =
-      Stats.rankPar(d, "k", desc, Seq("t"), Seq("p"), threshold, eov, sov)
+      OrderedBins.rankPar(d, "k", desc, Seq("t"), Seq("p"), threshold, eov, sov)
         .collect().map(_.toString).sorted.toSeq
     for (desc <- Seq(false, true)) {
       val window = rk(desc, Long.MaxValue) // zero-job guarded window path
@@ -220,7 +219,7 @@ class BucketsSpec extends SparkSpec {
     def ps(threshold: Long,
         eov: Option[Array[Long]] = None,
         sov: Option[(Array[Long], Array[Long])] = None): Seq[String] =
-      Stats.prefixSumPar(d, "k", desc = false, Seq("t"), Seq("v"),
+      OrderedBins.prefixSumPar(d, "k", desc = false, Seq("t"), Seq("v"),
           Seq("p"), threshold, eov, sov)
         .collect().map(_.toString).sorted.toSeq
     val window = ps(Long.MaxValue)
@@ -241,7 +240,7 @@ class BucketsSpec extends SparkSpec {
       "CASE WHEN id % 2 = 0 THEN 'click' ELSE 'view' END AS event_type",
       "pmod(id, 11L) AS vc")
     def tg(threshold: Long): Seq[String] =
-      Stats.typeGapsCarry(e, Seq("vc"), threshold)
+      OrderedBins.typeGapsCarry(e, Seq("vc"), threshold)
         .collect().map(_.toString).sorted.toSeq
     val window = tg(Long.MaxValue)
     assert(window.nonEmpty)
@@ -339,7 +338,7 @@ class BucketsSpec extends SparkSpec {
     // zero-job route (footer-provable 10 rows < threshold): assert key
     assert(PlanStats.rowUpperBound(e).contains(10L))
     val exWin = intercept[Exception] {
-      Stats.typeGapsCarry(e, Nil).collect()
+      OrderedBins.typeGapsCarry(e, Nil).collect()
     }
     assert(messages(exWin).exists(_.contains("NULL key")),
       s"window path: ${messages(exWin).mkString(" | ")}")
@@ -350,17 +349,42 @@ class BucketsSpec extends SparkSpec {
       col("event_id") === col("j_id")).drop("j_id")
     assert(PlanStats.rowUpperBound(unprovable).isEmpty)
     val exProbe = intercept[IllegalArgumentException] {
-      Stats.typeGapsCarry(unprovable, Nil).collect()
+      OrderedBins.typeGapsCarry(unprovable, Nil).collect()
     }
     assert(exProbe.getMessage.contains("NULL"),
       s"probe path: ${exProbe.getMessage}")
     // forced bin-lag threshold: the refusal must come before any large
     // plan is built or run, loudly
     val exBinLag = intercept[Exception] {
-      Stats.typeGapsCarry(unprovable, Nil, 0L).collect()
+      OrderedBins.typeGapsCarry(unprovable, Nil, 0L).collect()
     }
     assert(messages(exBinLag).exists(_.contains("NULL")),
       s"bin-lag path: ${messages(exBinLag).mkString(" | ")}")
+  }
+
+  test("typeGapsCarry on an EMPTY frame returns the same schema on the " +
+      "probe route as on the zero-job route — carry columns keep their " +
+      "input type (a DOUBLE carry stays DOUBLE)") {
+    val dir = "/tmp/graft_bucketspec_tg_empty"
+    spark.range(0, 10).selectExpr(
+        "CAST(id AS BIGINT) AS event_id",
+        "id * 1000000 AS us",
+        "'view' AS event_type",
+        "CAST(id AS DOUBLE) / 4 AS v")
+      .filter(col("event_id") < 0L)
+      .coalesce(1).write.mode("overwrite").parquet(dir)
+    val e = spark.read.parquet(dir)
+    assert(PlanStats.rowUpperBound(e).contains(0L))
+    val unprovable = e.join(
+      e.select(col("event_id").as("j_id")).distinct(),
+      col("event_id") === col("j_id")).drop("j_id")
+    assert(PlanStats.rowUpperBound(unprovable).isEmpty)
+    val zeroJob = OrderedBins.typeGapsCarry(e, Seq("v"))
+    val probed = OrderedBins.typeGapsCarry(unprovable, Seq("v"))
+    assert(probed.schema === zeroJob.schema)
+    assert(probed.schema("v").dataType ===
+      org.apache.spark.sql.types.DoubleType)
+    assert(probed.collect().isEmpty && zeroJob.collect().isEmpty)
   }
 
   test("the zero-job window path still refuses NULL keys — loudly, at " +
@@ -372,7 +396,7 @@ class BucketsSpec extends SparkSpec {
     val d = spark.read.parquet(dir)
     assert(PlanStats.rowUpperBound(d).contains(10L))
     val ex = intercept[Exception] {
-      Stats.rankPar(d, "k", desc = false, Seq("id")).collect()
+      OrderedBins.rankPar(d, "k", desc = false, Seq("id")).collect()
     }
     def messages(t: Throwable): Seq[String] =
       Option(t).toSeq.flatMap(e =>

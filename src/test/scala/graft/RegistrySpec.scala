@@ -17,6 +17,18 @@ class RegistrySpec extends SparkSpec {
     assert(withOracle.subsetOf(SparkEntry.queries.keySet))
   }
 
+  test("SPARK_GRAFT_QUERIES selection: a typo fails naming itself, known " +
+      "names select exactly those queries, unset selects all") {
+    val ex = intercept[IllegalArgumentException] {
+      SparkEntry.selected(Some("q01_pricing_summary, q01_pricing_sumary"))
+    }
+    assert(ex.getMessage.contains("q01_pricing_sumary"))
+    assert(!ex.getMessage.contains("q01_pricing_summary"))
+    assert(SparkEntry.selected(Some("q01_pricing_summary,q218_zipf_slope,"))
+      .keySet === Set("q01_pricing_summary", "q218_zipf_slope"))
+    assert(SparkEntry.selected(None).keySet === SparkEntry.queries.keySet)
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.Fan
+import graft.operators.{Fan, OrderedBins}
 import org.apache.spark.sql.functions._
 import graft.queries.{Analytic, Curation, GraphOps, Similarity, Stats,
   TextAnalysis}
@@ -4541,7 +4541,7 @@ class StatsSpec extends SparkSpec {
         expr("unix_micros(ts)").as("us"),
         expr("CAST(floor(value * 100) AS BIGINT)").as("vc"))
     def dump(threshold: Long) =
-      Stats.typeGapsCarry(e, Seq("vc"), threshold)
+      OrderedBins.typeGapsCarry(e, Seq("vc"), threshold)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
     val win = dump(Long.MaxValue) // always the lead window
@@ -4550,27 +4550,28 @@ class StatsSpec extends SparkSpec {
       s"paths diverge: window ${win.length} rows vs bin-lag ${par.length}")
     // and the no-carry wrapper agrees with itself across paths too
     def gaps(threshold: Long) =
-      Stats.typeGapsCarry(e, Nil, threshold).collect()
+      OrderedBins.typeGapsCarry(e, Nil, threshold).collect()
         .map(r => (r.getString(0), r.getLong(1))).sorted
     assert(gaps(Long.MaxValue) === gaps(0L))
     // carrying the sort key ITSELF ("us", the q152 shape) — the c_
     // rename must not collide with the struct/sort columns on any path
     def dumpUs(threshold: Long) =
-      Stats.typeGapsCarry(e, Seq("us"), threshold)
+      OrderedBins.typeGapsCarry(e, Seq("us"), threshold)
         .collect()
         .map(r => (r.getString(0), r.getLong(1), r.getLong(2))).sorted
     val winUs = dumpUs(Long.MaxValue)
     assert(winUs.nonEmpty && winUs === dumpUs(0L))
   }
 
-  test("partitionedNtile: the closed-form rank bucket equals ntile() " +
+  test("ntilePar by source: the closed-form rank bucket equals ntile() " +
       "exactly on every (source, doc_id), including a short source " +
       "(n < k, each row its own tile)") {
     val docs = Fan.fan(Tables.documents(spark, sf))
       .filter(col("source").isNotNull && length(col("text")) > 0)
       .select(col("source"), col("doc_id")).distinct()
     def dump(threshold: Long) =
-      Stats.partitionedNtile(docs, "source", "doc_id", 10, threshold)
+      OrderedBins.ntilePar(docs, 10, "doc_id", desc = false, Nil,
+        Seq("source"), threshold)
         .collect()
         .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
     val win = dump(Long.MaxValue)
@@ -4580,16 +4581,18 @@ class StatsSpec extends SparkSpec {
     import spark.implicits._
     val short = (1 to 7).map(i => ("s", i.toLong * 100))
       .toDF("source", "doc_id")
-    val t = Stats.partitionedNtile(short, "source", "doc_id", 10, 0L)
+    val t = OrderedBins.ntilePar(short, 10, "doc_id", desc = false, Nil,
+        Seq("source"), 0L)
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
     assert(t === (1 to 7).map(i => i.toLong * 100 -> i.toLong).toMap)
     // and a 23-into-10 split: first 3 tiles take 3 rows, the rest 2 —
     // the closed form must reproduce the window's exact boundaries
     val s23 = (1 to 23).map(i => ("s", i.toLong)).toDF("source", "doc_id")
-    val t23f = Stats.partitionedNtile(s23, "source", "doc_id", 10, 0L)
+    val t23f = OrderedBins.ntilePar(s23, 10, "doc_id", desc = false, Nil,
+        Seq("source"), 0L)
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
-    val t23w = Stats.partitionedNtile(s23, "source", "doc_id", 10,
-        Long.MaxValue)
+    val t23w = OrderedBins.ntilePar(s23, 10, "doc_id", desc = false, Nil,
+        Seq("source"), Long.MaxValue)
       .collect().map(r => r.getLong(1) -> r.getLong(2)).toMap
     assert(t23f === t23w)
     assert(t23f(1L) === 1L && t23f(3L) === 1L && t23f(4L) === 2L
@@ -4605,24 +4608,39 @@ class StatsSpec extends SparkSpec {
       .filter(col("ts").isNotNull && col("user_id").isNotNull)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).cast("long").as("s1"))
-    def rk(th: Long) = Stats.rankPar(h, "s1", desc = true,
+    def rk(th: Long) = OrderedBins.rankPar(h, "s1", desc = true,
         Seq("user_id"), Nil, th).collect()
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3))))
       .toMap
     val (rw, rp) = (rk(Long.MaxValue), rk(0L))
     assert(rw.nonEmpty && rw === rp)
     // ntile closed form across both paths, k = 5 desc
-    def nt5(th: Long) = Stats.ntilePar(h, 5, "s1", desc = true,
+    def nt5(th: Long) = OrderedBins.ntilePar(h, 5, "s1", desc = true,
         Seq("user_id"), Nil, th).collect()
       .map(r => r.getLong(0) -> r.getLong(2)).toMap
     assert(nt5(Long.MaxValue) === nt5(0L))
+    // the q273 shape: a global decile over a rounded-value cents key with
+    // ties, event_id the tie — values repeated in the probe's key sketch
+    // are hot, so the forced path runs the tie sub-bins
+    val cents = Tables.events(spark, sf)
+      .filter(col("ts").isNotNull && col("value").isNotNull)
+      .select(col("event_id"),
+        expr("CAST(round(100 * value) AS BIGINT)").as("cents"))
+    def dec(th: Long) = OrderedBins.ntilePar(cents, 10, "cents",
+      desc = false, Seq("event_id"), Nil, th)
+    assert(dec(0L).queryExecution.analyzed.toString
+      .contains("ELSE 1000000 END"), "no hot-value sub-bins on the q273 key")
+    def decRows(th: Long) = dec(th).collect()
+      .map(r => r.getLong(0) -> r.getLong(2)).toMap
+    val decWin = decRows(Long.MaxValue)
+    assert(decWin.nonEmpty && decWin === decRows(0L))
     // partitioned asc rank with value ties (the q137 stage shape): rank
     // SETS per (part, key) must agree — equal keys are rank-permutations
     val lat = Tables.events(spark, sf)
       .filter(col("ts").isNotNull)
       .select(col("event_type").as("stage"),
         expr("CAST(floor(coalesce(value, 0) * 7) AS BIGINT)").as("lat_us"))
-    def pr(th: Long) = Stats.rankPar(lat, "lat_us", desc = false, Nil,
+    def pr(th: Long) = OrderedBins.rankPar(lat, "lat_us", desc = false, Nil,
         Seq("stage"), th).collect()
       .groupBy(r => (r.getString(0), r.getLong(1)))
       .view.mapValues(_.map(r => (r.getLong(2), r.getLong(3)))
@@ -4634,12 +4652,12 @@ class StatsSpec extends SparkSpec {
       .select(col("doc_id"),
         length(col("text")).cast("long").as("a"),
         size(split(col("text"), " ")).cast("long").as("b"))
-    def ps(th: Long) = Stats.prefixSumPar(docs, "doc_id", desc = false,
+    def ps(th: Long) = OrderedBins.prefixSumPar(docs, "doc_id", desc = false,
         Nil, Seq("a", "b"), Nil, th).collect()
       .map(r => r.getLong(0) -> ((r.getLong(3), r.getLong(4)))).toMap
     assert(ps(Long.MaxValue) === ps(0L))
     // desc + tie prefix sum (q195's shape)
-    def psd(th: Long) = Stats.prefixSumPar(docs, "a", desc = true,
+    def psd(th: Long) = OrderedBins.prefixSumPar(docs, "a", desc = true,
         Seq("doc_id"), Seq("b"), Nil, th).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(psd(Long.MaxValue) === psd(0L))
@@ -4660,14 +4678,14 @@ class StatsSpec extends SparkSpec {
         col("n_chars").cast("int").as("score"))
     assert(docs.schema("score").dataType ===
       org.apache.spark.sql.types.IntegerType)
-    def rk(th: Long) = Stats.rankPar(docs, "score", desc = false,
+    def rk(th: Long) = OrderedBins.rankPar(docs, "score", desc = false,
         Seq("doc_id"), Seq("source"), th).collect()
       .map(r => (r.getString(1), r.getLong(0)) ->
         ((r.getLong(3), r.getLong(4)))).toMap
     val (w, p) = (rk(Long.MaxValue), rk(0L)) // 0L forces the large path
     assert(w.nonEmpty && w === p)
     // prefixSumPar, same INT32 key
-    def ps(th: Long) = Stats.prefixSumPar(docs, "score", desc = false,
+    def ps(th: Long) = OrderedBins.prefixSumPar(docs, "score", desc = false,
         Seq("doc_id"), Seq("score"), Nil, th).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(ps(Long.MaxValue) === ps(0L))
@@ -4680,14 +4698,14 @@ class StatsSpec extends SparkSpec {
     val d = Seq((1L, Some(5L)), (2L, None), (3L, Some(7L)))
       .toDF("id", "k")
     val e1 = intercept[IllegalArgumentException] {
-      Stats.rankPar(d, "k", desc = false, Seq("id"), Nil, 0L).collect()
+      OrderedBins.rankPar(d, "k", desc = false, Seq("id"), Nil, 0L).collect()
     }
     assert(e1.getMessage.contains("NULL"))
     // threshold 0 forces the probe on both devices (a Long.MaxValue
     // threshold would take the r18 ZERO-JOB stats dispatch, whose
     // refusal is the execution-time assert sort key — BucketsSpec's net)
     val e2 = intercept[IllegalArgumentException] {
-      Stats.prefixSumPar(d, "k", desc = false, Seq("id"), Seq("id"), Nil,
+      OrderedBins.prefixSumPar(d, "k", desc = false, Seq("id"), Seq("id"), Nil,
         0L).collect()
     }
     assert(e2.getMessage.contains("NULL"))
