@@ -2,7 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
 
@@ -55,6 +55,17 @@ case class BucketI64(first: Expression, second: Expression, third: Expression)
   override def dataType: DataType = LongType
   override def nullable: Boolean = first.nullable
   override def prettyName: String = "graft_bucket"
+
+  // plan strings, logs and plan receipts show the edge COUNT, not the
+  // up-to-4095-element literal; canonicalization and exchange reuse
+  // compare children, not strings, so plans themselves do not change
+  private def edgesString: String = second match {
+    case Literal(a: ArrayData, _) => s"<${a.numElements()} edges>"
+    case e => e.toString
+  }
+  override def toString: String = s"$prettyName($first, $edgesString, $third)"
+  override def sql: String =
+    s"$prettyName(${first.sql}, $edgesString, ${third.sql})"
 
   // edges / direction are foldable: extracted ONCE (not per row — an
   // ArrayData→long[] copy per row would be O(m) in the hot loop)

@@ -16,10 +16,19 @@ import org.apache.spark.sql.DataFrame
   * sequential only because the driver calls them sequentially).
   *
   * [[pin]] keeps the plan truncation (the returned frame is LogicalRDD
-  * either way) but defers materialization (`eager = false`): all pinned
-  * frames execute as chained stages inside the ONE action that consumes
-  * the final result. The physical plan of the pinned frame is still fixed
-  * at the `pin` call; only execution timing moves.
+  * either way) but defers materialization (`eager = false`) — of the
+  * pinned frame's FINAL stage only. Under AQE the checkpoint RDD is cut
+  * from the executed physical plan, and executing it materializes every
+  * shuffle and broadcast query stage below that final stage at the `pin`
+  * call, in the builder. Measured with Spark 4.1.2, `local[2]`, AQE on,
+  * sf0.001: a lazy pin over two aggregates and a join ran 3 jobs at the
+  * call; later consumers re-ran none of them. So a pin over an exchange
+  * still costs builder jobs (q200, the one sampled registry query with a
+  * pin, ran 9 in a trace), and an iterative builder that pins every
+  * round (q113, q157) runs each round's shuffles as builder jobs — the
+  * pins, not convergence checks alone, are why those queries still do.
+  * What the lazy form saves is the final stage's job, which now runs
+  * inside the consuming action.
   *
   * Consistency contract (r20 ADVICE): a lazily checkpointed RDD is stored
   * on first materialization and normally computes once — on one executor

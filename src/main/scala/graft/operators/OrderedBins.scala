@@ -132,8 +132,8 @@ object OrderedBins {
       .rowsBetween(Window.unboundedPreceding, 0)
     sums.foldLeft(binned) { case (acc, (n, v)) =>
         acc.withColumn(s"inb_$n", sum(v).over(inb).cast("long")) }
-      .join(broadcast(binBefore),
-        part.map(c => col(c) === col(s"b_$c"))
+      .join(broadcast(binBefore), // null-safe: a NULL part is a partition
+        part.map(c => col(c) <=> col(s"b_$c"))
           .foldLeft(col("bin") === col("b_bin")
             && col("sbin") === col("b_sbin"))(_ && _))
       .select(df.columns.map(col) ++

@@ -779,7 +779,9 @@ object Curation {
     * STATISTIC — no float anywhere.
     *
     * Plan: one source-partitioned rank window; pooled positions come
-    * from the value-RUN cumulative (q142 discipline), and each doc finds
+    * from the value-RUN cumulative (a window over DISTINCT scores —
+    * [[OrderedBins.prefixSumPar]] is the device should that count ever
+    * rival the docs), and each doc finds
     * its covering run via a range join against the BROADCAST pooled run
     * table — bounded by score CARDINALITY (523 distinct values at
     * sf0.1), not corpus size. For a high-cardinality score the range
@@ -821,7 +823,7 @@ object Curation {
     val docs = Tables.documents(s, d)
       .filter(col("n_chars").isNotNull)
       .select(col("doc_id"), col("source"), col("n_chars").as("score"))
-    // r17: per-source rank via the scale-parallel two-level device
+    // r17: per-source rank via the scale-parallel rank device
     // (sources are low-cardinality with doc-proportional frames — the
     // serialized-window class) and the global doc count as a broadcast
     // 1-row aggregate instead of an all-to-one count window
@@ -862,10 +864,10 @@ object Curation {
     * back. No floats anywhere.
     *
     * Plan: one token-count aggregate per doc, one 1-row corpus total,
-    * ONE ordered cumulative window over doc-count rows (the q142
-    * two-level prefix decomposition applies verbatim at 10⁹ docs — rank
-    * and prefix-sum over (quality, id) keys, never a global sort of
-    * row-level data), then the budget filter. Output is the kept set
+    * ONE ordered cumulative sum over doc-count rows
+    * ([[OrderedBins.prefixSumPar]]: past its row threshold, quantile bins
+    * and a cross-bin prefix over (quality, id) keys, never a global sort
+    * of row-level data), then the budget filter. Output is the kept set
     * with its audit columns.
     */
   val q195TokenBudget = Q(
@@ -899,8 +901,8 @@ object Curation {
         size(array_distinct(split(col("text"), " "))).cast("long").as("nd"))
       .withColumn("quality_micro", expr("(nd * 1000000) div nt"))
     val b = t.agg(expr("sum(nt) div 10").as("budget"))
-    // r17: the greedy prefix rides the scale-parallel two-level running
-    // sum (the global Window.orderBy summed every doc in one task)
+    // r17: the greedy prefix rides the scale-parallel running sum
+    // (the global Window.orderBy summed every doc in one task)
     OrderedBins.prefixSumPar(
         t.localCheckpoint(), // probe + main action (§5.7 pin rule)
         "quality_micro", desc = true,

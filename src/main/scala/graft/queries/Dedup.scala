@@ -2769,8 +2769,8 @@ object Dedup {
     * combined) → per-source rank over the DISTINCT-chunK frame. The
     * rank window partitions by source over distinct-chunk rows — at
     * 100 TB that is per-source-vocabulary-sized, not row-proportional
-    * (and the q142 two-level device applies if a source's distinct
-    * chunk count ever rivals its row count).
+    * (and [[OrderedBins.rankPar]] applies if a source's distinct chunk
+    * count ever rivals its row count).
     */
   val q321BoilerplateChunks = Q(
     "q321_boilerplate_chunks",

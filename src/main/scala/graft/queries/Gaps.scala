@@ -1371,14 +1371,13 @@ object Gaps {
     * no division until the final ratio6) plus the value where the gap
     * peaks.
     *
-    * Scale shape: the CDF prefix sums are computed TWO-LEVEL (the q135
-    * bin discipline applied to running sums instead of ranks): per-bin
-    * epoch totals prefix-sum over a ≤4096-row window, and within-bin
-    * cumulative sums run under a PARTITIONED window keyed by bin with the
-    * bin's carry-in added — no global window ever touches a
-    * data-proportional row set (the q91 rule). The DuckDB twin IS the
-    * global single-window sweep — a different prefix-sum
-    * decomposition whose hash-match proves the carry-in algebra.
+    * Scale shape: the CDF prefix sums over the distinct-value table go
+    * through [[OrderedBins.prefixSumPar]] — past its row threshold a
+    * quantile-binned cross-bin prefix plus in-bin sums, so no global
+    * window ever touches a data-proportional row set (the q91 rule). The
+    * DuckDB twin IS the global single-window sweep — a different
+    * prefix-sum decomposition whose hash-match proves the carry-in
+    * algebra.
     */
   val q140KsDrift = Q(
     "q140_ks_drift",
@@ -1417,7 +1416,6 @@ object Gaps {
       |FROM m WHERE gap = mg
       |GROUP BY n1, n2, mg""".stripMargin,
   ) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val mid = to_timestamp(lit("1998-07-01 00:00:00"))
     val g = Tables.orders(s, d)
       .filter(col("o_totalprice").isNotNull && col("o_orderdate").isNotNull)
@@ -1426,30 +1424,12 @@ object Gaps {
       .groupBy(col("c"))
       .agg(sum(when(col("e") === 0, 1).otherwise(0)).as("a_cnt"),
         sum(when(col("e") === 1, 1).otherwise(0)).as("b_cnt"))
-    // two-level prefix sums: bin geometry from the 2-scalar probe
-    val mm = g.agg(min(col("c")), max(col("c"))).head
-    val (lo, hi) = // empty corpus → degenerate bounds, plan yields empty
-      if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
-    val w = (hi - lo) / 4096 + 1
-    val binned = g.select(col("c"), col("a_cnt"), col("b_cnt"),
-      expr(s"(c - ${lo}L) div ${w}L").as("bin"))
-    val binCum = binned.groupBy(col("bin"))
-      .agg(sum(col("a_cnt")).as("sba"), sum(col("b_cnt")).as("sbb"))
-      .select(col("bin"),
-        (sum(col("sba")).over(Window.orderBy(col("bin"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          - col("sba")).as("beforeA"),
-        (sum(col("sbb")).over(Window.orderBy(col("bin"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          - col("sbb")).as("beforeB"))
-    val inBin = Window.partitionBy(col("bin")).orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = g.agg(sum(col("a_cnt")).cast("long").as("n1"),
       sum(col("b_cnt")).cast("long").as("n2"))
-    val cdf = binned.join(binCum, "bin")
-      .select(col("c"),
-        (col("beforeA") + sum(col("a_cnt")).over(inBin)).as("ca"),
-        (col("beforeB") + sum(col("b_cnt")).over(inBin)).as("cb"))
+    // c is unique per row, so the running sums need no tie column
+    val cdf = OrderedBins.prefixSumPar(g, "c", desc = false, Nil,
+        Seq("a_cnt", "b_cnt"))
+      .select(col("c"), col("cum_a_cnt").as("ca"), col("cum_b_cnt").as("cb"))
       .crossJoin(broadcast(tot))
       .select(col("c"), col("n1"), col("n2"),
         abs(col("ca") * col("n2") - col("cb") * col("n1")).as("gap"))
@@ -1468,14 +1448,13 @@ object Gaps {
     * (map each value to its corpus-wide percentile), the feature-scaling
     * step rank-based models and calibration curves need, and the primitive
     * the q91 rule ("no global windows over data") seems to forbid. The
-    * trick is the q135/q140 two-level decomposition a third time, now for
-    * per-ROW output: rank(v) = 1 + #(values < v) depends only on v, so
-    * collapse to DISTINCT values, prefix-sum their counts two-level
-    * (≤4096-bin window + bin-partitioned within-bin window), and join the
-    * per-VALUE rank back to rows on the value — every shuffle is
-    * value-cardinality- or row-partition-sized, nothing is ever globally
-    * ordered. Ties share the same rank (RANK semantics, deterministic);
-    * pct is ratio6((rank − 1), (n − 1)) ∈ [0, 1].
+    * trick: rank(v) = 1 + #(values < v) depends only on v, so collapse to
+    * DISTINCT values, running-sum their counts with
+    * [[OrderedBins.prefixSumPar]] (quantile bins and a cross-bin prefix
+    * past its row threshold, a plain window below it), and join the
+    * per-VALUE rank back to rows on the value — no row-proportional frame
+    * is ever globally ordered. Ties share the same rank (RANK semantics,
+    * deterministic); pct is ratio6((rank − 1), (n − 1)) ∈ [0, 1].
     *
     * The DuckDB twin is the textbook global window (`rank() OVER (ORDER
     * BY c)`): two different rank computations hash-matching per row. At
@@ -1509,32 +1488,16 @@ object Gaps {
       |ORDER BY l_orderkey NULLS FIRST, l_linenumber NULLS FIRST,
       |  value_cents NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    import org.apache.spark.sql.expressions.Window
     val rows = Fan.fan(Tables.lineitem(s, d)) // r21: see q166
       .filter(col("l_extendedprice").isNotNull)
       .select(col("l_orderkey"), col("l_linenumber"),
         expr("CAST(floor(l_extendedprice * 100) AS BIGINT)").as("c"))
     val g = rows.groupBy(col("c")).agg(count(lit(1)).as("cnt"))
-    val mm = g.agg(min(col("c")), max(col("c"))).head
-    val (lo, hi) = // empty corpus → degenerate bounds, plan yields empty
-      if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
-    val w = (hi - lo) / 4096 + 1
-    val binned = g.select(col("c"), col("cnt"),
-      expr(s"(c - ${lo}L) div ${w}L").as("bin"))
-    val binBefore = binned.groupBy(col("bin"))
-      .agg(sum(col("cnt")).as("bc"))
-      .select(col("bin"),
-        (sum(col("bc")).over(Window.orderBy(col("bin"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
-          - col("bc")).as("before"))
-    val inBin = Window.partitionBy(col("bin")).orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val tot = rows.agg(count(lit(1)).cast("long").as("n"))
-    // per-VALUE rank = 1 + everything before this value (two-level)
-    val ranks = binned.join(binBefore, "bin")
-      .select(col("c"),
-        (col("before") + sum(col("cnt")).over(inBin) - col("cnt") + 1)
-          .as("rnk"))
+    // per-VALUE rank = 1 + everything before this value
+    val ranks = OrderedBins.prefixSumPar(g, "c", desc = false, Nil,
+        Seq("cnt"))
+      .select(col("c"), (col("cum_cnt") - col("cnt") + 1).as("rnk"))
     rows.join(ranks, "c")
       .crossJoin(broadcast(tot))
       .select(col("l_orderkey"), col("l_linenumber"),
@@ -1691,15 +1654,13 @@ object Gaps {
     * line on the ×10 lineitem axis (ANSI overflow, hit live r15).
     *
     * Plan: the VALUE-RUN discipline again — one (flag, cents) aggregate,
-    * then cumulative positions via the q142 TWO-LEVEL decomposition:
-    * prices are nearly unique here (~200k runs per flag at sf0.1), so a
-    * flat flag-partitioned window would sort each flag's run table in ONE
-    * task. Instead runs land in 4096 value bins (width from a 2-scalar
-    * min/max probe, the q142 driver-probe shape); the cross-bin
-    * cumulative is a tiny per-flag window over ≤4096 bin totals and the
-    * in-bin cumulative partitions by (flag, bin) — parallel across all
-    * cores. Measured 3.4 s → flat-window form retired (q142's lesson,
-    * fourth application). No per-row rank is ever materialized.
+    * then cumulative positions from [[OrderedBins.prefixSumPar]]
+    * partitioned by flag. Prices are nearly unique here (~200k runs per
+    * flag at sf0.1), so a flat flag-partitioned window sorts each flag's
+    * run table in ONE task; past the device's row threshold the runs land
+    * in quantile bins instead — a per-flag prefix over the bin totals
+    * plus (flag, bin)-partitioned in-bin sums, parallel across all cores.
+    * No per-row rank is ever materialized.
     */
   val q166WinsorizedMean = Q(
     "q166_winsorized_mean",
@@ -1756,38 +1717,17 @@ object Gaps {
       .select(col("l_returnflag").as("flag"),
         expr("CAST(round(100 * l_extendedprice) AS BIGINT)").as("c"))
     val runs = v.groupBy(col("flag"), col("c")).agg(count(lit(1)).as("cnt"))
-    // two-level cumulative (q142): bin width from a 2-scalar driver probe.
-    // Empty/all-NULL input makes the min/max aggregate NULL; substituting
-    // (0, 0) keeps the (empty) pipeline flowing to a zero-row result with
-    // the output schema, matching the DuckDB twin, instead of NPEing here.
-    val mm = runs.agg(min(col("c")), max(col("c"))).head
-    val (lo, hi) =
-      if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
-    val bw = (hi - lo) / 4096 + 1
-    val binned = runs.withColumn("bin", expr(s"(c - ${lo}L) div ${bw}L"))
-    val binTotals = binned.groupBy(col("flag"), col("bin"))
-      .agg(sum(col("cnt")).as("bc"))
-    val binBefore = binTotals
-      .select(col("flag"), col("bin"),
-        coalesce(sum(col("bc")).over(
-          Window.partitionBy(col("flag")).orderBy(col("bin"))
-            .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("before"))
-    val nPerFlag = binTotals.groupBy(col("flag")).agg(sum(col("bc")).as("n"))
-    val inBin = Window.partitionBy(col("flag"), col("bin")).orderBy(col("c"))
-      .rowsBetween(Window.unboundedPreceding, 0)
+    val nPerFlag = runs.groupBy(col("flag")).agg(sum(col("cnt")).as("n"))
     // localCheckpoint: BOTH consumers below (the percentile probe q and
     // the clamped/overlap aggregate) read the positioned-run table; un-
     // pinned, the q join re-instantiated the whole runs+window subtree
-    // and doubled the query (measured 3.0 s → 2.2 s at sf0.1; the
-    // remaining floor is the min/max probe job + one positioned-run
-    // build, each shuffling the ~590k nearly-unique price runs)
-    val k = binned
-      .withColumn("inb", sum(col("cnt")).over(inBin) - col("cnt"))
-      .join(binBefore, Seq("flag", "bin"))
+    // and doubled the query (measured 3.0 s → 2.2 s at sf0.1). (flag, c)
+    // is unique per run, so the running sum needs no tie column.
+    val k = OrderedBins.prefixSumPar(runs, "c", desc = false, Nil,
+        Seq("cnt"), Seq("flag"))
       .join(nPerFlag, "flag")
       .select(col("flag"), col("c"), col("cnt"),
-        (col("before") + col("inb")).as("s"), col("n"),
+        (col("cum_cnt") - col("cnt")).as("s"), col("n"),
         expr("(5 * n + 99) div 100").as("k05"),
         expr("(95 * n + 99) div 100").as("k95"))
       .transform(graft.operators.Iter.pin)
@@ -1824,31 +1764,29 @@ object Gaps {
     * breakdown point vs the quartiles' 25% — the estimator of choice
     * when the contamination itself is what you're hunting), and the
     * answer to q90's own comment naming the exact-percentile SORT as its
-    * 100 TB cost center: both medians here are SORT-FREE. This is the
-    * two-level 4096-bin prefix decomposition's fifth application
-    * (q135/q139/q142/q166), and the first COMPOSED one — the second
-    * median runs over |c − median₁|, a derived axis that only exists
-    * after the first pass resolves, so the decomposition is applied
-    * twice in sequence with a data-dependent re-centering in between.
+    * 100 TB cost center: both medians here are SORT-FREE. Both run the
+    * [[OrderedBins.prefixSumPar]] running count over value runs, COMPOSED:
+    * the second median runs over |c − median₁|, a derived axis that only
+    * exists after the first pass resolves, so the device runs twice in
+    * sequence with a data-dependent re-centering in between.
     *
     * Per l_returnflag: disc-median m (rank ⌈n/2⌉), MAD = disc-median of
     * |c − m|, and the outlier count at the standard 3σ-equivalent fence
     * |c − m| > 3·1.4826·MAD — compared as the EXACT integer inequality
     * 10000·d > 44478·MAD (4.4478 scaled; no float enters the decision).
     *
-    * Exactness: cents are exact int64; both rank picks use the q166
-    * device (s < k ≤ s + cnt over value runs); the fence is integer.
+    * Exactness: cents are exact int64; both rank picks use q166's run
+    * pick (s < k ≤ s + cnt over value runs); the fence is integer.
     * The DuckDB twin is the TEXTBOOK formulation — per-flag row_number
     * sorts picking rank ⌈n/2⌉, twice — so the hash match proves the
     * sort-free decomposition against an actually-sorted reimplementation
     * (the strongest twin shape, q132's convention).
     *
-    * Plan: value runs → two-level binned cumulative (bin width from the
-    * q166 2-scalar probe, REUSED for the deviation axis: d ≤ hi − lo, so
-    * the same width bounds the second pass at ≤ 4097 bins) → a ≤flags
-    * broadcast of (median, MAD) back onto the runs for one fence
-    * aggregate. No row-proportional sort anywhere; every window runs
-    * over distinct VALUES within 4096-bin partitions.
+    * Plan: value runs → flag-partitioned running count (each pass's
+    * device probe samples its own quantile edges, so the deviation axis
+    * needs no shared normalizer) → a ≤flags broadcast of (median, MAD)
+    * back onto the runs for one fence aggregate. No row-proportional
+    * sort anywhere; every window runs over distinct VALUES.
     */
   val q196MadOutliers = Q(
     "q196_mad_outliers",
@@ -1896,50 +1834,26 @@ object Gaps {
         expr("CAST(round(100 * l_extendedprice) AS BIGINT)").as("c"))
     val runs = v.groupBy(col("flag"), col("c")).agg(count(lit(1)).as("cnt"))
       .transform(graft.operators.Iter.pin) // feeds both passes and the fence aggregate
-    // q166's guarded 2-scalar probe fixes ONE ln-normalizer for both axes
-    val mm = runs.agg(min(col("c")), max(col("c"))).head
-    val (lo, hi) =
-      if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
     val nPerFlag = runs.groupBy(col("flag")).agg(sum(col("cnt")).as("n"))
-    // sort-free disc-rank pick at k over (flag, value) runs: two-level
-    // cumulative (bin prefix + within-bin prefix), shared by both passes
-    def pickAt(valRuns: org.apache.spark.sql.DataFrame, valCol: String, origin: Long)
-        : org.apache.spark.sql.DataFrame = {
-      // r18 (the r17 verdict's Next #1): LOG-SCALE bins — the device's
-      // frames are (flag, value) RUNS, so bin load is run-count, and
-      // linear bins collapse runs onto bin 0 under an exponential value
-      // tail (the q234/q257 lesson). Any monotone transform is a valid
-      // binning (boundaries are plan, the picked rank is the answer);
-      // ln anchored at each pass's origin shares one normalizer, and the
-      // dev axis (|c − med| ≤ hi − lo) stays inside it.
-      val binned = valRuns.withColumn("bin", expr(
-        s"""CAST(ln(CAST(($valCol - ${origin}L) + 1 AS DOUBLE))
-           |  / ln(CAST(${hi - lo}L + 2 AS DOUBLE)) * 4096 AS BIGINT)"""
-          .stripMargin))
-      val binBefore = binned.groupBy(col("flag"), col("bin"))
-        .agg(sum(col("cnt")).as("bc"))
-        .select(col("flag"), col("bin"),
-          coalesce(sum(col("bc")).over(
-            Window.partitionBy(col("flag")).orderBy(col("bin"))
-              .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-            .as("before"))
-      val inBin = Window.partitionBy(col("flag"), col("bin"))
-        .orderBy(col(valCol))
-        .rowsBetween(Window.unboundedPreceding, 0)
-      binned
-        .withColumn("inb", sum(col("cnt")).over(inBin) - col("cnt"))
-        .join(binBefore, Seq("flag", "bin"))
+    // sort-free disc-rank pick at k over (flag, value) runs, shared by
+    // both passes: (flag, value) is unique per run, so no tie column
+    def pickAt(valRuns: org.apache.spark.sql.DataFrame, valCol: String)
+        : org.apache.spark.sql.DataFrame =
+      OrderedBins.prefixSumPar(valRuns, valCol, desc = false, Nil,
+          Seq("cnt"), Seq("flag"))
         .join(nPerFlag, "flag")
-        .withColumn("s", col("before") + col("inb"))
+        .withColumn("s", col("cum_cnt") - col("cnt"))
         .withColumn("k", expr("(50 * n + 99) div 100"))
         .filter(col("s") < col("k") && col("k") <= col("s") + col("cnt"))
         .groupBy(col("flag")).agg(min(col(valCol)).as("picked"))
-    }
-    val med = pickAt(runs, "c", lo).withColumnRenamed("picked", "med")
+    val med = pickAt(runs, "c").withColumnRenamed("picked", "med")
     val devRuns = runs.join(broadcast(med), "flag")
       .select(col("flag"), abs(col("c") - col("med")).as("dev"), col("cnt"))
       .groupBy(col("flag"), col("dev")).agg(sum(col("cnt")).as("cnt"))
-    val mad = pickAt(devRuns, "dev", 0L).withColumnRenamed("picked", "mad")
+      // pinned: the second pass's device probe and its prefix sum would
+      // each re-run the whole first pass
+      .transform(graft.operators.Iter.pin)
+    val mad = pickAt(devRuns, "dev").withColumnRenamed("picked", "mad")
     runs.join(broadcast(med), "flag").join(broadcast(mad), "flag")
       .groupBy(col("flag"))
       .agg(sum(col("cnt")).cast("long").as("n"),

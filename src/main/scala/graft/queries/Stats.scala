@@ -6520,15 +6520,14 @@ object Stats {
     * int64, ≤ N²/4); single-arm corpora → NULL via nullif(Var). χ²₁ verdict at
     * the 3.8415 literal.
     *
-    * Plan: the rank is the q142 TWO-LEVEL 4096-bin decomposition (its
-    * sixth application, and the r14 verdict's Next #6 made code): runs
-    * land in value bins off a 2-scalar min/max probe, the cross-bin
-    * prefix is a ≤4096-row window, the in-bin rank partitions by bin —
-    * parallel across all cores, NO partition-free N-row sort anywhere
-    * (the oracle keeps the flat window DuckDB can afford at fixture
-    * scale, the q166 stance); N arrives as a 1-row broadcast, not an
-    * all-to-one count window. Then a 2-row arm aggregate and the
-    * window-total finish.
+    * Plan: the rank and N come from
+    * [[graft.operators.OrderedBins.rankPar]] over (cents, event_id): past
+    * its row threshold, quantile value bins with a cross-bin prefix over
+    * the bin frame and an in-bin rank partitioned by bin — NO
+    * partition-free N-row sort at scale (the oracle keeps the flat window
+    * DuckDB can afford at fixture scale) — and N summed off the same bin
+    * frame, not an all-to-one count window. Then a 2-row arm aggregate
+    * and the window-total finish.
     */
   val q260AnsariBradley = Q(
     "q260_ansari_bradley",
@@ -6597,29 +6596,8 @@ object Stats {
         (conv(substring(md5(concat(lit("ab|"),
           col("user_id").cast("string"))), 1, 1), 16, 10)
           .cast("long") % 2).as("arm"))
-    // two-level rank (q142): value bins off a 2-scalar probe; empty
-    // input keeps the zero-row pipeline flowing (the q166 device)
-    val mm = v.agg(min(col("cents")), max(col("cents"))).head
-    val (lo, hi) =
-      if (mm.isNullAt(0)) (0L, 0L) else (mm.getLong(0), mm.getLong(1))
-    val bw = (hi - lo) / 4096 + 1
-    val binned = v.withColumn("bin", expr(s"(cents - ${lo}L) div ${bw}L"))
-      .transform(graft.operators.Iter.pin) // 2 consumers: bin totals and the in-bin rank
-    val binTotals = binned.groupBy(col("bin"))
-      .agg(count(lit(1)).cast("long").as("bc"))
-    // before + nn both ride the ≤4096-row bin frame (windows over bin
-    // counts, never rows), so the rank join stays strictly equi-keyed
-    val binBefore = binTotals.select(col("bin"),
-      coalesce(sum(col("bc")).over(Window.orderBy(col("bin"))
-        .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-        .as("before"),
-      sum(col("bc")).over(Window.partitionBy()).cast("long").as("nn"))
-    val inBin = Window.partitionBy(col("bin"))
-      .orderBy(col("cents"), col("event_id"))
-    val rk = binned
-      .withColumn("inb", row_number().over(inBin).cast("long"))
-      .join(broadcast(binBefore), "bin")
-      .select(col("arm"), (col("before") + col("inb")).as("i"), col("nn"))
+    val rk = rankPar(v, "cents", desc = false, Seq("event_id"))
+      .select(col("arm"), col("i"), col("nd").as("nn"))
     val sc = rk.groupBy(col("arm"), col("nn"))
       .agg(sum(when(col("i") <= col("nn") + 1 - col("i"), col("i"))
           .otherwise(col("nn") + 1 - col("i"))).cast("long").as("w"),
@@ -9454,15 +9432,16 @@ object Stats {
     * carry, and what is the Herfindahl of customer shares? The two
     * numbers an account team reads before believing any average — and
     * the q292 HHI device pointed at a DIMENSION (customers) instead of
-    * time, which forces the top-k cut through the q142 two-level rank
-    * (its seventh application, DESC-oriented) because customers are
+    * time, which forces the top-k cut through a DESC global rank
+    * ([[graft.operators.OrderedBins.rankPar]]) because customers are
     * dimension-bounded, not calendar-bounded.
     *
     * Exactness: per-customer revenue in WHOLE DOLLARS (round of a
     * 2-decimal money double — never a half-dollar tie, §5.7).
-    * Ranks descend (rev DESC, custkey) through value bins:
-    * cross-bin prefix from the TOP over ≤4096 bin totals, in-bin
-    * row_number partitioned by bin. k = ⌈n/10⌉; HHI rides per-customer
+    * Ranks descend (rev DESC, custkey); past the device's row threshold
+    * through quantile value bins: cross-bin prefix from the TOP over the
+    * bin totals, in-bin row_number partitioned by bin. k = ⌈n/10⌉; HHI
+    * rides per-customer
     * (10⁴·share²)-quantized DECIMAL(18,9) terms (scaled so 10⁻⁹ quanta
     * keep digits at 10⁵+ customers — the quantization is the spec);
     * the decile share is ratio6Big of exact dollar sums (r16: the
@@ -9472,8 +9451,9 @@ object Stats {
     * int64 itself, the r15-VERDICT bound retired before the axis
     * could catch it).
     *
-    * Plan: one per-customer aggregate, a 2-scalar probe, bin windows,
-    * a 1-row finish. No customer-proportional single-partition sort.
+    * Plan: one per-customer aggregate, the device's rank, a 1-row
+    * finish. No customer-proportional single-partition sort past the
+    * device's row threshold.
     */
   val q304CustomerConcentration = Q(
     "q304_customer_concentration",
@@ -9514,7 +9494,7 @@ object Stats {
       |FROM t CROSS JOIN topk CROSS JOIN h
       |WHERE t.n > 0""".stripMargin,
       // WHERE t.n > 0: empty orders → EMPTY output on BOTH engines (the
-      // Spark side returns an explicit limit(0) frame — r15 ADVICE).
+      // Spark side filters its 1-row total on the same predicate).
       // ratio6Big (r16, the q166 precedent applied PRE-EMPTIVELY): the
       // inline ratio6 form 2·top_rev·10⁶ overflows int64 once top_rev
       // crosses 4.6·10¹² — whole dollars reach that around ×100 of
@@ -9526,56 +9506,27 @@ object Stats {
       .groupBy(col("o_custkey"))
       .agg(sum(expr("CAST(round(o_totalprice) AS BIGINT)")).cast("long")
         .as("rev"))
-      .transform(graft.operators.Iter.pin) // 3 consumers: probe, rank, HHI
-    // two-level DESC rank (q142, seventh application): bins off a
-    // 2-scalar probe; empty input flows to a zero-row result
-    val mm = r.agg(min(col("rev")), max(col("rev"))).head
-    if (mm.isNullAt(0)) {
-      r.sparkSession.emptyDataFrame
-        .selectExpr("CAST(0 AS BIGINT) AS n_customers",
-          "CAST(0 AS BIGINT) AS total_rev_dollars",
-          "CAST(NULL AS DOUBLE) AS hhi_points",
-          "CAST(NULL AS DOUBLE) AS top_decile_share")
-        .limit(0)
-    } else {
-      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-      val bw = (hi - lo) / 4096 + 1
-      val binned = r
-        .withColumn("bin", expr(s"(rev - ${lo}L) div ${bw}L"))
-        .transform(graft.operators.Iter.pin) // 2 consumers: bin totals and in-bin ranks
-      val binTotals = binned.groupBy(col("bin"))
-        .agg(count(lit(1)).cast("long").as("bc"))
-      val binBefore = binTotals.select(col("bin"),
-        coalesce(sum(col("bc")).over(Window.orderBy(col("bin").desc)
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-          .as("before"),
-        sum(col("bc")).over(Window.partitionBy()).cast("long").as("n"))
-      val inBin = Window.partitionBy(col("bin"))
-        .orderBy(col("rev").desc, col("o_custkey"))
-      val rk = binned
-        .withColumn("inb", row_number().over(inBin).cast("long"))
-        .join(broadcast(binBefore), "bin")
-        .select(col("rev"), (col("before") + col("inb")).as("i"),
-          col("n"))
-      val tot = rk.agg(max(col("n")).as("n"),
+      .transform(graft.operators.Iter.pin) // 2 consumers: rank and HHI
+    val tot = rankPar(r, "rev", desc = true, Seq("o_custkey"))
+      .agg(max(col("nd")).as("n"),
         sum(col("rev")).cast("long").as("s"),
-        sum(when(col("i") <= expr("(n + 9) div 10"), col("rev"))
+        sum(when(col("i") <= expr("(nd + 9) div 10"), col("rev"))
           .otherwise(0L)).cast("long").as("top_rev"))
-      tot.select(col("n"), col("s"), col("top_rev"))
-        .crossJoin(broadcast(binned.crossJoin(broadcast(
-            tot.select(col("s").as("h_s"))))
-          .agg(sum(expr("""CAST(CAST(10000 AS DOUBLE)
-            |  * (CAST(rev AS DOUBLE) / CAST(h_s AS DOUBLE))
-            |  * (CAST(rev AS DOUBLE) / CAST(h_s AS DOUBLE))
-            |  AS DECIMAL(18,9))""".stripMargin)).cast("double")
-            .as("hhi"))))
-        .select(col("n").as("n_customers"),
-          col("s").as("total_rev_dollars"),
-          round(col("hhi"), 6).as("hhi_points"),
-          // ratio6Big (r16): see the oracle note — pre-empts the ×100
-          // whole-dollar overflow of the inline 2·num·10⁶ form
-          Exact.ratio6Big("top_rev", "s").as("top_decile_share"))
-    }
+      .filter(col("n") > 0)
+    tot.select(col("n"), col("s"), col("top_rev"))
+      .crossJoin(broadcast(r.crossJoin(broadcast(
+          tot.select(col("s").as("h_s"))))
+        .agg(sum(expr("""CAST(CAST(10000 AS DOUBLE)
+          |  * (CAST(rev AS DOUBLE) / CAST(h_s AS DOUBLE))
+          |  * (CAST(rev AS DOUBLE) / CAST(h_s AS DOUBLE))
+          |  AS DECIMAL(18,9))""".stripMargin)).cast("double")
+          .as("hhi"))))
+      .select(col("n").as("n_customers"),
+        col("s").as("total_rev_dollars"),
+        round(col("hhi"), 6).as("hhi_points"),
+        // ratio6Big (r16): see the oracle note — pre-empts the ×100
+        // whole-dollar overflow of the inline 2·num·10⁶ form
+        Exact.ratio6Big("top_rev", "s").as("top_decile_share"))
   }
 
   /** ORDER-SIZE DISPERSION — are line items per order Poisson-ish, or
@@ -9669,8 +9620,8 @@ object Stats {
     * device replacing midranks, stated).
     *
     * Exactness: per-user half-sums and diffs exact int64 cents; the
-    * span midpoint is q298's 2-scalar probe; the |diff| rank is the
-    * q142 TWO-LEVEL 4096-bin decomposition (eighth application — the
+    * span midpoint is q298's 2-scalar probe; the |diff| rank is
+    * [[graft.operators.OrderedBins.rankPar]] (past its row threshold the
     * rank never touches a partition-free N-row window); with
     * E = n(n+1)/4 and Var = n(n+1)(2n+1)/24, z² = 3·(4W⁺ − n(n+1))² /
     * (2·n(n+1)(2n+1)) with the squared numerator in PER-FACTOR DOUBLES
@@ -9678,7 +9629,7 @@ object Stats {
     * the q260 route); n = 0 → empty, Var degeneracy impossible at
     * n ≥ 1. χ²₁ verdict at 3.8415 as a nullable STRING (§5.7).
     *
-    * Plan: one per-user aggregate, the bin windows, a 1-row finish.
+    * Plan: one per-user aggregate, the device's rank, a 1-row finish.
     */
   val q309WilcoxonSignedRank = Q(
     "q309_wilcoxon_signed_rank",
@@ -9741,7 +9692,7 @@ object Stats {
       .select(col("user_id"),
         expr("CAST(round(100 * value) AS BIGINT)").as("cents"),
         expr("unix_micros(ts)").as("us"))
-      .transform(graft.operators.Iter.pin) // 2 consumers: the 2-scalar probe and the walk
+      .transform(graft.operators.Iter.pin) // 2 consumers: the midpoint probe and the walk
     val mm = e.agg(min(col("us")), max(col("us"))).head
     if (mm.isNullAt(0)) {
       e.sparkSession.emptyDataFrame
@@ -9758,28 +9709,8 @@ object Stats {
           .otherwise(-col("cents"))).cast("long").as("diff"))
         .filter(col("diff") =!= 0L)
         .select(col("user_id"), col("diff"), abs(col("diff")).as("ad"))
-      // two-level |diff| rank (q142, eighth application)
-      val mm2 = nz.agg(min(col("ad")), max(col("ad"))).head
-      val rk =
-        if (mm2.isNullAt(0)) nz.select(col("diff"), lit(0L).as("r"))
-        else {
-          val (lo, hi) = (mm2.getLong(0), mm2.getLong(1))
-          val bw = (hi - lo) / 4096 + 1
-          val binned = nz
-            .withColumn("bin", expr(s"(ad - ${lo}L) div ${bw}L"))
-            .transform(graft.operators.Iter.pin)
-          val binBefore = binned.groupBy(col("bin"))
-            .agg(count(lit(1)).cast("long").as("bc"))
-            .select(col("bin"),
-              coalesce(sum(col("bc")).over(Window.orderBy(col("bin"))
-                .rowsBetween(Window.unboundedPreceding, -1)), lit(0L))
-                .as("before"))
-          binned.withColumn("inb",
-              row_number().over(Window.partitionBy(col("bin"))
-                .orderBy(col("ad"), col("user_id"))).cast("long"))
-            .join(broadcast(binBefore), "bin")
-            .select(col("diff"), (col("before") + col("inb")).as("r"))
-        }
+      val rk = rankPar(nz, "ad", desc = false, Seq("user_id"))
+        .select(col("diff"), col("i").as("r"))
       val w = rk.agg(count(lit(1)).cast("long").as("n"),
         sum(when(col("diff") > 0, col("r")).otherwise(0L)).cast("long")
           .as("wplus"))

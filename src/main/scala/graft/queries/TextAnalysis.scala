@@ -943,8 +943,8 @@ object TextAnalysis {
     *
     * Plan: one token explode feeds BOTH the first-occurrence min and the
     * per-doc counts (map-side combined); the lone ordered windows run
-    * over docs (5k rows here — at 10⁹ docs the q142 two-level prefix
-    * decomposition applies verbatim to both cumulative sums); the fit is
+    * over docs (5k rows here — at 10⁹ docs [[OrderedBins.prefixSumPar]]
+    * bins both cumulative sums past its row threshold); the fit is
     * a 1-row aggregate. Output: one audit row.
     *
     * What it reports on THIS corpus is itself the audit working: the
@@ -1017,7 +1017,7 @@ object TextAnalysis {
     val nt = tok.groupBy(col("doc_id")).agg(count(lit(1)).as("n_tok"))
     val fo = tok.groupBy(col("tok")).agg(min(col("doc_id")).as("first_doc"))
       .groupBy(col("first_doc")).agg(count(lit(1)).as("n_new"))
-    // r17: both running sums ride the scale-parallel two-level prefix
+    // r17: both running sums ride the scale-parallel prefix device
     // (the global Window.orderBy summed every doc in one task)
     val pre = OrderedBins.prefixSumPar(
         nt.join(fo, nt("doc_id") === fo("first_doc"), "left")

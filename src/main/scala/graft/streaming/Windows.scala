@@ -73,14 +73,7 @@ object Windows {
     */
   def streamTumbling(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      // same ts canonicalization as graft.Tables.events (layout-adaptive)
-      .transform(graft.Tables.normalizeTs)
-    runTumbling(raw, tableName)
+    runTumbling(graft.Tables.eventsStream(spark, sfDir), tableName)
   }
 
   /** Watermark + tumbling + append-mode memory sink over any ts-bearing
@@ -108,12 +101,7 @@ object Windows {
   def streamRunningCount(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    graft.Tables.eventsStream(spark, sfDir)
       .withWatermark("ts", "10 minutes")
       .select(col("user_id"), col("ts"))
       .as[(Long, java.sql.Timestamp)]
@@ -172,12 +160,7 @@ object Windows {
     */
   def streamViewPurchase(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def side() = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    def side() = graft.Tables.eventsStream(spark, sfDir)
     val views = side().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("ts").as("v_ts"))
@@ -213,12 +196,7 @@ object Windows {
     */
   def streamViewPurchaseOuter(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    def side() = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    def side() = graft.Tables.eventsStream(spark, sfDir)
     val views = side().filter(col("event_type") === "view")
       .select(col("user_id").as("v_user"), col("event_id").as("view_id"),
         col("ts").as("v_ts"))
@@ -258,12 +236,7 @@ object Windows {
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
     import spark.implicits._
     val gapUs = 30L * 60 * 1000 * 1000
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    graft.Tables.eventsStream(spark, sfDir)
       .withWatermark("ts", "10 minutes")
       // the watermarked ts column must stay in the grouped Dataset for the
       // event-time timeout to be allowed; the µs twin does the exact math
@@ -330,14 +303,9 @@ object Windows {
     */
   def streamEnrich(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
     val dim = spark.read.parquet(s"$sfDir/customer.parquet")
       .select(col("c_custkey"), col("c_name"), col("c_nationkey"))
-    val raw = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    val raw = graft.Tables.eventsStream(spark, sfDir)
     enriched(raw, dim)
       .writeStream
       .format("memory")
@@ -353,12 +321,7 @@ object Windows {
     */
   def streamDedup(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    graft.Tables.eventsStream(spark, sfDir)
       .withWatermark("ts", "10 minutes")
       .dropDuplicatesWithinWatermark(Seq("user_id", "event_type"))
       .writeStream
@@ -418,12 +381,7 @@ object Windows {
     import spark.implicits._
     val hourUs = 3600L * 1000 * 1000
     val hourMs = 3600L * 1000
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    graft.Tables.eventsStream(spark, sfDir)
       .filter(col("ts").isNotNull)
       .withWatermark("ts", "10 minutes")
       .select(col("event_type"), col("ts"),
@@ -536,12 +494,7 @@ object Windows {
   def streamDoubleFire(spark: SparkSession, sfDir: String,
       tableName: String): StreamingQuery = {
     import spark.implicits._
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    graft.Tables.eventsStream(spark, sfDir)
       .filter(col("ts").isNotNull && col("user_id").isNotNull
         && col("event_type").isNotNull)
       .withWatermark("ts", "10 minutes")
@@ -634,12 +587,7 @@ object Windows {
     val alpha = 0.2
     val hourUs = 3600L * 1000 * 1000
     val hourMs = 3600L * 1000
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    graft.Tables.eventsStream(spark, sfDir)
       .filter(col("ts").isNotNull && col("event_type").isNotNull)
       .withWatermark("ts", "10 minutes")
       .select(col("event_type"), col("ts"),
@@ -793,12 +741,7 @@ object Windows {
   def streamDriftPsi(
       spark: SparkSession, sfDir: String, tableName: String,
       ref: DriftReference): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    val raw = graft.Tables.eventsStream(spark, sfDir)
     driftPsi(raw.withWatermark("ts", "10 minutes"), ref)
       .writeStream
       .format("memory")
@@ -840,12 +783,7 @@ object Windows {
     * private telemetry with the drift monitor's alerting semantics. */
   def streamDpDaily(
       spark: SparkSession, sfDir: String, tableName: String): StreamingQuery = {
-    val batchSchema = spark.read.parquet(s"$sfDir/events.parquet").schema
-    val raw = spark.readStream
-      .schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(sfDir)
-      .transform(graft.Tables.normalizeTs)
+    val raw = graft.Tables.eventsStream(spark, sfDir)
     dpDaily(raw.withWatermark("ts", "10 minutes"))
       .writeStream
       .format("memory")

@@ -95,6 +95,25 @@ class BucketsSpec extends SparkSpec {
         s"typeGapsCarry bin-lag diverged from the window on ${ov.map(_.toSeq)}")
   }
 
+  test("graft_bucket prints its edge count, not the edge literal: a " +
+      "rankPar forced onto the bin plan with 4096 edges keeps every " +
+      "sampled edge value out of its plan strings") {
+    val h = Tables.events(spark, sf)
+      .filter(col("user_id").isNotNull)
+      .groupBy(col("user_id")).agg(count(lit(1)).cast("long").as("s1"))
+    val edges = Array.tabulate(4096)(i => 987654321000L + 1000003L * i)
+    val df = OrderedBins.rankPar(h, "s1", desc = false, Seq("user_id"),
+      Nil, 0L, Some(edges))
+    val plans = Seq(df.queryExecution.toString,
+      df.queryExecution.explainString(
+        org.apache.spark.sql.execution.FormattedMode))
+    for (p <- plans) {
+      assert(p.contains("<4096 edges>"), "the bin plan was not taken")
+      for (v <- Seq(edges(0), edges(1), edges(2048), edges(4095)))
+        assert(!p.contains(v.toString), s"edge $v printed in the plan")
+    }
+  }
+
   test("shape-agnostic worst-bin mass: sampled-quantile edges keep the " +
       "largest bin under 1% of rows on exponential, REVERSE-exponential " +
       "(mass at hi — the shape ln-anchored-at-lo bins collapse on), " +

@@ -4661,6 +4661,20 @@ class StatsSpec extends SparkSpec {
         Seq("doc_id"), Seq("b"), Nil, th).collect()
       .map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(psd(Long.MaxValue) === psd(0L))
+    // partitioned value-run prefix (the q133/q166/q196 shape): (part, key)
+    // unique, no tie column, the run count as the value; flag 'A' becomes
+    // NULL, a partition of its own on both paths
+    val runs = Tables.lineitem(spark, sf)
+      .filter(col("l_extendedprice").isNotNull)
+      .groupBy(when(col("l_returnflag") =!= "A", col("l_returnflag"))
+          .as("flag"),
+        expr("CAST(round(100 * l_extendedprice) AS BIGINT)").as("c"))
+      .agg(count(lit(1)).as("cnt"))
+    def pp(th: Long) = OrderedBins.prefixSumPar(runs, "c", desc = false,
+        Nil, Seq("cnt"), Seq("flag"), th).collect()
+      .map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3)).toMap
+    val ppWin = pp(Long.MaxValue)
+    assert(ppWin.keys.exists(_._1 == null) && ppWin === pp(0L))
   }
 
   test("rankPar/prefixSumPar on an INT32 key: the forced two-level path " +
