@@ -1015,19 +1015,24 @@ object Analytic {
     * is order-independent (deterministic under any shuffle). All time
     * arithmetic is integer µs end to end.
     *
-    * Plan: ONE scan, a 2× endpoint explode (no UNION re-scan), then the
-    * endpoint deltas collapse to distinct (type, t, ±1) runs — the
-    * RANGE-frame peer semantics made exact: peers share one collapsed
-    * row, so the rows-frame running sum over runs IS the peer-inclusive
-    * cum — and the running sum is [[OrderedBins.prefixSumPar]]
-    * partitioned by type, which picks its own path: a type-keyed window
-    * below its row threshold, quantile time bins with a cross-bin prefix
-    * above it — never one type's history in one sort at scale (the old
-    * per-type window was the exponent-1.0 wall the ×100 axis measured on
-    * the gap family; an inline LINEAR time bin was the 6.8× straggler of
-    * the r18 ×100 timeburst bench, 90% of runs in one bin). The per-type
-    * peak and its first instant are ONE aggregate (a struct max of
-    * (cum, −t)), not a type-wide window.
+    * Plan: ONE scan, a 2× endpoint explode (no UNION re-scan), then a
+    * 3-scalar probe of the deltas picks the running sum's path at 2M
+    * rows: below it one event_type-keyed RANGE window (no fixed costs);
+    * above it the endpoint deltas collapse to distinct (type, t, ±1) runs
+    * (the RANGE-frame peer semantics made exact: peers share one
+    * collapsed row, so the rows-frame running sum over runs IS the
+    * peer-inclusive cum) and go through [[OrderedBins.prefixSumPar]]
+    * partitioned by type — quantile time bins, never one type's history
+    * in one sort (the old per-type window was the exponent-1.0 wall the
+    * ×100 axis measured on the gap family). The per-type max is a
+    * groupBy + broadcast join, not a type-wide window, on the large side.
+    *
+    * Why this query keeps its own probe: sending the small path through
+    * `prefixSumPar` as well (the device's own dispatch) was measured
+    * 1.85× slower on sf0.1 (6 alternating pairs, 4 cores): `PlanStats`
+    * cannot bound the collapsed runs, so the device probes them with its
+    * edge sketch, which re-runs the scan, explode and run aggregate only
+    * to take the window path. See CHANGES.md.
     */
   val q133MaxConcurrency = Q(
     "q133_max_concurrency",
@@ -1072,22 +1077,54 @@ object Analytic {
         "array(struct(s_us AS t, 1 AS delta), struct(e_us AS t, -1 AS delta))"))
         .as("x"))
       .select(col("event_type"), col("x.t").as("t"), col("x.delta").as("delta"))
-    val runs = deltas
-      .groupBy(col("event_type"), col("t"), col("delta"))
-      .agg(count(lit(1)).cast("long").as("cnt"))
-      .withColumn("dd", col("delta") * col("cnt"))
-    // one aggregate per type: the struct max is the peak cum and, among
-    // the runs that reach it, the earliest t (the largest −t)
-    OrderedBins.prefixSumPar(runs, "t",
-        desc = false, Seq("delta"), Seq("dd"), Seq("event_type"))
-      .groupBy(col("event_type"))
+    val mm = deltas.agg(min(col("t")), max(col("t")), count(lit(1)))
+      .head // 3-scalar probe (bounds + the dispatch row count)
+    val c =
+      if (mm.isNullAt(0) || mm.getLong(2) < 2000000L) {
+        // small-corpus path: the plain sweep window (RANGE frame — peers
+        // aggregate together) + per-type max window; fixed costs beat the
+        // parallel path's until the serial span dominates (the
+        // typeGapsCarry dispatch economics, both ends measured there)
+        val sweep = Window.partitionBy(col("event_type"))
+          .orderBy(col("t"), col("delta"))
+        deltas
+          .withColumn("cnt", lit(1L))
+          .withColumn("cum", sum(col("delta")).over(sweep).cast("long"))
+          .withColumn("mx",
+            max(col("cum")).over(Window.partitionBy(col("event_type"))))
+      } else {
+        // two-level prefix sum over COLLAPSED (type, t, delta) runs: the
+        // RANGE frame's peer rows share one run row, so a rows-frame
+        // running sum over runs is exactly the peer-inclusive cum.
+        // r18: the inline LINEAR time bin here was the one straggler the
+        // timeburst ×100 bench measured (6.8× — 90% of runs in one bin,
+        // the exact collapse class the r17 verdict predicted for linear
+        // time bins); routed through prefixSumPar, whose probe over the
+        // collapsed runs frame samples QUANTILE edges — mass-balanced
+        // under any burst placement, bit-identical cum by the monotone-
+        // binning argument (BucketsSpec's edge-invariance net).
+        val runs = deltas
+          .groupBy(col("event_type"), col("t"), col("delta"))
+          .agg(count(lit(1)).cast("long").as("cnt"))
+          .withColumn("dd", col("delta") * col("cnt"))
+        val inb = OrderedBins.prefixSumPar(runs, "t",
+            desc = false, Seq("delta"), Seq("dd"), Seq("event_type"))
+          .withColumn("cum", col("cum_dd"))
+          // pinned: TWO consumers (the per-type max and the join) would
+          // otherwise run the whole two-level prefix pipeline twice —
+          // measured ~2× wall on the 18M-run burst corpus (r18)
+          .transform(graft.operators.Iter.pin)
+        val mxs = inb.groupBy(col("event_type").as("m_type"))
+          .agg(max(col("cum")).cast("long").as("mx"))
+        inb.join(broadcast(mxs), col("event_type") === col("m_type"))
+      }
+    c.groupBy(col("event_type"), col("mx"))
       .agg(
-        max(struct(col("cum_dd").as("cum"), (-col("t")).as("neg_t")))
-          .as("pk"),
         sum(when(col("delta") === 1, col("cnt")).otherwise(0L)).cast("long")
-          .as("n_intervals"))
-      .select(col("event_type"), col("pk.cum").as("max_concurrent"),
-        col("n_intervals"), expr("timestamp_micros(-pk.neg_t)").as("peak_at"))
+          .as("n_intervals"),
+        min(when(col("cum") === col("mx"), col("t"))).as("pk"))
+      .select(col("event_type"), col("mx").as("max_concurrent"),
+        col("n_intervals"), expr("timestamp_micros(pk)").as("peak_at"))
       .orderBy(col("event_type"))
   }
 
