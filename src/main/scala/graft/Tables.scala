@@ -77,14 +77,4 @@ object Tables {
             "spark.sql.legacy.parquet.nanosAsLong=true (Engine.session does)",
           e)
     }
-
-  /** `events.parquet` in `dir` as a streaming file source: the batch
-    * file's schema (a file source needs one up front), only that file
-    * from the directory, and the same `ts` canonicalization as [[events]].
-    */
-  def eventsStream(spark: SparkSession, dir: String): DataFrame =
-    normalizeTs(spark.readStream
-      .schema(spark.read.parquet(s"$dir/events.parquet").schema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir))
 }

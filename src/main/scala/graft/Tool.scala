@@ -62,7 +62,9 @@ object Tool {
         // scales ×factor (content growth), never ×factor² (density
         // growth — that dial is measured separately in q132's comments).
         // Events replicate with disjoint user/event id spans over the
-        // same time span (the driver's law: density grows, span doesn't).
+        // same time span (the testdata scale law: density grows, span
+        // doesn't); generation g shifts each ts by g µs, so a ×N corpus
+        // has ~N× the distinct timestamps, as a real N× larger corpus does.
         // No randomness anywhere — byte-reproducible.
         val src = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
         val out = if (args.length > 2) args(2) else "/tmp/graft_scale"
@@ -108,12 +110,18 @@ object Tool {
           .write.mode("overwrite").parquet(s"$out/documents.parquet")
         }
         if (want("events")) {
-        val ev = spark.read.parquet(s"$src/events.parquet")
+        // Tables.events: ts arrives as TimestampType whatever the raw
+        // layout, so the per-generation offset is plain µs arithmetic;
+        // written back as NTZ µs (the session zone is UTC), the testdata
+        // corpora's own layout
+        val ev = Tables.events(spark, src)
         val nEv = ev.agg(max(col("event_id"))).head.getLong(0) + 1
         val nUsr = ev.agg(max(col("user_id"))).head.getLong(0) + 1
         ev.repartition(32).crossJoin(broadcast(gens))
           .select((col("event_id") + col("g") * nEv).as("event_id"),
-            col("ts"), (col("user_id") + col("g") * nUsr).as("user_id"),
+            expr("CAST(timestamp_micros(unix_micros(ts) + g) AS TIMESTAMP_NTZ)")
+              .as("ts"),
+            (col("user_id") + col("g") * nUsr).as("user_id"),
             col("event_type"), col("value"), col("props"))
           .write.mode("overwrite").parquet(s"$out/events.parquet")
         }

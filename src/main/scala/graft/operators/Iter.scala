@@ -45,7 +45,7 @@ import org.apache.spark.sql.DataFrame
   * float aggregates whose consumers tolerate one materialization per run);
   * do NOT pin a sampled, rand()- or monotonically_increasing_id-bearing
   * frame — give it an explicit eager `localCheckpoint(true)` and a comment
-  * instead (the dedup token dictionaries' interned ids are such frames).
+  * instead (Dedup.internedSorted's interned token ids are such a frame).
   */
 object Iter {
   def pin(df: DataFrame): DataFrame = df.localCheckpoint(eager = false)

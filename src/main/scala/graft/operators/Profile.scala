@@ -88,69 +88,4 @@ object Profile {
       broadcast(left).join(right, cond)
     else
       left.join(broadcast(right), cond)
-
-  /** Feed a [[profile]] result into the session catalog as table-level CBO
-    * statistics — the ANALYZE-equivalent that lets Catalyst's COST-BASED
-    * planner (not just [[joinWithProfiledBroadcast]]'s explicit hint)
-    * consume the profile: row count, per-column null count, HLL NDV, and
-    * min/max for range-comparable types, so FilterEstimation can shrink a
-    * filtered branch below the broadcast threshold and flip the join
-    * strategy (asserted in ProfileSpec). One ANALYZE-free catalog write;
-    * the only driver materialization is the profile itself (one row per
-    * column — bounded like AQE stats).
-    *
-    * `sizeInBytes` is the unfiltered table size estimate (the one number a
-    * profile scan does not observe — pass the storage size, e.g. summed
-    * file lengths).
-    *
-    * min/max are stored in `CatalogColumnStat` VERSION 1 external form,
-    * which is exactly [[profile]]'s `cast(string)` rendering for numeric,
-    * date, timestamp and boolean columns (version 2 stores epoch integers
-    * for date/time); other types skip min/max, like ANALYZE itself.
-    */
-  def feedCatalogStats(
-      spark: org.apache.spark.sql.SparkSession,
-      table: String,
-      profiled: DataFrame,
-      sizeInBytes: Long): Unit = {
-    // VERSION PIN: CatalogColumnStat / CatalogStatistics live in
-    // org.apache.spark.sql.catalyst.catalog — an INTERNAL Catalyst surface
-    // with no compatibility promise. Written and tested against Spark
-    // 4.1.2 (the pinned /opt/spark jars); the external string forms below
-    // assume CatalogColumnStat.VERSION == 1 semantics. If a Spark upgrade
-    // breaks this compile or ProfileSpec's SMJ→BHJ flip assertion, this
-    // is the seam to revisit first.
-    import org.apache.spark.sql.catalyst.catalog.{CatalogColumnStat, CatalogStatistics}
-    import org.apache.spark.sql.types._
-    val schema = spark.table(table).schema
-    val hasNdv = profiled.schema.fieldNames.contains("n_distinct_approx")
-    val rows = profiled.collect() // one row per profiled column, bounded
-    val nRows = rows.headOption.map(_.getAs[Long]("n_rows")).getOrElse(0L)
-    val colStats = rows.flatMap { r =>
-      val name = r.getAs[String]("column_name")
-      schema.find(_.name == name).map { f =>
-        val (mn, mx) = f.dataType match {
-          case _: NumericType | DateType | TimestampType | BooleanType =>
-            (Option(r.getAs[String]("min_value")),
-              Option(r.getAs[String]("max_value")))
-          case _ => (None, None)
-        }
-        val len = f.dataType match {
-          case StringType | BinaryType =>
-            Option(r.getAs[String]("max_value")).map(_.length.toLong).getOrElse(20L)
-          case dt => dt.defaultSize.toLong
-        }
-        name -> CatalogColumnStat(
-          distinctCount =
-            if (hasNdv) Some(BigInt(r.getAs[Long]("n_distinct_approx"))) else None,
-          min = mn, max = mx,
-          nullCount = Some(BigInt(r.getAs[Long]("n_nulls"))),
-          avgLen = Some(len), maxLen = Some(len),
-          version = 1)
-      }
-    }.toMap
-    spark.sessionState.catalog.alterTableStats(
-      spark.sessionState.sqlParser.parseTableIdentifier(table),
-      Some(CatalogStatistics(BigInt(sizeInBytes), Some(BigInt(nRows)), colStats)))
-  }
 }

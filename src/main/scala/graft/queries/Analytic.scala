@@ -1077,10 +1077,9 @@ object Analytic {
         "array(struct(s_us AS t, 1 AS delta), struct(e_us AS t, -1 AS delta))"))
         .as("x"))
       .select(col("event_type"), col("x.t").as("t"), col("x.delta").as("delta"))
-    val mm = deltas.agg(min(col("t")), max(col("t")), count(lit(1)))
-      .head // 3-scalar probe (bounds + the dispatch row count)
+    val n = deltas.count() // the dispatch row count; an empty frame counts 0
     val c =
-      if (mm.isNullAt(0) || mm.getLong(2) < 2000000L) {
+      if (n < 2000000L) {
         // small-corpus path: the plain sweep window (RANGE frame — peers
         // aggregate together) + per-type max window; fixed costs beat the
         // parallel path's until the serial span dominates (the

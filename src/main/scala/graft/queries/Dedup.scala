@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   *    computed per candidate pair only.
   *  - SimHash: embarrassingly parallel fingerprinting (no shuffle until the
   *    fingerprint group-count).
-  *  - Hot-bucket mitigation (q32 + the incremental index): a degenerate
+  *  - Hot-bucket mitigation (q32): a degenerate
   *    corpus — millions of IDENTICAL documents — would collapse into one
   *    LSH bucket and the bucket self-join would go quadratic. Salting
   *    cannot help (the true OUTPUT is quadratic: every pair really is a
@@ -328,8 +328,7 @@ object Dedup {
   }
 
   /** Banded MinHash signature index rows (doc_id, ns, b, s0..s2) from
-    * distinct shingle rows — the PERSISTABLE unit of LSH state (what
-    * [[incrementalNearDups]] stores between ingest batches: ~15 longs per
+    * distinct shingle rows — the compact unit of LSH state (~15 longs per
     * doc instead of the shingle set). Only FOUR md5 calls per shingle;
     * each 128-bit digest is sliced into four 32-bit (8-hex-char) values,
     * giving 16 independent minhash components of which B×r = 15 are
@@ -384,87 +383,6 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"),
         graft.functions.Exact.ratio6("ni", "ns_a + ns_b - ni").as("jaccard"))
       .filter(col("jaccard") >= 0.5)
-
-  /** The persistable LSH index for a document batch — what an ingest
-    * pipeline writes (e.g. through the incremental export chain) so later
-    * batches can [[incrementalNearDups]] against it. */
-  def minhashIndex(docs: DataFrame): DataFrame =
-    minhashBands(shingleRows(docs))
-
-  /** Streaming ingest dedup — [[incrementalNearDups]] driven by a
-    * document stream: every micro-batch is near-dup-checked against the
-    * persisted corpus state (signature index + texts under `stateDir`),
-    * its pairs land under `pairsDir/batch_<id>`, and its own signatures
-    * and texts are folded into the state for the NEXT batch. All three
-    * writes are keyed by batchId with overwrite mode, so a replayed batch
-    * (the foreachBatch at-least-once contract) rewrites its own outputs
-    * instead of duplicating them — the export-bridge idempotency idiom.
-    * A replay must ALSO exclude its own previously-written state from the
-    * corpus it verifies against: reading `batch_*` blindly would include
-    * `batch_<id>` itself, doubling the batch's doc rows on the verify side
-    * and inflating every intersection count (the jaccard numerator) while
-    * the per-doc shingle counts stay correct — phantom pairs. State reads
-    * therefore list the state dirs and filter out `batch_<id>` before
-    * reading (IncrementalDedupSpec's replay case pins this: re-running a
-    * batch body leaves its pairs output byte-identical).
-    *
-    * At 100 TB: per-batch work is batch-proportional (the stored index is
-    * ~15 longs/doc; only candidate-touched texts are re-shingled), which
-    * is what makes dedup-at-ingest sustainable where nightly full LSH
-    * re-runs are not.
-    */
-  def streamIngestDedup(
-      docs: DataFrame,
-      stateDir: String,
-      pairsDir: String): org.apache.spark.sql.streaming.StreamingQuery =
-    docs.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, id: Long) =>
-        ingestBatch(batch, id, stateDir, pairsDir)
-      }
-      .start()
-
-  /** One micro-batch of [[streamIngestDedup]], factored out so the replay
-    * contract (same `id` re-run ⇒ identical pairs output) is directly
-    * testable without driving a second streaming query. */
-  private[graft] def ingestBatch(
-      batch: DataFrame, id: Long, stateDir: String, pairsDir: String): Unit = {
-    import org.apache.hadoop.fs.Path
-    val s = batch.sparkSession
-    // Resolve the filesystem from the state path itself, not fs.defaultFS:
-    // state on a different scheme (e.g. object store) than the default FS
-    // would otherwise be probed on the wrong filesystem entirely.
-    val conf = s.sparkContext.hadoopConfiguration
-    val fs = new Path(stateDir).getFileSystem(conf)
-    // Prior-state listing EXCLUDES this batch's own directory so an
-    // at-least-once replay never sees its first attempt's rows as corpus.
-    def prior(sub: String): Seq[String] = {
-      val dir = new Path(s"$stateDir/$sub")
-      if (fs.exists(dir))
-        fs.listStatus(dir).toSeq.map(_.getPath)
-          .filter(p => p.getName.startsWith("batch_") &&
-            p.getName != s"batch_$id")
-          .map(_.toString)
-      else Seq.empty
-    }
-    val priorIdx = prior("index")
-    val priorDocs = prior("docs")
-    val b = batch.select(col("doc_id"), col("text"))
-    val (stored, corpus) =
-      if (priorIdx.nonEmpty)
-        (s.read.parquet(priorIdx: _*),
-          s.read.parquet(priorDocs: _*).unionByName(b))
-      else {
-        val emptyIdx = minhashIndex(b.limit(0))
-        (emptyIdx, b)
-      }
-    incrementalNearDups(b, stored, corpus)
-      .write.mode("overwrite").parquet(s"$pairsDir/batch_$id")
-    minhashIndex(b)
-      .write.mode("overwrite").parquet(s"$stateDir/index/batch_$id")
-    b.write.mode("overwrite").parquet(s"$stateDir/docs/batch_$id")
-    ()
-  }
 
   /** Self-join bucket candidates over a banded signature frame:
     * (doc_a < doc_b, ns_a, ns_b), DISTINCT. The ONLY pair generator in the
@@ -558,8 +476,7 @@ object Dedup {
     cross.unionByName(intra)
   }
 
-  /** q32's full pipeline over an arbitrary (doc_id, text) frame — the
-    * from-scratch baseline [[incrementalNearDups]] is proven against.
+  /** q32's full pipeline over an arbitrary (doc_id, text) frame.
     * Collapses exact duplicates first ([[collapseByText]]), runs banded
     * LSH over distinct texts only, then expands pairs back
     * ([[expandPairs]]) — output is provably identical to the naive
@@ -589,83 +506,6 @@ object Dedup {
   // the interpreted-HOF megamorphic cliff this file's shingle pipeline
   // already documents (measured 60 s on the second hot run in one
   // session). ns rides the band rows instead — zero extra passes.
-
-  /** INCREMENTAL near-dup detection — the ingest-time shape of q32: a new
-    * batch of documents is deduplicated against a corpus whose LSH state
-    * was built on previous runs and PERSISTED (the [[minhashBands]] rows,
-    * ~15 longs per doc — the thing a 100 TB pipeline can afford to keep;
-    * the shingle sets, ~100× larger, are NOT stored). Candidates are
-    * bucket-join matches between the new batch's bands and stored ∪ new
-    * bands — one side batch-sized, so the shuffle is batch-proportional,
-    * never corpus-proportional; re-running full LSH over the corpus per
-    * ingest (what q32 alone would require) is the quadratic-over-time cost
-    * this operator deletes. Verification re-derives shingles ONLY for
-    * documents that appear in some candidate pair (semi-join prune of the
-    * corpus), which is the storage/compute trade stated above.
-    *
-    * Guarantee (IncrementalDedupSpec): pairs(old ∪ new) =
-    * pairs(old) ⊎ incrementalNearDups(new, storedBands(old), old ∪ new) —
-    * the union is exact and disjoint, because signatures are a
-    * deterministic per-doc function (stored ≡ recomputed) and every mixed
-    * or new-new bucket collision has a side in the new batch.
-    */
-  def incrementalNearDups(
-      newDocs: DataFrame,
-      storedBands: DataFrame,
-      corpus: DataFrame): DataFrame = {
-    // Hot-bucket mitigation at ingest: collapse the NEW batch's exact
-    // duplicates before banding ([[collapseByText]]) — an identical-doc
-    // flood arriving as one batch contributes ONE signature row per
-    // distinct text to the bucket join instead of k (old shape: k² bucket
-    // candidates, each verified). Stored docs stay as-is (their dup pairs
-    // were emitted by the batch that ingested them).
-    val (newReps0, newMembers0) = collapseByText(newDocs)
-    // Pinned HERE though nearDups deliberately is not: these frames are
-    // BATCH-sized (the whole point of the incremental path), so the eager
-    // pin costs a blink while bounding the re-shingling of the new batch
-    // to exactly once — the corpus-sized trade nearDups measured (its
-    // rejection note) does not apply at batch scale.
-    val newReps = newReps0.transform(graft.operators.Iter.pin)
-    val newMembers = newMembers0.transform(graft.operators.Iter.pin)
-    val dshNew = shingleRows(newReps)
-    val newBands = minhashBands(dshNew).transform(graft.operators.Iter.pin)
-    val allBands = storedBands.select(
-        col("doc_id"), col("ns"), col("b"), col("s0"), col("s1"), col("s2"))
-      .unionByName(newBands)
-    val aId = col("a.doc_id"); val cId = col("c.doc_id")
-    val cand = newBands.as("a")
-      .join(allBands.as("c"),
-        col("a.b") === col("c.b") &&
-          col("a.s0") === col("c.s0") && col("a.s1") === col("c.s1") &&
-          col("a.s2") === col("c.s2") &&
-          aId =!= cId)
-      .select(
-        when(aId < cId, aId).otherwise(cId).as("doc_a"),
-        when(aId < cId, cId).otherwise(aId).as("doc_b"),
-        when(aId < cId, col("a.ns")).otherwise(col("c.ns")).as("ns_a"),
-        when(aId < cId, col("c.ns")).otherwise(col("a.ns")).as("ns_b"))
-      .distinct()
-    // verify against shingles of candidate-touched docs only: the corpus
-    // scan survives, but the shingle explode + verify join run on the
-    // candidate closure, not the corpus
-    val touched = cand
-      .select(explode(array(col("doc_a"), col("doc_b"))).as("doc_id"))
-      .distinct()
-    val dshV = shingleRows(
-      corpus.join(touched, Seq("doc_id"), "left_semi"))
-    val repPairs = verifyJaccard(cand, dshV)
-    // Expansion mapping: new members to their reps, plus IDENTITY rows for
-    // every non-new corpus doc (stored ids pass through unchanged, so a
-    // rep↔stored pair expands across the rep's group only). Intra-group
-    // ns comes from the NEW batch's shingle rows, not the candidate
-    // closure — a duplicated-but-otherwise-unique text has no candidates
-    // yet still owes its intra-group j=1 pairs.
-    val identity = corpus.select(col("doc_id"))
-      .join(newMembers.select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .select(col("doc_id"), col("doc_id").as("rep_id"))
-    expandPairs(repPairs, newMembers.unionByName(identity),
-      newBands.select(col("doc_id"), col("ns")).distinct())
-  }
 
   /** Character-n-gram Jaccard near-dup — the dedup family member that works
     * on raw characters (robust to tokenization differences, unlike q32's
@@ -1461,191 +1301,6 @@ object Dedup {
       .orderBy(col("id_a"), col("id_b"))
   }
 
-  // ---- incremental form of the exact prefix join (q132's ingest shape) --
-
-  /** The persistable half of the EXACT similarity join: the frozen token
-    * dictionary (token → document frequency → interned id). Freezing is
-    * what makes the join incrementally maintainable AT ALL: the prefix
-    * theorem needs one CONSISTENT total order across every doc ever
-    * indexed, but it needs no particular order — df-ascending is only the
-    * performance heuristic — so an ingest pipeline freezes the order at
-    * build time and later batches extend it without touching old state.
-    * Unseen tokens order as (df = 0, token): rarest-first by construction,
-    * and consistent, because a token absent from the dictionary is absent
-    * from every OLD document — no stored array's internal order can be
-    * affected by where new tokens slot in.
-    */
-  def prefixDict(docs: DataFrame): DataFrame =
-    dictOver(docs
-      .select(explode(array_distinct(split(col("text"), " "))).as("tok")))
-
-  /** [[prefixDict]] over any per-doc distinct (doc_id, tok) rows — word
-    * tokens for the Jaccard join, 3-gram shingles for the containment
-    * join. The frozen order's unit is whatever the join's set element is. */
-  private def dictOver(tokRows: DataFrame): DataFrame =
-    tokRows
-      .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-      .withColumn("tid", monotonically_increasing_id())
-      .localCheckpoint(eager = true) // nondeterministic ids: see Iter
-
-  /** The per-doc half of the index: canonical-order and numeric-order
-    * token-id arrays under a FROZEN dictionary (what q132 derives inline;
-    * an ingest pipeline persists this next to the dict — doc-proportional,
-    * the tokenized-form trade the bigram LM's comment names). Tokens
-    * absent from the dict get batch-local NEGATIVE ids (disjoint from
-    * `monotonically_increasing_id`'s non-negative range, so cross-batch
-    * ids never collide) ordered by (0, token).
-    */
-  def prefixDocIndex(docs: DataFrame, dict: DataFrame): DataFrame =
-    docIndexOver(docs
-      .select(col("doc_id"),
-        explode(array_distinct(split(col("text"), " "))).as("tok")), dict)
-
-  /** [[prefixDocIndex]] over any per-doc distinct (doc_id, tok) rows. */
-  private def docIndexOver(toks: DataFrame, dict: DataFrame): DataFrame = {
-    val newToks = toks.select(col("tok")).distinct()
-      .join(dict.select(col("tok")), Seq("tok"), "left_anti")
-      .withColumn("df", lit(0L))
-      .withColumn("tid", lit(-1L) - monotonically_increasing_id())
-      .localCheckpoint(eager = true) // nondeterministic ids: see Iter
-    toks.join(dict.unionByName(newToks), "tok")
-      .groupBy(col("doc_id"))
-      .agg(sort_array(collect_list(struct(col("df"), col("tok"),
-        col("tid")))).as("st"), count(lit(1)).as("sz"))
-      .select(col("doc_id"), col("sz"),
-        expr("transform(st, x -> x.tid)").as("tids"),
-        expr("sort_array(transform(st, x -> x.tid))").as("stids"))
-  }
-
-  private def prefixRowsOf(index: DataFrame): DataFrame =
-    index.select(col("doc_id"), col("sz"),
-      posexplode(expr(
-        "slice(tids, 1, CAST(sz - ((9 * sz + 9) div 10) + 1 AS INT))")))
-      .select(col("doc_id"), col("sz"), (col("pos") + 1).as("pos"),
-        col("col").as("tid"))
-
-  /** INCREMENTAL exact similarity join — q132's ingest-time shape, the
-    * exact-family sibling of [[incrementalNearDups]]: a new batch joins
-    * against the PERSISTED index (dict + per-doc id arrays) and emits
-    * exactly the J ≥ 0.9 pairs that involve ≥ 1 new document. Candidates
-    * come from the new batch's prefix rows against (stored ∪ new) prefix
-    * rows — one side batch-sized, so the shuffle is batch-proportional —
-    * with the same length/positional pruning as q132; verification is the
-    * same codegen'd merge walk over the numeric id arrays. Old-old pairs
-    * are structurally excluded (every candidate has a new side), so
-    *
-    *   pairs(old ∪ new) = pairs(old) ⊎ incremental(new, index(old))
-    *
-    * holds as an exact DISJOINT union (PrefixJoinSpec proves it through a
-    * parquet round-trip of both index halves). The full recompute on the
-    * left uses FRESH document frequencies — a different canonical order,
-    * hence different candidate sets — and still must produce the same
-    * pairs, which is precisely the order-invariance the frozen-dict
-    * design leans on.
-    */
-  def incrementalPrefixPairs(
-      newDocs: DataFrame, dict: DataFrame, index: DataFrame): DataFrame = {
-    val newIndex = prefixDocIndex(newDocs, dict).transform(graft.operators.Iter.pin)
-    val newPrefix = prefixRowsOf(newIndex)
-    val allPrefix = prefixRowsOf(index).unionByName(newPrefix)
-    val cand = newPrefix.as("a").join(allPrefix.as("b"),
-        col("a.tid") === col("b.tid")
-          && col("a.doc_id") =!= col("b.doc_id")
-          && col("b.sz") * 10 >= col("a.sz") * 9
-          && col("a.sz") * 10 >= col("b.sz") * 9
-          && (lit(1) + least(col("a.sz") - col("a.pos"),
-               col("b.sz") - col("b.pos"))) * 19
-             >= (col("a.sz") + col("b.sz")) * 9)
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("doc_a"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("doc_b"))
-      .distinct()
-    val arrays = index.unionByName(newIndex)
-      .select(col("doc_id"), col("sz"), col("stids"))
-    cand
-      .join(arrays.select(col("doc_id"), col("sz").as("sza"),
-        col("stids").as("ta")), col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(arrays.select(col("doc_id"), col("sz").as("szb"),
-        col("stids").as("tb")), col("doc_b") === col("doc_id")).drop("doc_id")
-      .select(col("doc_a"), col("doc_b"),
-        expr("graft_sorted_intersect_i64(ta, tb)").as("inter"),
-        col("sza"), col("szb"))
-      .select(col("doc_a"), col("doc_b"), col("inter"),
-        (col("sza") + col("szb") - col("inter")).as("uni"))
-      .filter(col("inter") * 10 >= col("uni") * 9)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("uni"),
-        graft.functions.Exact.ratio6("inter", "uni").as("jaccard"))
-  }
-
-  // ---- incremental form of the Hamming join (q138's ingest shape) ----
-
-  /** The persistable Hamming index: fingerprint CLASSES (f, n). Unlike
-    * the prefix join's dictionary there is nothing to freeze — a SimHash
-    * is a pure per-doc function, independent of corpus statistics — so
-    * the index is just the class table and composes across batches by
-    * count addition.
-    */
-  def hammingIndex(docs: DataFrame): DataFrame =
-    simhash48(docs).groupBy(col("f")).agg(count(lit(1)).as("n"))
-
-  /** INCREMENTAL Hamming join — q138 at ingest time, completing the
-    * incremental trio (probabilistic LSH: [[incrementalNearDups]]; exact
-    * set space: [[incrementalPrefixPairs]]; exact Hamming space: this).
-    * Emits, per fingerprint-class pair within distance 3, the NUMBER OF
-    * DOC PAIRS that involve ≥ 1 new document — the exact delta the class
-    * algebra dictates:
-    *
-    *   C(o+n, 2) = C(o, 2) + o·n + C(n, 2)          (same class)
-    *   (oa+na)(ob+nb) = oa·ob + oa·nb + na·ob + na·nb  (cross classes)
-    *
-    * so old + incremental = recompute-on-union HOLDS COUNT-ADDITIVELY per
-    * class pair (PrefixJoinSpec proves it through a parquet round-trip;
-    * row-disjointness is the wrong contract here because a class PAIR can
-    * exist before and after — its count grows). Candidates come from the
-    * new-touched classes' bands against all bands: batch-proportional,
-    * old-old pairs structurally absent. Reported n_a/n_b are the UNION
-    * class sizes (what a reader of the merged index sees).
-    */
-  def incrementalHammingPairs(
-      newDocs: DataFrame, index: DataFrame): DataFrame = {
-    val merged = index.select(col("f"), col("n").as("n_old"))
-      .join(hammingIndex(newDocs).select(col("f"), col("n").as("n_new")),
-        Seq("f"), "full")
-      .select(col("f"),
-        coalesce(col("n_old"), lit(0L)).as("o"),
-        coalesce(col("n_new"), lit(0L)).as("nw"))
-      .transform(graft.operators.Iter.pin)
-    val same = merged.filter(col("nw") >= 1)
-      .select(col("f").as("f_a"), col("f").as("f_b"), lit(0L).as("hamming"),
-        (col("o") + col("nw")).as("n_a"), (col("o") + col("nw")).as("n_b"),
-        (col("o") * col("nw") + expr("(nw * (nw - 1)) div 2")).as("n_pairs"))
-      .filter(col("n_pairs") > 0)
-    def bandsOf(df: DataFrame) = df
-      .select(col("f"), col("o"), col("nw"), posexplode(expr(
-        "transform(sequence(0, 3), k -> shiftright(f, 12 * k) & 4095)")))
-      .select(col("f"), col("o"), col("nw"), col("pos").as("bk"),
-        col("col").as("bv"))
-    val newBands = bandsOf(merged.filter(col("nw") >= 1))
-    val allBands = bandsOf(merged)
-    val cross = newBands.as("a").join(allBands.as("b"),
-        col("a.bk") === col("b.bk") && col("a.bv") === col("b.bv") &&
-          col("a.f") =!= col("b.f"))
-      .select(least(col("a.f"), col("b.f")).as("f_a"),
-        greatest(col("a.f"), col("b.f")).as("f_b"))
-      .distinct()
-      .join(merged.select(col("f").as("f_a"), col("o").as("oa"),
-        col("nw").as("na")), "f_a")
-      .join(merged.select(col("f").as("f_b"), col("o").as("ob"),
-        col("nw").as("nb")), "f_b")
-      .withColumn("hamming", expr("bit_count(f_a ^ f_b)").cast("long"))
-      .filter(col("hamming") <= 3)
-      .select(col("f_a"), col("f_b"), col("hamming"),
-        (col("oa") + col("na")).as("n_a"), (col("ob") + col("nb")).as("n_b"),
-        (col("oa") * col("nb") + col("na") * col("ob")
-          + col("na") * col("nb")).as("n_pairs"))
-      .filter(col("n_pairs") > 0)
-    cross.unionAll(same).orderBy(col("f_a"), col("f_b"))
-  }
-
   // ---- q138: exact Hamming-distance join in 48-bit SimHash space ----
 
   /** Per-nibble hex values (one md5 per token, 12 nibbles = 48 bits) and
@@ -1988,8 +1643,7 @@ object Dedup {
       .select(col("doc_id"), col("text")))
   }
 
-  /** q185's operator body over any (doc_id, text) frame (suite entry and
-    * the incremental proof's recompute baseline). */
+  /** q185's operator body over any (doc_id, text) frame (suite entry). */
   private[graft] def containmentPairs(docs: DataFrame): DataFrame = {
     val sorted = internedSorted(
       shingleRows(docs).withColumnRenamed("sh", "tok"))
@@ -2021,89 +1675,6 @@ object Dedup {
         col("sz_b"),
         graft.functions.Exact.ratio6("inter", "sz_a").as("containment"))
       .orderBy(col("doc_a"), col("doc_b"))
-  }
-
-  // ---- incremental form of the containment join (q185's ingest shape) --
-
-  /** The persistable containment index: the frozen SHINGLE dictionary —
-    * [[prefixDict]]'s machinery with 3-gram shingles as the set element,
-    * so an ingest pipeline that maintains both exact joins (q132 Jaccard,
-    * q185 containment) shares ONE frozen-order design, just instantiated
-    * per element space. */
-  def containmentDict(docs: DataFrame): DataFrame =
-    dictOver(shingleRows(docs).withColumnRenamed("sh", "tok"))
-
-  /** The per-doc half of the containment index under a FROZEN shingle
-    * dictionary (unseen shingles order at (0, shingle) with batch-local
-    * negative ids — [[prefixDocIndex]]'s exact argument). */
-  def containmentDocIndex(docs: DataFrame, dict: DataFrame): DataFrame =
-    docIndexOver(shingleRows(docs).withColumnRenamed("sh", "tok"), dict)
-
-  private def containPrefixRowsOf(index: DataFrame): DataFrame =
-    index.select(col("doc_id"), col("sz"),
-      explode(expr(
-        "slice(tids, 1, CAST(sz - ((9 * sz + 9) div 10) + 1 AS INT))"))
-        .as("tid"))
-
-  /** INCREMENTAL containment join — q185 at ingest. The one-sided prefix
-    * theorem makes the delta algebra ASYMMETRIC, unlike the symmetric
-    * Jaccard increment: an ordered pair (contained A, container B) with a
-    * new doc on ≥ 1 side arises in exactly one of two shapes, and they
-    * need DIFFERENT joins:
-    *
-    *  1. NEW-CONTAINED: A is new — A-prefix rows of the NEW batch join
-    *     (stored ∪ new) FULL rows. Covers new-old and both orientations
-    *     of new-new. Batch-proportional on the prefix side.
-    *  2. NEW-CONTAINER: A is old, B is new — STORED A-prefix rows join
-    *     the new batch's FULL rows. Restricting the prefix side to the
-    *     stored index makes the two shapes DISJOINT by construction
-    *     (shape 1 has a new A, shape 2 an old A). The equi key is the
-    *     shingle id, so only stored prefix rows whose shingle occurs in
-    *     the new batch survive — with the prefix rows persisted bucketed
-    *     by tid (the deployment layout), the read and shuffle are
-    *     batch-proportional, not corpus-proportional.
-    *
-    * Old-old pairs are structurally excluded, so
-    *
-    *   pairs(old ∪ new) = pairs(old) ⊎ incremental(new, dict(old), index(old))
-    *
-    * holds as an exact disjoint union of ORDERED pairs — PrefixJoinSpec
-    * proves it through a parquet round-trip against a FRESH-frequency
-    * full recompute (different canonical order, same pairs: the
-    * order-invariance the frozen dictionary leans on).
-    */
-  def incrementalContainmentPairs(
-      newDocs: DataFrame, dict: DataFrame, index: DataFrame): DataFrame = {
-    val newIndex = containmentDocIndex(newDocs, dict).transform(graft.operators.Iter.pin)
-    val newPrefix = containPrefixRowsOf(newIndex)
-    val newFull = newIndex.select(col("doc_id"), col("sz"),
-      explode(col("tids")).as("tid"))
-    val allFull = index.select(col("doc_id"), col("sz"),
-        explode(col("tids")).as("tid"))
-      .unionByName(newFull)
-    def candidates(aPref: DataFrame, bFull: DataFrame) =
-      aPref.as("a").join(bFull.as("b"),
-          col("a.tid") === col("b.tid")
-            && col("a.doc_id") =!= col("b.doc_id")
-            && col("b.sz") * 10 >= col("a.sz") * 9)
-        .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val cand = candidates(newPrefix, allFull)
-      .unionByName(candidates(containPrefixRowsOf(index), newFull))
-      .distinct()
-    val arrays = index.unionByName(newIndex)
-      .select(col("doc_id"), col("sz"), col("stids"))
-    cand
-      .join(arrays.select(col("doc_id"), col("sz").as("sz_a"),
-        col("stids").as("ta")), col("doc_a") === col("doc_id")).drop("doc_id")
-      .join(arrays.select(col("doc_id"), col("sz").as("sz_b"),
-        col("stids").as("tb")), col("doc_b") === col("doc_id")).drop("doc_id")
-      .select(col("doc_a"), col("doc_b"),
-        expr("graft_sorted_intersect_i64(ta, tb)").as("inter"),
-        col("sz_a"), col("sz_b"))
-      .filter(col("inter") * 10 >= col("sz_a") * 9)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("sz_a"),
-        col("sz_b"),
-        graft.functions.Exact.ratio6("inter", "sz_a").as("containment"))
   }
 
   /** EXACT SUBSTRING-DUPLICATION detection — the "50-token verbatim
@@ -2173,8 +1744,8 @@ object Dedup {
   private val SubG = 8
   private val SubK = SubW - SubG + 1
 
-  /** Token arrays of the ≥w-token docs — the verify/window half of the
-    * substring index (doc-proportional; a deployment persists it). */
+  /** Token arrays of the ≥w-token docs — the verify/window half of q187
+    * (doc-proportional). */
   private[graft] def substringTokens(
       docs: DataFrame, w: Int = SubW): DataFrame =
     docs
@@ -2192,8 +1763,7 @@ object Dedup {
         explode(sequence(lit(1), col("n") - (SubG - 1), lit(k))).as("p"))
       .select(col("doc_id"), col("p"), subGram8(col("tk"), col("p")).as("h8"))
 
-  /** All-position anchor rows (position-proportional — the big half; a
-    * deployment persists it BUCKETED BY h8 so batch joins prune reads). */
+  /** All-position anchor rows (position-proportional — the big half). */
   private[graft] def substringSlideRows(t: DataFrame): DataFrame =
     t.select(col("doc_id"), col("tk"),
         explode(sequence(lit(1), col("n") - (SubG - 1))).as("p"))
@@ -2334,53 +1904,6 @@ object Dedup {
       .select(col("doc_a").as("doc_id"), col("doc_b").as("eval_id"),
         col("n_shared50").as("n_shared25"))
       .orderBy(col("doc_id"), col("eval_id"))
-  }
-
-  /** INCREMENTAL substring-dup join — q187 at ingest, completing the
-    * incremental index family (probabilistic LSH, exact prefix, exact
-    * Hamming, exact containment, and now exact substring). The persisted
-    * index is two plain tables: [[substringTokens]] (verify/window half)
-    * and [[substringSlideRows]] (position-proportional, bucketed by h8
-    * in deployment — the honest price of exact substring detection;
-    * nothing to freeze, anchors are content-only like SimHash
-    * fingerprints). The batch's own grid rows are derived fresh — the
-    * grid is never persisted.
-    *
-    * Unlike the containment delta (whose one-sided theorem forces two
-    * asymmetric join shapes), ONE join suffices here: the pigeonhole
-    * lemma certifies a shared span from EITHER member's grid, so
-    * grid(new) × slide(old ∪ new) is already lossless — every pair with
-    * ≥ 1 new doc has a grid anchor inside the span IN THE NEW MEMBER,
-    * and the other member's copy sits in the slide index whichever age
-    * it is. The grid side is batch-sized (positions/43 of the batch), so
-    * the whole delta is one batch-proportional hash join against the
-    * h8-bucketed slide store. Old-old pairs are structurally excluded:
-    *
-    *   pairs(old ∪ new) = pairs(old) ⊎ incremental(new, index(old))
-    *
-    * as an exact disjoint union (PrefixJoinSpec, parquet round-trip).
-    * Window counts recompute only for docs in confirmed NEW pairs —
-    * answer-proportional, like the batch form.
-    */
-  def incrementalSubstringPairs(
-      newDocs: DataFrame, storedToks: DataFrame,
-      storedSlide: DataFrame): DataFrame = {
-    val newToks = substringTokens(newDocs).transform(graft.operators.Iter.pin)
-    val newGrid = substringGridRows(newToks)
-      .select(col("doc_id").as("doc_a"), col("p").as("i"), col("h8"))
-    val allSlide = storedSlide.unionByName(substringSlideRows(newToks))
-      .select(col("doc_id").as("doc_b"), col("p").as("j"), col("h8"))
-    val cand = newGrid.join(allSlide,
-        newGrid("h8") === allSlide("h8") && col("doc_a") =!= col("doc_b"))
-      .select(col("doc_a"), col("i"), col("doc_b"), col("j"))
-    val toks = storedToks.unionByName(newToks)
-    // verify on the ANCHOR orientation (grid doc = doc_a), then normalize
-    // the surviving pair to (min, max) ids for the output contract
-    val pairs = subVerifiedPairs(cand, toks)
-      .select(least(col("doc_a"), col("doc_b")).as("doc_a"),
-        greatest(col("doc_a"), col("doc_b")).as("doc_b"))
-      .distinct()
-    subWindowCounts(pairs, toks)
   }
 
   /** DUP-CLUSTER SIZE SPECTRUM — the distributional readout q31's

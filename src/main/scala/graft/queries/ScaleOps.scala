@@ -135,8 +135,7 @@ object ScaleOps {
     * bits (x even positions, y odd). Sorting/range-partitioning by this ONE
     * key clusters BOTH dimensions at once, which is what makes parquet
     * min/max row-group skipping work for multi-dimensional predicates — a
-    * linear sort on x gives a y-only filter nothing to skip (ZorderSpec
-    * writes both layouts and counts surviving file boxes to prove it).
+    * linear sort on x gives a y-only filter nothing to skip.
     * This query oracle-checks the curve MATH itself cross-engine: bucket
     * arithmetic and 20-term bit interleave are pure integer/IEEE
     * expressions, so min/max/Σ of z per group hash-match DuckDB exactly.

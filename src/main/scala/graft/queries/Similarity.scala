@@ -347,60 +347,6 @@ object Similarity {
       .filter(col("rk") <= topK)
   }
 
-  /** IVF-PQ with the standard EXACT RE-RANK refine step — the shape every
-    * production PQ deployment actually serves (FAISS's
-    * IndexIVFPQ + IndexRefineFlat): [[annIvfPq]]'s ADC pass produces a
-    * shortlist of `refineDepth` candidates per query (cheap — no
-    * per-candidate vector math), then ONE narrow broadcast hash join
-    * pulls the shortlist's full vectors back and re-ranks by exact
-    * fixed-point squared L2 (micro-unit int64 — the same metric
-    * KmeansSpec's ground truth uses, so recall gaps are pure probe loss).
-    *
-    * Why it exists: ADC distance is a quantized ESTIMATE, and on an
-    * isotropic corpus impostor candidates whose estimates underestimate
-    * displace true neighbors from a fixed top-k (measured recall@5 0.24
-    * at nprobe=2 here, NOT monotone in nprobe). The shortlist, however,
-    * covers the truth (coverage@50 measured 0.96 with every cluster
-    * probed) — so one exact pass over ≤ queries·refineDepth rows lifts
-    * recall toward coverage (measured 0.96 at nprobe=5/depth 50 on the
-    * KmeansSpec fixture, vs 0.24 unrefined).
-    *
-    * Plan at scale: the refine side is provably bounded
-    * (queries × refineDepth ids — broadcast), so the exact pass is one
-    * broadcast hash join against the corpus plus a per-query top-k
-    * window; everything upstream keeps [[annIvfPq]]'s broadcast-only
-    * posture (KmeansSpec asserts no cartesian / ≤1 bounded BNLJ on the
-    * whole refined plan).
-    */
-  private[graft] def annIvfPqRefined(
-      emb: org.apache.spark.sql.DataFrame,
-      k: Int,
-      numQueries: Int,
-      topK: Int,
-      nprobe: Int = 2,
-      refineDepth: Int = 50,
-      maxIter: Int = 20): org.apache.spark.sql.DataFrame = {
-    val shortlist = annIvfPq(emb, k, numQueries, refineDepth, nprobe, maxIter)
-      .select(col("qid"), col("vec_id"))
-    // exact micro-unit fixed-point vectors: deterministic integer metric
-    // (diff² ≤ 4·10¹² per dim, ×64 dims ≈ 2.6·10¹⁴ — well inside int64)
-    val eq = emb.select(col("vec_id"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * 1e6).cast("long")).as("xq"))
-    val qv = eq.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("qid"), col("xq").as("qv"))
-    val exactD2 = aggregate(
-      zip_with(col("qv"), col("xq"), (a, b) => (a - b) * (a - b)),
-      lit(0L), _ + _)
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("exact_d2"), col("vec_id"))
-    broadcast(shortlist.join(qv, "qid"))
-      .join(eq, "vec_id")
-      .select(col("qid"), col("vec_id"), exactD2.as("exact_d2"))
-      .withColumn("rk", row_number().over(rankW))
-      .filter(col("rk") <= topK)
-  }
-
   /** Embedding covariance matrix [EXT] — the statistic whitening, PCA, and
     * embedding-drift monitoring all start from: for every dimension pair
     * i ≤ j, the exact integer covariance numerator

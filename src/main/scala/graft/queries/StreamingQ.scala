@@ -5,11 +5,9 @@ import graft.functions.Exact
 import graft.streaming.Windows
 import org.apache.spark.sql.functions._
 
-/** Batch twins of the Structured Streaming slice (SURVEY.md §2.9): the same
+/** The event-time window slice (SURVEY.md §2.9): the
   * [[graft.streaming.Windows]] logic run in batch mode so the driver's
-  * DuckDB oracle can check the window semantics; the streaming execution
-  * path of the identical plans is exercised by the ScalaTest suite
-  * (file source → watermark → memory sink).
+  * DuckDB oracle can check the window semantics.
   */
 object StreamingQ {
 
@@ -17,15 +15,12 @@ object StreamingQ {
     q45TumblingWindow, q46SessionWindow, q47SlidingWindow, q60StreamJoinTwin,
     q73StreamEnrichTwin, q129DpDailyTwin)
 
-  /** Batch twin of the streaming DP daily release ([[Windows.dpDaily]] /
-    * [[Windows.streamDpDaily]], equality asserted in StreamingSpec): each
-    * (UTC day, event type) count released under the q125 geometric
-    * mechanism — private telemetry with one-verdict-per-finalized-day
-    * semantics. The noise seed is a pure function of the window key, so
-    * the SAME release comes out of the batch plan, the streaming plan,
-    * and the DuckDB twin (whose CASE chain mirrors Gaps.dpNoiseExpr) —
-    * a privacy mechanism with a hash-checkable oracle even under
-    * streaming replay.
+  /** The DP daily release ([[Windows.dpDaily]]): each (UTC day, event
+    * type) count released under the q125 geometric mechanism — private
+    * telemetry with one-verdict-per-finalized-day semantics. The noise
+    * seed is a pure function of the window key, so the SAME release comes
+    * out of the Spark plan and the DuckDB twin (whose CASE chain mirrors
+    * Gaps.dpNoiseExpr) — a privacy mechanism with a hash-checkable oracle.
     */
   val q129DpDailyTwin = Q(
     "q129_dp_daily_twin",
@@ -51,8 +46,7 @@ object StreamingQ {
       .orderBy(col("day"), col("event_type"))
   }
 
-  /** Batch twin of the STREAM-STATIC enrichment join
-    * ([[Windows.streamEnrich]], equality asserted in StreamingSpec): every
+  /** The STREAM-STATIC enrichment join ([[Windows.enriched]]): every
     * event decorated with its customer dimension row. The dim side is
     * broadcast — stateless, the §2.9 join shape that needs no watermark.
     */
@@ -69,9 +63,9 @@ object StreamingQ {
       .orderBy(col("event_id"))
   }
 
-  /** Batch twin of the stream-stream interval join
-    * ([[Windows.streamViewPurchase]], equality asserted in StreamingSpec):
-    * view→purchase attribution pairs within 30 minutes per user.
+  /** The stream-stream interval join shape
+    * ([[Windows.viewPurchasePairs]]): view→purchase attribution pairs
+    * within 30 minutes per user.
     */
   val q60StreamJoinTwin = Q(
     "q60_stream_join_twin",

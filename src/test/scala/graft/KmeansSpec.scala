@@ -229,47 +229,6 @@ class KmeansSpec extends SparkSpec {
     assert(plan.split("BroadcastNestedLoopJoin").length - 1 <= 1, plan)
   }
 
-  test("IVF-PQ + exact re-rank refine: recall@5 recovers shortlist coverage") {
-    val emb = Tables.embeddings(spark, sf)
-    // same exact micro-unit L2 ground truth as the ADC test above
-    val e = emb.select(col("vec_id"),
-      transform(col("embedding"),
-        x => round(x.cast("double") * 1e6).cast("long")).as("xq"))
-    val q = e.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("qid"), col("xq").as("qv"))
-    val d2 = aggregate(
-      zip_with(col("qv"), col("xq"), (a, b) => (a - b) * (a - b)),
-      lit(0L), _ + _)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("qid")).orderBy(col("d2"), col("vec_id"))
-    val exact = e.join(broadcast(q), col("vec_id") =!= col("qid"))
-      .select(col("qid"), col("vec_id"), d2.as("d2"))
-      .withColumn("rk", row_number().over(w)).filter(col("rk") <= 5)
-      .select(col("qid"), col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-
-    val refined = Similarity.annIvfPqRefined(emb, k = 5, numQueries = 5,
-      topK = 5, nprobe = 5, refineDepth = 50)
-    val got = refined.select(col("qid"), col("vec_id")).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(got.size === 25)
-
-    // the refine step's whole point: exact re-rank of the ADC shortlist
-    // lifts recall@5 from 0.24 (unrefined ADC, above) toward the
-    // shortlist's coverage (0.96 measured at nprobe=5/depth 50) — the
-    // residual gap is pure probe loss, which exact distances cannot fix
-    val recall = (exact & got).size.toDouble / exact.size
-    info(s"refined IVF-PQ recall@5 = $recall (ADC-only posts 0.24)")
-    assert(recall >= 0.8, s"refined IVF-PQ recall@5 = $recall (ADC-only: 0.24)")
-
-    // refine must not break the broadcast-only posture: the shortlist
-    // side is queries×depth rows (broadcast), the corpus joins by hash
-    val plan = refined.queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan)
-    assert(plan.contains("BroadcastHashJoin"), plan)
-    assert(plan.split("BroadcastNestedLoopJoin").length - 1 <= 1, plan)
-  }
-
   test("ANN label noise: neighbor recall monotone in nprobe vs a Scala " +
       "brute-force exact 1-NN; nprobe = K is bit-identical to exact " +
       "q270; candidate plan strictly equi-keyed", Slow) {

@@ -123,138 +123,6 @@ class PrefixJoinSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan)
   }
 
-  test("incremental prefix join: pairs(old ∪ new) = pairs(old) ⊎ incremental") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(41)
-    def block(blk: Int, m: Int, idBase: Long) = {
-      val toks = (1 to 40).map(j => s"blk${blk}_t$j")
-      (0 until m).map { i =>
-        val mutated = toks.map(t =>
-          if (rnd.nextInt(25) == 0) s"x${rnd.nextInt(40)}" else t)
-        (idBase + i) -> mutated.mkString(" ")
-      }
-    }
-    // old corpus: two blocks; new batch: more members of block 0, a brand
-    // new block (with tokens UNSEEN by the old dictionary), one fresh
-    // exact dup of an old doc
-    val old = block(0, 4, 1L) ++ block(1, 4, 100L)
-    val fresh = block(0, 3, 200L) ++ block(9, 3, 300L) :+ (400L -> old.head._2)
-    val oldDf = old.toDF("doc_id", "text")
-    val freshDf = fresh.toDF("doc_id", "text")
-    val unionDf = (old ++ fresh).toDF("doc_id", "text")
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(3)))).toMap
-    // persist both index halves through parquet — the deployment shape
-    val dir = "/tmp/graft_prefix_index"
-    graft.queries.Dedup.prefixDict(oldDf)
-      .write.mode("overwrite").parquet(s"$dir/dict")
-    val dict = spark.read.parquet(s"$dir/dict")
-    graft.queries.Dedup.prefixDocIndex(oldDf, dict)
-      .write.mode("overwrite").parquet(s"$dir/docs")
-    val index = spark.read.parquet(s"$dir/docs")
-    val full = keyed(graft.queries.Dedup.prefixJaccardPairs(unionDf))
-    val oldPairs = keyed(graft.queries.Dedup.prefixJaccardPairs(oldDf))
-    val inc = keyed(
-      graft.queries.Dedup.incrementalPrefixPairs(freshDf, dict, index))
-    assert(inc.keySet.intersect(oldPairs.keySet).isEmpty, "must be disjoint")
-    assert(oldPairs ++ inc === full,
-      s"old=${oldPairs.keySet} inc=${inc.keySet} full=${full.keySet}")
-    // the increment must include a mixed old-new pair and a new-new pair
-    assert(inc.keys.exists { case (a, b) => a < 200 && b >= 200 })
-    assert(inc.keys.exists { case (a, b) => a >= 200 && b >= 200 })
-  }
-
-  test("incremental containment join: ordered pairs(old ∪ new) = " +
-      "pairs(old) ⊎ incremental, both delta shapes exercised") {
-    import spark.implicits._
-    // containment-shaped corpus: short quotes living inside long wrappers.
-    // quote(i) = 12 tokens of block i; wrapper(i) = quote(i) + 90 tokens of
-    // padding, so the quote's shingle set is ≥90% inside the wrapper's but
-    // J is far below 0.9 (the asymmetric relation q132 misses).
-    def quote(blk: Int) = (1 to 12).map(j => s"cq${blk}_$j").mkString(" ")
-    def wrapper(blk: Int, tag: String) =
-      quote(blk) + " " + (1 to 90).map(j => s"pad${tag}_$j").mkString(" ")
-    val old = Seq(
-      1L -> quote(0), 2L -> wrapper(0, "a"),   // old-old pair (1 ⊂ 2)
-      3L -> quote(1),                          // old quote, container comes later
-      4L -> wrapper(2, "b"))                   // old container, quote comes later
-    val fresh = Seq(
-      200L -> wrapper(1, "c"),                 // NEW-CONTAINER for old quote 3
-      201L -> quote(2),                        // NEW-CONTAINED in old wrapper 4
-      202L -> quote(3), 203L -> wrapper(3, "d"), // new-new pair, UNSEEN shingles
-      204L -> "nothing shared with anyone here at all")
-    val oldDf = old.toDF("doc_id", "text")
-    val freshDf = fresh.toDF("doc_id", "text")
-    val unionDf = (old ++ fresh).toDF("doc_id", "text")
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(3), r.getLong(4)))).toMap
-    // persist both index halves through parquet — the deployment shape
-    val dir = "/tmp/graft_contain_index"
-    graft.queries.Dedup.containmentDict(oldDf)
-      .write.mode("overwrite").parquet(s"$dir/dict")
-    val dict = spark.read.parquet(s"$dir/dict")
-    graft.queries.Dedup.containmentDocIndex(oldDf, dict)
-      .write.mode("overwrite").parquet(s"$dir/docs")
-    val index = spark.read.parquet(s"$dir/docs")
-    val full = keyed(graft.queries.Dedup.containmentPairs(unionDf))
-    val oldPairs = keyed(graft.queries.Dedup.containmentPairs(oldDf))
-    val inc = keyed(graft.queries.Dedup
-      .incrementalContainmentPairs(freshDf, dict, index))
-    assert(inc.keySet.intersect(oldPairs.keySet).isEmpty, "must be disjoint")
-    assert(oldPairs ++ inc === full,
-      s"old=${oldPairs.keySet} inc=${inc.keySet} full=${full.keySet}")
-    // both asymmetric delta shapes must actually fire:
-    assert(inc.contains((3L, 200L)), "new-container shape (old ⊂ new) missing")
-    assert(inc.contains((201L, 4L)), "new-contained shape (new ⊂ old) missing")
-    assert(inc.contains((202L, 203L)), "new-new pair over unseen shingles missing")
-    assert(oldPairs.contains((1L, 2L)) && !inc.contains((1L, 2L)))
-  }
-
-  test("incremental hamming join: old + delta = recompute, count-additively") {
-    import spark.implicits._
-    val rnd = new scala.util.Random(59)
-    def block(blk: Int, m: Int, idBase: Long) = {
-      val toks = (1 to 60).map(j => s"hb${blk}_t$j")
-      (0 until m).map { i =>
-        val mutated = toks.map(t =>
-          if (rnd.nextInt(40) == 0) s"m${rnd.nextInt(30)}" else t)
-        (idBase + i) -> mutated.mkString(" ")
-      }
-    }
-    // old: two blocks incl. exact dups (same-class pairs); new: more
-    // members of block 0 (cross- and same-class deltas) + a new block
-    val old = block(0, 5, 1L) ++ block(1, 4, 100L) :+ (50L -> block(0, 1, 1L).head._2)
-    val fresh = block(0, 3, 200L) ++ block(7, 3, 300L)
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) ->
-        ((r.getLong(2), r.getLong(5)))).toMap
-    val dir = "/tmp/graft_hamming_index"
-    graft.queries.Dedup.hammingIndex(old.toDF("doc_id", "text"))
-      .write.mode("overwrite").parquet(dir)
-    val index = spark.read.parquet(dir)
-    val oldPairs = keyed(
-      graft.queries.Dedup.hammingPairs(old.toDF("doc_id", "text")))
-    val full = keyed(graft.queries.Dedup
-      .hammingPairs((old ++ fresh).toDF("doc_id", "text")))
-    val inc = keyed(graft.queries.Dedup
-      .incrementalHammingPairs(fresh.toDF("doc_id", "text"), index))
-    assert(inc.nonEmpty, "fixture must produce a delta")
-    // every class pair in the union recompute must be exactly the sum of
-    // the old run's count and the incremental delta (0 when absent), at
-    // the same hamming distance
-    for ((k, (h, np)) <- full) {
-      val oldNp = oldPairs.get(k).map(_._2).getOrElse(0L)
-      val incNp = inc.get(k).map(_._2).getOrElse(0L)
-      assert(oldNp + incNp === np, s"class pair $k")
-      oldPairs.get(k).foreach { case (oh, _) => assert(oh === h) }
-      inc.get(k).foreach { case (ih, _) => assert(ih === h) }
-    }
-    // and the delta never invents a class pair the union lacks
-    assert(inc.keySet.subsetOf(full.keySet))
-  }
-
   test("q145: deletion-neighborhood join ≡ brute force; q96 is a subset") {
     import spark.implicits._
     val names = Seq(
@@ -373,50 +241,6 @@ class PrefixJoinSpec extends SparkSpec {
     )
     val got = runSubstring(docs)
     assert(got === Map((1L, 2L) -> 1L), s"got=$got")
-  }
-
-  test("incremental substring join: pairs(old ∪ new) = pairs(old) ⊎ " +
-      "incremental through a parquet round-trip") {
-    val run60 = (1 to 60).map(i => s"is$i").mkString(" ")   // shared 60-run
-    val run55 = (1 to 55).map(i => s"iz$i").mkString(" ")   // a second block
-    def pad(tag: String, n: Int) =
-      (1 to n).map(i => s"ip${tag}_$i").mkString(" ")
-    val old = Seq(
-      1L -> s"$run60 ${pad("a", 15)}",
-      2L -> s"${pad("b", 15)} $run60",       // old-old pair (1, 2)
-      3L -> s"$run55 ${pad("c", 20)}")       // old doc, partner arrives later
-    val fresh = Seq(
-      200L -> s"${pad("d", 12)} $run55",     // pairs with old doc 3
-      201L -> s"$run60 ${pad("e", 30)}",     // pairs with old docs 1 and 2
-      202L -> (1 to 70).map(i => s"nw$i").mkString(" "),  // new-new block,
-      203L -> ((1 to 70).map(i => s"nw$i").mkString(" ") + " " + pad("f", 5)),
-      204L -> pad("g", 60))                  // ≥50 tokens, shares nothing
-    val oldDf = old.toDF("doc_id", "text")
-    val freshDf = fresh.toDF("doc_id", "text")
-    val unionDf = (old ++ fresh).toDF("doc_id", "text")
-    val dir = "/tmp/graft_substr_index"
-    val oldToks = graft.queries.Dedup.substringTokens(oldDf)
-    oldToks.write.mode("overwrite").parquet(s"$dir/toks")
-    graft.queries.Dedup.substringSlideRows(oldToks)
-      .write.mode("overwrite").parquet(s"$dir/slide")
-    val toks = spark.read.parquet(s"$dir/toks")
-    val slide = spark.read.parquet(s"$dir/slide")
-    def keyed(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(2)).toMap
-    val full = keyed(graft.queries.Dedup.substringDupPairs(unionDf))
-    val oldPairs = keyed(graft.queries.Dedup.substringDupPairs(oldDf))
-    val inc = keyed(graft.queries.Dedup
-      .incrementalSubstringPairs(freshDf, toks, slide))
-    assert(inc.keySet.intersect(oldPairs.keySet).isEmpty, "must be disjoint")
-    assert(oldPairs ++ inc === full,
-      s"old=${oldPairs.keySet} inc=${inc.keySet} full=${full.keySet}")
-    // the increment must carry old-new pairs in BOTH id orders (the grid
-    // sits on the new member regardless of which id is smaller) and a
-    // new-new pair; the old-old pair must come only from the old run
-    assert(inc.contains((3L, 200L)) && inc.contains((1L, 201L))
-      && inc.contains((2L, 201L)) && inc.contains((202L, 203L)), inc.toString)
-    assert(oldPairs.keySet === Set((1L, 2L)))
-    assert(!inc.keys.exists { case (a, b) => a == 204L || b == 204L })
   }
 
   test("q191 decontamination ≡ naive 25-window scan; empty eval set is empty") {

@@ -51,52 +51,6 @@ class ProfileSpec extends SparkSpec {
     }
   }
 
-  test("fed catalog stats flip the static join strategy under CBO") {
-    // the ANALYZE-equivalent loop closed: profile → catalog column stats →
-    // FilterEstimation shrinks the selective dim branch below the
-    // broadcast threshold → the COST-BASED planner (no hint anywhere)
-    // flips SortMergeJoin into BroadcastHashJoin. Assertions read the
-    // STATIC plan (queryExecution.sparkPlan): AQE would eventually rescue
-    // the no-stats case at runtime; CBO gets it right at plan time.
-    val dir = java.nio.file.Files.createTempDirectory("graft_cbo").toString
-    spark.range(10000)
-      .select(col("id"), concat(lit("padding-padding-"), col("id")).as("pad"))
-      .write.parquet(s"$dir/dim")
-    spark.range(100000)
-      .select((col("id") % 10000).as("fk"), col("id").as("v"))
-      .write.parquet(s"$dir/fact")
-    spark.sql("DROP TABLE IF EXISTS cbo_dim")
-    spark.sql("DROP TABLE IF EXISTS cbo_fact")
-    spark.sql(s"CREATE TABLE cbo_dim (id BIGINT, pad STRING) USING parquet LOCATION '$dir/dim'")
-    spark.sql(s"CREATE TABLE cbo_fact (fk BIGINT, v BIGINT) USING parquet LOCATION '$dir/fact'")
-    val prevCbo = spark.conf.get("spark.sql.cbo.enabled")
-    val prevThresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.cbo.enabled", "true")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1KB")
-    try {
-      def q = spark.table("cbo_fact")
-        .join(spark.table("cbo_dim").filter(col("id") <= 5),
-          col("fk") === col("id"))
-      // without stats the dim relation is its file size (≫ 1KB) and the
-      // filter can't be estimated — static plan stays a SortMergeJoin
-      val before = q.queryExecution.sparkPlan.toString
-      assert(!before.contains("BroadcastHashJoin"), before)
-
-      Profile.feedCatalogStats(spark, "cbo_dim",
-        Profile.profile(spark.table("cbo_dim"), Seq("id", "pad")),
-        sizeInBytes = 400000L)
-      // with rowCount + (min, max, ndv) on id, `id <= 5` estimates ~6 of
-      // 10000 rows → far under 1KB → cost-based BroadcastHashJoin
-      val after = q.queryExecution.sparkPlan.toString
-      assert(after.contains("BroadcastHashJoin"), after)
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", prevCbo)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThresh)
-      spark.sql("DROP TABLE IF EXISTS cbo_dim")
-      spark.sql("DROP TABLE IF EXISTS cbo_fact")
-    }
-  }
-
   test("profile row counts drive the broadcast side (BuildLeft = smaller)") {
     val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     // disable Catalyst's own size-based broadcast so only the profile

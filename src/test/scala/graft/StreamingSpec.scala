@@ -1,71 +1,12 @@
 package graft
 
-import graft.streaming.Windows
 import org.apache.spark.sql.functions._
 
-/** Structured Streaming execution of the shared window logic: the streaming
-  * plans must produce exactly what their batch twins (q45 etc., oracle-
-  * checked by the driver) produce on the same input.
+/** The export's Structured Streaming bridge (`Export.exportStream`): each
+  * micro-batch becomes one committed run of the delta chain, and a
+  * restarted query continues the run sequence from its checkpoint.
   */
 class StreamingSpec extends SparkSpec {
-
-  test("streaming tumbling windows equal the batch twin's finalized windows") {
-    val q = Windows.streamTumbling(spark, sf, "stream_tumbling")
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("stream_tumbling")
-        .orderBy(col("win_start"), col("event_type")).collect()
-      // append mode emits a window once its end is past the watermark
-      // (max event time − delay); the final open windows stay in state
-      val wmMs = Tables.events(spark, sf)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      val unfiltered = Windows.tumbling(Tables.events(spark, sf))
-        .orderBy(col("win_start"), col("event_type")).collect()
-      val batch = unfiltered.filter(
-        _.getAs[java.sql.Timestamp]("win_start").getTime +
-          Windows.TumblingWindowMs <= wmMs)
-      assert(streamed.length > 0)
-      // the horizon actually cut something: at least the windows still open
-      // at the watermark are absent from the append-mode output
-      assert(batch.length < unfiltered.length)
-      assert(streamed.toSeq === batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("append-mode watermark drops a late event and frees the window's state") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def t(s: String) = java.sql.Timestamp.valueOf(s)
-    val src = MemoryStream[(java.sql.Timestamp, String, Double)]
-    val q = Windows.runTumbling(
-      src.toDF.toDF("ts", "event_type", "value"), "late_drop")
-    try {
-      src.addData(
-        (t("2024-01-01 10:00:00"), "a", 1.0),
-        (t("2024-01-01 10:30:00"), "a", 2.0),
-        (t("2024-01-01 12:00:00"), "a", 3.0)) // advances watermark to 11:50
-      q.processAllAvailable()
-      // window [10:00, 11:00) is finalized (end 11:00 ≤ wm 11:50) → emitted
-      val first = spark.table("late_drop").collect()
-      assert(first.map(_.getAs[java.sql.Timestamp]("win_start")).toSeq ===
-        Seq(t("2024-01-01 10:00:00")))
-      assert(first.head.getAs[Long]("n") === 2L)
-      // a LATE row for the evicted window + a fresh row closing 12:00's window
-      src.addData(
-        (t("2024-01-01 10:15:00"), "a", 99.0), // beyond watermark: dropped
-        (t("2024-01-01 13:30:00"), "a", 4.0))  // watermark → 13:20 > 13:00
-      q.processAllAvailable()
-      val rows = spark.table("late_drop")
-        .orderBy(col("win_start")).collect()
-      // the 10:00 window was NOT re-opened or re-emitted — the late row is
-      // gone; the 12:00 window arrived once its end passed the watermark
-      assert(rows.map(r => (r.getAs[java.sql.Timestamp]("win_start"),
-        r.getAs[Long]("n"))).toSeq ===
-        Seq((t("2024-01-01 10:00:00"), 2L), (t("2024-01-01 12:00:00"), 1L)))
-    } finally q.stop()
-  }
 
   test("foreachBatch drains a stream into the incremental export chain") {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
@@ -148,572 +89,5 @@ class StreamingSpec extends SparkSpec {
       .select(col("id"), col("v")).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     assert(snap === Map(1L -> "a2", 2L -> "b1", 3L -> "c1"))
-  }
-
-  test("mapGroupsWithState running count converges to the batch group count") {
-    val q = Windows.streamRunningCount(spark, sf, "stream_state")
-    try {
-      q.processAllAvailable()
-      // update-mode memory sink holds one row per (user, batch) emission,
-      // plus possible timeout tombstones — the per-user max is the final
-      // running total either way
-      val streamed = spark.table("stream_state")
-        .groupBy(col("user_id")).agg(max(col("n_events")).as("n"))
-        .orderBy(col("user_id")).collect()
-      val batch = Tables.events(spark, sf)
-        .groupBy(col("user_id")).agg(count(lit(1)).as("n"))
-        .orderBy(col("user_id")).collect()
-      assert(streamed.length > 0)
-      assert(streamed.toSeq === batch.toSeq)
-    } finally q.stop()
-  }
-
-  test("stream-stream interval join equals the batch interval join") {
-    val q = Windows.streamViewPurchase(spark, sf, "stream_vp")
-    try {
-      q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        (r.getLong(0), r.getLong(1), r.getLong(2))
-      val streamed = spark.table("stream_vp").collect().map(key).toSet
-      val batch = Windows.viewPurchasePairs(Tables.events(spark, sf))
-        .collect().map(key).toSet
-      assert(batch.nonEmpty, "fixture must contain view→purchase pairs")
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("stream-stream LEFT OUTER join: matches ≡ inner twin, nulls ≡ expired anti-join") {
-    val q = Windows.streamViewPurchaseOuter(spark, sf, "stream_vp_outer")
-    try {
-      q.processAllAvailable()
-      val rows = spark.table("stream_vp_outer").collect()
-      val (matched, nulls) = rows.partition(!_.isNullAt(2))
-      val batchPairs = Windows.viewPurchasePairs(Tables.events(spark, sf))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      assert(matched.map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
-        .toSet === batchPairs, "matched half must equal the inner join")
-      // a view's null row flushes once the watermark passes the end of
-      // its join window (v_ts + 30 min). The QUERY watermark is the MIN
-      // over both input streams' watermarks (each stream's max event time
-      // − 10 min) — not the overall max — and Spark tracks it in
-      // MILLISECONDS, so the twin predicate truncates to ms too
-      val ev = Tables.events(spark, sf)
-      val wmMs = ev.filter(col("event_type").isin("view", "purchase"))
-        .groupBy(col("event_type"))
-        .agg(max(expr("unix_millis(ts)")).as("mx"))
-        .agg(min(col("mx"))).head.getLong(0) - 10L * 60 * 1000
-      val expectedNulls = ev.filter(col("event_type") === "view")
-        .join(ev.filter(col("event_type") === "purchase")
-            .select(col("user_id").as("b_user"), col("ts").as("b_ts")),
-          col("user_id") === col("b_user") &&
-            col("b_ts") >= col("ts") &&
-            col("b_ts") <= col("ts") + expr("INTERVAL 30 MINUTES"),
-          "left_anti")
-        .filter(expr("unix_millis(ts)") + 30L * 60 * 1000 < wmMs)
-        .select(col("event_id")).collect().map(_.getLong(0)).toSet
-      assert(expectedNulls.nonEmpty,
-        "fixture must contain expired unconverted views")
-      assert(nulls.map(_.getLong(1)).toSet === expectedNulls)
-    } finally q.stop()
-  }
-
-  test("flatMapGroupsWithState sessionizer emits the batch session windows") {
-    val q = Windows.streamSessionize(spark, sf, "stream_sess")
-    try {
-      q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2), r.getLong(3))
-      val streamed = spark.table("stream_sess").collect().map(key).toSet
-      // every session except each user's LAST completes in-batch; the last
-      // stays open in state and is flushed by the EVENT-TIME TIMEOUT in the
-      // follow-up batch iff the watermark (max event time − delay) passed
-      // its close edge — both groups must appear in the sink
-      val batchAll = Windows.session(Tables.events(spark, sf))
-        .select(col("user_id"), col("sess_start"), col("sess_end"),
-          col("n_events")).collect().map(key)
-      val wmMs = Tables.events(spark, sf)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      val lastStart = batchAll.groupBy(_._1)
-        .map { case (u, rs) => u -> rs.map(_._2.getTime).max }
-      val expected = batchAll.filter(r =>
-        r._2.getTime != lastStart(r._1) || r._3.getTime < wmMs).toSet
-      assert(expected.nonEmpty, "fixture must contain multi-session users")
-      assert(expected.size < batchAll.length,
-        "some final session must still be open (else the timeout is untested)")
-      assert(streamed === expected)
-    } finally q.stop()
-  }
-
-  test("stream-static enrichment join equals the batch twin") {
-    val q = Windows.streamEnrich(spark, sf, "stream_enrich")
-    try {
-      q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3))
-      val streamed = spark.table("stream_enrich").collect().map(key).toSet
-      val batch = Windows.enriched(
-        Tables.events(spark, sf),
-        spark.read.parquet(s"$sf/customer.parquet")
-          .select(col("c_custkey"), col("c_name"), col("c_nationkey")))
-        .collect().map(key).toSet
-      assert(batch.nonEmpty, "fixture users must hit the customer dim")
-      assert(streamed === batch)
-    } finally q.stop()
-  }
-
-  test("streaming drift monitor emits the batch PSI per finalized day") {
-    val ref = Windows.driftReference(Tables.events(spark, sf))
-    assert(ref.props.length === Windows.DriftBins && ref.props.forall(_ > 0))
-    assert(ref.width > 0)
-    val q = Windows.streamDriftPsi(spark, sf, "stream_drift", ref)
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("stream_drift")
-        .orderBy(col("win_start")).collect()
-        .map(r => (r.getAs[java.sql.Timestamp](0), r.getLong(1), r.getDouble(2)))
-      val wmMs = Tables.events(spark, sf)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      val all = Windows.driftPsi(Tables.events(spark, sf), ref)
-        .orderBy(col("win_start")).collect()
-        .map(r => (r.getAs[java.sql.Timestamp](0), r.getLong(1), r.getDouble(2)))
-      val finalized = all.filter(_._1.getTime + 24L * 3600 * 1000 <= wmMs)
-      assert(streamed.nonEmpty)
-      // the still-open last day is withheld by append mode
-      assert(finalized.length < all.length)
-      assert(streamed.toSeq === finalized.toSeq)
-      // self-consistency, sized to the sample: PSI of an n-row window drawn
-      // from the reference itself concentrates near χ²(bins−1)/n — at this
-      // fixture's ~33 events/day that's ≈0.2 mean with excursions, so the
-      // clean-data bound is statistical, not the big-sample 0.25 rule
-      val nMin = streamed.map(_._2).min
-      assert(nMin > 0)
-      val meanPsi = streamed.map(_._3).sum / streamed.length
-      assert(meanPsi < 3.0 * (Windows.DriftBins - 1).toDouble / nMin,
-        s"clean fixture scored drifted: mean=$meanPsi over n≥$nMin windows")
-    } finally q.stop()
-  }
-
-  test("streaming burst monitor emits exactly the batch bursts the " +
-      "watermark has proven closed") {
-    val thr = Windows.burstThresholds(Tables.events(spark, sf))
-    assert(thr.nonEmpty && thr.values.forall(_ > 0))
-    val q = Windows.streamBurst(spark, sf, "stream_burst", thr)
-    try {
-      q.processAllAvailable()
-      val key = (r: org.apache.spark.sql.Row) =>
-        (r.getString(0), r.getTimestamp(1).getTime, r.getTimestamp(2).getTime,
-          r.getLong(3), r.getLong(4))
-      val streamed = spark.table("stream_burst").collect().map(key).toSet
-      val wmMs = Tables.events(spark, sf)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      // batch truth: q178's islands (same corpus primes the thresholds, so
-      // the flag sets coincide by construction); a burst is CLOSED — and
-      // only then emitted — once the watermark proves hour m1+1 complete
-      // and unflagged: burst_end + 1h ≤ watermark
-      val batch = queries.Analytic.q178BurstWindows.fn(spark, sf).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime,
-          r.getTimestamp(2).getTime, r.getLong(4), r.getLong(5)))
-      val expected = batch
-        .filter(b => b._3 + 3600L * 1000 <= wmMs).toSet
-      assert(expected.nonEmpty, "fixture must contain closed bursts")
-      assert(streamed === expected)
-    } finally q.stop()
-  }
-
-  test("streaming Brown level tracker: bit-exact to a driver replay of " +
-      "the x0-seeded recurrence over watermark-finalized dense hours, and " +
-      "converged to batch q203 past the truncation lag") {
-    val q = Windows.streamBrownLevel(spark, sf, "stream_brown")
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("stream_brown").collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime / 3600000L) ->
-          (r.getLong(2), r.getDouble(3), r.getDouble(4))).toMap
-      assert(streamed.nonEmpty)
-      val wmMs = Tables.events(spark, sf)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      // driver replay: same definition, genuinely different execution —
-      // dense per-type hour grid from the batch table, finalized up to
-      // the watermark, x0-seeded coupled recurrence in plain doubles
-      val counts = Tables.events(spark, sf)
-        .filter(col("ts").isNotNull && col("event_type").isNotNull)
-        .select(col("event_type"), expr("unix_micros(ts) div 3600000000"))
-        .collect().map(r => (r.getString(0), r.getLong(1)))
-        .groupBy(identity).map { case (k, v) => k -> v.length.toLong }
-      val types = counts.keys.map(_._1).toSet
-      var replayed = Map.empty[(String, Long), (Long, Double, Double)]
-      for (t <- types) {
-        val hs = counts.collect { case ((`t`, h), c) => h -> c }
-        val m0 = hs.keys.min
-        val mLast = -1L + (wmMs / 3600000L) // last h with (h+1)h <= wm
-        var s1 = 0.0; var s2 = 0.0
-        for (h <- m0 to mLast) {
-          val x = hs.getOrElse(h, 0L)
-          if (h == m0) { s1 = x.toDouble; s2 = x.toDouble }
-          else { s1 = 0.2 * x + 0.8 * s1; s2 = 0.2 * s1 + 0.8 * s2 }
-          replayed += (t, h) -> ((x, s1, s2))
-        }
-      }
-      assert(streamed === replayed,
-        "streamed rows must equal the driver replay bit-for-bit")
-      // seed-convention convergence: past lag 130 the (1−α)^t seed
-      // residual is sub-quantum (the W-truncation geometry), so the
-      // streaming s1/s2 must sit on batch q203's μ-seeded values
-      val batch = queries.Analytic.q203BrownTrend.fn(spark, sf).collect()
-        .map(r => (r.getString(0), r.getTimestamp(1).getTime / 3600000L) ->
-          (r.getDouble(3), r.getDouble(4))).toMap
-      val m0ByType = replayed.keys.groupBy(_._1).map {
-        case (t, ks) => t -> ks.map(_._2).min
-      }
-      var checked = 0
-      for (((t, h), (_, s1, s2)) <- streamed
-           if h >= m0ByType(t) + 130 && batch.contains((t, h))) {
-        val (b1, b2) = batch((t, h))
-        assert(math.abs(s1 - b1) < 1e-4, s"($t,$h) s1 $s1 vs batch $b1")
-        assert(math.abs(s2 - b2) < 1e-4, s"($t,$h) s2 $s2 vs batch $b2")
-        checked += 1
-      }
-      assert(checked > 100, s"convergence window too small: $checked")
-    } finally q.stop()
-  }
-
-  test("streaming DP daily release equals the batch release per finalized day") {
-    val q = Windows.streamDpDaily(spark, sf, "stream_dp_daily")
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("stream_dp_daily").collect()
-        .map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2)))
-        .toSet
-      val wmMs = Tables.events(spark, sf)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      val all = Windows.dpDaily(Tables.events(spark, sf)).collect()
-        .map(r => (r.getDate(0).toString, r.getString(1), r.getLong(2)))
-      def dayEndMs(day: String): Long =
-        java.time.LocalDate.parse(day).plusDays(1)
-          .atStartOfDay(java.time.ZoneOffset.UTC).toInstant.toEpochMilli
-      val finalized = all.filter(t => dayEndMs(t._1) <= wmMs).toSet
-      assert(streamed.nonEmpty)
-      // append mode withholds the still-open last day...
-      assert(finalized.size < all.length)
-      // ...and every finalized day's PRIVATE count matches the batch
-      // release exactly: the noise seed is a pure function of the window
-      // key, so streaming replay and batch agree bit-for-bit
-      assert(streamed === finalized)
-    } finally q.stop()
-  }
-
-  test("drift bin edges derive from the reference corpus, not a fixed range") {
-    import spark.implicits._
-    // a corpus living in [10_000, 10_800] — under the old fixed /62.5
-    // binning every value would land in the clamp bin and the monitor
-    // would be blind; derived edges must spread it across all bins
-    def mk(shift: Double, scale: Double) = (1 to 800).map { i =>
-      (i.toLong,
-        new java.sql.Timestamp(1704067200000L + i * 60000L),
-        (i % 7).toLong, "t", shift + scale * (i % 100), "{}")
-    }.toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-    val refCorpus = mk(10000.0, 8.0)
-    val ref = Windows.driftReference(refCorpus)
-    assert(ref.lo === 10000.0 && ref.width > 0)
-    // a healthy same-distribution window scores near zero...
-    val clean = Windows.driftPsi(refCorpus, ref).collect()
-    assert(clean.nonEmpty && clean.forall(_.getDouble(2) < 0.05),
-      "same-distribution corpus must not flag drift")
-    // ...and a shifted live stream (below AND above the reference range)
-    // scores loudly, which the clamp-to-edge-bins binning guarantees
-    val drifted = Windows.driftPsi(mk(3000.0, 1.0), ref).collect()
-    assert(drifted.nonEmpty && drifted.forall(_.getDouble(2) > 0.5),
-      s"shifted corpus must flag drift: ${drifted.map(_.getDouble(2)).toSeq}")
-  }
-
-  test("dropDuplicatesWithinWatermark dedups to the exact distinct key count") {
-    val q = Windows.streamDedup(spark, sf, "stream_dedup")
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("stream_dedup").count()
-      val exact = Tables.events(spark, sf)
-        .select(col("user_id"), col("event_type")).distinct().count()
-      assert(streamed === exact)
-    } finally q.stop()
-  }
-
-  test("streaming double-fire detector emits exactly the batch sub-second " +
-      "dups the watermark has proven final, including the 1s-boundary and " +
-      "equal-us edges") {
-    // the driver fixtures contain ZERO sub-second (user, type) repeats
-    // (verified — q285's n_double_fires is 0 at every sf), so the net
-    // engineers its own: gaps of 0.4 s (dup), exactly 1.000000 s (dup —
-    // the ≤ boundary), 1.000001 s (NOT a dup), an equal-µs pair (gap 0),
-    // plus isolated (user, type) neighbors and a +2 h tail that pushes
-    // the watermark past everything else
-    val d = "/tmp/graft_stream_dfire"
-    import spark.implicits._
-    // base offset keeps the earliest event strictly above the epoch-0
-    // initial watermark (an event AT the watermark is boundary-dropped
-    // by the stateful operator's late filter)
-    def ns(ms: Long, us: Long = 0): Long =
-      (3600000L + ms) * 1000000L + us * 1000L
-    // the stream source's pathGlobFilter matches leaf FILES (testdata
-    // tables are single files), so promote the one part file to a real
-    // $d/events.parquet file rather than leaving Spark's directory
-    val tmp = s"$d/_build"
-    Seq(
-      (1L, ns(0), 7L, "t", 1.0, "{}"),
-      (2L, ns(400), 7L, "t", 1.0, "{}"),         // 0.4 s       → dup
-      (3L, ns(1400), 7L, "t", 1.0, "{}"),        // 1.000000 s  → dup
-      (4L, ns(2400, 1), 7L, "t", 1.0, "{}"),     // 1.000001 s  → not
-      (5L, ns(2400, 1), 7L, "t", 1.0, "{}"),     // equal µs    → dup
-      (6L, ns(300), 8L, "t", 1.0, "{}"),         // other user: isolated
-      (7L, ns(500), 7L, "u", 1.0, "{}"),         // other type: isolated
-      (8L, ns(7200000), 9L, "z", 1.0, "{}"))     // watermark pusher
-      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
-      .coalesce(1).write.mode("overwrite").parquet(tmp)
-    locally {
-      import java.nio.file.{Files, Paths, StandardCopyOption}
-      val tgt = Paths.get(s"$d/events.parquet")
-      if (Files.isDirectory(tgt)) {
-        Files.walk(tgt).sorted(java.util.Comparator.reverseOrder())
-          .forEach(p => Files.delete(p))
-      }
-      val part = new java.io.File(tmp).listFiles()
-        .find(f => f.getName.endsWith(".parquet")).get
-      Files.move(part.toPath, tgt, StandardCopyOption.REPLACE_EXISTING)
-    }
-    val q = Windows.streamDoubleFire(spark, d, "stream_dfire")
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("stream_dfire").collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(4))).toSet
-      // batch truth: q285's g-frame gap rule, restricted to events the
-      // watermark (max ts − delay) has proven final
-      val wmMs = Tables.events(spark, d)
-        .agg(max(col("ts"))).head.getAs[java.sql.Timestamp](0).getTime -
-        Windows.WatermarkDelayMs
-      val batch = Tables.events(spark, d)
-        .filter(col("ts").isNotNull && col("user_id").isNotNull
-          && col("event_type").isNotNull)
-        .select(col("user_id"), col("event_type"), col("event_id"),
-          expr("unix_micros(ts)").as("us"))
-        .withColumn("gap", col("us") - lag(col("us"), 1).over(
-          org.apache.spark.sql.expressions.Window
-            .partitionBy(col("user_id"), col("event_type"))
-            .orderBy(col("us"), col("event_id"))))
-        .filter(col("gap") <= 1000000L
-          && expr("us div 1000") < wmMs)
-        .collect()
-        .map(r => (r.getLong(0), r.getString(1), r.getLong(2),
-          r.getLong(4))).toSet
-      assert(batch.size === 3, s"engineered fixture must close 3 dups: $batch")
-      assert(streamed === batch,
-        s"streamed $streamed != batch-closed $batch")
-      // the registry operator on the same corpus agrees per type: every
-      // "t" event is closed by the tail, so totals match end to end
-      val reg = queries.Analytic.q285DoubleFire.fn(spark, d).collect()
-        .map(r => r.getString(0) -> r.getLong(2)).toMap
-      assert(reg("t") === 3L && reg("u") === 0L && reg("z") === 0L)
-    } finally q.stop()
-  }
-
-  test("streaming chunk-novelty credits: streamed first-occurrence set " +
-      "equals the batch min(doc_id) frame under in-order intake at ANY " +
-      "batch split, and replays q329's per-decile new_chunks exactly") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-      .select(col("source"), col("doc_id"), col("text")).collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-      .sortBy(_._2) // intake order = doc_id order, q329's stated proxy
-    // the batch truth: min(doc_id) per (source, chunk-md5)
-    def md5hex(s: String): String = {
-      val md = java.security.MessageDigest.getInstance("MD5")
-      md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    }
-    val batchFo = docs.filter(t => t._1 != null && t._3.nonEmpty)
-      .flatMap { case (src, id, t) =>
-        (0 until t.length by 150).map(cs =>
-          (src, md5hex(t.slice(cs, cs + 200))) -> id)
-      }
-      .groupBy(_._1).map { case (k, g) => k -> g.map(_._2).min }
-    for ((splits, name) <- Seq(Seq(docs) -> "one batch",
-        docs.grouped(math.max(1, docs.length / 3 + 1)).toSeq
-          -> "three batches")) {
-      val src = MemoryStream[(String, Long, String)]
-      val q = Windows.streamChunkNovelty(
-        src.toDF.toDF("source", "doc_id", "text"), s"chunk_novelty_mem")
-      try {
-        for (b <- splits) { src.addData(b.toSeq); q.processAllAvailable() }
-        val streamed = spark.table("chunk_novelty_mem").collect()
-          .map(r => (r.getString(0), r.getString(2)) -> r.getLong(1))
-          .toMap
-        assert(streamed === batchFo, s"$name: streamed credits diverge")
-      } finally q.stop()
-    }
-    // the streamed credits REPLAY q329's per-decile novelty: assign each
-    // credited doc its q329 decile (explicit ntile arithmetic over the
-    // closed doc universe) and compare new_chunks per (source, decile)
-    val got329 = SparkEntry.queries("q329_chunk_novelty")(spark, sf)
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(3))
-      .toMap
-    val byDoc = docs.filter(t => t._1 != null && t._3.nonEmpty)
-    for ((srcName, g) <- byDoc.groupBy(_._1)) {
-      val ids = g.map(_._2).distinct.sorted
-      val n = ids.length; val base = n / 10; val extra = n % 10
-      val decOf = ids.zipWithIndex.map { case (id, i) =>
-        id -> (if (i < extra * (base + 1)) i / (base + 1) + 1
-               else (i - extra * (base + 1)) / math.max(base, 1) + extra + 1)
-      }.toMap
-      val credits = batchFo.collect {
-        case ((s0, _), id) if s0 == srcName => decOf(id).toLong
-      }.groupBy(identity).map { case (dc, xs) => dc -> xs.size.toLong }
-      for (dc <- 1L to math.min(10, n).toLong)
-        assert(got329((srcName, dc)) === credits.getOrElse(dc, 0L),
-          s"$srcName decile $dc")
-    }
-  }
-
-  test("horizon-bounded chunk novelty (r19, the r18 verdict's Next #5): " +
-      "streamed credits equal the batch lag-window oracle (credit iff " +
-      "gap > horizon) at ANY batch split, and event-time timeouts EVICT " +
-      "state older than the horizon — a plateau, not a line") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val horizonMs = 5000L
-    // offset off epoch 0: the initial watermark is 0 and the stateful
-    // operator's late-row predicate is inclusive, so a ts=0 row would be
-    // dropped as late before the handler ever saw it
-    def ts(sec: Long) = new java.sql.Timestamp((1000 + sec) * 1000L)
-    // sub-200-char texts → exactly one chunk per doc; gaps engineered
-    // around the 5 s horizon (credits hand-pinned, then oracle-checked)
-    val docs: Seq[(String, Long, String, java.sql.Timestamp)] = Seq(
-      ("web", 1L, "alpha chunk", ts(0)),   // first → credit
-      ("web", 2L, "alpha chunk", ts(2)),   // gap 2 ≤ 5 → no
-      ("web", 10L, "beta chunk", ts(1)),   // first → credit
-      ("web", 11L, "beta chunk", ts(3)),   // gap 2 → no
-      ("web", 20L, "gamma chunk", ts(4)),  // first → credit (tie winner)
-      ("web", 21L, "gamma chunk", ts(4)),  // tie, gap 0 → no
-      ("web", 3L, "alpha chunk", ts(10)),  // gap 8 > 5 → RE-credit
-      ("web", 4L, "alpha chunk", ts(11)),  // gap 1 → no
-      ("web", 5L, "alpha chunk", ts(20)),  // gap 9 → RE-credit
-      ("web", 30L, "zeta chunk", ts(100)), // first → credit; watermark jump
-      ("web", 31L, "eta chunk", ts(101)),  // first → credit
-    ).sortBy(t => (t._4.getTime, t._2)) // in-order intake
-    val expected = Set(1L, 10L, 20L, 3L, 5L, 30L, 31L)
-    // the generic batch oracle: lag window under (ts, doc_id)
-    val oracle = docs.toDF("source", "doc_id", "text", "ts")
-      .select(col("source"), col("doc_id"),
-        md5(col("text")).as("h"), expr("unix_millis(ts)").as("tms"))
-      .withColumn("gap", col("tms") - lag(col("tms"), 1).over(
-        org.apache.spark.sql.expressions.Window
-          .partitionBy(col("source"), col("h"))
-          .orderBy(col("tms"), col("doc_id"))))
-      .filter(col("gap").isNull || col("gap") > horizonMs)
-      .collect().map(_.getLong(1)).toSet
-    assert(oracle === expected, "oracle must match the hand-pinned set")
-    for ((splits, name) <- Seq(
-        Seq(docs) -> "one batch",
-        docs.grouped(2).toSeq -> "two-doc batches")) {
-      val src = MemoryStream[(String, Long, String, java.sql.Timestamp)]
-      val q = Windows.streamChunkNoveltyTtl(
-        src.toDF.toDF("source", "doc_id", "text", "ts"),
-        "chunk_novelty_ttl", horizonMs)
-      try {
-        for (b <- splits) { src.addData(b); q.processAllAvailable() }
-        val streamed = spark.table("chunk_novelty_ttl").collect()
-          .map(_.getLong(1)).toSet
-        assert(streamed === expected, s"$name: streamed credits diverge")
-        // eviction proof (multi-batch only — timeouts fire on the batch
-        // AFTER the watermark advances, so a single batch never sweeps):
-        // by the final batch the watermark (≥ 100 s) has passed every
-        // early chunk's lastSeen + 5 s — only the tail chunks remain
-        if (splits.size > 1) {
-          val stateRows = q.lastProgress.stateOperators.head.numRowsTotal
-          assert(stateRows <= 3,
-            s"$name: $stateRows state rows resident — eviction not " +
-              "engaged (3 distinct chunks went silent before the watermark)")
-        }
-      } finally q.stop()
-    }
-  }
-
-  test("RocksDB state store (r18, the r17 verdict's Next #5): the " +
-      "unbounded-state operators — chunk novelty's one-boolean-per-" +
-      "distinct-chunk and the sessionizer — run bit-identically on the " +
-      "DISK-backed RocksDB provider, the 100 TB answer to state that " +
-      "cannot fit an in-memory HashMap; the provider engagement is " +
-      "asserted off the query's own state-operator metrics, not assumed") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import spark.implicits._
-    import scala.jdk.CollectionConverters._
-    implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-      val docs = spark.read.parquet(s"$sf/documents.parquet")
-        .select(col("source"), col("doc_id"), col("text")).collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getString(2)))
-        .sortBy(_._2)
-      def md5hex(s: String): String = {
-        val md = java.security.MessageDigest.getInstance("MD5")
-        md.digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-      }
-      val batchFo = docs.filter(t => t._1 != null && t._3.nonEmpty)
-        .flatMap { case (src, id, t) =>
-          (0 until t.length by 150).map(cs =>
-            (src, md5hex(t.slice(cs, cs + 200))) -> id)
-        }
-        .groupBy(_._1).map { case (k, g) => k -> g.map(_._2).min }
-      val src = MemoryStream[(String, Long, String)]
-      val q = Windows.streamChunkNovelty(
-        src.toDF.toDF("source", "doc_id", "text"), "chunk_novelty_rocks")
-      try {
-        for (b <- docs.grouped(math.max(1, docs.length / 3 + 1)))
-          { src.addData(b.toSeq); q.processAllAvailable() }
-        val streamed = spark.table("chunk_novelty_rocks").collect()
-          .map(r => (r.getString(0), r.getString(2)) -> r.getLong(1))
-          .toMap
-        assert(streamed === batchFo,
-          "RocksDB-backed credits diverge from the batch truth")
-        // engagement proof: RocksDB's own custom metrics appear on the
-        // state operator (the HDFS/in-memory provider publishes none of
-        // these), and the state row count is the distinct chunk count
-        val so = q.lastProgress.stateOperators
-        assert(so.nonEmpty)
-        val metrics = so.head.customMetrics
-        assert(metrics.keySet.asScala.exists(_.startsWith("rocksdb")),
-          s"no rocksdb* custom metrics — provider did not engage: " +
-            s"${metrics.keySet.asScala.mkString(",")}")
-        assert(so.head.numRowsTotal === batchFo.size.toLong)
-      } finally q.stop()
-      // the sessionizer (flatMapGroupsWithState, event-time timeout) on
-      // RocksDB: emitted sessions must equal the default provider's run
-      // over the same corpus, row for row
-      def sessionsWith(table: String): Set[String] = {
-        val sq = Windows.streamSessionize(spark, sf, table)
-        try {
-          sq.processAllAvailable()
-          spark.table(table).collect().map(_.toString).toSet
-        } finally sq.stop()
-      }
-      val rocks = sessionsWith("sessions_rocks")
-      spark.conf.unset(key) // default (HDFS-backed in-memory) provider
-      val mem = sessionsWith("sessions_mem_ctl")
-      assert(rocks.nonEmpty && rocks === mem,
-        s"RocksDB sessions diverge: ${rocks.size} vs ${mem.size}")
-    } finally {
-      prev match {
-        case Some(v) => spark.conf.set(key, v)
-        case None => spark.conf.unset(key)
-      }
-    }
   }
 }
