@@ -25,6 +25,18 @@ object Bench {
     // optional comma-separated name filter for isolating hotspots
     val queries = SparkEntry.selected(sys.env.get("SPARK_GRAFT_QUERIES"))
       .toSeq.sortBy(_._1)
+    // When a run must fit a short time budget, these knobs cut the sweep
+    // count WITHOUT changing the default methodology (warmup + 2 timed
+    // passes, min per query — unchanged since r17, so numbers stay
+    // comparable when the knobs are not set). Both are read before the
+    // session starts, so a bad value fails at once, naming the variable.
+    val passes = Engine.positiveEnvInt("SPARK_GRAFT_BENCH_PASSES", 2)
+    val doWarmup = sys.env.get("SPARK_GRAFT_BENCH_WARMUP") match {
+      case None | Some("1") => true
+      case Some("0") => false
+      case Some(v) => throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_WARMUP must be 1 or 0, got '$v'")
+    }
     val spark = Engine.session(cpus, "graft-bench")
     spark.sparkContext.setLogLevel("ERROR")
 
@@ -35,14 +47,6 @@ object Bench {
           System.err.println(s"[bench] $name failed: ${e.getMessage}")
           false
       }
-
-    // r21 (VERDICT_r20 Next #2): the driver's window must fit warmup +
-    // timed passes ≈ 3 full sweeps; when it cannot, these knobs cut the
-    // sweep count WITHOUT changing the default methodology (warmup + 2
-    // timed passes, min per query — unchanged since r17, so numbers stay
-    // comparable when the knobs are not set).
-    val passes = Engine.positiveEnvInt("SPARK_GRAFT_BENCH_PASSES", 2)
-    val doWarmup = !sys.env.get("SPARK_GRAFT_BENCH_WARMUP").contains("0")
 
     // warmup (untimed): JIT, codegen caches, parquet footer caches
     if (doWarmup) queries.foreach { case (name, fn) => runOne(name, fn) }

@@ -304,7 +304,8 @@ object Tool {
           else 6
         require(factorS >= 1, s"genspan: factor must be >= 1, got $factorS")
         // route through Tables.events: normalizes the generation-specific
-        // raw ts layout (ns-long / NTZ / zoned) to TimestampType first
+        // raw ts layout (ns-long / NTZ / zoned) to TimestampType first;
+        // written back as NTZ µs like genscale, not Spark's default INT96
         val evS = Tables.events(spark, srcS)
           .filter(col("ts").isNotNull)
         val bounds = evS.agg(
@@ -318,8 +319,8 @@ object Tool {
           .select(
             (col("event_id") + col("g") * (bounds.getLong(2) + 1))
               .as("event_id"),
-            expr(s"timestamp_micros(unix_micros(ts) + g * ${spanUs}L)")
-              .as("ts"),
+            expr("CAST(timestamp_micros(unix_micros(ts) + g * " +
+              s"${spanUs}L) AS TIMESTAMP_NTZ)").as("ts"),
             col("user_id"), col("event_type"), col("value"), col("props"))
           .write.mode("overwrite").parquet(s"$outS/events.parquet")
         println(s"GENSPAN out=$outS factor=$factorS spanHours=" +

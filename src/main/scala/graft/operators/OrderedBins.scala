@@ -56,7 +56,7 @@ object OrderedBins {
     * — 3–4× for the parallel path). Both paths produce BIT-IDENTICAL
     * rows, so the dispatch is a pure physical-plan choice,
     * oracle-invisible. */
-  private val WindowMaxRows = 2000000L
+  private[graft] val WindowMaxRows = 2000000L
 
   /** What [[route]] chose for a frame. */
   private sealed trait Route

@@ -1016,8 +1016,9 @@ object Analytic {
     * arithmetic is integer µs end to end.
     *
     * Plan: ONE scan, a 2× endpoint explode (no UNION re-scan), then a
-    * 3-scalar probe of the deltas picks the running sum's path at 2M
-    * rows: below it one event_type-keyed RANGE window (no fixed costs);
+    * count probe of the deltas picks the running sum's path at
+    * [[OrderedBins.WindowMaxRows]] (the devices' own crossover): below it
+    * one event_type-keyed RANGE window (no fixed costs);
     * above it the endpoint deltas collapse to distinct (type, t, ±1) runs
     * (the RANGE-frame peer semantics made exact: peers share one
     * collapsed row, so the rows-frame running sum over runs IS the
@@ -1079,7 +1080,7 @@ object Analytic {
       .select(col("event_type"), col("x.t").as("t"), col("x.delta").as("delta"))
     val n = deltas.count() // the dispatch row count; an empty frame counts 0
     val c =
-      if (n < 2000000L) {
+      if (n < OrderedBins.WindowMaxRows) {
         // small-corpus path: the plain sweep window (RANGE frame — peers
         // aggregate together) + per-type max window; fixed costs beat the
         // parallel path's until the serial span dominates (the

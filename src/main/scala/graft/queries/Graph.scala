@@ -6,10 +6,10 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Iterative link analysis — the third member of the engine's iterative
-  * family (q74's connected components, KmeansSpec's Lloyd's): PageRank over
-  * a behavior graph, the canonical "importance from structure" signal a
-  * web-scale curation pipeline uses to weight crawl sources.
+/** Iterative link analysis — an iterative operator beside q74's
+  * connected components: PageRank over a behavior graph, the canonical
+  * "importance from structure" signal a web-scale curation pipeline uses
+  * to weight crawl sources.
   *
   * The reference (a single-pass exporter) has no iterative operator at all;
   * this is [EXT] per SURVEY §2. Design follows the house iterative idiom:

@@ -41,312 +41,6 @@ object Similarity {
     q272ClassBalanced, q300ParticipationRatio, q308NormDrift,
     q311CentroidDistances, q328LabelSeparation)
 
-  /** Iteration log of one [[kmeans]] run. `assignments` is (vec_id,
-    * cluster, dist2); `wss` is the within-cluster sum of squares after each
-    * iteration (Lloyd's is monotonically non-increasing on it — asserted
-    * in KmeansSpec).
-    */
-  final case class KmeansResult(
-      assignments: org.apache.spark.sql.DataFrame,
-      wss: Seq[Double],
-      iters: Int,
-      centroids: org.apache.spark.sql.DataFrame, // (cluster, cv, cn2) — K rows
-  )
-
-  /** Full iterative Lloyd's k-means over an embedding column — the loop
-    * q93's M-step accounting belongs to, as an engine operator (iterative
-    * SQL can't express it; KmeansSpec proves convergence, monotone WSS
-    * descent, nearest-centroid consistency, and determinism instead of a
-    * DuckDB twin). Distributed shape per round, the canonical one:
-    *  - centroids are a K-row DataFrame BROADCAST to the assignment
-    *    crossJoin (bounded side, the q36 pattern) — dist² = |x|² − 2x·c +
-    *    |c|² rides the codegen'd `graft_dot`, norms precomputed once;
-    *  - argmin per vector is min(struct(dist2, cluster)) — one map-side-
-    *    combined aggregate, ties broken by cluster id (deterministic);
-    *  - the M-step is one (cluster, dim) shuffle, then arrays rebuilt
-    *    relationally (sorted collect_list of K×D rows, never corpus data);
-    *  - empty clusters keep their previous centroid (no respawn jitter —
-    *    determinism over clustering quality);
-    *  - per-round driver state: a K×D centroid frame localCheckpoint and
-    *    one scalar WSS — never corpus rows; convergence = assignment
-    *    fixpoint via an isEmpty probe, non-convergence within `maxIter`
-    *    fails loudly (the q74 discipline).
-    * Default init is the K smallest vec_ids; `init = "maxmin"` swaps in
-    * deterministic farthest-point (Gonzalez) seeding — anchor at the
-    * smallest vec_id, then K−1 rounds each adding the vector FARTHEST
-    * from its nearest chosen seed (argmax via max(struct), ties by
-    * smaller vec_id via negated id). Same loop after seeding; K−1 extra
-    * narrow passes (running min-distance column + 1-row broadcast seed),
-    * no RNG, no shipped state. Spread seeds guard the converged QUALITY
-    * (WSS ≤ first-k, asserted in KmeansSpec; fixture: 473.2 vs 473.6 —
-    * near-parity because the fixture's labels are well separated, the gap
-    * widens when first-K ids happen to share a cluster) at the cost of
-    * MORE Lloyd's rounds here (15 vs 11: outlier seeds start far from
-    * the final means).
-    */
-  private[graft] def kmeans(
-      emb: org.apache.spark.sql.DataFrame, k: Int, maxIter: Int = 20,
-      init: String = "first",
-      // an ANN coarse quantizer does not need the fixpoint — any
-      // partition works as an inverted file as long as home and probe
-      // scoring use the SAME centroids (labelNoiseAnn re-derives homes
-      // from the final centroid frame for exactly that reason); the
-      // clustering-quality consumers keep the loud default
-      requireConverged: Boolean = true)
-    : KmeansResult = {
-    import org.apache.spark.sql.DataFrame
-    // r21: fan BEFORE the pin — the pinned corpus frame otherwise keeps
-    // the single-split scan layout and every round's assignment crossJoin
-    // + argmin aggregate runs on one core (Fan.scala)
-    val vecs = Fan.fan(emb)
-      .select(col("vec_id"), vec(col("embedding")).as("v"))
-      .withColumn("n2", dot(col("v"), col("v")))
-      .transform(graft.operators.Iter.pin) // scanned every round: pin it once
-    val seeds: DataFrame = init match {
-      case "first" => vecs.orderBy(col("vec_id")).limit(k)
-      case "maxmin" =>
-        // incremental farthest-point: each vector keeps its distance to
-        // its NEAREST chosen seed as a running column, so adding a seed is
-        // one narrow least() update against the 1-row broadcast newest
-        // seed plus one narrow max-struct aggregate (ties prefer the
-        // smaller vec_id via the negated id) — NO corpus shuffle in any
-        // seeding round
-        var newest = vecs.orderBy(col("vec_id")).limit(1)
-          .select(col("vec_id"), col("v"), col("n2"))
-          .transform(graft.operators.Iter.pin)
-        var chosen = newest
-        var pool = vecs.select(col("vec_id"), col("v"), col("n2"),
-          lit(Double.PositiveInfinity).as("mind2"))
-        for (_ <- 1 until k) {
-          pool = pool
-            .crossJoin(broadcast(newest
-              .select(col("v").as("sv"), col("n2").as("sn2"))))
-            .select(col("vec_id"), col("v"), col("n2"),
-              least(col("mind2"),
-                col("n2") - lit(2.0) * dot(col("v"), col("sv")) + col("sn2"))
-                .as("mind2"))
-            .transform(graft.operators.Iter.pin)
-          newest = pool
-            .agg(max(struct(col("mind2"), (-col("vec_id")).as("nid"),
-              col("v"), col("n2"))).as("m"))
-            .select((-col("m.nid")).as("vec_id"), col("m.v").as("v"),
-              col("m.n2").as("n2"))
-            .transform(graft.operators.Iter.pin)
-          chosen = chosen.unionByName(newest)
-        }
-        chosen
-      case other => throw new IllegalArgumentException(
-        s"unknown kmeans init '$other' (first | maxmin)")
-    }
-    var cent: DataFrame = seeds
-      .select(col("vec_id").cast("int").as("cluster0"), col("v").as("cv"))
-      .withColumn("cluster",
-        row_number().over(Window.orderBy(col("cluster0"))) - 1)
-      .select(col("cluster"), col("cv"), dot(col("cv"), col("cv")).as("cn2"))
-      .transform(graft.operators.Iter.pin)
-    var assigned: DataFrame = null
-    var wss = List.empty[Double]
-    var converged = false
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      val scored = vecs.crossJoin(broadcast(cent))
-        .select(col("vec_id"),
-          (col("n2") - lit(2.0) * dot(col("v"), col("cv")) + col("cn2"))
-            .as("dist2"), col("cluster"))
-      val newAssigned = scored.groupBy(col("vec_id"))
-        .agg(min(struct(col("dist2"), col("cluster"))).as("m"))
-        .select(col("vec_id"), col("m.cluster").as("cluster"),
-          col("m.dist2").as("dist2"))
-        .transform(graft.operators.Iter.pin)
-      wss ::= newAssigned.agg(sum(col("dist2"))).head.getDouble(0)
-      val recomputed = newAssigned
-        .join(vecs, "vec_id")
-        .select(col("cluster"), posexplode(col("v")).as(Seq("pos", "x")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(avg(col("x")).as("m"))
-        .groupBy(col("cluster"))
-        .agg(array_sort(collect_list(struct(col("pos"), col("m"))))
-          .as("sorted"))
-        .select(col("cluster"),
-          transform(col("sorted"), s => s.getField("m")).as("ncv"))
-      cent = cent.join(recomputed, Seq("cluster"), "left")
-        .select(col("cluster"), coalesce(col("ncv"), col("cv")).as("cv"))
-        .withColumn("cn2", dot(col("cv"), col("cv")))
-        .transform(graft.operators.Iter.pin)
-      converged = assigned != null && newAssigned.as("n")
-        .join(assigned.as("p"), "vec_id")
-        .filter(col("n.cluster") =!= col("p.cluster"))
-        .isEmpty
-      assigned = newAssigned
-      iter += 1
-    }
-    if (requireConverged) require(converged,
-      s"k-means did not converge within $maxIter rounds — raise maxIter " +
-        "rather than consuming a mid-descent assignment")
-    KmeansResult(assigned, wss.reverse, iter, cent)
-  }
-
-  /** IVF ANN on LEARNED centroids — [[kmeans]] wired into q36's
-    * inverted-file search, the real ANN build path (q36 keeps fixed
-    * first-N "centroids" only because its DuckDB twin must replay the
-    * assignment bit-for-bit; recall quality at scale needs trained ones).
-    * Build = one kmeans run (assignments are the inverted file); search =
-    * q36's plan unchanged: queries BROADCAST, candidates from an equi-join
-    * on the cluster id (per-query cost N → N/K, no cartesian — the
-    * kmeans loop itself is checkpoint-severed, so the search plan is just
-    * two broadcast hash joins and the per-query top-k window). Recall vs
-    * the brute-force q35 baseline is asserted in KmeansSpec.
-    */
-  private[graft] def annIvfKmeans(
-      emb: org.apache.spark.sql.DataFrame,
-      k: Int,
-      numQueries: Int,
-      topK: Int,
-      maxIter: Int = 20,
-      nprobe: Int = 1): org.apache.spark.sql.DataFrame = {
-    val km = kmeans(emb, k, maxIter)
-    searchIvf(km.centroids, km.assignments, emb, numQueries, topK, nprobe)
-  }
-
-  /** IVF SERVE path, decoupled from the build: `centroids` (cluster, cv,
-    * cn2) and `assignments` (vec_id, cluster) are exactly what
-    * [[kmeans]] emits — and both are PLAIN TABLES, so an index built once
-    * can be persisted as parquet (or shipped through the export chain)
-    * and served by a different session without retraining: the
-    * build-offline / search-online separation every production ANN system
-    * runs on. KmeansSpec proves a parquet round-trip of the index serves
-    * bit-identical results to the in-memory build.
-    */
-  private[graft] def searchIvf(
-      centroids: org.apache.spark.sql.DataFrame,
-      assignments: org.apache.spark.sql.DataFrame,
-      emb: org.apache.spark.sql.DataFrame,
-      numQueries: Int,
-      topK: Int,
-      nprobe: Int = 1): org.apache.spark.sql.DataFrame = {
-    val assigned = assignments.select(col("vec_id"), col("cluster"))
-    val e = emb.select(col("vec_id"), vec(col("embedding")).as("v"))
-      .withColumn("nrm", norm(col("v")))
-    val qvec = e.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qnrm"))
-    // the nprobe recall knob: each query searches its `nprobe` NEAREST
-    // clusters (same dist² metric as assignment; |q|² dropped — constant
-    // per query). nprobe=1 is the classic inverted-file prune, and its
-    // probe set IS the kmeans assignment — no centroid re-scoring, the
-    // search plan stays pure broadcast hash joins (KmeansSpec-asserted).
-    // nprobe>1 re-scores queries against the K-row broadcast centroids to
-    // rank clusters — the one bounded nested-loop this path adds.
-    val probes =
-      if (nprobe == 1)
-        assigned.filter(col("vec_id") < numQueries)
-          .select(col("vec_id").as("qid"), col("cluster"))
-      else {
-        val probeW = Window.partitionBy(col("qid"))
-          .orderBy(col("score").asc, col("cluster"))
-        qvec.crossJoin(broadcast(centroids))
-          .select(col("qid"), col("cluster"),
-            (col("cn2") - lit(2.0) * dot(col("qv"), col("cv"))).as("score"))
-          .withColumn("rn", row_number().over(probeW))
-          .filter(col("rn") <= nprobe)
-          .select(col("qid"), col("cluster"))
-      }
-    val rankW = Window.partitionBy(col("qid")).orderBy(col("cos").desc, col("vec_id"))
-    broadcast(probes.join(qvec, "qid").as("qq"))
-      .join(assigned.as("a"),
-        col("qq.cluster") === col("a.cluster") && col("a.vec_id") =!= col("qq.qid"))
-      .select(col("qq.qid").as("qid"), col("a.vec_id").as("vec_id"),
-        col("qq.qv").as("qv"), col("qq.qnrm").as("qnrm"))
-      .as("cd")
-      .join(e.as("e2"), col("cd.vec_id") === col("e2.vec_id"))
-      .select(col("cd.qid").as("qid"), col("cd.vec_id").as("vec_id"),
-        cosine(col("cd.qv"), col("e2.v"), col("cd.qnrm"), col("e2.nrm")).as("cos"))
-      .filter(col("cos").isNotNull) // zero-norm members are not neighbors (q35)
-      .withColumn("rk", row_number().over(rankW))
-      .filter(col("rk") <= topK)
-  }
-
-  /** IVF-PQ composition — the production ANN serve shape, assembled from
-    * the three proven parts: [[kmeans]] as the coarse quantizer (inverted
-    * lists), product quantization of the RESIDUAL (vector − its centroid;
-    * residuals are smaller than raw vectors, which is the entire reason
-    * FAISS's IVFPQ encodes them) with the q103 fixed codebook discipline
-    * (first [[PqCodes]] residual slices; a trained build runs kmeans per
-    * subspace on the same plan), and q104's asymmetric-distance serve: a
-    * query precomputes one (cluster, sub, code) → exact-integer-d2 table
-    * for each of its `nprobe` probed clusters, then every candidate costs
-    * [[PqSubs]] broadcast-hash lookups + one sum — no per-candidate vector
-    * math. ||q−x||² = ||(q−c) − (x−c)||² inside a shared cluster, so ADC
-    * over residuals approximates the full L2 directly.
-    *
-    * Plan at scale: the corpus appears exactly TWICE (residual encode,
-    * candidate lookup), both times behind broadcast hash joins on bounded
-    * build artifacts (K×D centroids, 32×8 codebook, the
-    * queries×nprobe×8×32 distance table); the only non-hash join is the
-    * queries×K centroid scorer — a broadcast nested loop over provably
-    * bounded sides. KmeansSpec asserts recall ≥ floor and this posture.
-    */
-  private[graft] def annIvfPq(
-      emb: org.apache.spark.sql.DataFrame,
-      k: Int,
-      numQueries: Int,
-      topK: Int,
-      nprobe: Int = 2,
-      maxIter: Int = 20): org.apache.spark.sql.DataFrame = {
-    val km = kmeans(emb, k, maxIter)
-    val cent = km.centroids
-    val assigned = km.assignments.select(col("vec_id"), col("cluster"))
-    val e = emb.select(col("vec_id"), vec(col("embedding")).as("v"))
-    def toResidualSubs(df: org.apache.spark.sql.DataFrame, idCols: Seq[String]) =
-      df.select(idCols.map(col) :+
-          zip_with(col("v"), col("cv"),
-            (x, c) => round((x - c) * 1e6).cast("long")).as("rq"): _*)
-        .select(idCols.map(col) :+
-          explode(sequence(lit(0), lit(PqSubs - 1))).as("sub") :+ col("rq"): _*)
-        .select(idCols.map(col) :+ col("sub") :+
-          slice(col("rq"), col("sub") * PqDim + 1, lit(PqDim)).as("sv"): _*)
-    val rsv = toResidualSubs(
-      e.join(assigned, "vec_id")
-        .join(broadcast(cent.select(col("cluster"), col("cv"))), "cluster"),
-      Seq("vec_id", "cluster"))
-    val cb = rsv.filter(col("vec_id") < PqCodes)
-      .select(col("vec_id").as("code_id"), col("sub"), col("sv").as("cv"))
-      .transform(graft.operators.Iter.pin) // bounded build artifact, reused on both sides
-    val codes = rsv.join(broadcast(cb), Seq("sub"))
-      .select(col("vec_id"), col("cluster"), col("sub"), col("code_id"),
-        dist2(col("sv"), col("cv")).as("d2"))
-      .groupBy(col("vec_id"), col("cluster"), col("sub"))
-      .agg(min_by(col("code_id"), struct(col("d2"), col("code_id"))).as("code_id"))
-    val qvec = e.filter(col("vec_id") < numQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    val probeW = Window.partitionBy(col("qid"))
-      .orderBy(col("score"), col("cluster"))
-    val probes = qvec.crossJoin(broadcast(cent))
-      .select(col("qid"), col("cluster"), col("qv"), col("cv"),
-        (col("cn2") - lit(2.0) * dot(col("qv"), col("cv"))).as("score"))
-      .withColumn("rn", row_number().over(probeW))
-      .filter(col("rn") <= nprobe)
-    val qsv = toResidualSubs(
-      probes.select(col("qid"), col("cluster"),
-        col("qv").as("v"), col("cv")), Seq("qid", "cluster"))
-    val dt = qsv.join(broadcast(cb), Seq("sub"))
-      .select(col("qid"), col("cluster"), col("sub"), col("code_id"),
-        dist2(col("sv"), col("cv")).as("d2"))
-    val rankW = Window.partitionBy(col("qid"))
-      .orderBy(col("adc_d2"), col("vec_id"))
-    codes.as("c")
-      .join(broadcast(dt).as("t"),
-        col("c.cluster") === col("t.cluster") &&
-          col("c.sub") === col("t.sub") &&
-          col("c.code_id") === col("t.code_id"))
-      .filter(col("c.vec_id") =!= col("t.qid"))
-      .select(col("t.qid").as("qid"), col("c.vec_id").as("vec_id"),
-        col("t.d2").as("d2"))
-      .groupBy(col("qid"), col("vec_id"))
-      .agg(sum(col("d2")).as("adc_d2"))
-      .withColumn("rk", row_number().over(rankW))
-      .filter(col("rk") <= topK)
-  }
-
   /** Embedding covariance matrix [EXT] — the statistic whitening, PCA, and
     * embedding-drift monitoring all start from: for every dimension pair
     * i ≤ j, the exact integer covariance numerator
@@ -361,7 +55,6 @@ object Similarity {
     * then sequence i..D — no self-join, no shuffle before the aggregate)
     * into ONE map-side-combined hash aggregate over D(D+1)/2 groups —
     * provably bounded output (2,080 rows at D = 64) from a single scan.
-    * The same rows feed [[topPrincipalComponent]]'s bounded collect.
     * Twin replay bound (the q127 convention): the oracle unrolls
     * dimension indices from range(1, 256) — embeddings beyond 255 dims
     * would diverge (Spark emits their pairs, the twin cannot); fine for
@@ -388,17 +81,7 @@ object Similarity {
       |FROM p GROUP BY i, j
       |ORDER BY i NULLS FIRST, j NULLS FIRST""".stripMargin,
   ) { (s, d) =>
-    covarianceRows(Tables.embeddings(s, d)).orderBy(col("i"), col("j"))
-  }
-
-  /** The single covariance aggregation plan shared by
-    * [[q126EmbeddingCovariance]] (its oracle-checked surface) and
-    * [[topPrincipalComponent]] (its bounded collect) — one definition so
-    * a fix to either caller cannot silently diverge from the other:
-    * (i ≤ j, n, cov_num = n·Σxᵢxⱼ − Σxᵢ·Σxⱼ) in kilo-unit fixed point.
-    */
-  private def covarianceRows(emb: org.apache.spark.sql.DataFrame) = {
-    val e = emb.select(col("vec_id"),
+    val e = Tables.embeddings(s, d).select(
       transform(col("embedding"),
         v => round(v.cast("double") * 1000).cast("long")).as("xk"))
       // empty arrays must be dropped BEFORE sequence(): Spark's
@@ -416,49 +99,7 @@ object Similarity {
       .agg(count(lit(1)).as("n"),
         (count(lit(1)) * sum(col("xi") * col("xj")) -
           sum(col("xi")) * sum(col("xj"))).cast("long").as("cov_num"))
-  }
-
-  /** Top principal component via fixed-round power iteration over the
-    * [[q126EmbeddingCovariance]] matrix — the whitening/drift direction an
-    * embedding pipeline tracks. The covariance is computed DISTRIBUTED
-    * (one scan, bounded D(D+1)/2-row output); the iteration itself runs on
-    * the driver over that bounded collect (D×D doubles — the Profile.scala
-    * bounded-probe discipline; rank-1 iteration on a 64×64 matrix is not
-    * cluster work). Fixed `iters` rounds, deterministic start (uniform
-    * direction), no convergence branch — same determinism discipline as
-    * PageRank's fixed 8 rounds. Returns (unit eigenvector, Rayleigh
-    * quotient λ̂); PcaSpec pins the invariants and recovery of a planted
-    * dominant direction.
-    */
-  private[graft] def topPrincipalComponent(
-      emb: org.apache.spark.sql.DataFrame,
-      iters: Int = 24): (Array[Double], Double) = {
-    val rows = covarianceRows(emb)
-      .collect() // bounded: D(D+1)/2 rows (2,080 at D = 64), documented
-    require(rows.nonEmpty, "topPrincipalComponent: empty embeddings input")
-    val dim = rows.map(_.getInt(1)).max
-    val c = Array.ofDim[Double](dim, dim)
-    rows.foreach { r =>
-      val (i, j) = (r.getInt(0) - 1, r.getInt(1) - 1)
-      // de-scale with the PAIR'S OWN count (numerator = n_ij²·cov in
-      // kilo² units): on ragged embedding lengths — which the covariance
-      // query supports — per-pair counts differ, and one global n would
-      // mis-scale the matrix non-uniformly
-      val nij = r.getLong(2).toDouble
-      val v = r.getLong(3).toDouble / (nij * nij) / 1e6
-      c(i)(j) = v; c(j)(i) = v
-    }
-    var v = Array.fill(dim)(1.0 / math.sqrt(dim))
-    var lambda = 0.0
-    for (_ <- 1 to iters) {
-      val av = Array.tabulate(dim)(i =>
-        (0 until dim).map(j => c(i)(j) * v(j)).sum)
-      val nrm = math.sqrt(av.map(x => x * x).sum)
-      if (nrm > 0) v = av.map(_ / nrm)
-      lambda = (0 until dim).map(i =>
-        v(i) * (0 until dim).map(j => c(i)(j) * v(j)).sum).sum
-    }
-    (v, lambda)
+      .orderBy(col("i"), col("j"))
   }
 
   /** Per-label centroid + dispersion accounting — the k-means M-step (and
@@ -862,9 +503,7 @@ object Similarity {
     * vector is assigned to its nearest centroid (narrow map + per-vector
     * argmin window), and each query searches ONLY its own cluster — the
     * inverted-file prune that turns per-query cost from N into N/K.
-    * Fixed centroids keep the DuckDB twin bit-replayable; the production
-    * build path with TRAINED centroids is [[annIvfKmeans]] (same search
-    * plan, kmeans assignments, recall-floor-asserted in KmeansSpec).
+    * Fixed centroids keep the DuckDB twin bit-replayable.
     */
   val q36AnnIvf = Q(
     "q36_ann_ivf",
@@ -934,10 +573,8 @@ object Similarity {
     * neighbor that fell just across the Voronoi boundary (the dominant
     * IVF miss mode) is back in the candidate set at 2×N/K per-query cost.
     * Same fixed replayable centroids as q36 so the DuckDB twin verifies
-    * probe selection, candidate generation, and ranking bit-for-bit; the
-    * trained-centroid production path takes the same dial via
-    * [[annIvfKmeans]]'s `nprobe` (recall monotonicity asserted in
-    * KmeansSpec). Plan shape is unchanged — probes stay a broadcast-sized
+    * probe selection, candidate generation, and ranking bit-for-bit.
+    * Plan shape is unchanged — probes stay a broadcast-sized
     * (queries × nprobe) frame, candidates come only from the cluster
     * equi-join, never a corpus product.
     */
@@ -1203,8 +840,7 @@ object Similarity {
 
   /** PQ geometry: 64 dims → 8 subspaces × 8 dims, 32 codes per subspace
     * (codebook = the first 32 vectors' slices — fixed, like q36's
-    * centroids, so the oracle replays bit-for-bit; a trained build would
-    * run [[kmeans]] per subspace on the same plan). 8×log2(32) = 40 bits
+    * centroids, so the oracle replays bit-for-bit). 8×log2(32) = 40 bits
     * per vector — finer than the first-cut 4×16 geometry, whose ADC
     * recall@5 on the 500-vector fixture was 0.24; this one clears 0.5
     * (PqSpec) at a codebook of 32×8 = 256 rows, still broadcast-trivial.
@@ -1717,7 +1353,7 @@ object Similarity {
     * on purpose: the classic all-pairs silhouette is O(n²) in corpus
     * size, this is O(n·k) with a K×D broadcast — the only silhouette
     * that exists at 100 TB. Complements q93 (dispersion around own
-    * centroid — no cross-label information) and KmeansSpec's WSS.
+    * centroid — no cross-label information).
     *
     * Exactness: q93's fixed-point idiom extended to SQUARED distances:
     * coordinates micro-int xq, centroids the exact (Σxq, n) pair, and
@@ -2047,12 +1683,8 @@ object Similarity {
     * detection needs cross-label neighbors (the q183/q269 label
     * blocking would hide exactly the disagreements being measured), so
     * the plan is a nested-loop by design and sits in ScaleSpec's
-    * documented waiver group. At 10⁹ vectors [[labelNoiseAnn]] is the
-    * scale path — trained-IVF candidates into this exact scorer, with
-    * nprobe = K provably collapsing back to THIS operator (KmeansSpec)
-    * and the recall/exponent trade measured in SCALE_r15/r16;
-    * this operator is the exact audit-scale evaluator, the same stance
-    * q269 takes for blocked ID estimation.
+    * documented waiver group: this operator is the exact audit-scale
+    * evaluator, the same stance q269 takes for blocked ID estimation.
     */
   val q270LabelNoise = Q(
     "q270_label_noise",
@@ -2114,249 +1746,6 @@ object Similarity {
         graft.functions.Exact.ratio6("n_disagree", "n_vecs")
           .as("noise_rate"))
       .orderBy(col("label"))
-  }
-
-  /** 1-NN LABEL NOISE, ANN-CANDIDATE ROUTE — q270's documented 100 TB
-    * scale path as CODE (the r14 judge's top item): [[kmeans]] trains a
-    * K-cluster coarse quantizer, every vector probes its `nprobe`
-    * nearest clusters, and the EXACT codegen'd `graft_l2sq_i64` scorer
-    * runs only on the candidate pairs — Σ|cluster|²·nprobe/K pairs
-    * instead of q270's n². With K ~ √n the pair count is ~n^1.5·nprobe:
-    * the same answer family at a survivable plan (q270 stays the
-    * audit-scale exact truth, this is the serving form — the q32
-    * pre-collapse / q193 truncation stance: the dial is code, not
-    * prose).
-    *
-    * Candidate generation is deliberately NOT the q269/q183 label
-    * blocking — clusters are label-BLIND, so cross-label nearest
-    * neighbors (the measurement) stay reachable; the approximation only
-    * misses neighbors that fall outside the probed Voronoi cells.
-    *
-    * Two invariants make the approximation auditable (KmeansSpec):
-    *  - probe sets are NESTED in nprobe by construction (one ranking,
-    *    top-n prefix — home cluster is rank 1, re-derived from the
-    *    FINAL centroid frame rather than the kmeans assignment so rank
-    *    and home can never disagree on a mid-descent centroid state),
-    *    so exact-neighbor recall is monotone non-decreasing in nprobe;
-    *  - at nprobe = K every cluster is probed, the candidate set is the
-    *    whole corpus minus self, and the output is BIT-IDENTICAL to the
-    *    exact q270 (asserted) — the dial's two ends are "fast" and
-    *    "exact", with measured recall in between (SCALE_r15.md).
-    *
-    * The quantized int64 scorer space, the (d2, nbr) deterministic
-    * total order, and the ratio6 finish are q270's verbatim. A vector
-    * whose probed cells contain only itself has no candidate and drops
-    * from its label's denominator (the honest ANN artifact — stated;
-    * impossible at nprobe = K for any corpus with n ≥ 2).
-    *
-    * Plan: one bounded K-row broadcast nested loop for probe ranking
-    * (the q36/kmeans assignment shape), then strictly equi-keyed hash
-    * joins on cluster id; no CartesianProduct (ScaleSpec-asserted).
-    * The kmeans build is checkpoint-severed (trainIter rounds, no
-    * convergence requirement — an inverted file needs consistency, not
-    * a fixpoint).
-    */
-  private[graft] def labelNoiseAnnNn(
-      emb: org.apache.spark.sql.DataFrame,
-      k: Int,
-      nprobe: Int = 1,
-      trainIter: Int = 10): org.apache.spark.sql.DataFrame = {
-    require(nprobe >= 1 && nprobe <= k,
-      s"nprobe must be in [1, k]: got nprobe=$nprobe, k=$k")
-    val km = kmeans(emb, k, trainIter, requireConverged = false)
-    val x = emb.select(col("label"), col("vec_id"),
-      expr("""transform(embedding,
-        |  v -> CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"""
-        .stripMargin).as("xk"))
-    // probe ranking vs the FINAL centroids: rank 1 is the home cluster,
-    // ranks 1..nprobe the probe set — one ranking, nested prefixes
-    val e = emb.select(col("vec_id").as("p_id"),
-      vec(col("embedding")).as("v"))
-    val probeW = Window.partitionBy(col("p_id"))
-      .orderBy(col("score").asc, col("cluster"))
-    val ranked = e.crossJoin(broadcast(km.centroids))
-      .select(col("p_id"), col("cluster"),
-        (col("cn2") - lit(2.0) * dot(col("v"), col("cv"))).as("score"))
-      .withColumn("rn", row_number().over(probeW))
-      .transform(graft.operators.Iter.pin) // 2 consumers: probe sets and home clusters
-    val probes = ranked.filter(col("rn") <= nprobe)
-      .select(col("p_id"), col("cluster"))
-    val homes = ranked.filter(col("rn") === 1)
-      .select(col("p_id").as("h_id"), col("cluster").as("h_cluster"))
-    val a = x.select(col("label").as("la"), col("vec_id").as("src"),
-        col("xk").as("xa"))
-      .join(probes, col("src") === col("p_id"))
-      .select(col("la"), col("src"), col("xa"), col("cluster"))
-    val bdf = x.select(col("label").as("lb"), col("vec_id").as("nbr"),
-        col("xk").as("xb"))
-      .join(homes, col("nbr") === col("h_id"))
-      .select(col("lb"), col("nbr"), col("xb"), col("h_cluster"))
-    // (src, nbr) appears at most once: a neighbor has ONE home cluster
-    val pr = a.join(bdf,
-        col("cluster") === col("h_cluster") && col("nbr") =!= col("src"))
-      .select(col("la"), col("src"), col("lb"), col("nbr"),
-        dist2(col("xa"), col("xb")).as("d2"))
-    pr.select(col("la"), col("src"), col("lb"), col("nbr"), col("d2"),
-        row_number().over(Window.partitionBy(col("src"))
-          .orderBy(col("d2"), col("nbr"))).as("rnk"))
-      .filter(col("rnk") === 1)
-      .select(col("la"), col("src"), col("lb"), col("nbr"), col("d2"))
-  }
-
-  /** The per-label finish of [[labelNoiseAnnNn]] — q270's exact
-    * aggregation over the ANN-candidate 1-NN table. */
-  private[graft] def labelNoiseAnn(
-      emb: org.apache.spark.sql.DataFrame,
-      k: Int,
-      nprobe: Int = 1,
-      trainIter: Int = 10): org.apache.spark.sql.DataFrame =
-    labelNoiseAnnNn(emb, k, nprobe, trainIter)
-      .groupBy(col("la"))
-      .agg(count(lit(1)).cast("long").as("n_vecs"),
-        sum(when(col("lb") =!= col("la"), 1).otherwise(0)).cast("long")
-          .as("n_disagree"))
-      .select(col("la").cast("int").as("label"), col("n_vecs"),
-        col("n_disagree"),
-        graft.functions.Exact.ratio6("n_disagree", "n_vecs")
-          .as("noise_rate"))
-      .orderBy(col("label"))
-
-  /** ANN DIAL CALIBRATION — the nprobe SETTING as code (the r15 house
-    * rule: "a documented dial must have code and a proof, not prose").
-    * [[labelNoiseAnn]] has the dial; this picks it: given a target
-    * 1-NN recall and a validation slice, return the SMALLEST nprobe
-    * whose candidate sets contain the exact 1-NN for ≥ target share of
-    * slice vectors, plus the full recall ladder.
-    *
-    * ONE pass computes every nprobe's recall simultaneously — the probe
-    * sets are nested prefixes of one centroid ranking, so a vector
-    * contributes to recall(np) for every np ≥ the RANK of the cell that
-    * HOUSES its exact 1-NN: the K-point rank histogram IS the recall
-    * CDF. No per-nprobe re-run, no re-index.
-    *
-    * Candidate-containment recall EQUALS served-answer recall exactly:
-    * the ANN 1-NN is the argmin over a candidate SUBSET under the same
-    * (d2, nbr) total order as the exact audit — when the global argmin
-    * is in the subset, the subset argmin is the global argmin (no
-    * candidate can beat the global minimum, and the shared tiebreak
-    * settles equal distances identically). So recall(np) here is not a
-    * proxy bound; it is the exact share of slice vectors whose SERVED
-    * neighbor matches the audit's (KmeansSpec asserts this equality
-    * against measured labelNoiseAnnNn output).
-    *
-    * The exact-1-NN stage is deliberately quadratic IN THE SLICE
-    * (slice × corpus pairs through the codegen'd `graft_l2sq_i64`) —
-    * calibration runs once per index build on a bounded validation
-    * slice, not per query; at 10⁹ vectors a 10⁴-vector slice prices the
-    * whole dial for 10⁴·10⁹ scored pairs ≈ one q270 audit of a 3·10⁶
-    * corpus. The returned ladder is exact for the slice, an estimate
-    * for the corpus (standard IVF practice, stated). The slice is CODE,
-    * not prose (r17 — the r16 verdict's "the bound must be a
-    * parameter"): `sliceMod` selects vec_ids whose 8-hex-digit md5
-    * prefix ≡ 0 (mod sliceMod) — the q65 hash-split device, a pure
-    * deterministic function of vec_id, unbiased for power-of-two mods
-    * (the §5.7 16^d-mod-k rule: 16⁸ ≡ 0 for any 2^m) — so the
-    * exact-NN join is slice×corpus BY CONSTRUCTION; sliceMod = 1 is
-    * the full-corpus audit. Query vectors come from the slice;
-    * NEIGHBORS always come from the full corpus (both the exact truth
-    * and every probe set), so each sliced recall is an unbiased sample
-    * of the full ladder (KmeansSpec asserts slice≈full agreement).
-    *
-    * Always terminates: recall(K) = 1 by the nprobe = K ≡ exact
-    * identity (every cell probed ⇒ every neighbor housed), so any
-    * target ≤ 1 has a witness.
-    *
-    * Plan: the kmeans build + one bounded K-row broadcast ranking (the
-    * serving shapes, shared), the slice-quadratic scorer join, and a
-    * K-row driver collect of the rank histogram — the only collect is
-    * K-bounded (the §5.7 bounded-scalar-probe class).
-    */
-  private[graft] def annCalibrate(
-      emb: org.apache.spark.sql.DataFrame,
-      k: Int,
-      targetRecall: Double,
-      trainIter: Int = 10,
-      sliceMod: Int = 1): (Int, Seq[(Int, Double)]) = {
-    require(targetRecall > 0.0 && targetRecall <= 1.0,
-      s"targetRecall must be in (0, 1]: got $targetRecall")
-    require(sliceMod >= 1 && (sliceMod & (sliceMod - 1)) == 0,
-      s"sliceMod must be a power of two (the §5.7 hex-split bias rule " +
-        s"— 16^8 mod 2^m = 0, any other mod is arm-biased): got $sliceMod")
-    // the validation slice: a deterministic md5-parity split of vec_ids
-    // (the q65 device) — queries come from here, neighbors from emb
-    val slice =
-      if (sliceMod == 1) emb
-      else emb.filter(
-        conv(substring(md5(concat(lit("cal|"),
-          col("vec_id").cast("string"))), 1, 8), 16, 10)
-          .cast("long") % sliceMod === 0)
-    val km = kmeans(emb, k, trainIter, requireConverged = false)
-    // the SERVING probe ranking (labelNoiseAnnNn's, verbatim) for SLICE
-    // vectors: rank 1 is the home cluster, ranks 1..np the probe set —
-    // nested prefixes
-    val e = slice.select(col("vec_id").as("p_id"),
-      vec(col("embedding")).as("v"))
-    val probeW = Window.partitionBy(col("p_id"))
-      .orderBy(col("score").asc, col("cluster"))
-    val ranked = e.crossJoin(broadcast(km.centroids))
-      .select(col("p_id"), col("cluster"),
-        (col("cn2") - lit(2.0) * dot(col("v"), col("cv"))).as("score"))
-      .withColumn("rn", row_number().over(probeW))
-      .transform(graft.operators.Iter.pin) // 2 consumers: homes and the rank lookup
-    // home cells of EVERY corpus vector (the neighbor side needs them;
-    // an argmin aggregate, corpus-linear — never the K-deep ranking)
-    val homes = emb.select(col("vec_id").as("h_id"),
-        vec(col("embedding")).as("hv"))
-      .crossJoin(broadcast(km.centroids))
-      .select(col("h_id"),
-        struct((col("cn2") - lit(2.0) * dot(col("hv"), col("cv")))
-          .as("score"), col("cluster")).as("sc"))
-      .groupBy(col("h_id"))
-      .agg(min(col("sc")).as("best"))
-      .select(col("h_id"), col("best.cluster").as("h_cluster"))
-    // exact 1-NN of every SLICE vector over the FULL corpus under
-    // q270's (d2, nbr) order — slice×corpus pairs by construction
-    val x = emb.select(col("vec_id"),
-      expr("""transform(embedding,
-        |  v -> CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"""
-        .stripMargin).as("xk"))
-    val xs = slice.select(col("vec_id"),
-      expr("""transform(embedding,
-        |  v -> CAST(round(CAST(v AS DOUBLE) * 1000000) AS BIGINT))"""
-        .stripMargin).as("xk"))
-    val nn = xs.select(col("vec_id").as("src"), col("xk").as("xa"))
-      .join(x.select(col("vec_id").as("nbr"), col("xk").as("xb")),
-        col("nbr") =!= col("src"))
-      .select(col("src"), col("nbr"),
-        dist2(col("xa"), col("xb")).as("d2"))
-      .select(col("src"), col("nbr"),
-        row_number().over(Window.partitionBy(col("src"))
-          .orderBy(col("d2"), col("nbr"))).as("rnk"))
-      .filter(col("rnk") === 1)
-      .select(col("src"), col("nbr"))
-    // rank, in src's probe ranking, of the cell HOUSING src's exact 1-NN
-    val need = nn
-      .join(homes, col("nbr") === col("h_id"))
-      .join(ranked,
-        col("src") === ranked("p_id")
-          && col("h_cluster") === ranked("cluster"))
-      .select(col("rn"))
-    val hist = need.groupBy(col("rn")).agg(count(lit(1)).as("c"))
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    val total = hist.values.sum.toDouble
-    // r17 ADVICE: < 2 vectors ⇒ no exact-1-NN pairs ⇒ every ladder
-    // entry would be 0/0 = NaN and the find() would silently fall back
-    // to nprobe = k — fail loudly instead
-    require(total > 0,
-      "annCalibrate: validation slice has no 1-NN pairs (fewer than 2 " +
-        "vectors) — cannot calibrate a recall ladder")
-    var cum = 0L
-    val ladder = (1 to k).map { np =>
-      cum += hist.getOrElse(np, 0L)
-      np -> cum / total
-    }
-    val chosen = ladder.find(_._2 >= targetRecall).map(_._1).getOrElse(k)
-    (chosen, ladder)
   }
 
   /** CLASS-BALANCED WEIGHTS — Cui et al.'s "effective number of
@@ -2436,7 +1825,7 @@ object Similarity {
     * → 1 for a one-direction collapse; the global companion to q268's
     * anisotropy (first-moment concentration) and q269's TwoNN (local
     * manifold dim), and the number embedding-drift dashboards track
-    * BECAUSE it needs no iteration, unlike [[topPrincipalComponent]].
+    * BECAUSE it needs no iteration, unlike a power-iteration PCA.
     *
     * Exactness: covariance numerators are q126's exact int64 (n²·cov
     * in kilo²-units). The scale factor n²·10⁶ cancels in the ratio

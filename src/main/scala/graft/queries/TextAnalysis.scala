@@ -550,8 +550,7 @@ object TextAnalysis {
     * never a second corpus scan for training. The smoothing constant V is
     * a 1-row aggregate cross-joined back (broadcast, the q26 scalar
     * idiom); it does re-derive the bigram subtree once — at corpus scale
-    * the pd table would be persisted between train and serve, which is
-    * exactly how the decoupled IVF build/serve (KmeansSpec) already ships.
+    * the pd table would be persisted between train and serve.
     *
     * Cross-engine exactness is the q87 entropy discipline: each distinct
     * bigram's ln((c1+V)/(c12+1)) is computed over exact integer counts,

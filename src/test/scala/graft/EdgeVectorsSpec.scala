@@ -67,30 +67,6 @@ class EdgeVectorsSpec extends SparkSpec {
     assert(kept.contains(99L), "zero vector was pruned")
   }
 
-  test("IVF-PQ survives an all-identical corpus (empty clusters, total ADC ties)") {
-    import spark.implicits._
-    // 40 identical 64-dim vectors: kmeans seeds 3 identical centroids and
-    // every vector ties to cluster 0 (min-struct tie-break), leaving two
-    // EMPTY clusters whose centroids persist via the coalesce in the
-    // M-step; all residuals are exactly zero, so every ADC distance is 0
-    // and ranking falls entirely to the deterministic vec_id tie-break —
-    // the maximally degenerate path through every stage of the composition
-    val vec = Array.tabulate(64)(i => (i % 7).toFloat / 4f)
-    val emb = (0L until 40L).map(i => (i, vec, 1)).toDF("vec_id", "embedding", "label")
-    val out = graft.queries.Similarity
-      .annIvfPq(emb, k = 3, numQueries = 3, topK = 5, nprobe = 2)
-      .select(col("qid"), col("vec_id"), col("adc_d2"), col("rk"))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3)))
-    assert(out.length === 15, s"3 queries × top-5, got ${out.length}")
-    assert(out.forall(_._3 == 0L), "identical vectors must have zero ADC distance")
-    for (q <- 0L until 3L) {
-      val mine = out.filter(_._1 == q).sortBy(_._4).map(_._2).toSeq
-      // deterministic vec_id tie-break, self excluded
-      assert(mine === (0L until 6L).filterNot(_ == q).take(5).toSeq, s"qid=$q: $mine")
-    }
-  }
-
   test("q268/q269 degenerate: the zero vector is an ordinary anisotropy " +
       "member; coincident points are excluded from the TwoNN MLE") {
     // zero vector contributes 0 to every sum — label 0 stays defined

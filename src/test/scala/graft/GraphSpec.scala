@@ -3,7 +3,7 @@ package graft
 import graft.queries.GraphOps
 import org.apache.spark.sql.functions._
 
-/** PageRank invariants on graphs with known structure — the KmeansSpec
+/** PageRank invariants on graphs with known structure — the invariant
   * discipline for the iterative operator whose q113 oracle only checks one
   * fixture: symmetry ⇒ uniform ranks, structure ⇒ known ordering, mass
   * conservation up to quantified floor leakage, and run-to-run determinism

@@ -1,114 +1,16 @@
 package graft
 
-import graft.functions.{MmrCand, MmrMicroCand, MmrMicroTopK, MmrPick, MmrTopK}
-import org.apache.spark.sql.functions._
+import graft.functions.{MmrMicroCand, MmrMicroTopK}
 import org.scalatest.funsuite.AnyFunSuite
 
 import scala.util.Random
 
-/** MMR rerank nets (q118 is rows-only by design — greedy selection has no
-  * SQL twin): the aggregate's pool laws under random partitioning, the
-  * finishing rerank against an independent reimplementation, and the
-  * diversification effect itself on a planted near-dup fixture.
+/** MMR rerank nets for [[MmrMicroTopK]] (q118's aggregate): the pool laws
+  * under random partitioning, the finishing rerank against an independent
+  * integer reimplementation, and the diversification effect itself on a
+  * planted near-dup fixture.
   */
 class MmrSpec extends AnyFunSuite {
-
-  private def cos(a: Seq[Double], b: Seq[Double]): Double = {
-    val d = a.zip(b).map { case (x, y) => x * y }.sum
-    val n = math.sqrt(a.map(x => x * x).sum) * math.sqrt(b.map(x => x * x).sum)
-    if (n == 0) 0.0 else d / n
-  }
-
-  /** Independent greedy MMR (list-based, no shared code with the
-    * aggregator's while-loop). */
-  private def mmrRef(pool: Seq[MmrCand], outK: Int, lambda: Double): Seq[Long] = {
-    var chosen = Vector.empty[MmrCand]
-    var rest = pool.toVector
-    while (chosen.size < outK && rest.nonEmpty) {
-      val scored = rest.map { c =>
-        val red = if (chosen.isEmpty) 0.0 else chosen.map(s => cos(c.v, s.v)).max
-        (c, lambda * c.rel - (1 - lambda) * red)
-      }
-      val best = scored.minBy { case (c, s) => (-s, c.id) }._1
-      chosen :+= best
-      rest = rest.filterNot(_.id == best.id)
-    }
-    chosen.map(_.id)
-  }
-
-  private def randomPool(rng: Random, n: Int): Vector[MmrCand] =
-    Vector.tabulate(n)(i => MmrCand(i.toLong,
-      rng.nextDouble(), Seq.fill(8)(rng.nextDouble() - 0.5)))
-
-  test("finish() matches the independent greedy reimplementation") {
-    val rng = new Random(42)
-    for (round <- 1 to 20) {
-      val agg = new MmrTopK(20, 5, 0.7)
-      val pool = randomPool(rng, 12 + rng.nextInt(20))
-      val viaAgg = agg.finish(
-        pool.foldLeft(agg.zero)(agg.reduce)).map(_.id)
-      val expected = mmrRef(
-        pool.sortBy(c => (-c.rel, c.id)).take(20), 5, 0.7)
-      assert(viaAgg === expected, s"round $round")
-    }
-  }
-
-  test("pool selection is partition- and merge-order-invariant") {
-    val rng = new Random(7)
-    for (_ <- 1 to 15) {
-      val agg = new MmrTopK(10, 3, 0.5)
-      val xs = randomPool(rng, 60)
-      val whole = xs.foldLeft(agg.zero)(agg.reduce)
-      val parts = xs.groupBy(_ => rng.nextInt(5)).values.toVector
-        .map(_.foldLeft(agg.zero)(agg.reduce))
-      val merged = rng.shuffle(parts).foldLeft(agg.zero)(agg.merge)
-      assert(merged === whole)
-      assert(merged.size <= 10)
-    }
-  }
-
-  test("first pick is the top-relevance hit; picks are distinct") {
-    val rng = new Random(13)
-    val agg = new MmrTopK(20, 5, 0.7)
-    val pool = randomPool(rng, 30)
-    val picks = agg.finish(pool.foldLeft(agg.zero)(agg.reduce))
-    assert(picks.map(_.id).distinct.size === picks.size)
-    val topRel = pool.minBy(c => (-c.rel, c.id)).id
-    assert(picks.head.id === topRel)
-    assert(picks.map(_.rk) === (1 to picks.size))
-  }
-
-  test("diversification displaces a planted near-duplicate hit") {
-    // candidate 1 is relevance-rank 2 but nearly identical to the top hit;
-    // candidate 2 is slightly less relevant and orthogonal — plain top-2
-    // keeps the duplicate, MMR must swap in the orthogonal one
-    val top = MmrCand(0L, 0.99, Seq(1.0, 0.0, 0.0))
-    val nearDup = MmrCand(1L, 0.98, Seq(0.999, 0.01, 0.0))
-    val diverse = MmrCand(2L, 0.90, Seq(0.0, 1.0, 0.0))
-    val agg = new MmrTopK(3, 2, 0.5)
-    val picks = agg.finish(Seq(top, nearDup, diverse)
-      .foldLeft(agg.zero)(agg.reduce)).map(_.id)
-    assert(picks === Seq(0L, 2L), s"got $picks")
-  }
-
-  test("non-finite relevance never crashes finish() and ranks last") {
-    // a NaN or -Infinity rel from an arbitrary caller used to leave the
-    // argmax seat empty (best = -1) and crash the tie-break; now such
-    // candidates sort after every finite-scored one, ids breaking ties
-    val nan = MmrCand(0L, Double.NaN, Seq(1.0, 0.0))
-    val ninf = MmrCand(1L, Double.NegativeInfinity, Seq(0.0, 1.0))
-    val ok = MmrCand(2L, 0.5, Seq(0.5, 0.5))
-    val agg = new MmrTopK(5, 3, 0.7)
-    val picks = agg.finish(Seq(nan, ninf, ok)
-      .foldLeft(agg.zero)(agg.reduce)).map(_.id)
-    assert(picks.head === 2L, s"finite candidate must win: $picks")
-    assert(picks.size === 3 && picks.toSet === Set(0L, 1L, 2L))
-
-    // all-NaN pool: still total, deterministic, id-ordered
-    val allNan = Seq.tabulate(4)(i => MmrCand(i.toLong, Double.NaN, Seq(1.0)))
-    val picks2 = new MmrTopK(5, 2, 0.7).finish(allNan).map(_.id)
-    assert(picks2 === Seq(0L, 1L), s"got $picks2")
-  }
 
   /** Independent integer greedy twin of MmrMicroTopK.finish — same
     * micro-cosine convention (round-6 HALF_UP ×10⁶), list-based, no shared
@@ -169,5 +71,31 @@ class MmrSpec extends AnyFunSuite {
       val direct = xs.foldLeft(agg.zero)(agg.reduce)
       assert(merged === direct)
     }
+  }
+
+  test("micro first pick is the top-relevance hit; picks are distinct") {
+    val rng = new Random(13)
+    val agg = new MmrMicroTopK(20, 5, 7, 10)
+    val pool = Vector.tabulate(30)(i =>
+      MmrMicroCand(i.toLong, rng.nextInt(1000001).toLong,
+        Seq.fill(8)(rng.nextDouble() - 0.5)))
+    val picks = agg.finish(pool.foldLeft(agg.zero)(agg.reduce))
+    assert(picks.map(_.id).distinct.size === picks.size)
+    val topRel = pool.minBy(c => (-c.irel, c.id)).id
+    assert(picks.head.id === topRel)
+    assert(picks.map(_.rk) === (1 to picks.size))
+  }
+
+  test("micro diversification displaces a planted near-duplicate hit") {
+    // candidate 1 is relevance-rank 2 but nearly identical to the top hit;
+    // candidate 2 is slightly less relevant and orthogonal — plain top-2
+    // keeps the duplicate, MMR must swap in the orthogonal one
+    val top = MmrMicroCand(0L, 990000L, Seq(1.0, 0.0, 0.0))
+    val nearDup = MmrMicroCand(1L, 980000L, Seq(0.999, 0.01, 0.0))
+    val diverse = MmrMicroCand(2L, 900000L, Seq(0.0, 1.0, 0.0))
+    val agg = new MmrMicroTopK(3, 2, 1, 2)
+    val picks = agg.finish(Seq(top, nearDup, diverse)
+      .foldLeft(agg.zero)(agg.reduce)).map(_.id)
+    assert(picks === Seq(0L, 2L), s"got $picks")
   }
 }

@@ -3,65 +3,11 @@ package graft
 import graft.queries.Similarity
 import org.apache.spark.sql.functions._
 
-/** q126 (exact covariance) + topPrincipalComponent (fixed-round power
-  * iteration): the iteration is not SQL-expressible, so like kmeans it is
-  * pinned by invariants — PSD spectral bounds against the oracle-checked
-  * covariance (max diagonal entry ≤ λ̂ ≤ trace), unit output, bitwise
-  * determinism — plus RECOVERY: on a corpus with a planted dominant
-  * direction the returned component must align with the plant.
+/** q300 (participation ratio from the q126 covariance rows): replayed
+  * against an independent in-memory covariance walk and held to the
+  * [1, D] spectral bounds.
   */
 class PcaSpec extends SparkSpec {
-
-  private def covMatrix(): (Int, Array[Array[Double]]) = {
-    val rows = SparkEntry.queries("q126_embedding_covariance")(spark, sf)
-      .collect()
-    val dim = rows.map(_.getInt(1)).max
-    val n = rows.head.getLong(2).toDouble
-    val c = Array.ofDim[Double](dim, dim)
-    rows.foreach { r =>
-      val v = r.getLong(3).toDouble / (n * n) / 1e6
-      c(r.getInt(0) - 1)(r.getInt(1) - 1) = v
-      c(r.getInt(1) - 1)(r.getInt(0) - 1) = v
-    }
-    (dim, c)
-  }
-
-  test("power iteration respects the PSD spectral bounds of the exact covariance") {
-    val (dim, c) = covMatrix()
-    val (v, lambda) = Similarity.topPrincipalComponent(Tables.embeddings(spark, sf))
-    assert(v.length === dim)
-    assert(math.abs(v.map(x => x * x).sum - 1.0) < 1e-9, "component must be unit")
-    val maxDiag = (0 until dim).map(i => c(i)(i)).max
-    val trace = (0 until dim).map(i => c(i)(i)).sum
-    // λ_max of a PSD matrix dominates every diagonal entry and is at most
-    // the trace; the Rayleigh quotient of ANY unit vector is ≤ λ_max, so
-    // these brackets catch sign/scale bugs without needing convergence
-    assert(lambda >= maxDiag - 1e-9, s"λ̂=$lambda < max C_ii=$maxDiag")
-    assert(lambda <= trace + 1e-9, s"λ̂=$lambda > trace=$trace")
-
-    val (v2, l2) = Similarity.topPrincipalComponent(Tables.embeddings(spark, sf))
-    assert(v2.toSeq === v.toSeq && l2 === lambda, "must be deterministic")
-  }
-
-  test("a planted dominant direction is recovered") {
-    import spark.implicits._
-    val dims = 16
-    val d = Array.tabulate(dims)(i => i + 1.0)
-    val dn = { val n = math.sqrt(d.map(x => x * x).sum); d.map(_ / n) }
-    // 300 vectors: strong signal along dn, deterministic small residue
-    val rows = (0 until 300).map { r =>
-      val t = (r % 21) - 10.0 // spread in [-10, 10]
-      (r.toLong,
-        Array.tabulate(dims)(i =>
-          (t * dn(i) + ((r * 31 + i * 7) % 11 - 5) / 50.0).toFloat),
-        0)
-    }
-    val emb = rows.toDF("vec_id", "embedding", "label")
-    val (v, lambda) = Similarity.topPrincipalComponent(emb)
-    val cos = math.abs(v.zip(dn).map { case (a, b) => a * b }.sum)
-    assert(cos > 0.95, s"|cos(component, planted)| = $cos")
-    assert(lambda > 0)
-  }
 
   test("q300 participation ratio replays from a driver-side covariance " +
       "walk and respects the [1, D] spectral bounds") {

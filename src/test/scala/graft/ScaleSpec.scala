@@ -609,10 +609,8 @@ class ScaleSpec extends SparkSpec {
     // an unbounded cartesian is still forbidden
     // q261's 4-element block-size fan is a designed bounded broadcast
     // q270's unblocked n² 1-NN is a nested loop BY DESIGN (cross-label
-    // neighbors are the measurement; Similarity.labelNoiseAnn IS the
-    // scale path in code — plan-asserted below and in KmeansSpec, with
-    // nprobe = K collapsing to exact q270); only a cartesian is
-    // forbidden here
+    // neighbors are the measurement; it is the exact audit-scale
+    // evaluator); only a cartesian is forbidden here
     // q273's 10-bin seed and q275's 8-subset/3-channel grids are
     // literal bounded broadcasts (the q205 device)
     // q283's 1-row collection-stats frame is a designed scalar
@@ -648,17 +646,5 @@ class ScaleSpec extends SparkSpec {
         .queryExecution.executedPlan.toString
       assert(!plan.contains("CartesianProduct"), s"$name:\n$plan")
     }
-    // q270's ANN serving route: candidates come from an equi join on
-    // the cluster id — the ONLY nested loop is the bounded K-row
-    // centroid broadcast used for probe ranking (the q36/kmeans
-    // assignment shape); the corpus never cross-joins itself
-    val annPlan = graft.queries.Similarity
-      .labelNoiseAnnNn(Tables.embeddings(spark, sf), k = 5, nprobe = 2)
-      .queryExecution.executedPlan.toString
-    assert(!annPlan.contains("CartesianProduct"), annPlan)
-    assert(annPlan.contains("BroadcastHashJoin") ||
-      annPlan.contains("SortMergeJoin") ||
-      annPlan.contains("ShuffledHashJoin"),
-      s"ANN candidates must join by key:\n$annPlan")
   }
 }

@@ -2055,7 +2055,7 @@ class StatsSpec extends SparkSpec {
     // clouds overlap enough that every centroid-silhouette mean sits
     // slightly BELOW zero (≈ −0.006) — the operator correctly reports
     // weak separation; the per-label exact agreement above is the net,
-    // and KmeansSpec/q93 hold the complementary separation evidence
+    // and q93 holds the complementary dispersion evidence
     assert(out.values.forall { case (_, m, neg) =>
       m.get > -0.2 && neg >= 0.0 && neg <= 1.0
     })

@@ -20,10 +20,11 @@ A reached template also reaches its `override`, `implicit`, `apply` and
 naming them; `override` members are never reported.
 
 Prints one `path:line  Owner.member` per unreached member that is not in
-ALLOW, and exits 1 when it printed any. Name-level means the pass is
-conservative: two members that share a name are reached together, so a
-dead member can hide behind a live namesake, but a printed member is
-mentioned nowhere it is visible.
+ALLOW, then one line per stale list entry (an ENTRY that names nothing, an
+ALLOW that names nothing or a member the walk reaches), and exits 1 when
+it printed any. Name-level means the pass is conservative: two members
+that share a name are reached together, so a dead member can hide behind
+a live namesake, but a printed member is mentioned nowhere it is visible.
 """
 import re
 import sys
@@ -59,24 +60,6 @@ ALLOW = {
         "the wire client's command call, kept with the rest of vera/",
     "PgWire.Conn.describe":
         "the wire client's RowDescription call, kept with the rest of vera/",
-    # k-means / IVF / IVF-PQ / PCA family: distinct algorithms, not second
-    # paths of a registered operator; whether they stay is its own decision
-    "Similarity.KmeansResult": "k-means family: the clustering result",
-    "Similarity.kmeans": "k-means family: Lloyd's iterations",
-    "Similarity.annIvfPq": "k-means family: IVF-PQ index and ADC search",
-    "Similarity.labelNoiseAnn": "k-means family: ANN label-noise finish",
-    "Similarity.annCalibrate": "k-means family: nprobe recall calibration",
-    "Similarity.annIvfKmeans": "k-means family: trained-centroid IVF build",
-    "Similarity.searchIvf": "k-means family: IVF multi-probe search",
-    "Similarity.topPrincipalComponent": "k-means family: PCA power iteration",
-    "Similarity.labelNoiseAnnNn": "k-means family: ANN label-noise probe",
-    # the double-precision MMR aggregator: MmrMicroTopK replaced it in
-    # q118, and MmrSpec still exercises it; whether it goes is its own
-    # decision
-    "MmrCand": "double-precision MMR aggregator's input row",
-    "MmrPick": "double-precision MMR aggregator's output row",
-    "MmrTopK": "double-precision MMR aggregator",
-    "MmrTopK.ordered": "double-precision MMR aggregator's buffer order",
 }
 
 MEMBER = re.compile(
@@ -247,7 +230,21 @@ def main():
                and d["qual"] not in ALLOW]
     for d in missing:
         print(f"{d['path']}:{d['line']}  {d['qual']}")
-    return 1 if missing else 0
+    # a list entry that no longer means anything hides the next real
+    # finding behind it, so stale entries fail the run too
+    quals = {d["qual"] for d in decls}
+    owners = {q.rsplit(".", 1)[0] for q in quals if "." in q}
+    stale = [f"ENTRY {e}: names no declared member" for e in sorted(ENTRY)
+             if e not in quals and not (e.endswith(".*") and e[:-2] in owners)]
+    unreached = {d["qual"] for d in decls if id(d) not in reached}
+    for a in sorted(ALLOW):
+        if a not in quals:
+            stale.append(f"ALLOW {a}: names no declared member")
+        elif a not in unreached:
+            stale.append(f"ALLOW {a}: reached, so the entry is stale")
+    for line in stale:
+        print(line)
+    return 1 if missing or stale else 0
 
 
 if __name__ == "__main__":
