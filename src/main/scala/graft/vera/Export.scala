@@ -3,8 +3,10 @@ package graft.vera
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 import java.time.Instant
+import java.util.concurrent.atomic.AtomicReference
 
 /** Size-rotated, row-range-named Parquet export sink + manifest — the
   * reference's core job (`fetch_and_write`, main.py:178-263) re-expressed
@@ -14,27 +16,42 @@ import java.time.Instant
   * `chunk_size × num_chunks_per_file` rows and names each file by its
   * nominal row range (`{table}_{i*rpf}_{(i+1)*rpf}[_{codec}].parquet`,
   * main.py:94-98,222). Reproducing those DETERMINISTIC range names on Spark
-  * needs a stable global row index, which we compute scale-safely:
+  * needs a stable global row index. [[exportTable]] first persists the
+  * normalized source (`MEMORY_AND_DISK`) and counts it: that count job is
+  * the ONE read of the source, and every later job reads the persisted rows.
+  * The count `n` fixes the file count `F = ceil(n / rowsPerFile)`:
   *
-  *  1. range-bound sampling: `repartitionByRange` on the caller's stable
-  *     key samples the source for its partition bounds (one job, the first
-  *     read of the source);
-  *  2. the range shuffle (its map stage is the second read of the source)
-  *     plus `sortWithinPartitions`, then RDD `zipWithIndex` over that one
-  *     sorted lineage ([[withGlobalIndex]]): its count job returns one row
-  *     count PER PARTITION to the driver (bounded like AQE stats, never
-  *     per-row), and the global index is the partition's start offset plus
-  *     the row's position in it — no single-partition window;
-  *  3. the bucket shuffle plus the write: bucket = gidx / rowsPerFile;
-  *     hash-repartition on bucket co-locates each file's rows in one task →
-  *     `partitionBy("__bucket")` emits exactly one parquet file per bucket;
-  *     a driver rename pass applies the reference's names. The last short
-  *     file keeps the nominal full-range name, exactly like the reference
-  *     (main.py:222,252-254).
+  *  - `F == 0`: nothing is written. Jobs: the count.
+  *  - `F == 1`: the whole table is one file, so a global index would compute
+  *    nothing. `coalesce(1)` + `sortWithinPartitions` writes it straight into
+  *    the bucket-0 staging directory. Jobs: the count, the write. That one
+  *    task holds at most `rowsPerFile` rows, the bound every file's writer
+  *    task has anyway: a small-input fallback, not a data-scale single
+  *    partition.
+  *  - `F >= 2`: jobs: the count, then
+  *    1. range-bound sampling: `repartitionByRange` on the caller's stable
+  *       key samples the persisted rows for its partition bounds;
+  *    2. the range shuffle plus `sortWithinPartitions`, then RDD
+  *       `zipWithIndex` over that one sorted lineage ([[withGlobalIndex]]):
+  *       its count job returns one row count PER PARTITION to the driver
+  *       (bounded like AQE stats, never per-row), and the global index is
+  *       the partition's start offset plus the row's position in it — no
+  *       single-partition window;
+  *    3. the bucket shuffle plus the write: bucket = gidx / rowsPerFile;
+  *       hash-repartition on bucket co-locates each file's rows in one
+  *       task → `partitionBy("__bucket")` emits exactly one parquet file per
+  *       bucket.
   *
-  * At 100 TB this is two reads of the source (sampling, range-shuffle map),
-  * two shuffles of the exported table (range + bucket) and O(#partitions +
-  * #files) driver state — no collect of data rows anywhere.
+  * (With adaptive execution each shuffle adds a job for its map stage, and
+  * the count of a persisted frame runs as three.) Either way a driver
+  * rename pass applies the reference's names. The last short file keeps the
+  * nominal full-range name, exactly like the reference (main.py:222,252-254),
+  * and holds `n - (F-1) * rowsPerFile` rows.
+  *
+  * At 100 TB this is one read of the source, the persisted copy (memory,
+  * spilling to local disk), two shuffles of the exported table (range +
+  * bucket) and O(#partitions + #files) driver state — no collect of data
+  * rows anywhere. [[exportAll]] exports its tables side by side.
   *
   * Manifest (`write_manifest`, main.py:103-113): same shape
   * (`timestamp` epoch-ms, `dateStr`, `files: {table: [objectKey]}`), with one
@@ -95,8 +112,14 @@ object Export {
     * nondeterministic — the range exchange re-samples with a seed derived
     * from the fresh `rdd.id` on every action, so two actions can see
     * different partition boundaries). The sort's shuffle files are reused
-    * by the count job and the write, so past the range-bound sampling job
-    * the input is scanned once, by the range shuffle's map stage.
+    * by the count job and the write.
+    *
+    * Jobs: range-bound sampling, the range shuffle's map stage, and
+    * zipWithIndex's count job (the map stage and the count may share a
+    * job). [[exportTable]] passes a persisted frame, so the sampling job and
+    * the map stage read the SAME materialized rows: the bounds are drawn
+    * from exactly the rows that get partitioned, and neither re-reads the
+    * source.
     */
   private[vera] def withGlobalIndex(
       df: DataFrame, orderBy: Seq[String], numPartitions: Int): DataFrame = {
@@ -117,7 +140,8 @@ object Export {
 
   /** Normalize + export one table (S4/S5/S7 write-side): size-rotated files
     * with row-range names under `outDir/`. Returns the per-file inventory in
-    * file order (the manifest rows).
+    * file order (the manifest rows). Reads the source once (the count that
+    * fixes the file count); the jobs per path are in the object doc.
     *
     * @param orderBy stable total-order key (the reference's "order" is the
     *                Postgres cursor order; a distributed engine must name one
@@ -135,46 +159,62 @@ object Export {
       if (numPartitions > 0) numPartitions
       else spark.sessionState.conf.numShufflePartitions
     val rpf = cfg.rowsPerFile
-
-    val indexed = withGlobalIndex(Normalize(df, cfg), orderBy, nParts)
     val staging = s"$outDir/.staging_${cfg.name}"
-    // Expected file count derived from the DATA (max bucket number), not
-    // from the post-write listing: an object store's eventually-consistent
-    // LISTING can come up short, and a listing that hides the TAIL bucket
-    // would pass a contiguity-only check and silently export one file too
-    // few. The observation RIDES the write job itself (no extra pass);
-    // `obs.get` blocks until the write action completes.
-    val obs = org.apache.spark.sql.Observation()
-    indexed
-      .withColumn("__bucket", (col("__gidx") / rpf).cast("long"))
-      .drop("__gidx")
-      // metrics collected PRE-shuffle so the node can't perturb the
-      // write-side partitioning/ordering
-      .observe(obs, max(col("__bucket")).as("max_bucket"),
-        count(lit(1)).as("n_rows"))
-      .repartition(col("__bucket")) // all rows of a bucket → one task → one file
-      .sortWithinPartitions(("__bucket" +: orderBy).map(col): _*)
-      .write.mode("overwrite")
-      .option("compression", cfg.compression.getOrElse("none"))
-      .partitionBy("__bucket")
-      .parquet(staging)
-    // an EMPTY input runs zero write tasks, so the metrics map can come
-    // back without the key at all (and a null max means the same thing)
-    val expectedBuckets = obs.get.getOrElse("max_bucket", null) match {
-      case b: java.lang.Long => b.longValue + 1
-      case _                 => 0L
-    }
-
-    // Driver rename pass: .staging/__bucket=N/part-*.parquet →
-    // outDir/{table}_{lo}_{hi}[_{codec}].parquet  (O(#files) driver work).
     val fs = FileSystem.get(new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
+    val normalized = Normalize(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      // The count is the only read of the source, and the result of an
+      // action is exact under task retries and speculation (an
+      // accumulator or observe() in a transformation is not), so the file
+      // count and the tail rows below need no plausibility bound.
+      val n = normalized.count()
+      val nFiles = (n + rpf - 1) / rpf
+      val codec = cfg.compression.getOrElse("none")
+      if (nFiles == 0) {
+        // nothing to write; the directory still exists for readers of it
+        fs.mkdirs(new Path(outDir))
+        Seq.empty
+      } else {
+        if (nFiles == 1) {
+          // a stale staging tree from a crashed run must not add buckets
+          fs.delete(new Path(staging), true)
+          normalized.coalesce(1).sortWithinPartitions(orderBy.map(col): _*)
+            .write.mode("overwrite")
+            .option("compression", codec)
+            .parquet(s"$staging/__bucket=0")
+        } else {
+          withGlobalIndex(normalized, orderBy, nParts)
+            .withColumn("__bucket", (col("__gidx") / rpf).cast("long"))
+            .drop("__gidx")
+            .repartition(col("__bucket")) // all rows of a bucket → one task → one file
+            .sortWithinPartitions(("__bucket" +: orderBy).map(col): _*)
+            .write.mode("overwrite")
+            .option("compression", codec)
+            .partitionBy("__bucket")
+            .parquet(staging)
+        }
+        renameStaged(fs, staging, outDir, cfg, nFiles, n)
+      }
+    } finally normalized.unpersist()
+  }
+
+  /** Driver rename pass: `.staging/__bucket=N/part-*.parquet` →
+    * `outDir/{table}_{lo}_{hi}[_{codec}].parquet` (O(#files) driver work),
+    * then the staging tree goes. `nFiles` and `n` come from the DATA, not
+    * from the listing: an object store's eventually-consistent LISTING can
+    * come up short, and a listing that hides the TAIL bucket would pass a
+    * contiguity-only check and silently export one file too few.
+    */
+  private def renameStaged(fs: FileSystem, staging: String, outDir: String,
+      cfg: TableConfig, nFiles: Long, n: Long): Seq[ExportedFile] = {
+    val rpf = cfg.rowsPerFile
     val bucketNos = fs.listStatus(new Path(staging)).map(_.getPath.getName)
       .filter(_.startsWith("__bucket="))
       .map(_.stripPrefix("__bucket=").toLong)
       .sorted
-    require(bucketNos.length == expectedBuckets &&
+    require(bucketNos.length == nFiles &&
         bucketNos.zipWithIndex.forall { case (b, i) => b == i },
-      s"${cfg.name}: expected buckets 0..${expectedBuckets - 1}, " +
+      s"${cfg.name}: expected buckets 0..${nFiles - 1}, " +
         s"listed {${bucketNos.mkString(",")}} — short or non-contiguous " +
         "staging listing (object-store listing inconsistency?)")
     val renamed = bucketNos.map { fileNo =>
@@ -193,39 +233,27 @@ object Export {
       fileNo -> name
     }
     fs.delete(new Path(staging), true)
-    // Tail-file row count from the SAME observation that counted buckets —
-    // total rows minus the rowsPerFile law for every non-tail file. r20:
-    // this was previously a separate read-back job on the tail file
-    // (metadata-only, but one more sequential driver round trip per table
-    // — q29 runs three exports, so three extra jobs); the write job
-    // already knows the total for free.
-    val totalRows = obs.get.getOrElse("n_rows", null) match {
-      case n: java.lang.Long => n.longValue
-      case _                 => 0L
-    }
-    val lastRows =
-      if (expectedBuckets == 0) 0L
-      else totalRows - (expectedBuckets - 1) * rpf
-    // r20 ADVICE: observe() accumulates in the map stage, and accumulators
-    // in transformations are not exactly-once under map-task retries or
-    // speculation — a double-counted n_rows would silently inflate the
-    // manifest's tail row count (max_bucket is retry-idempotent; count is
-    // not). Bound it against the rows-per-file law so an over-count fails
-    // loudly here instead of shipping a wrong manifest row.
-    require(expectedBuckets == 0 || (lastRows >= 1 && lastRows <= rpf),
-      s"${cfg.name}: tail rows $lastRows outside (0, $rpf] for " +
-        s"$expectedBuckets buckets × $rpf rows/file and $totalRows observed " +
-        "rows — map-stage retry double-count? (observe() is not " +
-        "exactly-once in transformations)")
+    // every file but the tail holds rpf rows by construction
+    val lastRows = n - (nFiles - 1) * rpf
     renamed.map { case (fileNo, name) =>
-      val rows = if (fileNo == renamed.last._1) lastRows else rpf
+      val rows = if (fileNo == nFiles - 1) lastRows else rpf
       ExportedFile(cfg.name, fileNo, name, s"${cfg.name}/$name", rows,
         fileNo * rpf, (fileNo + 1) * rpf)
     }.toSeq
   }
 
-  /** O1 table-loop driver (main.py:278-280): export every table sequentially
-    * (each export is internally fully parallel), then write the manifest.
+  /** O1 table-loop driver (main.py:278-280): export every table, then write
+    * the manifest. The tables are exported CONCURRENTLY, one driver thread
+    * per table (each export is internally parallel too), so a table whose
+    * source is one serial stream no longer leaves the other cores idle.
+    * The threads are created inside this call, so they inherit the
+    * caller's Spark local properties (job group, scheduler pool, tags).
+    *
+    * Failure and commit rule: each table's jobs carry their own job tag; the
+    * first table to fail cancels the other tables' running jobs, every
+    * thread is waited for, and that first failure is rethrown — with no
+    * manifest written. The manifest is written last, only after every
+    * table succeeded, and lists the tables in input order.
     */
   def exportAll(
       tables: Seq[(DataFrame, TableConfig, Seq[String])],
@@ -235,12 +263,37 @@ object Export {
       tombstoneKeys: Seq[(String, String)] = Nil,
       preCommit: () => Unit = () => (),
   ): Manifest = {
-    val entries = tables.map { case (df, cfg, orderBy) =>
-      cfg.name -> exportTable(df, cfg, orderBy, outDir).map(_.objectName)
-    }
-    val manifest = Manifest(nowMillis, Instant.ofEpochMilli(nowMillis).toString,
-      entries, watermarkMicros, tombstoneKeys)
+    require(tables.nonEmpty, s"exportAll: no tables to export to $outDir")
+    val names = tables.map(_._2.name)
+    val repeated = names.diff(names.distinct).distinct
+    // two exports of one name would race on one staging directory
+    require(repeated.isEmpty,
+      s"exportAll: table names must be distinct, repeated: ${repeated.mkString(", ")}")
     val spark = tables.head._1.sparkSession
+    val sc = spark.sparkContext
+    val runTag = s"graft-export-${java.util.UUID.randomUUID}"
+    val tags = names.indices.map(i => s"$runTag-$i")
+    val keys = new Array[Seq[String]](tables.length)
+    val failure = new AtomicReference[Throwable]()
+    val threads = tables.zipWithIndex.map { case ((df, cfg, orderBy), i) =>
+      val t = new Thread(() => {
+        sc.addJobTag(tags(i))
+        try keys(i) = exportTable(df, cfg, orderBy, outDir).map(_.objectName)
+        catch {
+          case e: Throwable =>
+            if (failure.compareAndSet(null, e))
+              tags.filter(_ != tags(i)).foreach(
+                sc.cancelJobsWithTag(_, s"export of ${cfg.name} failed"))
+        }
+      }, s"graft-export-${cfg.name}")
+      t.setDaemon(true)
+      t
+    }
+    threads.foreach(_.start())
+    threads.foreach(_.join())
+    Option(failure.get).foreach(e => throw e)
+    val manifest = Manifest(nowMillis, Instant.ofEpochMilli(nowMillis).toString,
+      names.zip(keys), watermarkMicros, tombstoneKeys)
     // commit gate: all data is on disk, the manifest is not — chain writers
     // acquire their generation claim here ([[claimGeneration]]) so a lost
     // race aborts with the run still invisible (manifest = commit marker)
@@ -812,6 +865,12 @@ object Export {
       outDir: String,
       env: Map[String, String] = sys.env,
   ): Manifest = {
+    val offset = env.get("DEBUG_OFFSET").map { s =>
+      s.toLongOption.filter(n => n >= 0 && n <= Int.MaxValue)
+        .getOrElse(throw new IllegalArgumentException(
+          s"DEBUG_OFFSET must be an integer in 0..${Int.MaxValue}, got '$s'"))
+        .toInt
+    }
     val selected = env.get("DEBUG_TABLE") match {
       case Some(t) => Seq(Schemas.byName(t))
       case None    => Schemas.tables
@@ -822,11 +881,10 @@ object Export {
         selected.map(cfg => (cfg, orderBy(cfg), orderBy(cfg))), spark)
     }
     val debug = env.get("DEBUG").exists(_.nonEmpty)
-    val offset = env.get("DEBUG_OFFSET").map(_.toLong)
     val jobs = selected.map { cfg0 =>
       val cfg = if (debug) cfg0.copy(chunkSize = math.max(1, cfg0.chunkSize / 100)) else cfg0
       var df = source(cfg)
-      offset.foreach { n => df = df.orderBy(orderBy(cfg).map(col): _*).offset(n.toInt) }
+      offset.foreach { n => df = df.orderBy(orderBy(cfg).map(col): _*).offset(n) }
       if (debug) {
         // order BEFORE limiting: limit on an unordered frame takes
         // whichever rows get scanned first, so two debug runs could export

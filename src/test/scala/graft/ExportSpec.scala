@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 
 /** Chunking/rotation invariants of the export sink (SURVEY.md §5 property
   * list): Σ file rows = table rows, every file ≤ rows_per_file, ranges
@@ -119,6 +120,135 @@ class ExportSpec extends SparkSpec {
       .get("files")
     assert(files.size === 1)
     assert(Option(files.get(odd)).map(_.get(0).asText) === Some(odd))
+  }
+
+  private def keyCfg(name: String, rpf: Int,
+      compression: Option[String] = None): TableConfig =
+    TableConfig(name, StructType(Seq(StructField("k", LongType))),
+      chunkSize = rpf, numChunksPerFile = 1, compression = compression)
+
+  /** Files under `dir` (names, hidden checksum files included) and bytes. */
+  private def filesIn(dir: String): Map[String, Seq[Byte]] = {
+    val s = Files.list(java.nio.file.Paths.get(dir))
+    try s.iterator().asScala.filter(Files.isRegularFile(_))
+      .map(p => p.getFileName.toString -> Files.readAllBytes(p).toSeq).toMap
+    finally s.close()
+  }
+
+  test("boundaries: empty input, n == rowsPerFile and n == rowsPerFile + 1") {
+    // pins behavior the one-file and count-first paths must keep
+    val rpf = 100
+    val empty = tmpDir()
+    val m = Export.exportAll(
+      Seq((spark.range(0).select(col("id").as("k")), keyCfg("e", rpf), Seq("k"))),
+      empty)
+    assert(m.files === Seq("e" -> Nil))
+    assert(filesIn(empty).keySet.filter(!_.contains("manifest.json")).isEmpty)
+    assert(!Files.list(java.nio.file.Paths.get(empty)).iterator().asScala
+      .exists(_.getFileName.toString.startsWith(".staging_")))
+
+    val full = Export.exportTable(spark.range(rpf).select(col("id").as("k")),
+      keyCfg("f", rpf), Seq("k"), tmpDir())
+    assert(full.map(f => (f.fileName, f.rows)) === Seq(("f_0_100.parquet", 100L)))
+
+    val over = Export.exportTable(spark.range(rpf + 1).select(col("id").as("k")),
+      keyCfg("o", rpf), Seq("k"), tmpDir())
+    assert(over.map(f => (f.fileName, f.rows)) ===
+      Seq(("o_0_100.parquet", 100L), ("o_100_200.parquet", 1L)))
+  }
+
+  test("rows inside each file are in orderBy order, one-file and multi-file") {
+    // pins behavior: read each file UNSORTED (one small file is one split,
+    // read in file order)
+    for ((n, rpf) <- Seq((80, 100), (350, 100))) {
+      val df = spark.range(n).select(expr("id ^ 77").as("k")).repartition(3)
+      val out = tmpDir()
+      val files = Export.exportTable(df, keyCfg("ord", rpf), Seq("k"), out)
+      assert(files.length === (n + rpf - 1) / rpf)
+      files.foreach { f =>
+        val ks = spark.read.parquet(s"$out/${f.fileName}").collect().map(_.getLong(0))
+        assert(ks.length === f.rows)
+        assert(ks.toSeq === ks.sorted.toSeq, s"n=$n ${f.fileName} is not in key order")
+      }
+    }
+  }
+
+  test("the source is computed once per partition, for one-file and three-file tables") {
+    for (n <- Seq(60, 250)) {
+      val computes = spark.sparkContext.longAccumulator(s"computes_$n")
+      val rows = spark.sparkContext.parallelize(0 until n, 4).mapPartitions { it =>
+        computes.add(1)
+        it.map(i => org.apache.spark.sql.Row((i * 7919L) % 10007))
+      }
+      val df = spark.createDataFrame(rows,
+        StructType(Seq(StructField("k", LongType))))
+      val files = Export.exportTable(df, keyCfg("once", 100), Seq("k"), tmpDir())
+      assert(files.length === (n + 99) / 100)
+      assert(files.map(_.rows).sum === n)
+      assert(computes.value === 4L, s"n=$n: source partitions computed ${computes.value} times")
+    }
+  }
+
+  private def threeTables(): Seq[(org.apache.spark.sql.DataFrame, TableConfig, Seq[String])] =
+    Seq(
+      (spark.range(1234).select(expr("id ^ 555").as("k")), keyCfg("ta", 500), Seq("k")),
+      (spark.range(321).select(col("id").as("k")), keyCfg("tb", 500, Some("zstd")), Seq("k")),
+      (spark.range(777).select(expr("id ^ 3").as("k")), keyCfg("tc", 400), Seq("k")))
+
+  test("concurrent exportAll writes what exporting the tables one at a time writes") {
+    val one = tmpDir()
+    val seqFiles = threeTables().map { case (df, cfg, ob) =>
+      cfg.name -> Export.exportTable(df, cfg, ob, one).map(_.objectName)
+    }
+    val all = tmpDir()
+    val m = Export.exportAll(threeTables(), all)
+    assert(m.files === seqFiles)
+    assert(m.files.map(_._2.length) === Seq(3, 1, 2))
+    val a = filesIn(all).filter { case (f, _) => !f.contains("manifest.json") }
+    val b = filesIn(one)
+    assert(a.keySet === b.keySet)
+    a.foreach { case (f, bytes) => assert(bytes === b(f), s"$f differs") }
+  }
+
+  test("one table's rename failure aborts exportAll manifest-less and ends every thread") {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.flaky.impl", classOf[FlakyRenameFileSystem].getName)
+    val local = tmpDir()
+    FlakyRenameFileSystem.onlyTable.set("tb")
+    val e =
+      try intercept[IllegalArgumentException] {
+        Export.exportAll(threeTables(), "flaky://" + local)
+      } finally FlakyRenameFileSystem.onlyTable.set(null)
+    assert(e.getMessage.contains("tb: rename"), e.getMessage)
+    assert(!Files.exists(java.nio.file.Paths.get(s"$local/manifest.json")))
+    val alive = Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-export-"))
+    assert(alive.isEmpty, s"export threads left: ${alive.map(_.getName)}")
+  }
+
+  test("exportAll rejects an empty table list and repeated table names, naming them") {
+    val out = tmpDir()
+    val none = intercept[IllegalArgumentException](Export.exportAll(Nil, out))
+    assert(none.getMessage.contains("no tables"), none.getMessage)
+    val df = spark.range(10).select(col("id").as("k"))
+    val twice = intercept[IllegalArgumentException] {
+      Export.exportAll(Seq((df, keyCfg("dup", 5), Seq("k")),
+        (df, keyCfg("ok", 5), Seq("k")), (df, keyCfg("dup", 5), Seq("k"))), out)
+    }
+    assert(twice.getMessage.contains("repeated: dup"), twice.getMessage)
+    assert(!Files.list(java.nio.file.Paths.get(out)).iterator().hasNext,
+      "a rejected table list must write nothing")
+  }
+
+  test("runFromEnv rejects a DEBUG_OFFSET outside 0..Int.MaxValue, naming it") {
+    for (bad <- Seq("4294967297", "3000000000", "-1", "ten", " 5")) {
+      val e = intercept[IllegalArgumentException] {
+        Export.runFromEnv(_ => fail("no source may be read"), _ => Seq("id"),
+          tmpDir(), Map("DEBUG_TABLE" -> "contracts", "DEBUG_OFFSET" -> bad))
+      }
+      assert(e.getMessage.contains(s"DEBUG_OFFSET") &&
+        e.getMessage.contains(s"'$bad'"), e.getMessage)
+    }
   }
 
   test("S6: outDir as a file:// URI behaves identically to a bare path") {
@@ -435,7 +565,6 @@ class ExportSpec extends SparkSpec {
     // identically — build that state in a copy of the chain
     val coexist = tmpDir()
     def copyTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
-      import scala.jdk.CollectionConverters._
       java.nio.file.Files.walk(src).iterator().asScala.foreach { p =>
         val q = dst.resolve(src.relativize(p))
         if (Files.isDirectory(p)) Files.createDirectories(q)

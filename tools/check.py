@@ -5,12 +5,12 @@ Usage: python3 tools/check.py [sfDir] [outDir]
 
 Runs nothing itself — expects `sbt "runMain graft.Verify <sfDir> <outDir>"`
 to have produced <outDir>/<query>/ parquet dumps + oracle_sql.json. For each
-query: registers every testdata parquet as a DuckDB view, runs the oracle
-SQL, loads the Spark result, sorts columns by name, and compares rows via a
-DTYPE-AWARE canonical string per cell (the driver's hash is type-sensitive:
-7 vs 7.0 must FAIL here too, which plain tuple == would hide). Known
-driver-equivalences are canonicalized the same way the driver does:
-DATE == midnight TIMESTAMP (pandas reads date32 as date objects while
+query: registers every testdata parquet the corpus holds as a DuckDB view,
+runs the oracle SQL, loads the Spark result, sorts columns by name, and
+compares rows via a DTYPE-AWARE canonical string per cell (the driver's hash
+is type-sensitive: 7 vs 7.0 must FAIL here too, which plain tuple == would
+hide). Known driver-equivalences are canonicalized the same way the driver
+does: DATE == midnight TIMESTAMP (pandas reads date32 as date objects while
 DuckDB hands back datetime64 — the driver passes those), and DECIMAL
 compares numerically against DuckDB's float64 conversion.
 
@@ -87,8 +87,12 @@ def main():
     con = duckdb.connect()
     for t in TABLES:
         # driver testdata ships single-file tables; Tool genscale/genskew
-        # corpora are Spark-written DIRECTORIES — glob those
+        # corpora are Spark-written DIRECTORIES — glob those. A table the
+        # corpus lacks (Tool genspan writes only events) gets no view, so a
+        # query that reads it fails with DuckDB naming the table.
         src = f"{sf_dir}/{t}.parquet"
+        if not Path(src).exists():
+            continue
         if Path(src).is_dir():
             src = f"{src}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{src}'")
