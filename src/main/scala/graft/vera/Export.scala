@@ -42,9 +42,11 @@ import java.util.concurrent.atomic.AtomicReference
   *       task → `partitionBy("__bucket")` emits exactly one parquet file per
   *       bucket.
   *
-  * (With adaptive execution each shuffle adds a job for its map stage, and
-  * the count of a persisted frame runs as three.) Either way a driver
-  * rename pass applies the reference's names. The last short file keeps the
+  * With adaptive execution each shuffle adds a job for its map stage, so a
+  * one-file table runs 2 jobs and a many-file table 6: the count, the
+  * sampling, the range shuffle's map stage, `zipWithIndex`'s count, the
+  * bucket shuffle's map stage, the write. Either way a driver rename pass
+  * applies the reference's names. The last short file keeps the
   * nominal full-range name, exactly like the reference (main.py:222,252-254),
   * and holds `n - (F-1) * rowsPerFile` rows.
   *
@@ -166,8 +168,11 @@ object Export {
       // The count is the only read of the source, and the result of an
       // action is exact under task retries and speculation (an
       // accumulator or observe() in a transformation is not), so the file
-      // count and the tail rows below need no plausibility bound.
-      val n = normalized.count()
+      // count and the tail rows below need no plausibility bound. Counting
+      // the physical rows fills the cache in one job; `normalized.count()`
+      // plans an aggregate over the cached relation, which adaptive
+      // execution runs as three (cache build, map stage, final aggregate).
+      val n = normalized.queryExecution.toRdd.count()
       val nFiles = (n + rpf - 1) / rpf
       val codec = cfg.compression.getOrElse("none")
       if (nFiles == 0) {

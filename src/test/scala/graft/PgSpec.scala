@@ -1,6 +1,7 @@
 package graft
 
 import graft.vera._
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import org.scalatest.BeforeAndAfterAll
@@ -56,31 +57,122 @@ class PgSpec extends SparkSpec with BeforeAndAfterAll {
 
   private def conn() = new PgWire.Conn("127.0.0.1", port, db, dbUser)
 
-  test("COPY text decoding: tab split, \\N vs empty string, backslash " +
-      "escapes, octal, bytea hex — the pure layer, no server needed") {
-    assert(PgWire.splitCopyLine("a\tb\tc").toSeq === Seq("a", "b", "c"))
-    assert(PgWire.splitCopyLine("a\t\\N\t").toSeq === Seq("a", null, ""))
-    // an ESCAPED tab stays inside its field; a literal backslash-N is not null
-    assert(PgWire.splitCopyLine("x\\ty\tz").toSeq === Seq("x\\ty", "z"))
-    assert(PgWire.splitCopyLine("\\\\N").toSeq === Seq("\\\\N"))
-    assert(PgWire.unescapeCopy("x\\ty") === "x\ty")
-    assert(PgWire.unescapeCopy("a\\nb\\rc\\\\d") === "a\nb\rc\\d")
-    assert(PgWire.unescapeCopy("\\\\N") === "\\N") // content, not SQL NULL
-    assert(PgWire.unescapeCopy("\\101\\12") === "A\n") // octal
-    // r20: octal escapes are BYTES — a multi-byte UTF-8 char arriving as
-    // consecutive \ddd escapes must decode as one sequence (é = C3 A9;
-    // the per-escape toChar route produced mojibake Ã©)
-    assert(PgWire.unescapeCopy("\\303\\251") === "é")
-    assert(PgWire.unescapeCopy("a\\303\\251b\\tc") === "aéb\tc")
-    assert(PgWire.parseValue("t", BooleanType) === true)
-    assert(PgWire.parseValue("f", BooleanType) === false)
-    assert(PgWire.parseValue("-42", IntegerType) === -42)
-    assert(PgWire.parseValue("9007199254740993", LongType) === 9007199254740993L)
-    assert(PgWire.parseValue("\\\\x00ff10", BinaryType)
-      .asInstanceOf[Array[Byte]].toSeq === Seq[Byte](0, -1, 16))
-    assert(PgWire.parseValue("2024-06-01 12:00:07.123456", TimestampNTZType)
-      === java.time.LocalDateTime.parse("2024-06-01T12:00:07.123456"))
-    assert(PgWire.parseValue(null, StringType) === null)
+  // ------------------------------------------- binary COPY, synthetic
+
+  private val signature =
+    "PGCOPY\n".getBytes("US-ASCII") ++ Array[Byte](-1, 13, 10, 0)
+
+  /** A binary COPY stream: header (no flags, empty extension), one tuple
+    * per row (None is NULL), trailer. */
+  private def copyStream(rows: Seq[Seq[Option[Array[Byte]]]],
+      sig: Array[Byte] = signature): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream
+    val d = new java.io.DataOutputStream(out)
+    d.write(sig); d.writeInt(0); d.writeInt(0)
+    rows.foreach { r =>
+      d.writeShort(r.length)
+      r.foreach {
+        case None => d.writeInt(-1)
+        case Some(b) => d.writeInt(b.length); d.write(b)
+      }
+    }
+    d.writeShort(-1)
+    out.toByteArray
+  }
+
+  private def feed(payloads: Seq[Array[Byte]]): PgWire.CopyFeed =
+    new PgWire.CopyFeed {
+      private val it = payloads.iterator
+      private var cur: Array[Byte] = null
+      def nextLength(): Int =
+        if (it.hasNext) { cur = it.next(); cur.length } else -1
+      def read(dst: Array[Byte], off: Int, len: Int): Unit =
+        System.arraycopy(cur, 0, dst, off, len)
+    }
+
+  private def decode(schema: StructType, payloads: Array[Byte]*): Seq[Row] =
+    new PgWire.BinaryRows("syn", schema, feed(payloads)).toList
+
+  private def be(bytes: Int, v: Long): Array[Byte] =
+    Array.tabulate(bytes)(i => (v >>> (8 * (bytes - 1 - i))).toByte)
+  private def utf8(s: String) = Some(s.getBytes("UTF-8"))
+  private val pgEpoch = java.time.LocalDateTime.of(2000, 1, 1, 0, 0)
+  private def pgTs(t: String) = Some(be(8,
+    java.time.temporal.ChronoUnit.MICROS.between(pgEpoch,
+      java.time.LocalDateTime.parse(t))))
+
+  private val synSchema = StructType(Seq(
+    StructField("s", StringType), StructField("b", BinaryType),
+    StructField("i", IntegerType), StructField("l", LongType),
+    StructField("t", BooleanType), StructField("ts", TimestampNTZType)))
+  private val allBytes = Array.tabulate(256)(_.toByte)
+  private val synRows: Seq[Seq[Option[Array[Byte]]]] = Seq(
+    Seq(None, None, None, None, None, None),
+    Seq(utf8(""), Some(Array.empty[Byte]), Some(be(4, Int.MinValue)),
+      Some(be(8, Long.MinValue)), Some(Array[Byte](0)),
+      pgTs("1969-12-31T23:59:59.999999")),
+    Seq(utf8("tab\tnl\nback\\slash \\N \uD834\uDD1E"), Some(allBytes),
+      Some(be(4, Int.MaxValue)), Some(be(8, Long.MaxValue)), Some(Array[Byte](1)),
+      pgTs("1999-12-31T23:59:59.000001")),
+    Seq(utf8("\\N"), Some(Array[Byte](0)), Some(be(4, -42)), Some(be(8, 0)),
+      Some(Array[Byte](1)), pgTs("1900-03-01T00:00:00.5")))
+  private val synExpected: Seq[Seq[Any]] = Seq(
+    Seq(null, null, null, null, null, null),
+    Seq("", Seq.empty[Byte], Int.MinValue, Long.MinValue, false,
+      java.time.LocalDateTime.parse("1969-12-31T23:59:59.999999")),
+    Seq("tab\tnl\nback\\slash \\N \uD834\uDD1E", allBytes.toSeq,
+      Int.MaxValue, Long.MaxValue, true,
+      java.time.LocalDateTime.parse("1999-12-31T23:59:59.000001")),
+    Seq("\\N", Seq[Byte](0), -42, 0L, true,
+      java.time.LocalDateTime.parse("1900-03-01T00:00:00.5")))
+  private def plain(rows: Seq[Row]): Seq[Seq[Any]] = rows.map(_.toSeq.map {
+    case b: Array[Byte] => b.toSeq
+    case v => v
+  })
+
+  test("binary COPY decoder: NULL vs empty, text verbatim (tab, newline, " +
+      "backslash, \\N, 4-byte UTF-8), bytea, int/bool bounds, pre-1970 " +
+      "and pre-2000 µs timestamps — the pure layer, no server") {
+    val rows = decode(synSchema, copyStream(synRows))
+    assert(plain(rows) === synExpected)
+    assert(rows.head.isNullAt(0) && rows(1).getString(0) === "",
+      "NULL and the empty string must stay distinct")
+    assert(decode(StructType(Seq(StructField("d", DoubleType))),
+      copyStream(Seq(Seq(Some(be(8, java.lang.Double.doubleToLongBits(-0.125)))))))
+      .map(_.getDouble(0)) === Seq(-0.125))
+  }
+
+  test("binary COPY decoder: a stream split at every byte offset across " +
+      "two CopyData payloads decodes identically") {
+    val bytes = copyStream(synRows)
+    for (k <- 0 to bytes.length) {
+      val rows = decode(synSchema, bytes.take(k), bytes.drop(k))
+      assert(plain(rows) === synExpected, s"split at byte $k")
+    }
+    // and one payload per byte
+    assert(plain(decode(synSchema, bytes.map(b => Array(b)).toSeq: _*)) === synExpected)
+  }
+
+  test("binary COPY decoder fails loudly on a bad signature, a field-count " +
+      "mismatch, an infinite timestamp and a truncated stream, naming the " +
+      "table and column") {
+    def failure(schema: StructType, bytes: Array[Byte]): String =
+      intercept[IllegalStateException](decode(schema, bytes)).getMessage
+    val bad = signature.clone(); bad(0) = 'Q'.toByte
+    val sig = failure(synSchema, copyStream(synRows, bad))
+    assert(sig.contains("syn") && sig.contains("signature"), sig)
+    val count = failure(synSchema, copyStream(Seq(Seq(utf8("x")))))
+    assert(count.contains("syn") && count.contains("1 fields, expected 6"), count)
+    val tsSchema = StructType(Seq(StructField("created_at", TimestampNTZType)))
+    for ((v, word) <- Seq((Long.MaxValue, "infinity"), (Long.MinValue, "-infinity"))) {
+      val inf = failure(tsSchema, copyStream(Seq(Seq(Some(be(8, v))))))
+      assert(inf.contains("syn") && inf.contains("created_at") &&
+        inf.contains(s"timestamp $word"), inf)
+    }
+    val whole = copyStream(Seq(Seq(utf8("abc"))))
+    val cut = failure(StructType(Seq(StructField("name", StringType))),
+      whole.take(whole.length - 4))
+    assert(cut.contains("syn") && cut.contains("column name"), cut)
   }
 
   test("wire client against a live server: startup (trust), DDL + INSERT " +
@@ -252,5 +344,78 @@ class PgSpec extends SparkSpec with BeforeAndAfterAll {
       assert(back.schema === cfg.schema, s"${cfg.name} schema drift")
       assert(back.count() === 3L, s"${cfg.name} row count")
     }
+  }
+
+  test("timestamptz exports as its UTC wall clock under a non-UTC database " +
+      "TimeZone; a naive timestamp exports unchanged") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    val tzDb = "graft_tz"
+    val admin = conn()
+    try {
+      admin.exec(s"DROP DATABASE IF EXISTS $tzDb")
+      admin.exec(s"CREATE DATABASE $tzDb")
+      admin.exec(s"ALTER DATABASE $tzDb SET TimeZone TO 'America/Sao_Paulo'")
+    } finally admin.close()
+    val c = new PgWire.Conn("127.0.0.1", port, tzDb, dbUser)
+    try {
+      // the database default is not UTC; the client's session is
+      assert(c.scalar("SELECT setconfig::text FROM pg_db_role_setting s " +
+        s"JOIN pg_database d ON d.oid = s.setdatabase WHERE datname = '$tzDb'")
+        === Some("{TimeZone=America/Sao_Paulo}"))
+      assert(c.scalar("SHOW TimeZone") === Some("UTC"))
+      c.exec("CREATE TABLE audit(id bigint, changed_at timestamptz, " +
+        "logged_at timestamp)")
+      c.exec("INSERT INTO audit VALUES " +
+        "(1, '2024-06-01 12:00:00.25+02', '2024-06-01 12:00:00.25'), " +
+        "(2, '2024-06-01 12:00:00-05', '1999-12-31 23:59:59.000001'), " +
+        "(3, NULL, NULL)")
+    } finally c.close()
+    val cfg = TableConfig("audit",
+      Schemas.fromDtypes(Seq("id" -> "Int64",
+        "changed_at" -> "datetime64[ns]", "logged_at" -> "datetime64[ns]")),
+      chunkSize = 10, numChunksPerFile = 10, compression = None)
+    val out = Files.createTempDirectory("graft_pg_tz_out").toString
+    val files = Export.exportTable(
+      PgWire.scan(spark, "127.0.0.1", port, tzDb, dbUser, "public", cfg),
+      cfg, Seq("id"), out)
+    val back = spark.read.parquet(files.map(f => s"$out/${f.fileName}"): _*)
+      .orderBy("id").collect()
+    def ts(v: Any) = Option(v).map(_.toString).orNull
+    assert(back.map(r => (r.getLong(0), ts(r.get(1)), ts(r.get(2)))).toSeq === Seq(
+      (1L, "2024-06-01T10:00:00.250", "2024-06-01T12:00:00.250"),
+      (2L, "2024-06-01T17:00", "1999-12-31T23:59:59.000001"),
+      (3L, null, null)))
+  }
+
+  test("a server error inside a slice's COPY names the table and the " +
+      "slice predicate") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    val c = conn()
+    try {
+      c.exec("CREATE SCHEMA IF NOT EXISTS vera")
+      c.exec("DROP TABLE IF EXISTS vera.wide")
+      c.exec("CREATE TABLE vera.wide(id bigint, v bigint)")
+      c.exec("INSERT INTO vera.wide SELECT i, CASE WHEN i = 5 " +
+        "THEN 3000000000 ELSE i END FROM generate_series(0, 7) i")
+    } finally c.close()
+    // v is declared Int32 over a bigint column: its int4 cast overflows
+    val cfg = TableConfig("wide",
+      Schemas.fromDtypes(Seq("id" -> "Int64", "v" -> "Int32")),
+      chunkSize = 10, numChunksPerFile = 10, compression = None)
+    val df = PgWire.scan(spark, "127.0.0.1", port, db, dbUser, "vera", cfg,
+      partitionColumn = Some("id"), lowerBound = 0L, upperBound = 8L,
+      numPartitions = 4)
+    val e = intercept[Exception](df.collect())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("pgwire: wide, slice id >= 4 AND id < 6: " +
+      "ERROR: integer out of range"), msgs)
+    // the other slices are fine: a declared Int64 reads the same rows
+    val ok = cfg.copy(schema = Schemas.fromDtypes(
+      Seq("id" -> "Int64", "v" -> "Int64")))
+    assert(PgWire.scan(spark, "127.0.0.1", port, db, dbUser, "vera", ok,
+      partitionColumn = Some("id"), lowerBound = 0L, upperBound = 8L,
+      numPartitions = 4).collect().map(_.getLong(1)).sorted.toSeq ===
+      Seq(0L, 1L, 2L, 3L, 4L, 6L, 7L, 3000000000L))
   }
 }
