@@ -41,7 +41,8 @@ import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRela
   *
   * This object is the engine's one parquet footer reader: [[parquetSplits]]
   * (Fan's scan-split bound) reads its file sizes off the same listing and
-  * opens a footer only where the row-group count can change the answer.
+  * opens a footer only where the row-group count can change the answer,
+  * and the export's stitch ([[graft.vera.Export]]) opens its parts here.
   */
 object PlanStats {
 
@@ -58,8 +59,8 @@ object PlanStats {
       if (files.length > MaxFooterFiles) None else Some(files)
     }
 
-  private def readFooter(f: FileStatus, conf: Configuration)(
-      read: ParquetFileReader => Long): Long = {
+  private[graft] def readFooter[T](f: FileStatus, conf: Configuration)(
+      read: ParquetFileReader => T): T = {
     val r = ParquetFileReader.open(HadoopInputFile.fromStatus(f, conf))
     try read(r) finally r.close()
   }

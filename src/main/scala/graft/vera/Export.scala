@@ -1,9 +1,19 @@
 package graft.vera
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{ParquetFileWriter, ParquetWriter}
+import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
+import org.apache.spark.OneToOneDependency
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Cast, NamedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.storage.StorageLevel
+
+import graft.operators.PlanStats
 
 import java.time.Instant
 import java.util.concurrent.atomic.AtomicReference
@@ -16,10 +26,30 @@ import java.util.concurrent.atomic.AtomicReference
   * `chunk_size × num_chunks_per_file` rows and names each file by its
   * nominal row range (`{table}_{i*rpf}_{(i+1)*rpf}[_{codec}].parquet`,
   * main.py:94-98,222). Reproducing those DETERMINISTIC range names on Spark
-  * needs a stable global row index. [[exportTable]] first persists the
-  * normalized source (`MEMORY_AND_DISK`) and counts it: that count job is
-  * the ONE read of the source, and every later job reads the persisted rows.
-  * The count `n` fixes the file count `F = ceil(n / rowsPerFile)`:
+  * needs a stable global row index: file `f` holds rows
+  * `[f·rowsPerFile, (f+1)·rowsPerFile)` of the order key's ascending order.
+  * [[exportTable]] gets it one of two ways.
+  *
+  * Sliced (a bare [[PgWire.scan]], or one under [[Normalize]]'s column-keeping
+  * projections, ordered on one string, binary, int or long column): the
+  * driver plans [[PgWire.slices]] under one exported snapshot, so `n` and
+  * every slice's row range are known before any job runs, and every slice
+  * lies inside one file. ONE job writes slice i, `sortWithinPartitions`
+  * on the key (a local sort, no exchange), to part i; the driver moves a
+  * one-slice file's part into its bucket directory and stitches a
+  * several-slice file's parts in slice order (`ParquetFileWriter.
+  * appendFile`, row groups copied without a re-encode). Jobs: 1, none for
+  * an empty table; no persist, no count job, no shuffle. Deterministic:
+  * the slices are row ranges of one snapshot in the key's total order, a
+  * retried task re-imports that snapshot and streams the same rows (its
+  * row count is checked against the plan), and the local sort orders them
+  * within the slice. A slice start on a NULL or repeated key would make
+  * the ranges inexact, so such a table takes the persisted path.
+  *
+  * Persisted (every other frame): [[exportTable]] persists the normalized
+  * source (`MEMORY_AND_DISK`) and counts it: that count job is the ONE
+  * read of the source, and every later job reads the persisted rows. The
+  * count `n` fixes the file count `F = ceil(n / rowsPerFile)`:
   *
   *  - `F == 0`: nothing is written. Jobs: the count.
   *  - `F == 1`: the whole table is one file, so a global index would compute
@@ -45,15 +75,20 @@ import java.util.concurrent.atomic.AtomicReference
   * With adaptive execution each shuffle adds a job for its map stage, so a
   * one-file table runs 2 jobs and a many-file table 6: the count, the
   * sampling, the range shuffle's map stage, `zipWithIndex`'s count, the
-  * bucket shuffle's map stage, the write. Either way a driver rename pass
-  * applies the reference's names. The last short file keeps the
-  * nominal full-range name, exactly like the reference (main.py:222,252-254),
-  * and holds `n - (F-1) * rowsPerFile` rows.
+  * bucket shuffle's map stage, the write.
   *
-  * At 100 TB this is one read of the source, the persisted copy (memory,
-  * spilling to local disk), two shuffles of the exported table (range +
-  * bucket) and O(#partitions + #files) driver state — no collect of data
-  * rows anywhere. [[exportAll]] exports its tables side by side.
+  * Either way the files land in `__bucket=<f>/` staging directories and
+  * one driver rename pass applies the reference's names. The last short
+  * file keeps the nominal full-range name, exactly like the reference
+  * (main.py:222,252-254), and holds `n - (F-1) * rowsPerFile` rows. On
+  * distinct keys the two ways write the same files with the same rows.
+  *
+  * At 100 TB the persisted path is one read of the source, the persisted
+  * copy (memory, spilling to local disk), two shuffles of the exported
+  * table (range + bucket) and O(#partitions + #files) driver state; the
+  * sliced path is one read and a driver copy of each multi-slice file's
+  * bytes. Neither collects a data row. [[exportAll]] exports its tables
+  * side by side.
   *
   * Manifest (`write_manifest`, main.py:103-113): same shape
   * (`timestamp` epoch-ms, `dateStr`, `files: {table: [objectKey]}`), with one
@@ -122,6 +157,10 @@ object Export {
     * the map stage read the SAME materialized rows: the bounds are drawn
     * from exactly the rows that get partitioned, and neither re-reads the
     * source.
+    *
+    * The sliced path needs no index: its plan fixes each slice's row range
+    * in one snapshot before any job runs, and a retried slice streams the
+    * same rows, count-checked (the object doc).
     */
   private[vera] def withGlobalIndex(
       df: DataFrame, orderBy: Seq[String], numPartitions: Int): DataFrame = {
@@ -142,12 +181,18 @@ object Export {
 
   /** Normalize + export one table (S4/S5/S7 write-side): size-rotated files
     * with row-range names under `outDir/`. Returns the per-file inventory in
-    * file order (the manifest rows). Reads the source once (the count that
-    * fixes the file count); the jobs per path are in the object doc.
+    * file order (the manifest rows). A [[PgWire.scan]] frame ordered on one
+    * column is exported in slices under one snapshot; any other frame is
+    * read once (the count that fixes the file count). The jobs per path are
+    * in the object doc.
     *
     * @param orderBy stable total-order key (the reference's "order" is the
     *                Postgres cursor order; a distributed engine must name one
     *                explicitly — primary key columns).
+    * @param numPartitions the export's parallelism: the slices of a sliced
+    *                scan (default: the context's default parallelism), the
+    *                range partitions of the global index otherwise (default:
+    *                the session's shuffle partitions).
     */
   def exportTable(
       df: DataFrame,
@@ -157,12 +202,121 @@ object Export {
       numPartitions: Int = 0,
   ): Seq[ExportedFile] = {
     val spark = df.sparkSession
-    val nParts =
-      if (numPartitions > 0) numPartitions
-      else spark.sessionState.conf.numShufflePartitions
-    val rpf = cfg.rowsPerFile
     val staging = s"$outDir/.staging_${cfg.name}"
     val fs = FileSystem.get(new java.net.URI(outDir), spark.sparkContext.hadoopConfiguration)
+    val sliced = orderBy match {
+      case Seq(key) =>
+        pgSource(df, cfg).flatMap(PgWire.slices(spark, _, cfg.schema, key,
+          cfg.rowsPerFile,
+          if (numPartitions > 0) numPartitions else spark.sparkContext.defaultParallelism))
+      case _ => None
+    }
+    sliced match {
+      case Some(plan) =>
+        try writeSlices(plan, cfg, orderBy.head, fs, staging, outDir)
+        finally plan.close()
+      case None =>
+        val nParts =
+          if (numPartitions > 0) numPartitions
+          else spark.sessionState.conf.numShufflePartitions
+        writeSorted(df, cfg, orderBy, nParts, fs, staging, outDir)
+    }
+  }
+
+  /** The [[PgWire.scan]] `df` reads, when `df` is that scan under
+    * projections that keep each column by name at its declared type (the
+    * shape of [[Normalize]]: a column, or a same-type cast of it under its
+    * own name) and its columns are `cfg`'s. */
+  private def pgSource(df: DataFrame, cfg: TableConfig): Option[PgWire.Source] = {
+    def keeps(e: NamedExpression): Boolean = e match {
+      case _: AttributeReference => true
+      case Alias(c: Cast, name) => c.child match {
+        case a: AttributeReference => a.name == name && a.dataType == c.dataType
+        case _ => false
+      }
+      case _ => false
+    }
+    def scanOf(p: LogicalPlan): Option[PgWire.Source] = p match {
+      case Project(list, child) if list.forall(keeps) => scanOf(child)
+      // the scan's frame is its SliceRDD behind the row converter
+      case r: LogicalRDD => r.rdd.dependencies match {
+        case Seq(d: OneToOneDependency[_]) => d.rdd match {
+          case s: PgWire.SliceRDD => Some(s.source)
+          case _ => None
+        }
+        case _ => None
+      }
+      case _ => None
+    }
+    val columns = (s: StructType) => s.fields.toSeq.map(f => (f.name, f.dataType))
+    if (columns(df.schema) != columns(cfg.schema)) None
+    else scanOf(df.queryExecution.analyzed)
+  }
+
+  /** The sliced path: one job writes slice i, sorted on `key`, to part i;
+    * then each file's parts go to its bucket directory, moved when the
+    * file is one slice and stitched in slice order when it is several. */
+  private def writeSlices(plan: PgWire.Slices, cfg: TableConfig, key: String,
+      fs: FileSystem, staging: String, outDir: String): Seq[ExportedFile] = {
+    val rpf = cfg.rowsPerFile
+    val n = plan.rows.sum
+    val nFiles = (n + rpf - 1) / rpf
+    if (nFiles == 0) {
+      fs.mkdirs(new Path(outDir))
+      return Seq.empty
+    }
+    // a stale staging tree from a crashed run must not add buckets
+    fs.delete(new Path(staging), true)
+    val slicesDir = new Path(s"$staging/__slices")
+    Normalize(plan.frame, cfg).sortWithinPartitions(col(key))
+      .write.mode("overwrite")
+      .option("compression", cfg.compression.getOrElse("none"))
+      .parquet(slicesDir.toString)
+    // part-<partition>-<job>...parquet: one per slice, empty slices being
+    // impossible (every slice's row count was checked against its plan)
+    val parts = fs.listStatus(slicesDir)
+      .filter(f => f.getPath.getName.startsWith("part-") && f.getPath.getName.endsWith(".parquet"))
+      .map(f => f.getPath.getName.stripPrefix("part-").takeWhile(_.isDigit).toInt -> f)
+      .toSeq.sortBy(_._1)
+    require(parts.map(_._1) == plan.rows.indices,
+      s"${cfg.name}: expected parts 0..${plan.rows.length - 1}, " +
+        s"listed {${parts.map(_._1).mkString(",")}} (object-store listing inconsistency?)")
+    val starts = plan.rows.scanLeft(0L)(_ + _)
+    val conf = fs.getConf
+    parts.groupBy { case (i, _) => starts(i) / rpf }.foreach { case (fileNo, inFile) =>
+      val bucketDir = new Path(s"$staging/__bucket=$fileNo")
+      fs.mkdirs(bucketDir)
+      inFile.sortBy(_._1).map(_._2) match {
+        case Seq(one) =>
+          val dest = new Path(bucketDir, one.getPath.getName)
+          require(fs.rename(one.getPath, dest),
+            s"${cfg.name}: rename ${one.getPath} -> $dest failed")
+        case several => stitch(several, new Path(bucketDir, "part-stitched.parquet"), conf)
+      }
+    }
+    renameStaged(fs, staging, outDir, cfg, nFiles, n)
+  }
+
+  /** `parts` concatenated into `dest` row group by row group, bytes copied
+    * without a re-encode; the footer keeps the first part's key-value
+    * metadata, Spark's row metadata among it. */
+  private def stitch(parts: Seq[FileStatus], dest: Path, conf: Configuration): Unit = {
+    val (schema, meta) = PlanStats.readFooter(parts.head, conf)(r =>
+      (r.getFileMetaData.getSchema, r.getFileMetaData.getKeyValueMetaData))
+    val w = new ParquetFileWriter(HadoopOutputFile.fromPath(dest, conf), schema,
+      ParquetFileWriter.Mode.CREATE, ParquetWriter.DEFAULT_BLOCK_SIZE, 0)
+    try {
+      w.start()
+      parts.foreach(p => w.appendFile(HadoopInputFile.fromStatus(p, conf)))
+      w.end(meta)
+    } finally w.close()
+  }
+
+  /** The persisted path: read the source once into the cache, count it,
+    * and write one file straight from the cache or index it globally. */
+  private def writeSorted(df: DataFrame, cfg: TableConfig, orderBy: Seq[String],
+      nParts: Int, fs: FileSystem, staging: String, outDir: String): Seq[ExportedFile] = {
+    val rpf = cfg.rowsPerFile
     val normalized = Normalize(df, cfg).persist(StorageLevel.MEMORY_AND_DISK)
     try {
       // The count is the only read of the source, and the result of an

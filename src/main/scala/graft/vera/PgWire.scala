@@ -4,6 +4,8 @@ import java.io.{BufferedInputStream, BufferedOutputStream, DataInputStream, Data
 import java.net.Socket
 import java.nio.charset.StandardCharsets.UTF_8
 
+import org.apache.spark.{Partition, SparkContext, TaskContext}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 
@@ -19,17 +21,28 @@ import org.apache.spark.sql.types._
   * PostgreSQL 15 server exists on the box but no pgjdbc jar does, and the
   * wire protocol is public and stable
   * (https://www.postgresql.org/docs/current/protocol.html) — so the
-  * literal reference scenario runs for real: Postgres server → range-
-  * partitioned parallel scan → Normalize → Export.
+  * literal reference scenario runs for real: Postgres server → sliced
+  * parallel scan → Normalize → Export.
   *
-  * Spark-first shape: the DRIVER never pulls rows — it sends optional
-  * min/max bounds queries; each EXECUTOR partition opens its own
-  * connection and streams its key-range slice via `COPY (SELECT ...) TO
-  * STDOUT (FORMAT binary)`, the same rows the reference's cursor would
-  * produce but N-way parallel (the same structural upgrade [[Jdbc.scan]]
-  * makes on the JDBC leg). COPY's stream is backpressured by the socket,
-  * so there is no fetchsize knob to tune and no whole-table buffering
-  * anywhere; memory per task is one row plus one read buffer.
+  * Spark-first shape: the DRIVER never pulls rows. Each EXECUTOR
+  * partition opens its own connection and streams one slice of the table
+  * via `COPY (SELECT ... WHERE <slice>) TO STDOUT (FORMAT binary)`; COPY's
+  * stream is backpressured by the socket, so there is no fetchsize knob to
+  * tune and no whole-table buffering anywhere; memory per task is one row
+  * plus one read buffer. The slices come in two shapes:
+  *
+  *  - [[scan]]: range slices of an optional integer partition column
+  *    between driver-side min/max [[bounds]] (the structural upgrade
+  *    [[Jdbc.scan]] makes on the JDBC leg), each COPY in its own implicit
+  *    transaction.
+  *  - [[slices]]: one consistent snapshot, like the reference's one
+  *    cursor. The driver exports a `REPEATABLE READ` snapshot
+  *    (`pg_export_snapshot()`), counts the rows and cuts them on the
+  *    export's order key at chosen row positions, in Spark's ascending
+  *    order of that key; every slice's task imports the snapshot (`SET
+  *    TRANSACTION SNAPSHOT`) and checks its row count at the end of its
+  *    stream. The slices follow each other in key order and their counts
+  *    are exact, so [[Export]] writes each one straight into its file.
   *
   * Binary format, server-side casts: the slice's SELECT casts every column
   * to the wire type of its DECLARED Spark type (`bool`, `int4`, `int8`,
@@ -43,8 +56,10 @@ import org.apache.spark.sql.types._
   * the slice. Every session starts with `TimeZone=UTC`, so a
   * `timestamptz` column casts to its UTC wall clock, the naive form the
   * VerA contract stores (the reference's `tz_convert('UTC')`,
-  * `main.py:117-119`); the client refuses a server whose
-  * `integer_datetimes` is not `on`.
+  * `main.py:117-119`), and with `client_encoding=UTF8`, so the server
+  * converts text from the database's encoding (a LATIN1 `é` arrives as
+  * UTF-8, not as a byte the UTF-8 decode would turn into U+FFFD); the
+  * client refuses a server whose `integer_datetimes` is not `on`.
   *
   * Scope: trust/no-auth logins (the test cluster's config; adding MD5 or
   * SASL is orthogonal plumbing) and the closed VerA dtype vocabulary
@@ -65,7 +80,13 @@ object PgWire {
     private val out = new DataOutputStream(
       new BufferedOutputStream(socket.getOutputStream, 1 << 14))
 
-    startup()
+    /** The server's ParameterStatus values at startup (`server_encoding`,
+      * `integer_datetimes`, ...). A refused login (an unknown database or
+      * user, an auth request, a setting the client cannot read) closes the
+      * socket before it throws. */
+    val parameters: Map[String, String] =
+      try startup()
+      catch { case e: Throwable => socket.close(); throw e }
 
     private def cstr(s: String): Array[Byte] = {
       val b = s.getBytes(UTF_8)
@@ -75,17 +96,20 @@ object PgWire {
     /** StartupMessage: Int32 len, Int32 196608 (v3.0), key\0value\0 pairs,
       * final \0. No leading type byte (the one message without it). The
       * session runs in `TimeZone=UTC`, so a server-side `::timestamp` cast
-      * of a `timestamptz` gives its UTC wall clock. */
-    private def startup(): Unit = {
+      * of a `timestamptz` gives its UTC wall clock, and in
+      * `client_encoding=UTF8`, so text arrives as UTF-8 whatever the
+      * database's encoding. */
+    private def startup(): Map[String, String] = {
       val body = cstr("user") ++ cstr(user) ++ cstr("database") ++
-        cstr(db) ++ cstr("TimeZone") ++ cstr("UTC") ++ Array[Byte](0)
+        cstr(db) ++ cstr("TimeZone") ++ cstr("UTC") ++
+        cstr("client_encoding") ++ cstr("UTF8") ++ Array[Byte](0)
       out.writeInt(8 + body.length)
       out.writeInt(196608)
       out.write(body)
       out.flush()
       // Auth handshake: 'R' AuthenticationOk(0) under trust; then
       // ParameterStatus/BackendKeyData until ReadyForQuery.
-      var integerDatetimes = "(not reported)"
+      val params = Map.newBuilder[String, String]
       var ready = false
       while (!ready) {
         val (tpe, payload) = readMessage()
@@ -96,9 +120,8 @@ object PgWire {
               s"pgwire: unsupported auth method $code (trust-only client)")
           case 'S' =>
             val end = payload.indexOf(0.toByte)
-            if (new String(payload, 0, end, UTF_8) == "integer_datetimes")
-              integerDatetimes =
-                new String(payload, end + 1, payload.length - end - 2, UTF_8)
+            params += new String(payload, 0, end, UTF_8) ->
+              new String(payload, end + 1, payload.length - end - 2, UTF_8)
           case 'K' | 'N' => () // cancel key, notices
           case 'Z' => ready = true
           case 'E' => throw pgError(payload)
@@ -108,11 +131,12 @@ object PgWire {
         }
       }
       // binary timestamps are int64 microseconds only under this setting
-      if (integerDatetimes != "on") {
-        socket.close()
+      val reported = params.result()
+      val integerDatetimes = reported.getOrElse("integer_datetimes", "(not reported)")
+      if (integerDatetimes != "on")
         throw new IllegalStateException(
           s"pgwire: server integer_datetimes is $integerDatetimes, not on")
-      }
+      reported
     }
 
     private def payload(len: Int): Array[Byte] = {
@@ -149,42 +173,26 @@ object PgWire {
     }
 
     /** Run a command (DDL/DML), discard result rows, throw on error. */
-    def exec(sql: String): Unit = {
-      sendQuery(sql)
-      var err: RuntimeException = null
-      var done = false
-      while (!done) {
-        val (tpe, payload) = readMessage()
-        tpe match {
-          case 'Z' => done = true
-          case 'E' => err = pgError(payload)
-          case _ => () // 'T'/'D'/'C'/'N'/... — drained
-        }
-      }
-      if (err != null) throw err
-    }
+    def exec(sql: String): Unit = { rows(sql); () }
 
-    /** Column (name, type OID) pairs off a RowDescription — issued as a
-      * `LIMIT 0` so no rows cross the wire. */
-    def describe(sql: String): Seq[(String, Int)] = {
-      sendQuery(s"SELECT * FROM ($sql) _g LIMIT 0")
-      var cols: Seq[(String, Int)] = Nil
+    /** Every row of a query's result, each column as text (None is NULL). */
+    def rows(sql: String): Seq[IndexedSeq[Option[String]]] = {
+      sendQuery(sql)
+      val result = Seq.newBuilder[IndexedSeq[Option[String]]]
       var err: RuntimeException = null
       var done = false
       while (!done) {
         val (tpe, payload) = readMessage()
         tpe match {
-          case 'T' =>
+          case 'D' =>
             val bb = java.nio.ByteBuffer.wrap(payload)
-            val n = bb.getShort.toInt
-            cols = (0 until n).map { _ =>
-              val sb = new StringBuilder
-              var b = bb.get()
-              while (b != 0) { sb.append(b.toChar); b = bb.get() }
-              bb.getInt; bb.getShort // table oid, attnum
-              val typeOid = bb.getInt
-              bb.getShort; bb.getInt; bb.getShort // typlen, typmod, fmt
-              (sb.toString, typeOid)
+            result += IndexedSeq.fill(bb.getShort.toInt) {
+              val len = bb.getInt
+              Option.when(len >= 0) {
+                val v = new String(payload, bb.position(), len, UTF_8)
+                bb.position(bb.position() + len)
+                v
+              }
             }
           case 'Z' => done = true
           case 'E' => err = pgError(payload)
@@ -192,37 +200,11 @@ object PgWire {
         }
       }
       if (err != null) throw err
-      cols
+      result.result()
     }
 
     /** One scalar text value (first row, first column; null-safe). */
-    def scalar(sql: String): Option[String] = {
-      sendQuery(sql)
-      var v: Option[String] = None
-      var first = true
-      var err: RuntimeException = null
-      var done = false
-      while (!done) {
-        val (tpe, payload) = readMessage()
-        tpe match {
-          case 'D' if first =>
-            first = false
-            val bb = java.nio.ByteBuffer.wrap(payload)
-            bb.getShort // field count
-            val len = bb.getInt
-            if (len >= 0) {
-              val b = new Array[Byte](len)
-              bb.get(b)
-              v = Some(new String(b, UTF_8))
-            }
-          case 'Z' => done = true
-          case 'E' => err = pgError(payload)
-          case _ => ()
-        }
-      }
-      if (err != null) throw err
-      v
-    }
+    def scalar(sql: String): Option[String] = rows(sql).headOption.flatMap(_.head)
 
     /** Send `COPY (sql) TO STDOUT (FORMAT binary)` and return its CopyData
       * payloads as a [[CopyFeed]]. The feed must be read to its end: that
@@ -437,6 +419,84 @@ object PgWire {
 
   // ------------------------------------------------------- Spark source
 
+  /** Where a scan reads: one relation of one database. `offset` (S2)
+    * wraps the table in `(SELECT * FROM t OFFSET n)`, like the JDBC leg's
+    * subquery. */
+  private[graft] final case class Source(
+      host: String, port: Int, db: String, user: String,
+      schemaName: String, table: String, offset: Option[Long]) {
+    def relation: String = offset match {
+      case Some(n) => s"(SELECT * FROM $schemaName.$table OFFSET $n) _o"
+      case None => s"$schemaName.$table"
+    }
+    def connect(): Conn = new Conn(host, port, db, user)
+  }
+
+  private final case class SlicePartition(index: Int) extends Partition
+
+  /** One `COPY` per partition: partition i streams `schema`'s columns of
+    * the rows of `source` that `preds(i)` selects (None: every row). Under
+    * `snapshot` each task first imports that exported snapshot, and with
+    * `rows` each task checks its row count at the end of its stream. A
+    * scan's frame is built straight on this RDD, so the export can read
+    * the scan's [[source]] off the frame. */
+  private[graft] final class SliceRDD(
+      sc: SparkContext, val source: Source, schema: StructType,
+      preds: Seq[Option[String]], snapshot: Option[String] = None,
+      rows: Option[Seq[Long]] = None) extends RDD[Row](sc, Nil) {
+
+    override protected def getPartitions: Array[Partition] =
+      preds.indices.map(SlicePartition).toArray
+
+    override def compute(split: Partition, ctx: TaskContext): Iterator[Row] = {
+      val i = split.index
+      val table = source.table
+      // Postgres does every conversion: each column arrives in the binary
+      // layout of its declared type
+      val colList = schema.fields
+        .map(f => s"${f.name}::${WireTypes(wireKind(f.dataType))} AS ${f.name}")
+        .mkString(", ")
+      val sql = s"SELECT $colList FROM ${source.relation}" +
+        preds(i).fold("")(p => s" WHERE $p")
+      val sliceName = s"slice ${preds(i).getOrElse("(whole table)")}"
+      // a server error names the table and the slice it broke
+      def inSlice[T](body: => T): T =
+        try body catch {
+          case e: ServerError => throw new ServerError(
+            s"pgwire: $table, $sliceName: " + e.getMessage.stripPrefix("pgwire: "), e)
+        }
+      val conn = source.connect()
+      // closing at exhaustion alone leaks the socket when Spark stops
+      // pulling early (limit/take, a task kill, a decode error mid-stream):
+      // the listener closes on success, failure and interruption, and the
+      // close at exhaustion below still frees the socket before task end
+      // (close is idempotent)
+      ctx.addTaskCompletionListener[Unit](_ => conn.close())
+      snapshot.foreach(id => inSlice(conn.exec("BEGIN ISOLATION LEVEL " +
+        s"REPEATABLE READ READ ONLY; SET TRANSACTION SNAPSHOT '$id'")))
+      val it = inSlice(new BinaryRows(table, schema, conn.copyBinary(sql)))
+      new Iterator[Row] {
+        private var seen = 0L
+        private var open = true
+        def hasNext: Boolean = open && {
+          open = inSlice(it.hasNext)
+          if (!open) {
+            conn.close()
+            rows.map(_(i)).filter(_ != seen).foreach(planned =>
+              throw new IllegalStateException(s"pgwire: $table, $sliceName: " +
+                s"streamed $seen rows, the snapshot's plan counted $planned"))
+          }
+          open
+        }
+        def next(): Row = {
+          if (!hasNext) throw new NoSuchElementException
+          seen += 1
+          inSlice(it.next())
+        }
+      }
+    }
+  }
+
   /** Range-partitioned parallel scan — the [[Jdbc.scan]] twin over the
     * wire protocol. Partition predicates mirror Spark's JDBC source:
     * stride slices of [lowerBound, upperBound), first slice taking
@@ -453,16 +513,6 @@ object PgWire {
       upperBound: Long = 0L,
       numPartitions: Int = 1,
       offset: Option[Long] = None): DataFrame = {
-    val relation = offset match {
-      case Some(n) =>
-        s"(SELECT * FROM $schemaName.${cfg.name} OFFSET $n) _o"
-      case None => s"$schemaName.${cfg.name}"
-    }
-    // Postgres does every conversion: each column arrives in the binary
-    // layout of its declared type
-    val colList = cfg.schema.fields
-      .map(f => s"${f.name}::${WireTypes(wireKind(f.dataType))} AS ${f.name}")
-      .mkString(", ")
     val preds: Seq[Option[String]] = partitionColumn match {
       case Some(c) if numPartitions > 1 && upperBound > lowerBound =>
         val stride = math.max(1L, (upperBound - lowerBound) / numPartitions)
@@ -475,54 +525,118 @@ object PgWire {
         }
       case _ => Seq(None)
     }
-    val table = cfg.name
-    val schema = cfg.schema
-    val rdd = spark.sparkContext
-      .parallelize(preds, math.max(1, preds.size))
-      .mapPartitions { it =>
-        it.flatMap { pred =>
-          val sql = s"SELECT $colList FROM $relation" + pred.fold("")(p => s" WHERE $p")
-          // a server error names the table and the slice it broke
-          def inSlice[T](body: => T): T =
-            try body catch {
-              case e: ServerError => throw new ServerError(
-                s"pgwire: $table, slice ${pred.getOrElse("(whole table)")}: " +
-                  e.getMessage.stripPrefix("pgwire: "), e)
-            }
-          val conn = new Conn(host, port, db, dbUser)
-          // r20 (r19 ADVICE): full-consumption close alone leaks the
-          // socket when Spark stops pulling early (limit/take, task kill,
-          // a decode exception mid-stream) — a task-completion listener
-          // closes unconditionally on success, failure, AND interruption;
-          // the eager close below still releases the socket at exhaustion
-          // without waiting for task end (close is idempotent)
-          Option(org.apache.spark.TaskContext.get()).foreach(
-            _.addTaskCompletionListener[Unit](_ => conn.close()))
-          val rows = inSlice(new BinaryRows(table, schema, conn.copyBinary(sql)))
-          new Iterator[Row] {
-            def hasNext: Boolean = {
-              val h = inSlice(rows.hasNext)
-              if (!h) conn.close()
-              h
-            }
-            def next(): Row = inSlice(rows.next())
-          }
+    val source = Source(host, port, db, dbUser, schemaName, cfg.name, offset)
+    spark.createDataFrame(
+      new SliceRDD(spark.sparkContext, source, cfg.schema, preds), cfg.schema)
+  }
+
+  /** One table read under one exported snapshot and cut on an order key:
+    * partition i of `frame` streams slice i, `rows(i)` rows, and the
+    * slices follow each other in the key's ascending order. The plan holds
+    * the snapshot's transaction open, so a retried task imports the same
+    * snapshot; close the plan after the last job that reads `frame`. */
+  private[graft] final class Slices(
+      val frame: DataFrame, val rows: Seq[Long], conn: Conn) extends AutoCloseable {
+    def close(): Unit = conn.close()
+  }
+
+  /** Where [[slices]] starts its slices in a table of `n` rows: at every
+    * file start (`rowsPerFile · f`), and evenly inside each file, which
+    * gets its share of `parallelism` rounded — at least one slice and at
+    * most one per row. */
+  private[graft] def sliceStarts(n: Long, rowsPerFile: Long, parallelism: Int): Seq[Long] =
+    (0L until (n + rowsPerFile - 1) / rowsPerFile).flatMap { f =>
+      val lo = f * rowsPerFile
+      val inFile = math.min(rowsPerFile, n - lo)
+      val k = math.min(inFile, math.max(1L, (2 * inFile * parallelism + n) / (2 * n)))
+      (0L until k).map(j => lo + j * inFile / k)
+    }
+
+  /** `schema`'s columns of `source` as [[Slices]] on the order column
+    * `key`, one slice from each of [[sliceStarts]]; no row crosses the
+    * wire. The driver's session runs `BEGIN ISOLATION LEVEL REPEATABLE
+    * READ READ ONLY` and `pg_export_snapshot()`, then under that snapshot
+    * one `count(*)` and one `percentile_disc` that sorts the keys once and
+    * returns the key at each slice start and the key before it.
+    *
+    * Key order is Spark's ascending order: NULLs first, then integers by
+    * value, bytea by unsigned bytes and then length, and text by its UTF-8
+    * bytes (`COLLATE "C"` in a UTF8 or SQL_ASCII database, `convert_to`
+    * bytes in any other). Slice i holds the keys in `[start key i, start
+    * key i+1)`, and the first slice the NULLs too, so its row count is
+    * exact as long as no start key is NULL or equal to the key before it.
+    * None when one is, or when the key is not one string, binary, int or
+    * long column, or the scan has an OFFSET (whose rows follow no key
+    * order).
+    */
+  private[graft] def slices(spark: SparkSession, source: Source,
+      schema: StructType, key: String, rowsPerFile: Long,
+      parallelism: Int): Option[Slices] = {
+    val keyType = schema.find(_.name == key).map(_.dataType)
+      .filter(t => Seq(StringType, BinaryType, IntegerType, LongType).contains(t))
+    if (keyType.isEmpty || source.offset.isDefined) return None
+    val conn = source.connect()
+    try {
+      // the key's SQL, its value as text (hex for bytes) and a literal of that text
+      def hex(v: String) = s"encode($v, 'hex')"
+      def unhex(h: String) = s"decode('$h', 'hex')"
+      val (k, text, literal) = keyType.get match {
+        case StringType if Set("UTF8", "SQL_ASCII")(
+            conn.parameters.getOrElse("server_encoding", "")) =>
+          (s"""($key::text COLLATE "C")""",
+            (v: String) => hex(s"convert_to($v, 'UTF8')"),
+            (h: String) => s"convert_from(${unhex(h)}, 'UTF8')")
+        case StringType => (s"convert_to($key::text, 'UTF8')", hex _, unhex _)
+        case BinaryType => (s"$key::bytea", hex _, unhex _)
+        case _ => (s"$key::int8", (v: String) => s"$v::text", (v: String) => v)
+      }
+      conn.exec("BEGIN ISOLATION LEVEL REPEATABLE READ READ ONLY")
+      val snapshot = conn.scalar("SELECT pg_export_snapshot()").get
+      val counts = conn.rows(
+        s"SELECT count(*)::text, count($key)::text FROM ${source.relation}").head
+      val n = counts(0).get.toLong
+      val nulls = n - counts(1).get.toLong
+      val starts = sliceStarts(n, rowsPerFile, parallelism)
+      val cuts = starts.drop(1)
+      // the NULLs come first: a slice may start on the first key after
+      // them, never on a NULL
+      if (cuts.exists(_ < nulls)) { conn.close(); return None }
+      // 0-based ranks among the non-NULL keys of each slice start and the
+      // key before it, read as fractions that fall mid-row
+      val ranks = cuts.flatMap(c => Seq(c - nulls - 1, c - nulls)).filter(_ >= 0).distinct
+      val keyAt = if (ranks.isEmpty) Map.empty[Long, Option[String]] else ranks.zip(
+        conn.rows(s"SELECT ${text("x")} FROM unnest((SELECT percentile_disc(" +
+          s"ARRAY[${ranks.map(r => (r + 0.5) / (n - nulls)).mkString(", ")}]::float8[]) " +
+          s"WITHIN GROUP (ORDER BY k) FROM (SELECT $k AS k FROM ${source.relation}) _k)) " +
+          "WITH ORDINALITY _p(x, i) ORDER BY i").map(_.head)).toMap
+      val repeated = cuts.exists(c => c > nulls && keyAt(c - nulls - 1) == keyAt(c - nulls))
+      if (repeated) { conn.close(); return None }
+      val bounds = cuts.map(c => literal(keyAt(c - nulls).get))
+      val preds = starts.indices.map { i =>
+        val lo = Option.when(i > 0)(s"$k >= ${bounds(i - 1)}")
+        val hi = Option.when(i < cuts.length)(s"$k < ${bounds(i)}")
+        (lo, hi) match {
+          case (Some(l), Some(h)) => Some(s"$l AND $h")
+          case (None, Some(h)) => Some(s"$h OR $k IS NULL")
+          case _ => lo
         }
       }
-    spark.createDataFrame(rdd, schema)
+      val rows = (starts :+ n).sliding(2).collect { case Seq(a, b) => b - a }.toSeq
+      val rdd = new SliceRDD(spark.sparkContext, source, schema, preds,
+        Some(snapshot), Some(rows))
+      Some(new Slices(spark.createDataFrame(rdd, schema), rows, conn))
+    } catch { case e: Throwable => conn.close(); throw e }
   }
 
   /** Driver-side MIN/MAX of a partition column (the bounds [[scan]]
-    * needs), one tiny aggregate query — never a row scan. */
+    * needs): one aggregate query, never a row scan. */
   def bounds(host: String, port: Int, db: String, dbUser: String,
       schemaName: String, table: String, column: String): (Long, Long) = {
     val conn = new Conn(host, port, db, dbUser)
     try {
-      val lo = conn.scalar(
-        s"SELECT min($column)::text FROM $schemaName.$table")
-      val hi = conn.scalar(
-        s"SELECT max($column)::text FROM $schemaName.$table")
-      (lo.map(_.toLong).getOrElse(0L), hi.map(_.toLong).getOrElse(0L))
+      val r = conn.rows(
+        s"SELECT min($column)::text, max($column)::text FROM $schemaName.$table").head
+      (r(0).map(_.toLong).getOrElse(0L), r(1).map(_.toLong).getOrElse(0L))
     } finally conn.close()
   }
 }

@@ -194,36 +194,13 @@ class ExportSpec extends SparkSpec {
     // bucket map stage, write (the Export object doc)
     val sc = spark.sparkContext
     for ((n, expected) <- Seq((60, 2), (250, 6))) {
-      val tag = s"graft-jobs-$n"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val drained = new java.util.concurrent.CountDownLatch(1)
-      val listener = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(
-            js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-          val p = Option(js.properties)
-          if (p.exists(_.getProperty("spark.job.tags", "").split(',').contains(tag)))
-            jobs.incrementAndGet()
-          if (p.exists(_.getProperty("graft.spec.marker") == tag)) drained.countDown()
-        }
-      }
       val df = spark.createDataFrame(
         sc.parallelize(0 until n, 4).map(i => org.apache.spark.sql.Row((i * 7919L) % 10007)),
         StructType(Seq(StructField("k", LongType))))
-      sc.addSparkListener(listener)
-      try {
-        sc.addJobTag(tag)
-        val files =
-          try Export.exportTable(df, keyCfg("jobs", 100), Seq("k"), tmpDir())
-          finally sc.removeJobTag(tag)
-        assert(files.length === (n + 99) / 100)
-        // listener delivery is asynchronous but in order: once a job
-        // started after the export is seen, so is every export job
-        sc.setLocalProperty("graft.spec.marker", tag)
-        try sc.parallelize(Seq(1), 1).count()
-        finally sc.setLocalProperty("graft.spec.marker", null)
-        assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        assert(jobs.get === expected, s"n=$n: the export ran ${jobs.get} jobs")
-      } finally sc.removeSparkListener(listener)
+      val (files, jobs) =
+        jobsOf(Export.exportTable(df, keyCfg("jobs", 100), Seq("k"), tmpDir()))
+      assert(files.length === (n + 99) / 100)
+      assert(jobs === expected, s"n=$n: the export ran $jobs jobs")
     }
   }
 

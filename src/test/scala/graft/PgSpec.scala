@@ -176,7 +176,7 @@ class PgSpec extends SparkSpec with BeforeAndAfterAll {
   }
 
   test("wire client against a live server: startup (trust), DDL + INSERT " +
-      "via simple query, describe, scalar") {
+      "via simple query, rows, scalar") {
     assume(serverUp, "postgres binaries/cluster unavailable")
     val c = conn()
     try {
@@ -185,9 +185,8 @@ class PgSpec extends SparkSpec with BeforeAndAfterAll {
       c.exec("INSERT INTO wiretest VALUES (1, 'hi'), (2, NULL), (3, 'x')")
       assert(c.scalar("SELECT count(*)::text FROM wiretest") === Some("3"))
       assert(c.scalar("SELECT note FROM wiretest WHERE id = 2") === None)
-      val cols = c.describe("SELECT * FROM wiretest")
-      assert(cols.map(_._1) === Seq("id", "note"))
-      assert(cols.map(_._2) === Seq(20, 25)) // int8, text OIDs
+      assert(c.rows("SELECT id::text, note FROM wiretest ORDER BY id") === Seq(
+        Seq(Some("1"), Some("hi")), Seq(Some("2"), None), Seq(Some("3"), Some("x"))))
       // an error mid-session leaves the connection usable (ReadyForQuery)
       val ex = intercept[RuntimeException] { c.exec("SELECT nonsense!!") }
       assert(ex.getMessage.contains("pgwire"))
@@ -417,5 +416,218 @@ class PgSpec extends SparkSpec with BeforeAndAfterAll {
       partitionColumn = Some("id"), lowerBound = 0L, upperBound = 8L,
       numPartitions = 4).collect().map(_.getLong(1)).sorted.toSeq ===
       Seq(0L, 1L, 2L, 3L, 4L, 6L, 7L, 3000000000L))
+  }
+
+  // --------------------------------------- login, encoding, snapshot slices
+
+  test("a refused login throws naming the database and closes its socket") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    def fds() = Option(new java.io.File("/proc/self/fd").list()).map(_.length)
+    assume(fds().isDefined, "/proc/self/fd unavailable")
+    def refused(): String = intercept[PgWire.ServerError](
+      new PgWire.Conn("127.0.0.1", port, "graft_no_such_db", dbUser)).getMessage
+    val msg = refused()
+    assert(msg.contains("graft_no_such_db"), msg)
+    // a leak would keep eight sockets open per round; a descriptor some
+    // other thread opens or closes meanwhile only costs a round
+    val steady = Iterator.fill(3) {
+      val before = fds()
+      (1 to 8).foreach(_ => refused())
+      fds() == before
+    }.exists(identity)
+    assert(steady, "refused logins left descriptors open")
+  }
+
+  test("text from a LATIN1 database exports as UTF-8 (client_encoding)") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    val latin = "graft_latin1"
+    val admin = conn()
+    try {
+      admin.exec(s"DROP DATABASE IF EXISTS $latin")
+      admin.exec(s"CREATE DATABASE $latin ENCODING 'LATIN1' TEMPLATE template0 " +
+        "LC_COLLATE 'C' LC_CTYPE 'C'")
+    } finally admin.close()
+    val c = new PgWire.Conn("127.0.0.1", port, latin, dbUser)
+    try {
+      c.exec("CREATE TABLE menu(id bigint, item text)")
+      // ASCII-only SQL: the server stores each é as the LATIN1 byte 0xE9
+      c.exec("INSERT INTO menu VALUES (1, U&'caf\\00E9'), (2, 'cafe'), " +
+        "(3, U&'Caf\\00E9'), (4, U&'\\00E9t\\00E9')")
+    } finally c.close()
+    val cfg = TableConfig("menu",
+      Schemas.fromDtypes(Seq("id" -> "Int64", "item" -> "string")),
+      chunkSize = 10, numChunksPerFile = 10, compression = None)
+    val out = Files.createTempDirectory("graft_pg_latin1_out").toString
+    // sliced on the text key: its slice bounds are UTF-8 bytes too
+    val files = Export.exportTable(
+      PgWire.scan(spark, "127.0.0.1", port, latin, dbUser, "public", cfg),
+      cfg, Seq("item"), out)
+    assert(spark.read.parquet(s"$out/${files.head.fileName}").collect()
+      .map(_.getString(1)).toSeq === Seq("Café", "cafe", "café", "été"))
+  }
+
+  test("slice starts: every file start, at least one slice per file, " +
+      "at most parallelism + files and at most n") {
+    val rnd = new scala.util.Random(11)
+    for (_ <- 0 until 500) {
+      val n = rnd.nextInt(2000).toLong
+      val rpf = 1L + rnd.nextInt(300)
+      val par = 1 + rnd.nextInt(16)
+      val starts = PgWire.sliceStarts(n, rpf, par)
+      val files = (n + rpf - 1) / rpf
+      val at = s"n=$n rowsPerFile=$rpf parallelism=$par: $starts"
+      assert(starts === starts.distinct.sorted, at)
+      assert(starts.forall(s => s >= 0 && s < n), at)
+      assert((0L until files).forall(f => starts.contains(f * rpf)), at)
+      assert(starts.length <= math.min(n, par + files), at)
+      if (files == 1) assert(starts.length === math.min(n, par.toLong), at)
+    }
+  }
+
+  test("slices read one snapshot: rows inserted, deleted or moved across " +
+      "a cut after the plan do not show, and every count check passes") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    val c = conn()
+    try {
+      c.exec("CREATE SCHEMA IF NOT EXISTS vera")
+      c.exec("DROP TABLE IF EXISTS vera.snap")
+      c.exec("CREATE TABLE vera.snap(id bigint, v text)")
+      c.exec("INSERT INTO vera.snap SELECT i, 'v' || i FROM generate_series(0, 39) i")
+    } finally c.close()
+    val schema = Schemas.fromDtypes(Seq("id" -> "Int64", "v" -> "string"))
+    val source = PgWire.Source("127.0.0.1", port, db, dbUser, "vera", "snap", None)
+    // two files of 20 rows, two slices each: slices start at ids 0, 10, 20, 30
+    val plan = PgWire.slices(spark, source, schema, "id", 20L, 4).get
+    try {
+      assert(plan.rows === Seq(10L, 10L, 10L, 10L))
+      val w = conn()
+      try {
+        w.exec("INSERT INTO vera.snap VALUES (-1, 'new'), (15, 'new'), (40, 'new')")
+        w.exec("DELETE FROM vera.snap WHERE id = 3")
+        w.exec("UPDATE vera.snap SET id = 25 WHERE id = 12") // slice 1 -> slice 2
+        assert(w.scalar("SELECT count(*)::text FROM vera.snap") === Some("42"))
+      } finally w.close()
+      val got = plan.frame.collect().map(r => (r.getLong(0), r.getString(1)))
+      assert(got.sorted.toSeq === (0 until 40).map(i => (i.toLong, s"v$i")))
+      assert(plan.frame.rdd.mapPartitions(it => Iterator(it.size.toLong))
+        .collect().toSeq === plan.rows)
+    } finally plan.close()
+  }
+
+  test("a slice whose stream differs from its planned count fails, naming " +
+      "the table, the slice and both counts") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    val c = conn()
+    try {
+      c.exec("CREATE SCHEMA IF NOT EXISTS vera")
+      c.exec("DROP TABLE IF EXISTS vera.counted")
+      c.exec("CREATE TABLE vera.counted AS SELECT i::bigint AS id FROM generate_series(0, 4) i")
+    } finally c.close()
+    val source = PgWire.Source("127.0.0.1", port, db, dbUser, "vera", "counted", None)
+    val rdd = new PgWire.SliceRDD(spark.sparkContext, source,
+      Schemas.fromDtypes(Seq("id" -> "Int64")), Seq(Some("id < 3")), None, Some(Seq(4L)))
+    val e = intercept[Exception](rdd.count())
+    val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+    assert(msgs.contains("pgwire: counted, slice id < 3: " +
+      "streamed 3 rows, the snapshot's plan counted 4"), msgs)
+  }
+
+  test("sliced export: every file is in Spark's key order, and names, row " +
+      "counts, rows and the manifest equal the persisted path's, in 1 job") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    // non-ASCII text, case variants; bytea with bytes >= 0x80 and one NULL
+    val texts = Seq("a", "B", "b", "A", "é", "e", "E", "z", "Z", "ü", "日本",
+      "😀", "ab", "a b", "Ä", "ß", "0", "~", "aé", "ae", "É", "Ω", "ω", "zz")
+    val hexes = Seq(None, Some(""), Some("00"), Some("0000"), Some("01"),
+      Some("7f"), Some("7fff"), Some("80"), Some("8000"), Some("80ff"),
+      Some("81"), Some("c3a9"), Some("fe"), Some("ff"), Some("ff00"),
+      Some("ffff"), Some("41"), Some("61"), Some("6162"), Some("e697a5"),
+      Some("f09f9880"), Some("10"), Some("1f"), Some("9f"))
+    val c = conn()
+    try {
+      c.exec("CREATE SCHEMA IF NOT EXISTS vera")
+      c.exec("DROP TABLE IF EXISTS vera.keyed")
+      c.exec("CREATE TABLE vera.keyed(t text, b bytea, note text)")
+      c.exec("INSERT INTO vera.keyed VALUES " + texts.zip(hexes).zipWithIndex.map {
+        case ((t, h), i) => s"('$t', ${h.fold("NULL")(x => s"'\\x$x'")}, 'row $i')"
+      }.mkString(", "))
+    } finally c.close()
+    val n = texts.length
+    val cfg = TableConfig("keyed", Schemas.fromDtypes(Seq(
+      "t" -> "string", "b" -> "object", "note" -> "string")),
+      chunkSize = 5, numChunksPerFile = 1, compression = Some("zstd"))
+    def scan() = PgWire.scan(spark, "127.0.0.1", port, db, dbUser, "vera", cfg)
+    def fileRows(out: String, files: Seq[Export.ExportedFile]) =
+      files.map(f => plain(spark.read.parquet(s"$out/${f.fileName}").collect().toSeq))
+    for (key <- Seq("t", "b")) {
+      // a slice starts at every row: every key sits at a cut
+      val slicedOut = Files.createTempDirectory("graft_pg_sliced").toString
+      val (sliced, jobs) = jobsOf(Export.exportTable(
+        Normalize(scan(), cfg), cfg, Seq(key), slicedOut, numPartitions = n))
+      assert(jobs === 1, s"key $key: the sliced export ran $jobs jobs")
+      // an identity withColumn keeps the rows and takes the persisted path
+      val sortedOut = Files.createTempDirectory("graft_pg_sorted").toString
+      val sorted = Export.exportTable(scan().withColumn(key, col(key)), cfg,
+        Seq(key), sortedOut)
+      assert(sliced === sorted, s"key $key")
+      assert(sliced.map(_.rows) === Seq(5L, 5L, 5L, 5L, 4L), s"key $key")
+      val rows = fileRows(slicedOut, sliced)
+      assert(rows === fileRows(sortedOut, sorted), s"key $key")
+      assert(rows.map(_.length.toLong) === sliced.map(_.rows), s"key $key")
+      assert(rows.flatten === plain(spark.read.parquet(slicedOut).orderBy(key)
+        .collect().toSeq), s"key $key: files out of Spark's key order")
+    }
+    val sliced = Export.exportAll(Seq((scan(), cfg, Seq("t"))),
+      Files.createTempDirectory("graft_pg_sliced_all").toString, nowMillis = 1L)
+    val sorted = Export.exportAll(Seq((scan().withColumn("t", col("t")), cfg, Seq("t"))),
+      Files.createTempDirectory("graft_pg_sorted_all").toString, nowMillis = 1L)
+    assert(sliced.files === sorted.files)
+
+    // an empty table: no job, no file, no staging directory left behind
+    val c2 = conn()
+    try {
+      c2.exec("DROP TABLE IF EXISTS vera.keyed_empty")
+      c2.exec("CREATE TABLE vera.keyed_empty (LIKE vera.keyed)")
+    } finally c2.close()
+    val empty = cfg.copy(name = "keyed_empty")
+    val emptyOut = Files.createTempDirectory("graft_pg_empty").toString
+    val (none, noJobs) = jobsOf(Export.exportTable(
+      PgWire.scan(spark, "127.0.0.1", port, db, dbUser, "vera", empty),
+      empty, Seq("t"), emptyOut))
+    assert(none.isEmpty && noJobs === 0)
+    assert(Files.list(Paths.get(emptyOut)).count() === 0L)
+  }
+
+  test("a slice start on a repeated or NULL key sends the table to the " +
+      "persisted path") {
+    assume(serverUp, "postgres binaries/cluster unavailable")
+    val c = conn()
+    try {
+      c.exec("CREATE SCHEMA IF NOT EXISTS vera")
+      c.exec("DROP TABLE IF EXISTS vera.dups")
+      c.exec("CREATE TABLE vera.dups(k bigint, v text)")
+      // ordered: 0 1 1 2 3 4 5 6 — the slice starting at row 2 repeats 1
+      c.exec("INSERT INTO vera.dups VALUES (0, 'a'), (1, 'b'), (1, 'c'), " +
+        "(2, 'd'), (3, 'e'), (4, 'f'), (5, 'g'), (6, 'h')")
+      c.exec("DROP TABLE IF EXISTS vera.nulls")
+      c.exec("CREATE TABLE vera.nulls AS SELECT * FROM vera.dups")
+      c.exec("UPDATE vera.nulls SET k = NULL WHERE k < 2")
+    } finally c.close()
+    val cfg = TableConfig("dups",
+      Schemas.fromDtypes(Seq("k" -> "Int64", "v" -> "string")),
+      chunkSize = 2, numChunksPerFile = 1, compression = None)
+    val schema = cfg.schema
+    for (t <- Seq("dups", "nulls")) {
+      val source = PgWire.Source("127.0.0.1", port, db, dbUser, "vera", t, None)
+      assert(PgWire.slices(spark, source, schema, "k", 2L, 4).isEmpty, t)
+    }
+    val out = Files.createTempDirectory("graft_pg_dups").toString
+    val (files, jobs) = jobsOf(Export.exportTable(
+      PgWire.scan(spark, "127.0.0.1", port, db, dbUser, "vera", cfg),
+      cfg, Seq("k"), out))
+    assert(jobs === 6, s"the fallback ran $jobs jobs")
+    assert(files.map(_.rows) === Seq(2L, 2L, 2L, 2L))
+    assert(spark.read.parquet(out).count() === 8L)
   }
 }

@@ -56,10 +56,6 @@ ALLOW = {
     "Export.forceReleaseClaim":
         "operator release of a wedged commit claim: the export's fault "
         "recovery",
-    "PgWire.Conn.exec":
-        "the wire client's command call, kept with the rest of vera/",
-    "PgWire.Conn.describe":
-        "the wire client's RowDescription call, kept with the rest of vera/",
 }
 
 MEMBER = re.compile(
