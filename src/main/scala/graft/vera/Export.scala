@@ -422,12 +422,7 @@ object Export {
       tombstoneKeys: Seq[(String, String)] = Nil,
       preCommit: () => Unit = () => (),
   ): Manifest = {
-    require(tables.nonEmpty, s"exportAll: no tables to export to $outDir")
-    val names = tables.map(_._2.name)
-    val repeated = names.diff(names.distinct).distinct
-    // two exports of one name would race on one staging directory
-    require(repeated.isEmpty,
-      s"exportAll: table names must be distinct, repeated: ${repeated.mkString(", ")}")
+    val names = tableNames(tables, outDir)
     val spark = tables.head._1.sparkSession
     val sc = spark.sparkContext
     val runTag = s"graft-export-${java.util.UUID.randomUUID}"
@@ -461,6 +456,18 @@ object Export {
     manifest
   }
 
+  /** The names of a run's `tables`, which must be non-empty and distinct:
+    * two exports of one name would race on one staging directory. */
+  private def tableNames(
+      tables: Seq[(DataFrame, TableConfig, Seq[String])], outDir: String): Seq[String] = {
+    require(tables.nonEmpty, s"no tables to export to $outDir")
+    val names = tables.map(_._2.name)
+    val repeated = names.diff(names.distinct).distinct
+    require(repeated.isEmpty,
+      s"table names must be distinct, repeated: ${repeated.mkString(", ")}")
+    names
+  }
+
   /** A chain writer lost the per-generation commit race ([[claimGeneration]]):
     * another run already claimed the right to advance the chain past the
     * generation this writer read. The loser's run directory is deleted by
@@ -482,8 +489,7 @@ object Export {
     * on HDFS-like stores; on real S3 this maps to a conditional PUT
     * (`If-None-Match: *`), the primitive object stores expose for exactly
     * this pattern. Claim content is the winner's run id, which makes a
-    * writer's own retry idempotent (same runId re-claims its own token,
-    * the foreachBatch-replay idiom).
+    * writer's own retry idempotent (same runId re-claims its own token).
     *
     * Why per-GENERATION, not a global lock: sequential writers never
     * contend (each new run advances the tip, so the next writer claims a
@@ -540,45 +546,24 @@ object Export {
     }
   }
 
-  /** Explicit producer-ownership stamp for a chain directory: `_producer`
-    * holds `batch` or `stream`; the first chain writer of either kind
-    * stamps the directory (create-without-overwrite, racer-tolerant), and
-    * every later writer of the OTHER kind is refused loudly. This is the
-    * durable form of the stream-XOR-batch rule — the `_checkpoint` and
-    * epoch-magnitude checks remain as belt-and-braces for chains created
-    * before the marker existed.
-    */
-  private[graft] def claimProducer(
-      outDir: String, kind: String, spark: SparkSession): Unit = {
-    val fs = FileSystem.get(new java.net.URI(outDir),
-      spark.sparkContext.hadoopConfiguration)
-    val p = new Path(s"$outDir/_producer")
-    def read(): Option[String] =
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try Some(new String(
-          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8").trim)
-        finally in.close()
-      }
-    def refuse(k: String): Nothing =
-      throw new IllegalArgumentException(
-        s"$outDir is owned by a '$k' producer (this writer: '$kind'); " +
-          "an outDir belongs to ONE producer, stream XOR batch")
-    read() match {
-      case Some(k) if k == kind => ()
-      case Some(k)              => refuse(k)
-      case None =>
-        fs.mkdirs(new Path(outDir))
-        try {
-          val out = fs.create(p, false)
-          try out.write(s"$kind\n".getBytes("UTF-8"))
-          finally out.close()
-        } catch { case _: java.io.IOException => () } // a racer stamped it
-        read() match {
-          case Some(k) if k != kind => refuse(k)
-          case _                    => ()
-        }
+  /** Export `tables` as run `nowMillis` of the chain under `outDir`, with
+    * the claim on generation `gen` ([[claimGeneration]]) as the commit
+    * gate. A lost claim race aborts clean: the manifest-less run directory
+    * is deleted, so the loser leaves nothing behind (not even a
+    * crashed-looking directory), and the [[CommitConflictException]]
+    * propagates. */
+  private def commitRun(tables: Seq[(DataFrame, TableConfig, Seq[String])],
+      outDir: String, gen: Long, nowMillis: Long, watermarkMicros: Option[Long],
+      tombstoneKeys: Seq[(String, String)], spark: SparkSession): Manifest = {
+    val runDir = s"$outDir/run_$nowMillis"
+    try exportAll(tables, runDir, nowMillis, watermarkMicros, tombstoneKeys,
+      () => claimGeneration(outDir, gen, nowMillis, spark))
+    catch {
+      case e: CommitConflictException =>
+        FileSystem.get(new java.net.URI(outDir),
+            spark.sparkContext.hadoopConfiguration)
+          .delete(new Path(runDir), true)
+        throw e
     }
   }
 
@@ -604,36 +589,29 @@ object Export {
   }
 
   /** Recover the delta chain's high-water mark from the sink itself: the
-    * `watermarkMicros` of the newest (`timestamp`-ordered) `run_*` manifest
-    * under `outDir`. No side state — a new orchestrator host resumes the
-    * chain from what the object store already says was exported.
+    * `watermarkMicros` of the newest committed run's manifest under
+    * `outDir` ([[committedRuns]]' order). No side state — a new
+    * orchestrator host resumes the chain from what the object store
+    * already says was exported.
     */
-  def latestWatermark(outDir: String, spark: SparkSession): Option[Long] = {
-    val fs = FileSystem.get(new java.net.URI(outDir),
-      spark.sparkContext.hadoopConfiguration)
-    val root = new Path(outDir)
-    if (!fs.exists(root)) return None
-    val tsRe = """"timestamp":\s*(\d+)""".r
-    val wmRe = """"watermarkMicros":\s*(\d+)""".r
-    val parsed = fs.listStatus(root)
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("run_"))
-      .map(s => new Path(s.getPath, "manifest.json"))
-      .filter(fs.exists)
-      .flatMap { p =>
-        val in = fs.open(p)
-        val txt =
-          try new String(
-            org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
-          finally in.close()
-        for (t <- tsRe.findFirstMatchIn(txt).map(_.group(1).toLong))
-          yield (t, wmRe.findFirstMatchIn(txt).map(_.group(1).toLong))
-      }
-    parsed.sortBy(_._1).lastOption.flatMap(_._2)
-  }
+  def latestWatermark(outDir: String, spark: SparkSession): Option[Long] =
+    committedRuns(outDir, spark).lastOption.flatMap { ts =>
+      val fs = FileSystem.get(new java.net.URI(outDir),
+        spark.sparkContext.hadoopConfiguration)
+      val in = fs.open(new Path(s"$outDir/run_$ts/manifest.json"))
+      val txt =
+        try new String(
+          org.apache.hadoop.io.IOUtils.readFullyToByteArray(in), "UTF-8")
+        finally in.close()
+      """"watermarkMicros":\s*(\d+)""".r.findFirstMatchIn(txt).map(_.group(1).toLong)
+    }
 
   /** Committed (= manifest-bearing) `run_*` timestamps under `outDir`, sorted
-    * ascending. A run directory without `manifest.json` is a crashed or
-    * in-flight export and is invisible to every consumer-side reader.
+    * ascending: the chain's one run order. Every writer names its run
+    * `run_<nowMillis>` and stamps the same `nowMillis` into its manifest,
+    * so this is also the manifests' `timestamp` order. A run directory
+    * without `manifest.json` is a crashed or in-flight export and is
+    * invisible to every consumer-side reader.
     */
   private[graft] def committedRuns(outDir: String, spark: SparkSession): Seq[Long] = {
     val fs = FileSystem.get(new java.net.URI(outDir),
@@ -684,17 +662,9 @@ object Export {
       nowMillis: Long = System.currentTimeMillis(),
       deletes: Map[String, DataFrame] = Map.empty,
   ): Manifest = {
+    // before any max(updated_at) job or tombstone write
+    tableNames(tables, outDir)
     val spark = tables.head._1.sparkSession
-    // the mirror of exportStream's producer guard: a streaming-owned
-    // outDir (checkpoint dir present, or small batchId-keyed runs) must
-    // not receive epoch-millis batch runs — the two clocks are
-    // incomparable and replay order would silently interleave
-    val fsGuard = FileSystem.get(new java.net.URI(outDir),
-      spark.sparkContext.hadoopConfiguration)
-    require(!fsGuard.exists(new Path(s"$outDir/_checkpoint")),
-      s"$outDir is owned by a streaming producer (_checkpoint present); " +
-        "an outDir belongs to ONE producer, stream XOR batch")
-    claimProducer(outDir, "batch", spark)
     // chain state this run derives from — both the watermark and the
     // generation token are read HERE; the commit claim later verifies no
     // other writer advanced the chain off this same state (lost-update
@@ -753,17 +723,7 @@ object Export {
         .parquet(s"$runDir/_tombstones/$table.parquet")
       table -> s"_tombstones/$table.parquet"
     }
-    try exportAll(deltas, runDir, nowMillis, newWm, tombKeys,
-      () => claimGeneration(outDir, gen, nowMillis, spark))
-    catch {
-      case e: CommitConflictException =>
-        // clean abort: remove the manifest-less run so the loser leaves
-        // NOTHING behind (not even a crashed-looking directory)
-        FileSystem.get(new java.net.URI(outDir),
-            spark.sparkContext.hadoopConfiguration)
-          .delete(new Path(runDir), true)
-        throw e
-    }
+    commitRun(deltas, outDir, gen, nowMillis, newWm, tombKeys, spark)
   }
 
   /** Consumer side of the delta chain: materialize the CURRENT snapshot of
@@ -873,16 +833,6 @@ object Export {
       spark: SparkSession,
       nowMillis: Long = System.currentTimeMillis(),
   ): Manifest = {
-    // compact is a BATCH chain writer too — the producer rule applies to
-    // it the same as to exportIncremental (a compact over a stream-owned
-    // chain would fold batchId-keyed runs into an epoch-millis base and
-    // corrupt replay order, then strand the stream's checkpoint)
-    val cpFs = FileSystem.get(new java.net.URI(outDir),
-      spark.sparkContext.hadoopConfiguration)
-    require(!cpFs.exists(new Path(s"$outDir/_checkpoint")),
-      s"$outDir is owned by a streaming producer (_checkpoint present); " +
-        "an outDir belongs to ONE producer, stream XOR batch")
-    claimProducer(outDir, "batch", spark)
     val old = committedRuns(outDir, spark)
     require(old.nonEmpty, s"compact: no committed runs under $outDir")
     require(nowMillis > old.last,
@@ -894,83 +844,19 @@ object Export {
     val snapshots = tables.map { case (cfg, keyCols, orderBy) =>
       (readSnapshot(outDir, cfg, keyCols, spark), cfg, orderBy)
     }
-    val fs = FileSystem.get(new java.net.URI(outDir),
-      spark.sparkContext.hadoopConfiguration)
     // commit claim on the chain tip this compaction FOLDED: if a delta (or
     // another compact) committed meanwhile — e.g. it was invisible to this
     // writer's eventually-consistent listing — the claim create loses and
     // the new base aborts manifest-less, so the concurrent run's rows are
     // never shadowed by a stale fold (ExportSpec's race cases)
-    val manifest =
-      try exportAll(snapshots, s"$outDir/run_$nowMillis", nowMillis, wm,
-        preCommit = () => claimGeneration(outDir, old.last, nowMillis, spark))
-      catch {
-        case e: CommitConflictException =>
-          fs.delete(new Path(s"$outDir/run_$nowMillis"), true)
-          throw e
-      }
+    val manifest = commitRun(snapshots, outDir, old.last, nowMillis, wm, Nil, spark)
     // old runs go only AFTER the new base committed (crash mid-delete is
     // correct — see crash-safety note above); delete exactly the runs that
     // were folded, never a concurrent run this writer didn't see
+    val fs = FileSystem.get(new java.net.URI(outDir),
+      spark.sparkContext.hadoopConfiguration)
     old.foreach(ts => fs.delete(new Path(s"$outDir/run_$ts"), true))
     manifest
-  }
-
-  /** Streaming → export bridge [EXT]: drain a stream into the SAME
-    * base+delta chain [[readSnapshot]] replays, one run per microbatch via
-    * `foreachBatch` — what the reference's one-shot batch job (main.py:266)
-    * becomes when the source is continuous. Exactly-once effect without a
-    * transactional sink: the run directory is keyed by `batchId`, which
-    * Structured Streaming REUSES when it replays a failed batch, so a
-    * retry overwrites its own run (and the run's manifest is rewritten
-    * last, same ordering guarantee as the batch path) instead of
-    * duplicating rows — the standard idempotent-foreachBatch pattern. The
-    * manifest timestamp is the batchId too, keeping replay deterministic;
-    * empty batches write nothing, like empty deltas. Inside the batch
-    * function the microbatch is a plain DataFrame, so the full
-    * normalize → size-rotate → range-name → manifest pipeline runs
-    * unchanged and distributed.
-    *
-    * SINGLE-PRODUCER CONSTRAINT: an outDir belongs to ONE producer, stream
-    * XOR batch. Stream runs are keyed by batchId (0,1,2,…) while batch
-    * [[exportIncremental]] keys runs by epoch millis — the two clocks are
-    * incomparable, so mixing producers in one directory would make every
-    * stream run "older" than any batch run in [[readSnapshot]]'s replay
-    * order and interleave [[latestWatermark]]'s timestamp sort. (The
-    * rule is ENFORCED, not advisory: exportStream refuses an outDir with
-    * epoch-millis-keyed committed runs, and [[exportIncremental]] refuses
-    * one with a streaming `_checkpoint` — ExportSpec pins both
-    * directions.)
-    */
-  def exportStream(
-      stream: DataFrame,
-      cfg: TableConfig,
-      orderBy: Seq[String],
-      outDir: String,
-  ): org.apache.spark.sql.streaming.StreamingQuery = {
-    // ENFORCE the single-producer constraint (doc above): a chain whose
-    // committed runs are epoch-millis-keyed belongs to the batch producer
-    // — batchIds (0,1,2,…) interleaved into it would sort "older" than
-    // every batch run and silently corrupt replay order. BatchId keys are
-    // small integers; epoch millis are > 1e12 for any wall clock after
-    // 2001 — an unambiguous discriminator.
-    val existing = committedRuns(outDir, stream.sparkSession)
-    require(!existing.exists(_ > 1_000_000_000_000L),
-      s"$outDir already holds batch-producer runs " +
-        s"(epoch-millis keys: ${existing.filter(_ > 1_000_000_000_000L)}); " +
-        "an outDir belongs to ONE producer, stream XOR batch")
-    claimProducer(outDir, "stream", stream.sparkSession)
-    stream.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", s"$outDir/_checkpoint")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          exportAll(Seq((batch, cfg, orderBy)), s"$outDir/run_$batchId",
-            nowMillis = batchId)
-          ()
-        }
-      }
-      .start()
   }
 
   /** S7 manifest sink (`write_manifest`, main.py:103-113). */

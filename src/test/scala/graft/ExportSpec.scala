@@ -253,6 +253,17 @@ class ExportSpec extends SparkSpec {
     assert(twice.getMessage.contains("repeated: dup"), twice.getMessage)
     assert(!Files.list(java.nio.file.Paths.get(out)).iterator().hasNext,
       "a rejected table list must write nothing")
+    // the delta chain checks the list before its max(updated_at) jobs and
+    // its tombstone writes
+    val noneInc = intercept[IllegalArgumentException](Export.exportIncremental(Nil, out))
+    assert(noneInc.getMessage.contains("no tables"), noneInc.getMessage)
+    val twiceInc = intercept[IllegalArgumentException] {
+      Export.exportIncremental(Seq((df, keyCfg("dup", 5), Seq("k")),
+        (df, keyCfg("dup", 5), Seq("k"))), out, deletes = Map("dup" -> df))
+    }
+    assert(twiceInc.getMessage.contains("repeated: dup"), twiceInc.getMessage)
+    assert(!Files.list(java.nio.file.Paths.get(out)).iterator().hasNext,
+      "a rejected table list must write nothing")
   }
 
   test("runFromEnv rejects a DEBUG_OFFSET outside 0..Int.MaxValue, naming it") {
@@ -654,58 +665,6 @@ class ExportSpec extends SparkSpec {
     assert(snapAt(None) === snapAt(Some(3000L)))
     assert(snapAt(Some(2500L)) === snapAt(Some(2000L)))
     assert(snapAt(Some(500L)) === Map.empty)
-  }
-
-  test("the stream-XOR-batch producer rule is enforced in both directions") {
-    import spark.implicits._
-    def t(s: String) = java.time.LocalDateTime.parse(s)
-    val cfg = TableConfig("xor",
-      Schemas.fromDtypes(Seq("id" -> "Int64", "updated_at" -> "datetime64[ns]",
-        "v" -> "string")),
-      chunkSize = 10, numChunksPerFile = 10, compression = None)
-    // batch-owned chain refuses a streaming producer
-    val batchDir = tmpDir()
-    val df1 = Seq((1L, t("2024-01-01T00:00:00"), "v1"))
-      .toDF("id", "updated_at", "v")
-    // a REALISTIC batch key (epoch millis) — the discriminator the guard
-    // keys on; toy keys like 1000 are indistinguishable from batchIds
-    Export.exportIncremental(Seq((df1, cfg, Seq("id"))), batchDir,
-      1700000000000L)
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val in = MemoryStream[(Long, java.sql.Timestamp, String)]
-    val e1 = intercept[IllegalArgumentException] {
-      Export.exportStream(in.toDF().toDF("id", "updated_at", "v"),
-        cfg, Seq("id"), batchDir)
-    }
-    assert(e1.getMessage.contains("stream XOR batch"))
-    // stream-owned dir (checkpoint present) refuses a batch producer
-    val streamDir = tmpDir()
-    Files.createDirectories(
-      java.nio.file.Paths.get(s"$streamDir/_checkpoint"))
-    val e2 = intercept[IllegalArgumentException] {
-      Export.exportIncremental(Seq((df1, cfg, Seq("id"))), streamDir, 2000L)
-    }
-    assert(e2.getMessage.contains("stream XOR batch"))
-    // the durable _producer marker closes the toy-key gap the magnitude
-    // heuristic leaves: a batch chain with SMALL run keys still refuses a
-    // stream, because exportIncremental stamped ownership
-    val toyDir = tmpDir()
-    Export.exportIncremental(Seq((df1, cfg, Seq("id"))), toyDir, 1000L)
-    val e3 = intercept[IllegalArgumentException] {
-      Export.exportStream(in.toDF().toDF("id", "updated_at", "v"),
-        cfg, Seq("id"), toyDir)
-    }
-    assert(e3.getMessage.contains("stream XOR batch"))
-    // compact is a batch writer too: a stream-stamped dir refuses it
-    val streamDir2 = tmpDir()
-    java.nio.file.Files.write(
-      java.nio.file.Paths.get(s"$streamDir2/_producer"),
-      "stream\n".getBytes("UTF-8"))
-    val e4 = intercept[IllegalArgumentException] {
-      Export.compact(streamDir2, Seq((cfg, Seq("id"), Seq("id"))), spark, 9000L)
-    }
-    assert(e4.getMessage.contains("stream XOR batch"))
   }
 
   test("multi-table runs give cross-table snapshot isolation at every pin") {

@@ -29,6 +29,18 @@ class RegistrySpec extends SparkSpec {
     assert(SparkEntry.selected(None).keySet === SparkEntry.queries.keySet)
   }
 
+  test("tools/unreached.py finds every src/main member reached or allowed") {
+    import scala.sys.process._
+    val quiet = ProcessLogger(_ => (), _ => ())
+    assume(scala.util.Try(Seq("python3", "--version").!(quiet)).toOption.contains(0),
+      "python3 is not on the PATH")
+    val out = new StringBuilder
+    val log = (l: String) => { out.append(l).append('\n'); () }
+    // the forked test JVM runs in the project root
+    val code = Seq("python3", "tools/unreached.py").!(ProcessLogger(log, log))
+    assert(code === 0 && out.isEmpty, s"tools/unreached.py exited $code:\n$out")
+  }
+
   test("flagship entry returns rows on sf0.001") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -50,12 +50,10 @@ ENTRY = {
 
 # Unreached on purpose, one reason each.
 ALLOW = {
-    "Export.exportStream":
-        "the export's Structured Streaming bridge: commit-protocol code on "
-        "the paper's path",
     "Export.forceReleaseClaim":
-        "operator release of a wedged commit claim: the export's fault "
-        "recovery",
+        "operator release of a wedged delta-chain commit claim, the chain's "
+        "only fault recovery; no entry point reaches it until the export "
+        "job has one that takes the generation to release",
 }
 
 MEMBER = re.compile(
